@@ -86,8 +86,9 @@ object BenchMain {
       }
       // in trace mode untraced and traced passes alternate (ABBA, as passes
       // still speed up while the JIT warms), so the tracing overhead is
-      // measured in the same process at the same warmth
-      while ((System.nanoTime() - t0) / 1e9 < a.seconds || untraced.length < 2) {
+      // measured in the same process at the same warmth; two of each at least
+      val minPasses = if (a.trace) 2 else 1
+      while ((System.nanoTime() - t0) / 1e9 < a.seconds || untraced.length < minPasses) {
         if (!a.trace) untracedPass()
         else if (untraced.length % 2 == 0) { untracedPass(); traced += r.runPass(wl, traced = true) }
         else { traced += r.runPass(wl, traced = true); untracedPass() }
