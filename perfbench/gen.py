@@ -28,7 +28,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SIZES = {
     "maef_cli": {"users": 4000},
-    "dedup_corpus": {"docs": 1500, "vectors": 800},
+    "dedup_corpus": {"docs": 600, "vectors": 400},
 }
 
 # The 13 channel names observed in the reference's channel report (FIXTURES.md).
@@ -149,14 +149,14 @@ def _edit_chain(rng, length, hops, edits):
 
 def gen_dedup(seed, out_dir, docs, vectors):
     """Fixed cluster structure, seeded content: a fifth of the docs form
-    5-doc edit chains (components of diameter 4, so the iterative
+    3-doc edit chains (components of diameter 2, so the iterative
     connected-components loops run the same number of rounds for every
     seed); the rest are independent random docs. A fifth of the vectors are
     noisy copies of another vector (cosine well above the 0.4 gate)."""
     rng = np.random.default_rng([seed, 2])
     words = []
-    for _ in range(docs // 25):
-        words.extend(_edit_chain(rng, 60, 4, 5))
+    for _ in range(docs // 15):
+        words.extend(_edit_chain(rng, 60, 2, 5))
     while len(words) < docs:
         words.append([VOCAB[j] for j in rng.integers(0, len(VOCAB), int(rng.integers(8, 100))).tolist()])
     order = rng.permutation(docs)  # chains are not contiguous in doc_id

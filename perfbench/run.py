@@ -34,12 +34,13 @@ import gen  # noqa: E402
 
 ROOT = gen.ROOT
 WORK = os.path.join(ROOT, ".perfbench_work")
-JVM_TIMEOUT_S = 150
-# A fixed, pre-touched heap (-Xms = -Xmx, AlwaysPreTouch): with a growable
-# heap G1's timing-dependent resizing moved peak_rss_mb by ~20% between
-# identical runs, and even a fixed heap was sometimes left partly untouched.
-# peak_rss_mb is then this heap plus the JVM's native and off-heap memory.
+JVM_TIMEOUT_S = 160
+# A fixed heap (-Xms = -Xmx) with a fixed young generation (-Xmn): G1 then
+# neither resizes the heap nor the young generation with timing, so GC
+# frequency follows the allocation alone and peak_heap_mb (heap in use
+# after each GC, see HeapAfterGc) is steady between identical runs.
 JVM_HEAP = "2g"
+JVM_YOUNG = "256m"
 # what spark-submit would pass on JDK 17 (same list as the root build.sbt)
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
@@ -117,7 +118,7 @@ def run_jvm(classpath, workload, input_dir, seconds, trace, seed):
         os.remove(out)
     log = os.path.join(WORK, f"jvm-{workload}.log")
     # -XX:-UsePerfData: no hsperfdata file in the system temp directory
-    cmd = [java, *ADD_OPENS, f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", "-XX:+AlwaysPreTouch",
+    cmd = [java, *ADD_OPENS, f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", f"-Xmn{JVM_YOUNG}",
            "-XX:-UsePerfData",
            f"-Djava.io.tmpdir={tmp}",
            f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",
@@ -144,11 +145,13 @@ def run_jvm(classpath, workload, input_dir, seconds, trace, seed):
 
 
 def end_to_end(res):
+    if not res["peak_heap_mb"]:
+        raise BenchError("no garbage collection ran during the timed passes: no peak_heap_mb")
     return {
         "setup_s": res["setup_s"],
         "pass_s": statistics.median(res["pass_s"]),
         "cpu_s": statistics.median(res["cpu_s"]),
-        "peak_rss_mb": res["peak_rss_mb"],
+        "peak_heap_mb": statistics.median(res["peak_heap_mb"]),
     }
 
 
@@ -179,6 +182,7 @@ def main(argv=None):
         classpath = ensure_build()
         input_dir = gen.ensure_inputs(a.workload, a.seed, os.path.join(WORK, "inputs"))
         res = run_jvm(classpath, a.workload, input_dir, a.seconds, a.trace, a.seed)
+        e2e = end_to_end(res)
         import checks  # duckdb/pandas load only once there is something to check
         check_results = checks.CHECKS[a.workload](input_dir, res["facts"])
     except (BenchError, OSError, subprocess.SubprocessError) as e:
@@ -190,7 +194,6 @@ def main(argv=None):
     for err in res["errors"]:
         print(f"perfbench: operation failed: {err}", file=sys.stderr)
     line = result_line(bench, res, check_results, a.trace)
-    e2e = end_to_end(res)
     print(f"# {a.workload} seed={a.seed} passes={len(res['pass_s'])} "
           + " ".join(f"{k}={v:.4f}" for k, v in e2e.items())
           + f" error_rate={line['failed'] / line['attempted']:.4f}"

@@ -75,10 +75,10 @@ class GeneratorTest(unittest.TestCase):
 
 class CountingTest(unittest.TestCase):
     BENCH = {"end_to_end": [{"name": n, "unit": "s"} for n in ("setup_s", "pass_s", "cpu_s")]
-             + [{"name": "peak_rss_mb", "unit": "MB"}],
+             + [{"name": "peak_heap_mb", "unit": "MB"}],
              "per_layer": [{"name": "exec.task_s", "unit": "s"}, {"name": "q18.exec_s", "unit": "s"}]}
     RES = {"setup_s": 9.5, "pass_s": [3.0, 1.0, 2.0, 10.0], "cpu_s": [4.0, 2.0, 3.0],
-           "peak_rss_mb": 900.0, "attempted": 12, "failed": 1, "layer": {"exec.task_s": 4.5}}
+           "peak_heap_mb": [300.0, 250.0, 280.0], "attempted": 12, "failed": 1, "layer": {"exec.task_s": 4.5}}
 
     def test_checks_count_as_operations(self):
         line = run.result_line(self.BENCH, self.RES, [("a", None), ("b", "wrong")], trace=0)
@@ -87,7 +87,8 @@ class CountingTest(unittest.TestCase):
         self.assertEqual(line["metrics"]["pass_s"], {"value": 2.5, "unit": "s"})
         self.assertEqual(line["metrics"]["cpu_s"]["value"], 3.0)
         self.assertEqual(line["metrics"]["setup_s"]["value"], 9.5)
-        self.assertEqual(set(line["metrics"]), {"setup_s", "pass_s", "cpu_s", "peak_rss_mb"})
+        self.assertEqual(line["metrics"]["peak_heap_mb"]["value"], 280.0)
+        self.assertEqual(set(line["metrics"]), {"setup_s", "pass_s", "cpu_s", "peak_heap_mb"})
 
     def test_clean_run_is_correct(self):
         res = dict(self.RES, failed=0)
@@ -104,10 +105,12 @@ class WrongOutputTest(unittest.TestCase):
     """Outputs are produced here the way the program should produce them,
     then corrupted: the checks must name a failed operation."""
 
-    def attribution_outputs(self, root, corrupt):
-        """api_response.json with Σihc = 1 per conversion, and an
-        attribution_customer_journey table holding the same records —
-        or, corrupted, one record with a stale ihc."""
+    # a warm pass (full batch) then three partial re-attributions
+    BATCHES = [{"pass": 0, "full": True}] + [{"pass": p, "full": False} for p in (1, 2, 3)]
+
+    def attribution_outputs(self, root, table_of):
+        """api_response.json with Σihc = 1 per conversion, and the
+        attribution_customer_journey table `table_of(records)` leaves."""
         inp = generate("maef_cli", 4, root)
         con = checks.maef_expected(os.path.join(inp, "warehouse.db"))
         recs = con.execute("""
@@ -118,28 +121,44 @@ class WrongOutputTest(unittest.TestCase):
         os.makedirs(out)
         with open(os.path.join(out, "api_response.json"), "w") as f:
             json.dump([{"statusCode": 200, "value": recs.to_dict("records")}], f)
-        table = recs.rename(columns={"conversion_id": "conv_id"})
-        if corrupt:
-            table.loc[table.index[0], "ihc"] += 0.25
+        rows = table_of(list(recs.itertuples(index=False, name=None)))
         acj = os.path.join(root, "acj")
         os.makedirs(acj)
-        table.to_parquet(os.path.join(acj, "part-0.parquet"))
+        pd.DataFrame(rows, columns=["conv_id", "session_id", "ihc"]).to_parquet(
+            os.path.join(acj, "part-0.parquet"))
         return inp, {"out_dir": out, "acj": acj, "channel_reporting": os.path.join(root, "none"),
-                     "artifacts": None}
+                     "artifacts": None, "batches": self.BATCHES}
 
-    def test_warehouse_table_good_and_wrong(self):
-        for corrupt in (False, True):
-            with tempfile.TemporaryDirectory() as root:
-                res = dict(checks.check_maef(*self.attribution_outputs(root, corrupt)))
-                self.assertIsNone(res["maef.ihc_sums"])
-                why = res["warehouse.attribution_customer_journey"]
-                if corrupt:
-                    self.assertIn("values differ", why)
-                else:
-                    self.assertIsNone(why)
-                # outputs the fixture does not write are failed checks, not crashes
-                self.assertTrue(res["maef.journeys"].startswith("check raised"))
-                self.assertTrue(res["warehouse.channel_reporting"].startswith("check raised"))
+    def acj_check(self, table_of):
+        with tempfile.TemporaryDirectory() as root:
+            res = dict(checks.check_maef(*self.attribution_outputs(root, table_of)))
+            self.assertIsNone(res["maef.ihc_sums"])
+            # outputs the fixture does not write are failed checks, not crashes
+            self.assertTrue(res["maef.journeys"].startswith("check raised"))
+            self.assertTrue(res["warehouse.channel_reporting"].startswith("check raised"))
+            return res["warehouse.attribution_customer_journey"]
+
+    def test_warehouse_last_wins_passes(self):
+        self.assertIsNone(self.acj_check(
+            lambda base: checks.last_wins(base, 2, 2, checks.acj_keep, self.BATCHES)))
+
+    def test_warehouse_that_kept_old_rows_fails(self):
+        # an upsert that kept the existing row instead of the incoming one
+        why = self.acj_check(
+            lambda base: checks.last_wins(base, 2, 2, checks.acj_keep, self.BATCHES, pick=min))
+        self.assertIn("differs from last-wins", why)
+
+    def test_warehouse_that_dropped_unbatched_rows_fails(self):
+        # an upsert that replaced the table with the last batch
+        last = self.BATCHES[-1:]
+        why = self.acj_check(lambda base: checks.last_wins(base, 2, 2, checks.acj_keep, last))
+        self.assertIn("rows", why)
+
+    def test_batches_overlap_and_leave_keys_out(self):
+        rows = [(f"{a}x", f"{b}y", 0.5) for a in "0123456789abcdef" for b in "0123456789abcdef"]
+        for p in (1, 2, 3):
+            kept = sum(checks.acj_keep(r, p) for r in rows)
+            self.assertTrue(0 < kept < len(rows))
 
     def test_oracle_compare_catches_a_changed_value(self):
         compare = checks.oracle_compare()
@@ -165,7 +184,7 @@ class WrongOutputTest(unittest.TestCase):
                 json.dump([{"conversion_id": c, "session_id": s} for c, s in j], f)
             with open(os.path.join(out, "channel_report.csv"), "w") as f:
                 f.write("channel_name,date,cost,ihc,ihc_revenue,cpo,roas\n")
-            res = dict(checks.check_maef(inp, {"out_dir": out, "artifacts": None}))
+            res = dict(checks.check_maef(inp, {"out_dir": out, "artifacts": None, "batches": []}))
             self.assertIsNone(res["maef.journeys"])
             self.assertIn("sum(ihc) != 1", res["maef.ihc_sums"])
             self.assertIn("rows", res["maef.report"])

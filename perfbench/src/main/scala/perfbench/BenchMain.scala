@@ -39,12 +39,6 @@ object BenchMain {
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  def peakRssMb(): Double = {
-    val line = scala.io.Source.fromFile("/proc/self/status").getLines()
-      .find(_.startsWith("VmHWM:")).get
-    line.split("\\s+")(1).toDouble / 1024.0
-  }
-
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) Double.NaN
@@ -65,6 +59,7 @@ object BenchMain {
       .config("spark.local.dir", s"${a.work}/spark-local")
       .config("spark.sql.warehouse.dir", s"${a.work}/spark-warehouse")
       .getOrCreate()
+    System.err.println(f"perfbench: session ready ${(epochNs() - a.launchNs) / 1e9}%.2f s after launch")
     try {
       val r = new Runner(spark)
       val wl = Workloads(a.workload, spark, a)
@@ -72,43 +67,42 @@ object BenchMain {
       // warm pass: codegen, corpus stats, page cache
       r.runPass(wl, traced = false, warm = true)
       val setupS = (epochNs() - a.launchNs) / 1e9
+      System.err.println(f"perfbench: set-up done $setupS%.2f s after launch")
 
       val untraced = ArrayBuffer.empty[(Double, Double)]
-      val traced = ArrayBuffer.empty[(Double, Map[String, Double])]
-      // in trace mode one untimed pass first: the steepest part of the JIT
-      // warm-up would otherwise bias the traced/untraced comparison
-      if (a.trace) r.runPass(wl, traced = false)
+      val traced = ArrayBuffer.empty[Map[String, Double]]
+      val heapPeaks = ArrayBuffer.empty[Double]
       val t0 = System.nanoTime()
       def untracedPass(): Unit = {
         val cpu0 = os.getProcessCpuTime
-        val wall = r.runPass(wl, traced = false)._1
-        untraced += ((wall, (os.getProcessCpuTime - cpu0) / 1e9))
+        val p = r.runPass(wl, traced = false)
+        heapPeaks ++= p.heapMb
+        untraced += ((p.wall, (os.getProcessCpuTime - cpu0) / 1e9))
       }
       // in trace mode untraced and traced passes alternate (ABBA, as passes
       // still speed up while the JIT warms), so the tracing overhead is
       // measured in the same process at the same warmth; two of each at least
-      val minPasses = if (a.trace) 2 else 1
+      val minPasses = if (a.trace) 2 else wl.minPasses
       while ((System.nanoTime() - t0) / 1e9 < a.seconds || untraced.length < minPasses) {
         if (!a.trace) untracedPass()
-        else if (untraced.length % 2 == 0) { untracedPass(); traced += r.runPass(wl, traced = true) }
-        else { traced += r.runPass(wl, traced = true); untracedPass() }
+        else if (untraced.length % 2 == 0) { untracedPass(); traced += r.runPass(wl, traced = true).layers }
+        else { traced += r.runPass(wl, traced = true).layers; untracedPass() }
       }
-      val rss = peakRssMb()
       wl.check(r)
 
       val layer: Map[String, Double] =
         if (!a.trace) Map.empty
         else {
-          val names = traced.flatMap(_._2.keys).distinct
-          names.map(n => n -> median(traced.map(_._2.getOrElse(n, 0.0)).toSeq)).toMap +
-            ("trace.overhead" -> (median(traced.map(_._1).toSeq) / median(untraced.map(_._1).toSeq) - 1.0))
+          val names = traced.flatMap(_.keys).distinct
+          names.map(n => n -> median(traced.map(_.getOrElse(n, 0.0)).toSeq)).toMap +
+            ("trace.overhead" -> (median(traced.map(_("pass_s")).toSeq) / median(untraced.map(_._1).toSeq) - 1.0))
         }
       val json = Json.obj(
         "workload" -> a.workload,
         "setup_s" -> setupS,
         "pass_s" -> untraced.map(_._1).toSeq,
         "cpu_s" -> untraced.map(_._2).toSeq,
-        "peak_rss_mb" -> rss,
+        "peak_heap_mb" -> heapPeaks.toSeq,
         "attempted" -> r.attempted,
         "failed" -> r.failed,
         "errors" -> r.errors.toSeq,
@@ -131,6 +125,7 @@ final class Runner(spark: SparkSession) {
   private val spans = ArrayBuffer.empty[Span]
   private val traceLog = ArrayBuffer.empty[Span]
   private val listener = new EngineListener
+  private val heap = new HeapAfterGc
 
   def addSpan(s: Span): Unit = if (tracing) spans += s
 
@@ -152,10 +147,16 @@ final class Runner(spark: SparkSession) {
     }
   }
 
-  /** Run one pass; returns (wall seconds, per-layer metrics if traced). */
-  def runPass(wl: Workload, traced: Boolean, warm: Boolean = false): (Double, Map[String, Double]) = {
+  /** Run one pass: its wall seconds, the largest heap in use after a GC
+    * during it (if one ran) and, if traced, its per-layer metrics. */
+  def runPass(wl: Workload, traced: Boolean, warm: Boolean = false): PassResult = {
     wl.beforePass(this)
     spark.catalog.clearCache()
+    // a full collection before every pass after the warm one, outside its
+    // timing: G1 would otherwise reclaim the old generation only every few
+    // passes, and each pass would start from a different heap state
+    if (!warm) System.gc()
+    heap.arm()
     if (traced) {
       spark.sparkContext.addSparkListener(listener)
       spark.listenerManager.register(listener)
@@ -166,6 +167,7 @@ final class Runner(spark: SparkSession) {
     wl.pass(this, warm)
     val t1 = System.nanoTime()
     tracing = false
+    val heapMb = heap.disarm()
     val wall = (t1 - t0) / 1e9
     val metrics =
       if (!traced) Map.empty[String, Double]
@@ -177,10 +179,11 @@ final class Runner(spark: SparkSession) {
         val passSpan = Span("pass", t0, t1, "", pass)
         val all = passSpan +: spans.toSeq
         traceLog ++= all
-        Layers.engine(passSpan, all, jobs, tasks, plans) ++ wl.layers(all, jobs, tasks, plans)
+        Layers.engine(passSpan, all, jobs, tasks, plans) ++ wl.layers(all, jobs, tasks, plans) +
+          ("pass_s" -> wall)
       }
     pass += 1
-    (wall, metrics)
+    PassResult(wall, heapMb, metrics)
   }
 
   /** JSONL: one record per traced span (seconds from the first traced
@@ -196,6 +199,8 @@ final class Runner(spark: SparkSession) {
   }
 }
 
+final case class PassResult(wall: Double, heapMb: Option[Double], layers: Map[String, Double])
+
 /** Per-layer metrics every workload reports. */
 object Layers {
   private val MB = 1024.0 * 1024.0
@@ -206,7 +211,9 @@ object Layers {
   def engine(pass: Span, spans: Seq[Span], jobs: Seq[(Long, Long)], tasks: Seq[TaskRec],
              plans: Seq[PlanRec]): Map[String, Double] = {
     val jobNs = Intervals.overlap(jobs, Seq((pass.start, pass.end)))
-    // leaf spans: the finest-grained layer spans of the pass
+    // leaf spans: the finest-grained named layer spans of the pass. Time
+    // no layer names (glue between calls, samples inside MaefMain.run that
+    // no module rule matches) is in no leaf, so the share falls below 1
     val parents = spans.map(_.parent).toSet
     val leaves = spans.filter(s => s.name != "pass" && !parents.contains(s.name))
     Map(

@@ -143,3 +143,41 @@ final class StackSampler(target: Thread, rules: Seq[(String, String, String)], p
     out.toSeq
   }
 }
+
+/** Heap in use right after each garbage collection, from the JVM's GC
+  * notifications: what the program still holds when the collector has
+  * just run: live data, execution memory of running tasks and garbage
+  * promoted since the last full collection. The heap size is fixed (see
+  * run.py), so the process's resident size would show that size rather
+  * than the program's memory. `disarm` returns the largest value since
+  * `arm`, if any GC ran. */
+final class HeapAfterGc extends javax.management.NotificationListener {
+  import java.lang.management.{ManagementFactory, MemoryType}
+  import scala.jdk.CollectionConverters._
+  import com.sun.management.GarbageCollectionNotificationInfo
+
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+  @volatile private var armed = false
+  private var peak = -1L
+  ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+    case e: javax.management.NotificationEmitter => e.addNotificationListener(this, null, null)
+    case _ =>
+  }
+
+  override def handleNotification(n: javax.management.Notification, handback: AnyRef): Unit =
+    if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+      val info = GarbageCollectionNotificationInfo.from(
+        n.getUserData.asInstanceOf[javax.management.openmbean.CompositeData])
+      val after = info.getGcInfo.getMemoryUsageAfterGc.asScala
+      val used = after.collect { case (p, u) if heapPools(p) => u.getUsed }.sum
+      if (armed) synchronized { peak = math.max(peak, used) }
+    }
+
+  def arm(): Unit = synchronized { peak = -1L; armed = true }
+
+  def disarm(): Option[Double] = synchronized {
+    armed = false
+    if (peak < 0) None else Some(peak / (1024.0 * 1024.0))
+  }
+}
