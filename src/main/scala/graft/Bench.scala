@@ -45,7 +45,7 @@ object Bench {
    *  and Catalyst eliminates subtrees that cannot change the row count —
    *  a left join on provably-unique keys with no referenced right-side
    *  columns drops its entire right branch, a union branch dead under a
-   *  pushed filter vanishes. `BenchAuditProbe prune-audit` flags 25 of
+   *  pushed filter vanishes. The r12 prune audit flagged 25 of
    *  104 gates whose count() plan has fewer leaf scans OR fewer
    *  Window/Join/Aggregate/Generate work nodes than their output plan
    *  (11 on leaf scans alone: the as-of family's union right side, the

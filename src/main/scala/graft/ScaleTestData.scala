@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * (TESTDATA.md): writes an sf1.0-shaped copy of `/root/testdata/sf0.1`
   * at `mult`× the rows, so the FULL 104-query bench can run at 10× and
   * pin the scaling slope per query (r17 verdict #3) — the committed
-  * bench evidence above sf0.1 was otherwise only targeted probes
-  * (ScaleSmoke).
+  * bench evidence above sf0.1 was otherwise only targeted probes.
   *
   * Scaling is replication with per-replica key-space offsets, NOT row
   * duplication — duplicated keys would collapse under every
@@ -154,7 +153,7 @@ object ScaleTestData {
     write(replicate(t("lineitem"),
       "l_orderkey" -> ordS, "l_partkey" -> partS, "l_suppkey" -> suppS), "lineitem")
     // user space scales with the data so per-user event density (journey
-    // lengths, session sizes) stays sf0.1-like — ScaleSmoke's rule
+    // lengths, session sizes) stays sf0.1-like
     write(replicate(t("events"), "event_id" -> evS, "user_id" -> userS), "events")
 
     // documents: keys shift; text is Caesar-rotated by the replica index

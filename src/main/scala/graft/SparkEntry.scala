@@ -1768,7 +1768,7 @@ object SparkEntry {
     // (~3 k rows each), so the two-condition auto switch (few groups AND
     // ≥100 k rows/group, both hinted — stats staged like CorpusHint)
     // correctly keeps the single-window plan here and flips to the
-    // bucketed scale path exactly where ScaleSmoke measures it winning;
+    // bucketed scale path exactly where the r11 scale run measured it winning;
     // the two plans stay pinned equivalent by QuantilesEquivalenceSpec.
     "q94_percentile_rank" -> ((s, dir) =>
       Quantiles.percentileRankAuto(

@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, M
   * (null-explicit, microsecond-pinned formats) and hashing the text —
   * correct, but a measured per-row CPU tax: at 10 M rows key-only, +122 %
   * over the structural hash on the documents shape and +274 % on a
-  * timestamp-bearing upsert shape (`BenchAuditProbe contentkey`), almost
+  * timestamp-bearing upsert shape (measured at r15), almost
   * all of it timestamp/double text formatting. The framed binary form
   * needs no render at all — timestamps hash as their native micros long,
   * so the JSON path's millisecond-truncation trap (a live row-loss defect

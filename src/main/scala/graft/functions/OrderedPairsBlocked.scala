@@ -9,30 +9,38 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
 /** One BLOCK of the ordered (i < j) pairs of a sorted, duplicate-free long
-  * array, packed like [[OrderedPairsPacked]] — the memory-bounded sibling
-  * for posting lists too hot to pair in one buffer.
+  * array, each pair packed into ONE long `(a << 32) | b` — the candidate-
+  * generation kernel of the inverted-index Jaccard join.
   *
-  * The single-shot expression materializes all m(m−1)/2 pairs of an
-  * m-element posting in ONE row buffer: at m ≈ 12,500 that is ~78 M packed
-  * longs ≈ 0.6 GB per evaluation, and a handful of concurrent tasks OOM the
-  * executor long before the Int-overflow guard at m = 65,536 fires (the
-  * measured failure mode of the forced all-pairs plan at the 100× bench
-  * decade). Blocked generation decomposes the pair triangle into
-  * ⌈m/B⌉·(⌈m/B⌉+1)/2 tiles of at most B² pairs each — callers explode a
-  * (bi ≤ bj) tile-index frame and evaluate this expression once per tile,
-  * so peak per-row memory is B² longs regardless of m (and B should keep
-  * that under the G1 humongous threshold — see Dedup.PairBlockSize).
+  * Packing: with ~10⁶–10⁹ emitted pairs, a primitive long array
+  * (`UnsafeArrayData.fromPrimitiveArray`, zero boxing) replaces per-pair
+  * `InternalRow` structs, and the downstream `groupBy` aggregates on a
+  * single 8-byte key instead of a two-long row. Unpacking after
+  * aggregation is two bit ops per SURVIVING group, and packing is
+  * lossless. Callers guarantee 0 ≤ id < 2³¹ (the Jaccard operators gate
+  * on a measured min/max and fall back to [[OrderedPairsBlock]]
+  * otherwise).
+  *
+  * Blocking: all m(m−1)/2 pairs of an m-element posting in ONE row buffer
+  * is ~78 M packed longs ≈ 0.6 GB per evaluation at m ≈ 12,500, and a
+  * handful of concurrent tasks OOM the executor long before the
+  * Int-overflow guard at m = 65,536 fires (the measured failure mode of
+  * the forced all-pairs plan at the 100× bench decade). Blocked
+  * generation decomposes the pair triangle into ⌈m/B⌉·(⌈m/B⌉+1)/2 tiles
+  * of at most B² pairs each — callers explode a (bi ≤ bj) tile-index frame
+  * and evaluate this expression once per tile, so peak per-row memory is
+  * B² longs regardless of m (and B should keep that under the G1
+  * humongous threshold — see Dedup.PairBlockSize).
   *
   * Tile semantics over blocks [bi·B, min((bi+1)·B, m)) and [bj·B, …):
   * the diagonal tile (bi = bj) emits the within-block (i < j) triangle;
   * off-diagonal tiles (bi < bj) emit the full block-i × block-j rectangle.
   * Every global (i < j) pair lands in exactly one tile, so the union over
-  * tiles reproduces the single-shot output exactly. The packing contract
-  * (ids in [0, 2³¹), ascending input ⇒ a < b in every emitted pair) is the
-  * caller-guaranteed one documented on [[OrderedPairsPacked]].
+  * tiles is the full pair set, each pair once. Ascending input ⇒ a < b in
+  * every emitted pair.
   *
   * Loop bodies, the allocation overflow guard and the input-type contract
-  * live in [[PairGen]], shared with the single-shot forms (see
+  * live in [[PairGen]], shared with [[OrderedPairsBlock]] (see
   * `checkInputDataTypes` below for why the contract exists at all).
   *
   * Real `doGenCode`, not CodegenFallback: a fallback expression knocks its
@@ -148,8 +156,8 @@ object OrderedPairsPackedBlock {
 }
 
 /** One block of the ordered (i < j) pairs of a sorted array, as
-  * array<struct<a,b>> — the memory-bounded sibling of [[OrderedPairs]]
-  * with exactly the tile semantics of [[OrderedPairsPackedBlock]], for id
+  * array<struct<a,b>>, with exactly the tile semantics of
+  * [[OrderedPairsPackedBlock]], for id
   * types the packed form can't carry (strings, out-of-range longs).
   * Compiled like its packed sibling so the consuming Generate stays in
   * whole-stage codegen; the struct elements are unavoidably object rows,

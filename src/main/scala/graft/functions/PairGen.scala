@@ -8,19 +8,15 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** The ONE implementation of ordered-pair generation over a slice of a
-  * sorted, duplicate-free array — shared by all four pair expressions
-  * ([[OrderedPairs]], [[OrderedPairsPacked]] and their tiled blocks),
-  * interpreted AND codegen. Before this object existed the triangle /
-  * rectangle loop bodies lived in four near-identical copies (eval +
-  * `doGenCode` in each expression), so a fix — e.g. the Int-overflow
-  * allocation guard below — had to land in four places and could silently
-  * diverge; now each expression contributes only its prologue (bounds,
-  * argument guards) and delegates every loop to these helpers.
+  * sorted, duplicate-free array — shared by both tiled pair expressions
+  * ([[OrderedPairsPackedBlock]], [[OrderedPairsBlock]]), interpreted AND
+  * codegen, so a fix (e.g. the Int-overflow allocation guard below) lands
+  * once: each expression contributes only its prologue (bounds, argument
+  * guards) and delegates every loop to these helpers.
   *
   * Two loop shapes cover all cases:
-  *  - diag  [lo,hi): the within-slice (i < j) triangle — a single-shot
-  *    posting IS the diag over [0, n), and a tile's diagonal block is the
-  *    diag over its clamped bounds;
+  *  - diag  [lo,hi): the within-slice (i < j) triangle — a tile's
+  *    diagonal block is the diag over its clamped bounds;
   *  - rect  [li,hi) × [lj,hj): the full cross product of two disjoint
   *    blocks (callers guarantee hi ≤ lj, so i < j holds pairwise).
   */

@@ -40,91 +40,96 @@ object MaefMain {
       warehouseDir: String,
       outDir: String,
       window: Option[DateWindow.Window] = None): Artifacts = {
-    // Step 1: copy the warehouse and verify counts (S3/S4)
-    val tables = Map(
-      "conversions" -> spark.read.schema(MaefModel.Conversions).parquet(s"$warehouseDir/conversions"),
-      "session_sources" -> spark.read.schema(MaefModel.SessionSources).parquet(s"$warehouseDir/session_sources"),
-      "session_costs" -> spark.read.schema(MaefModel.SessionCosts).parquet(s"$warehouseDir/session_costs"))
-    MaefPipeline.copyAndVerify(tables, s"$outDir/warehouse")
-    val target = (name: String) => spark.read.parquet(s"$outDir/warehouse/$name")
-
-    // Step 2: transform (windowed like the reference's date-bounded runs)
-    val conversions = window match {
-      case Some(w) => target("conversions")
-        .filter(col("conv_date") >= w.startString && col("conv_date") <= w.endString)
-      case None => target("conversions")
+    // the three frames persisted below are released once the artifacts
+    // are counted, so neither a CLI pass nor a library call leaves
+    // cached blocks behind
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = {
+      cached += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
     }
-    // Gate on the un-persisted plan (shared helper — one partial pass),
-    // THEN persist: journeys has three consumers here (JSON sink, count,
-    // attribution), so the cache is justified, unlike MaefPipeline.run.
-    val journeysPlan = MaefJourneys.transform(conversions, target("session_sources"))
-    MaefPipeline.requireNonEmpty(journeysPlan, "transform produced no journey entries") // transform.py:264-265
-    val journeys = journeysPlan
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    JsonArrayIO.writePrettyJsonArray(journeys, s"$outDir/target_data.json")
-    val nTransformed = journeys.count()
+    try {
+      // Step 1: copy the warehouse and verify counts (S3/S4)
+      val tables = Map(
+        "conversions" -> spark.read.schema(MaefModel.Conversions).parquet(s"$warehouseDir/conversions"),
+        "session_sources" -> spark.read.schema(MaefModel.SessionSources).parquet(s"$warehouseDir/session_sources"),
+        "session_costs" -> spark.read.schema(MaefModel.SessionCosts).parquet(s"$warehouseDir/session_costs"))
+      MaefPipeline.copyAndVerify(tables, s"$outDir/warehouse")
+      val target = (name: String) => spark.read.parquet(s"$outDir/warehouse/$name")
 
-    // Step 3: attribution (native model in place of the external API)
-    val attribution = MaefPipeline.nativeAttribution(journeys, roundTo = Some(4))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the artifact is ENVELOPE-shaped like the reference's api_response.json
-    // (an array of {statusCode, value:[records]}) so the pipeline's own
-    // output replays through MaefPipeline.run(recordedResponses = ...) —
-    // a flat record array would read back as zero records under the
-    // ResponseEnvelope schema and fail the Σihc gate. One native "chunk" =
-    // one 200 envelope; records sorted for a deterministic artifact.
-    val responseEnvelope = attribution
-      .agg(sort_array(collect_list(struct(
-        col("conv_id").as("conversion_id"), col("session_id"),
-        col("initializer"), col("holder"), col("closer"), col("ihc")))).as("value"))
-      .select(
-        lit(200).as("statusCode"),
-        col("value"),
-        lit(null).cast(MaefModel.ResponseEnvelope("data").dataType).as("data"),
-        lit(null).cast(MaefModel.ResponseEnvelope("results").dataType).as("results"),
-        lit(null).cast(MaefModel.ResponseEnvelope("partialFailureErrors").dataType)
-          .as("partialFailureErrors"))
-    JsonArrayIO.writePrettyJsonArray(responseEnvelope, s"$outDir/api_response.json")
+      // Step 2: transform (windowed like the reference's date-bounded runs)
+      val conversions = window match {
+        case Some(w) => target("conversions")
+          .filter(col("conv_date") >= w.startString && col("conv_date") <= w.endString)
+        case None => target("conversions")
+      }
+      // Gate on the un-persisted plan (shared helper — one partial pass),
+      // THEN persist: journeys has three consumers here (JSON sink, count,
+      // attribution), so the cache is justified, unlike MaefPipeline.run.
+      val journeysPlan = MaefJourneys.transform(conversions, target("session_sources"))
+      MaefPipeline.requireNonEmpty(journeysPlan, "transform produced no journey entries") // transform.py:264-265
+      val journeys = cache(journeysPlan)
+      JsonArrayIO.writePrettyJsonArray(journeys, s"$outDir/target_data.json")
+      val nTransformed = journeys.count()
 
-    // Step 4: load-side verification gates (A4/A6)
-    val totalIhc = attribution.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0)
-    require(totalIhc > 0, s"Attribution data contains no valid IHC values (total=$totalIhc)")
-    val nPositive = Loader.verifyLoaded(attribution)
+      // Step 3: attribution (native model in place of the external API)
+      val attribution = cache(MaefPipeline.nativeAttribution(journeys, roundTo = Some(4)))
+      // the artifact is ENVELOPE-shaped like the reference's api_response.json
+      // (an array of {statusCode, value:[records]}) so the pipeline's own
+      // output replays through MaefPipeline.run(recordedResponses = ...) —
+      // a flat record array would read back as zero records under the
+      // ResponseEnvelope schema and fail the Σihc gate. One native "chunk" =
+      // one 200 envelope; records sorted for a deterministic artifact.
+      val responseEnvelope = attribution
+        .agg(sort_array(collect_list(struct(
+          col("conv_id").as("conversion_id"), col("session_id"),
+          col("initializer"), col("holder"), col("closer"), col("ihc")))).as("value"))
+        .select(
+          lit(200).as("statusCode"),
+          col("value"),
+          lit(null).cast(MaefModel.ResponseEnvelope("data").dataType).as("data"),
+          lit(null).cast(MaefModel.ResponseEnvelope("results").dataType).as("results"),
+          lit(null).cast(MaefModel.ResponseEnvelope("partialFailureErrors").dataType)
+            .as("partialFailureErrors"))
+      JsonArrayIO.writePrettyJsonArray(responseEnvelope, s"$outDir/api_response.json")
 
-    // Step 5: channel report + export. The FULL conversions table feeds
-    // the report, not the windowed view: reporting.py:97's HAVING bound is
-    // `(SELECT MIN(conv_date) FROM conversions)` over the whole table, so
-    // report rows dated before the run window (attribution from pre-window
-    // sessions of in-window conversions) must survive — the windowed
-    // attribution already scopes WHICH conversions are reported
-    val report = MaefReporting.`export`(
-      MaefReporting.channelReport(
-        attribution, // nativeAttribution already emits (conv_id, session_id, ihc)
-        target("session_sources"), target("session_costs"), target("conversions"),
-        fanout = false, exactSums = true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    JsonArrayIO.writeSingleCsv(report, s"$outDir/channel_report.csv")
+      // Step 4: load-side verification gates (A4/A6)
+      val totalIhc = attribution.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0)
+      require(totalIhc > 0, s"Attribution data contains no valid IHC values (total=$totalIhc)")
+      val nPositive = Loader.verifyLoaded(attribution)
 
-    Artifacts(nTransformed, attribution.count(), nPositive, report.count())
+      // Step 5: channel report + export. The FULL conversions table feeds
+      // the report, not the windowed view: reporting.py:97's HAVING bound is
+      // `(SELECT MIN(conv_date) FROM conversions)` over the whole table, so
+      // report rows dated before the run window (attribution from pre-window
+      // sessions of in-window conversions) must survive — the windowed
+      // attribution already scopes WHICH conversions are reported
+      val report = cache(MaefReporting.`export`(
+        MaefReporting.channelReport(
+          attribution, // nativeAttribution already emits (conv_id, session_id, ihc)
+          target("session_sources"), target("session_costs"), target("conversions"),
+          fanout = false, exactSums = true)))
+      JsonArrayIO.writeSingleCsv(report, s"$outDir/channel_report.csv")
+
+      Artifacts(nTransformed, attribution.count(), nPositive, report.count())
+    } finally cached.foreach(_.unpersist())
   }
 
-  /** Stage a SQLite warehouse file into `stagingDir` as parquet, cast to
-    * the reference DDL types (SQLite INTEGER affinity widens to i64 on
-    * page-level read; the cast is the same one a JDBC driver applies).
+  /** Stage a SQLite warehouse file into `stagingDir` as parquet, cast on
+    * read to the reference DDL types (SQLite INTEGER affinity widens to
+    * i64 on page-level read; the cast is the same one a JDBC driver
+    * applies) and written once, with verified counts.
     * Returns the directory `run` accepts as its `warehouseDir` — the
     * migrate-once pattern the JdbcWarehouse scaladoc prescribes. */
   def stageSqliteWarehouse(spark: SparkSession, dbPath: String, stagingDir: String): String = {
-    graft.sources.SQLiteWarehouse.migrate(spark, dbPath,
-      Seq("conversions", "session_sources", "session_costs"), s"$stagingDir/raw")
-    for ((name, schema) <- Seq(
+    val tables = Seq(
         "conversions" -> MaefModel.Conversions,
         "session_sources" -> MaefModel.SessionSources,
-        "session_costs" -> MaefModel.SessionCosts)) {
-      val src = spark.read.parquet(s"$stagingDir/raw/$name")
-      src.select(schema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        .write.mode("overwrite").parquet(s"$stagingDir/$name")
+        "session_costs" -> MaefModel.SessionCosts).map { case (name, schema) =>
+      name -> graft.sources.SQLiteWarehouse.readTable(spark, dbPath, name)
+        .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
     }
+    MaefPipeline.copyAndVerify(tables.toMap, stagingDir)
     stagingDir
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Attribution
+import graft.sources.ParquetWarehouse
 
 /** The reference's 5-step pipeline (main.py:20-83) as a single Spark
   * driver: warehouse → transform → attribution → load → report. Stage
@@ -26,17 +27,11 @@ object MaefPipeline {
 
   /** S3/S4: copy tables to the warehouse dir and verify row counts —
     * the reference's source→target copy + COUNT(*) check
-    * (src/database/db_utils.py:67-102). */
-  def copyAndVerify(tables: Map[String, DataFrame], targetDir: String): Map[String, Long] = {
+    * (src/database/db_utils.py:67-102), each source read once. */
+  def copyAndVerify(tables: Map[String, DataFrame], targetDir: String): Map[String, Long] =
     tables.map { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$targetDir/$name")
-      val spark = df.sparkSession
-      val copied = spark.read.parquet(s"$targetDir/$name").count()
-      val src = df.count()
-      require(src == copied, s"verification failed for $name: $src != $copied")
-      name -> copied
+      name -> ParquetWarehouse.writeVerified(df, s"$targetDir/$name")
     }
-  }
 
   /** §7.2: native IHC attribution over journey entries (the drop-in
     * replacement for the external API; same output schema as

@@ -32,8 +32,8 @@ object Curation {
     * each distinct null-text row its own group (the `n-` prefix cannot
     * collide with 32-hex md5; the content hash covers duplicate and null
     * doc_ids), so each passes through undeduped, hash-distributed like
-    * every other row — only byte-identical null-text rows collapse. This form was measured (r13,
-    * `BenchAuditProbe q39ab`) against the r12 split-union (separate
+    * every other row — only byte-identical null-text rows collapse. This
+    * form was measured (r13) against the r12 split-union (separate
     * IsNull/IsNotNull branches) and the r9 disjunct
     * (`__rn = 1 OR text IS NULL`): it keeps Catalyst's WindowGroupLimit
     * pushdown (the disjunct defeats it — on clustered duplication the

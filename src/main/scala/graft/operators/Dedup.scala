@@ -25,24 +25,6 @@ import graft.functions.VectorFunctions
   */
 object Dedup {
 
-  /** Measurement-only (r22): dump a driver-loop ROUND's physical plan when
-    * `SPARK_GRAFT_ROUND_PLAN_DIR` is set. The per-round shape of the
-    * iterative operators is otherwise invisible to plan tooling (each
-    * round's lineage is truncated by `localCheckpoint`, and the returned
-    * plan is just the final labels read) — this is the committed-evidence
-    * hook for the `plans/rNN` optimization deliverables, mirroring Bench's
-    * `SPARK_GRAFT_EXPLAIN_DIR`. Zero cost when the variable is unset. */
-  private[operators] def dumpRoundPlan(tag: String, df: DataFrame): Unit =
-    sys.env.get("SPARK_GRAFT_ROUND_PLAN_DIR").foreach { d =>
-      try {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(d, tag + ".txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-
   /** Exact dedup: first-wins by (fingerprint, orderCol) — the scalable
     * version of the reference's `seen`-set (src/etl/load.py:107-114).
     * Returns the surviving rows only. */
@@ -139,7 +121,6 @@ object Dedup {
         .select(col("src").as("node"), col("cluster_id"))
       val round = labels.unionByName(neighborLabels)
         .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
-      if (i == 0) dumpRoundPlan("cc_round1", round)
       val updated = round.localCheckpoint(true)
       val nextSig = labelSig(updated)
       labels.unpersist()
@@ -268,9 +249,7 @@ object Dedup {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val round = smallStarOriented(largeStar(cur))
-      if (i == 0) dumpRoundPlan("stars_round1", round)
-      val next = round.localCheckpoint(true)
+      val next = smallStarOriented(largeStar(cur)).localCheckpoint(true)
       val nextSig = signature(next)
       cur.unpersist()
       cur = next
@@ -408,9 +387,8 @@ object Dedup {
     * candidate volume at 100× is r² ≈ 10⁴-fold, the difference between
     * finishing and not. Runs as a small driver-side planning action over
     * ≤ `sampleDocs` documents (plus one count scan when `corpusSize` is
-    * not supplied). Public as a planning probe so scale harnesses can
-    * report the choice without re-deriving it. */
-  def prefixWorthIt(
+    * not supplied). */
+  private[operators] def prefixWorthIt(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
@@ -598,7 +576,7 @@ object Dedup {
     * per-row memory: every posting explodes its (bi ≤ bj) tile indices,
     * then each tile emits its ≤ blockSize² pairs through the block
     * expression. For a posting of ≤ blockSize docs nb = 1, so the single
-    * (0,0) diagonal tile IS the classic single-shot pair set — the two
+    * (0,0) diagonal tile IS the posting's whole pair set — the two
     * index explodes degenerate to one-iteration loops — and for longer
     * postings the union over tiles reproduces it exactly (the
     * tile-partition contract on [[graft.functions.OrderedPairsPackedBlock]]).
@@ -831,14 +809,10 @@ object Dedup {
     * below) so a partition fits in executor memory at any scale; nothing
     * is broadcast and no task exceeds (n/blocks)² work.
     *
-    * A 1-D projection bound prunes before the dot product: for unit-scaled
-    * vectors cos(x,y) ≥ t ⟹ ‖x̂−ŷ‖ ≤ √(2−2t), and the first normalized
-    * coordinate is a 1-Lipschitz projection of that distance — pairs whose
-    * first coordinates differ by more are rejected without touching the
-    * remaining dimensions. The bound is slack (never drops a qualifying
-    * pair), so output is identical to brute force and oracle parity holds:
-    * norms are precomputed per row and `dot/(norm_a·norm_b)` is
-    * arithmetically identical to inline norms.
+    * Norms are precomputed per row; `dot/(norm_a·norm_b)` is arithmetically
+    * identical to inline norms, so oracle parity holds. A row without a
+    * finite, positive norm (empty, all-zero, NaN or infinite) has no
+    * cosine and drops out before the join.
     *
     * `blocks` ≤ 0 (the default) derives the block count from the input's
     * OPTIMIZER SIZE ESTIMATE (r22, closing the r21 "constant where a
@@ -870,27 +844,19 @@ object Dedup {
       col(idCol).as("id"), col(vecCol).as("v"),
       VectorFunctions.norm(col(vecCol)).as("nrm"),
       pmod(xxhash64(col(idCol)), lit(nBlocks.toLong)).cast("int").as("blk"))
-      // guarded first coordinate: element_at(v, 1) on an EMPTY embedding
-      // throws INVALID_ARRAY_INDEX under ANSI mode — a null p1 makes the
-      // prune comparison null and the degenerate row drops out of the
-      // candidates (its cosine would be NaN and filtered anyway)
-      .withColumn("p1",
-        when(size(col("v")) >= 1,
-          element_at(col("v"), 1).cast("double") / col("nrm")))
+      // a zero norm divides by zero under ANSI, and Spark orders NaN above
+      // every number, so a NaN cosine would pass the threshold filter
+      .filter(col("nrm") > 0 && col("nrm") <= Double.MaxValue)
     // left side covers block pairs (blk, j≥blk); right side (i≤blk, blk) —
     // every unordered row pair meets exactly once at (min blk, max blk).
     val lhs = base.select(
-      col("id").as("lid"), col("v").as("lv"), col("nrm").as("ln_"),
-      col("p1").as("lp"), col("blk").as("bi"),
+      col("id").as("lid"), col("v").as("lv"), col("nrm").as("ln_"), col("blk").as("bi"),
       explode(sequence(col("blk"), lit(nBlocks - 1))).as("bj"))
     val rhs = base.select(
-      col("id").as("rid"), col("v").as("rv"), col("nrm").as("rn_"),
-      col("p1").as("rp"), col("blk").as("bj"),
+      col("id").as("rid"), col("v").as("rv"), col("nrm").as("rn_"), col("blk").as("bj"),
       explode(sequence(lit(0), col("blk"))).as("bi"))
-    val maxDist = math.sqrt(math.max(0.0, 2.0 - 2.0 * (minCosine - 1e-9)))
     lhs.join(rhs, Seq("bi", "bj"))
       .filter((col("bi") =!= col("bj")) || (col("lid") < col("rid")))
-      .filter(abs(col("lp") - col("rp")) <= maxDist)
       .withColumn("cosine",
         round(VectorFunctions.dot(col("lv"), col("rv")) / (col("ln_") * col("rn_")), 9))
       .filter(col("cosine") >= minCosine)

@@ -82,13 +82,12 @@ object PageRank {
           .groupBy(col("dst"))
           .agg(sum(col("contrib")).as("inflow"))
         val prev = ranks
-        val round = nodes
+        ranks = nodes
           .join(contribs, col("node") === col("dst"), "left")
           .select(
             col("node"),
             (lit(base) + expr("(85 * coalesce(inflow, 0L)) div 100")).as("rank"))
-        if (it == 1) Dedup.dumpRoundPlan("pagerank_round1", round)
-        ranks = round.localCheckpoint(true)
+          .localCheckpoint(true)
         // the superseded round's blocks are dead the moment the new rank
         // table is materialized — same unpersist discipline as the Dedup CC
         // loop, without it every round's full rank table stays pinned in the

@@ -71,20 +71,19 @@ object Quantiles {
   }
 
   /** Parallelism a single-group window cannot exceed: one task per group.
-    * Below this many groups the window path is sort-bound (ScaleSmoke
-    * measured 9.5×/decade at 5 groups — one task total-sorts each group),
-    * so `percentileRankAuto` considers the bucketed plan. At or above
-    * it, per-group sorts already spread across the cluster and the plain
-    * window's single shuffle wins. */
+    * Below this many groups the window path is sort-bound (the 10×/100×
+    * scale run measured 9.5×/decade at 5 groups — one task total-sorts
+    * each group), so `percentileRankAuto` considers the bucketed plan. At
+    * or above it, per-group sorts already spread across the cluster and
+    * the plain window's single shuffle wins. */
   val LowCardinalityThreshold = 64
 
   /** The second switch condition: the bucketed plan carries constant
     * machinery (a stats agg + two broadcasts + a G·B prefix sum) that
     * only pays once the serial per-group sorts are substantial. Measured
-    * on local[32] at 5 groups (Test/runMain
-    * graft.operators.PercentileRankScaleTiming, medians-of-3 on
-    * materialized parquet): 20 k rows/group window 0.95 s vs bucketed
-    * 1.69 s; 200 k/group 0.66 vs 1.42 (machinery-bound); 1 M/group ties
+    * on local[32] at 5 groups (medians-of-3 on materialized parquet):
+    * 20 k rows/group window 0.95 s vs bucketed 1.69 s; 200 k/group
+    * 0.66 vs 1.42 (machinery-bound); 1 M/group ties
     * (3.28 vs 3.15); 2 M/group bucketed wins 5.32 vs 3.25. The threshold
     * sits at the measured tie. local[32] understates the win: the window
     * path's per-group sort is SERIAL in group size, so on a wide cluster

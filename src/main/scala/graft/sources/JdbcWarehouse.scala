@@ -55,18 +55,7 @@ object JdbcWarehouse {
       targetDir: String,
       driver: Option[String] = None): Map[String, Long] =
     tables.map { t =>
-      // persist: ONE scan of the (possibly live) JDBC source feeds both
-      // the copy and the verification count — re-scanning for the count
-      // doubled ingest time and RACED concurrent writers, failing the
-      // verify even when the copy itself was internally consistent
-      val src = readTable(spark, url, t, driver = driver)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = src.count()
-        src.write.mode("overwrite").parquet(s"$targetDir/$t")
-        val copied = spark.read.parquet(s"$targetDir/$t").count()
-        require(n == copied, s"verification failed for $t: $n != $copied")
-        t -> copied
-      } finally src.unpersist()
+      t -> ParquetWarehouse.writeVerified(
+        readTable(spark, url, t, driver = driver), s"$targetDir/$t")
     }.toMap
 }

@@ -904,9 +904,9 @@ object ParquetWarehouse {
     * the right trade for an AUDIT tool (a name-filtered per-directory
     * glob would miss locks at depths the glob doesn't enumerate, and
     * litter is by definition where no writer looks), but it prices a
-    * sweep at one full warehouse listing: the sweep-scale probe
-    * (BenchAuditProbe, README table) measures the driver-side walk at
-    * growing file counts so an operator can budget it — on a 100 TB /
+    * sweep at one full warehouse listing: the r17 sweep-scale
+    * measurement (README table) timed the driver-side walk at growing
+    * file counts so an operator can budget it — on a 100 TB /
     * many-million-file store, use [[sweepLocksPerTable]] /
     * [[sweepUnits]] (r18): the same judgment split into O(tables)
     * bounded, independently-runnable increments instead of one
@@ -1162,7 +1162,7 @@ object ParquetWarehouse {
   /** Bounded, resumable alternative to one monolithic [[sweepLocks]] walk
     * (r17 verdict #4): the full sweep is O(all files under root) on the
     * driver — measured at ~98-108 min per 1M files on the local shim
-    * (BenchAuditProbe `sweep-scale`, README table) — which prices a
+    * (r17 sweep-scale measurement, README table) — which prices a
     * whole-warehouse audit as one unbounded increment. This splits it
     * into O(tables) bounded units along the warehouse's natural
     * first-level structure:
@@ -1585,7 +1585,7 @@ object ParquetWarehouse {
     * partition small-files explosion: without the pre-write repartition
     * on the partition column, EVERY task holding rows of a date opens a
     * file under that date's dir — T tasks × D dates files (measured in
-    * ScaleSmoke r13: 32 tasks × 3 000 dates ≈ 96 k files turned a 10×
+    * the r13 10× scale run: 32 tasks × 3 000 dates ≈ 96 k files turned a 10×
     * data step into a 32× write-time step and poisoned every later
     * partition DISCOVERY listing of the table). Hash-clustering rows by
     * date first lands each date in exactly one task → one file per date
@@ -1597,6 +1597,21 @@ object ParquetWarehouse {
   def writeDatePartitioned(df: DataFrame, path: String, dateCol: String): Unit =
     df.repartition(col(dateCol))
       .write.partitionBy(dateCol).mode(SaveMode.Overwrite).parquet(path)
+
+  /** Overwrite `path` with `df` as parquet and verify the landed row count
+    * — the reference's source→target copy + COUNT(*) check
+    * (db_utils.py:67-102). The source is counted by an `Observation` in
+    * the SAME scan that writes it, so the source is read exactly once: no
+    * second decode of a SQLite file, no cache, and no re-query of a live
+    * JDBC store that could race concurrent writers. Returns the count. */
+  def writeVerified(df: DataFrame, path: String): Long = {
+    val rows = new org.apache.spark.sql.Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(path)
+    val n = rows.get("n").asInstanceOf[Long]
+    val copied = df.sparkSession.read.parquet(path).count()
+    require(n == copied, s"verification failed for $path: $n != $copied")
+    copied
+  }
 
   /** Partition-scoped last-wins upsert — the scale path for incremental
     * merges. [[upsert]] is read-union-dedup-REWRITE: every batch rewrites
@@ -1710,7 +1725,7 @@ object ParquetWarehouse {
     // Read ONLY the affected partitions — including their DISCOVERY. A
     // `spark.read.parquet(table)` + partition filter prunes the file
     // SCAN but still lists every partition dir of the table to build the
-    // file index (ScaleSmoke r13 measured that listing dominating the
+    // file index (the r13 10× scale run measured that listing dominating the
     // one-day merge at 3 000 partitions: 10.0 s vs 3.4 s for the full
     // rewrite it was supposed to beat). Instead the affected dir paths
     // are constructed with Spark's own hive escaping (the exact function

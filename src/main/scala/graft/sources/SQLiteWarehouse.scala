@@ -397,22 +397,6 @@ object SQLiteWarehouse {
     case _ => null
   }
 
-  /** Driver-side planning walk ONLY: enumerate `table`'s leaf page
-    * numbers — exactly the work [[readTable]] does on the driver before
-    * fanning leaf decode out to executors. Public so scale harnesses
-    * (ScaleSmoke) can time the interior walk separately from the
-    * distributed decode: the walk is the one readTable cost that grows
-    * with table size on the DRIVER (interior pages ≈ leaves/~250 for
-    * 4 KB pages, read sequentially through one file handle). */
-  def leafPageNumbers(path: String, table: String): Seq[Int] = {
-    // same quiescence gate as readTable: walking a b-tree under a hot
-    // journal/WAL would silently enumerate a possibly-inconsistent tree
-    requireQuiescent(path)
-    val m = findTable(path, table)
-    val f = new RandomAccessFile(path, "r")
-    try { val hdr = readHeader(f); leafPages(f, hdr, m.rootPage) } finally f.close()
-  }
-
   /** Read one table into a DataFrame. Interior-page walk on the driver
     * enumerates the leaves; leaf decoding fans out across the cluster
     * (`parallelism` tasks, default = Spark's). */
@@ -458,16 +442,11 @@ object SQLiteWarehouse {
 
   /** S3/S4 over a SQLite file: copy each table into the parquet warehouse
     * and verify row counts — the reference's source→target copy + COUNT(*)
-    * check (db_utils.py:67-102) with the source read page-level. */
+    * check (db_utils.py:67-102) with the source read page-level, once. */
   def migrate(spark: SparkSession, dbPath: String, tables: Seq[String],
               targetDir: String): Map[String, Long] =
     tables.map { t =>
-      val src = readTable(spark, dbPath, t)
-      src.write.mode("overwrite").parquet(s"$targetDir/$t")
-      val copied = spark.read.parquet(s"$targetDir/$t").count()
-      val n = src.count()
-      require(n == copied, s"verification failed for $t: $n != $copied")
-      t -> copied
+      t -> ParquetWarehouse.writeVerified(readTable(spark, dbPath, t), s"$targetDir/$t")
     }.toMap
 
   // ---------- minimal writer (single-table fixtures / round-trips) ----------

@@ -66,24 +66,6 @@ class ExpressionPropertySpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("array"))
   }
 
-
-  test("OrderedPairs equals the interpreted lambda formulation for random arrays") {
-    OrderedPairs.register(spark)
-    val arrays = Seq.fill(100) {
-      val n = rng.nextInt(12)
-      (1 to n).map(_ => rng.nextLong(1000)).distinct.sorted
-    } :+ Seq.empty[Long] :+ Seq(42L)
-    val df = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "arr")
-    val got = df
-      .select(col("id"), call_function("ordered_pairs", col("arr")).as("p"))
-      .select(col("id"), expr("transform(p, x -> struct(x.a AS a, x.b AS b))").as("p"))
-      .as[(Long, Seq[(Long, Long)])].collect().toMap
-    arrays.zipWithIndex.foreach { case (a, i) =>
-      val want = for (x <- a.indices; y <- x + 1 until a.length) yield (a(x), a(y))
-      assert(got(i.toLong) === want, s"array $i")
-    }
-  }
-
   test("RollingHash equals the byte fold for random unicode strings") {
     val strings = Seq.fill(200) {
       val n = rng.nextInt(64)
@@ -239,7 +221,7 @@ class ExpressionPropertySpec extends SparkSpec {
     }
   }
 
-  test("blocked pair expressions tile-partition the single-shot pair set exactly") {
+  test("blocked pair expressions tile-partition the plain-Scala pair list exactly") {
     OrderedPairsPackedBlock.register(spark)
     OrderedPairsBlock.register(spark)
     val arrays = Seq.fill(60) {
@@ -312,7 +294,6 @@ class ExpressionPropertySpec extends SparkSpec {
 
   test("pair expressions refuse a tile/posting whose pair count overflows Int") {
     OrderedPairsPackedBlock.register(spark)
-    OrderedPairsPacked.register(spark)
     // 70,000 docs in ONE tile -> 2.45e9 pairs: an Int product would wrap,
     // allocate a short array and write past its end; the guard must throw
     // BEFORE allocating, naming the count
@@ -323,17 +304,11 @@ class ExpressionPropertySpec extends SparkSpec {
     }
     assert(causeChainMessages(e).exists(m =>
       m.contains("Int.MaxValue") && m.contains("2449965000")), e.toString)
-    val s = intercept[Exception] {
-      df.select(explode(call_function("ordered_pairs_packed", col("arr"))).as("pk")).count()
-    }
-    assert(causeChainMessages(s).exists(_.contains("Int.MaxValue")), s.toString)
   }
 
   test("pair expressions pin their input types at analysis, not at runtime") {
     OrderedPairsPackedBlock.register(spark)
     OrderedPairsBlock.register(spark)
-    OrderedPairsPacked.register(spark)
-    OrderedPairs.register(spark)
     // array<int> under the packed form would getLong over a 4-byte stride
     // and emit silent garbage pairs; array-typed tile indices would work
     // under codegen (Java widening) but CCE on the interpreted path — both
@@ -343,17 +318,10 @@ class ExpressionPropertySpec extends SparkSpec {
       ints.select(call_function("ordered_pairs_packed_block",
         col("arr"), col("bi"), col("bj"), lit(2))).collect()
     }
-    intercept[org.apache.spark.sql.AnalysisException] {
-      ints.select(call_function("ordered_pairs_packed", col("arr"))).collect()
-    }
     val longIdx = Seq((Seq(1L, 2L, 3L), 0L, 0L)).toDF("arr", "bi", "bj")
     intercept[org.apache.spark.sql.AnalysisException] {
       longIdx.select(call_function("ordered_pairs_block",
         col("arr"), col("bi"), col("bj"), lit(2))).collect()
-    }
-    intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(Tuple1("not an array")).toDF("arr")
-        .select(call_function("ordered_pairs", col("arr"))).collect()
     }
   }
 }

@@ -9,8 +9,18 @@ import graft.SparkSpec
   * operators and asserts the facts SURVEY §5 extracts from them. */
 class MaefGoldenSpec extends SparkSpec {
 
+  /** A golden artifact's path. A missing reference checkout FAILS the test
+    * (never cancels it) with a message naming the directory, instead of
+    * surfacing as a Spark PATH_NOT_FOUND deep in a read. */
+  private def golden(file: String): String = {
+    val path = s"$RefOut/$file"
+    assert(new java.io.File(path).isFile,
+      s"golden artifact $file missing: the reference output directory $RefOut is not mounted")
+    path
+  }
+
   test("loader flattens api_response.json to 3703 attribution rows, 1940 journeys") {
-    val acj = Loader.load(spark, s"$RefOut/api_response.json")
+    val acj = Loader.load(spark, golden("api_response.json"))
     assert(acj.count() === 3703)
     assert(acj.select(col("conv_id")).distinct().count() === 1940)
     // PK (conv_id, session_id) — no duplicates survive the dedup
@@ -23,14 +33,14 @@ class MaefGoldenSpec extends SparkSpec {
   }
 
   test("journey-entry contract: required_format.json reads under JourneyEntry schema") {
-    val df = JsonArrayIO.readJsonArray(spark, s"$RefOut/required_format.json", MaefModel.JourneyEntry)
+    val df = JsonArrayIO.readJsonArray(spark, golden("required_format.json"), MaefModel.JourneyEntry)
     assert(df.count() === 5070)
     assert(df.filter(col("conversion_id").isNull || col("session_id").isNull).count() === 0)
   }
 
   test("transformed_data groups to 1940 journeys of 3703 sessions (A1)") {
     val entries = JsonArrayIO.readJsonArray(
-      spark, s"$RefOut/transformed_data_2023-08-01_2023-09-30.json", MaefModel.JourneyEntry)
+      spark, golden("transformed_data_2023-08-01_2023-09-30.json"), MaefModel.JourneyEntry)
     assert(entries.count() === 3703)
     val perJourney = entries.groupBy(col("conversion_id")).agg(count(lit(1)).as("n"))
     assert(perJourney.count() === 1940)
@@ -43,7 +53,7 @@ class MaefGoldenSpec extends SparkSpec {
 
   test("chunker reproduces the 23-chunk split under the 85/2750 caps (L3)") {
     val entries = JsonArrayIO.readJsonArray(
-      spark, s"$RefOut/transformed_data_2023-08-01_2023-09-30.json", MaefModel.JourneyEntry)
+      spark, golden("transformed_data_2023-08-01_2023-09-30.json"), MaefModel.JourneyEntry)
     val assigned = Chunker.chunked(entries)
     assert(assigned.select(col("chunk_id")).distinct().count() === 23) // ⌈1940/85⌉
     val perChunk = assigned.groupBy(col("chunk_id")).agg(
@@ -58,7 +68,7 @@ class MaefGoldenSpec extends SparkSpec {
   }
 
   test("post-load verification and structure samples (A6/O2)") {
-    val acj = Loader.load(spark, s"$RefOut/api_response.json")
+    val acj = Loader.load(spark, golden("api_response.json"))
     // 318 of the 3,703 golden rows carry ihc == 0 (the API zeroes
     // non-contributing touchpoints); the reference's gate only requires ≥ 1
     assert(Loader.verifyLoaded(acj) === 3385L)
@@ -112,9 +122,9 @@ class MaefGoldenSpec extends SparkSpec {
     // exact row set) pins both our strict aggregation and our understanding
     // of the fanout semantics against all 117 golden rows.
     import spark.implicits._
-    val acj = Loader.load(spark, s"$RefOut/api_response.json")
+    val acj = Loader.load(spark, golden("api_response.json"))
     val entries = JsonArrayIO.readJsonArray(
-      spark, s"$RefOut/transformed_data_2023-08-01_2023-09-30.json", MaefModel.JourneyEntry)
+      spark, golden("transformed_data_2023-08-01_2023-09-30.json"), MaefModel.JourneyEntry)
     val sessions = entries.select(
         col("session_id"),
         col("channel_label").as("channel_name"),
@@ -130,7 +140,7 @@ class MaefGoldenSpec extends SparkSpec {
       .as[(String, String, Double)].collect()
       .map { case (c, d, i) => (c, d) -> i }.toMap
 
-    val lines = scala.io.Source.fromFile(s"$RefOut/channel_report.csv").getLines().toList
+    val lines = scala.io.Source.fromFile(golden("channel_report.csv")).getLines().toList
     val rows = lines.tail.map(_.split(",")).map(a => (a(0), a(1), a(3).toDouble))
     assert(rows.size === 117)
     rows.foreach { case (ch, d, ihcCsv) =>

@@ -76,12 +76,18 @@ class MaefPipelineSpec extends SparkSpec {
       === entries.select("conversion_id", "session_id").as[(String, String)].collect().toSet)
   }
 
-  test("MaefMain runs the reference's five steps end to end from a parquet warehouse") {
+  private def parquetWarehouse(): String = {
     val (conv, sess, costs) = fixtures()
     val wh = java.nio.file.Files.createTempDirectory("graft_wh_main").toString
     conv.write.mode("overwrite").parquet(s"$wh/conversions")
     sess.write.mode("overwrite").parquet(s"$wh/session_sources")
     costs.write.mode("overwrite").parquet(s"$wh/session_costs")
+    wh
+  }
+
+  test("MaefMain runs the reference's five steps end to end from a parquet warehouse") {
+    val (conv, sess, costs) = fixtures()
+    val wh = parquetWarehouse()
     val out = java.nio.file.Files.createTempDirectory("graft_out_main").toString
     val a = MaefMain.run(spark, wh, out)
     assert(a.transformedRows === 3)  // c1×(s1,s2) + c2×s3
@@ -107,6 +113,18 @@ class MaefPipelineSpec extends SparkSpec {
     val b = MaefMain.run(spark, wh, out2, Some(w))
     assert(b.transformedRows === 1)
     assert(b.attributionRows === 1)
+  }
+
+  test("MaefMain.run releases the frames it persists") {
+    // journeys, attribution and report are cached for their several
+    // consumers inside run; neither a CLI pass nor a library call may
+    // leave them pinned in the block manager
+    val wh = parquetWarehouse()
+    val out = java.nio.file.Files.createTempDirectory("graft_out_cache").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    MaefMain.run(spark, wh, out)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"cached RDDs left behind by run: $left")
   }
 
   test("single-file CSV sink writes one header file (S7)") {

@@ -451,7 +451,7 @@ class ParquetWarehouseSpec extends SparkSpec {
 
   test("date-partitioned write emits ONE data file per partition from a many-task input") {
     // the dynamic-partition small-files guard: a T-task frame spanning D
-    // dates must land D files, not T×D (ScaleSmoke r13 measured the
+    // dates must land D files, not T×D (the r13 10× scale run measured the
     // unshaped write turning a 10× data step into a 32× write-time step
     // at 3 000 dates × 32 tasks)
     val dir = java.nio.file.Files.createTempDirectory("graft_part1f").toString + "/t"

@@ -516,7 +516,9 @@ class DedupSimilarityEdgeSpec extends SparkSpec {
   test("embeddingNearDups: an EMPTY embedding drops out instead of an ANSI crash") {
     val vecs = Seq(
       (1L, Seq(1.0f, 0.0f)), (2L, Seq(1.0f, 0.01f)),
-      (900L, Seq.empty[Float])
+      (900L, Seq.empty[Float]),
+      (901L, Seq(0.0f, 0.0f)),         // zero norm: no cosine, no crash
+      (902L, Seq(Float.NaN, 1.0f))     // NaN cosine must not pass the threshold
     ).toDF("vec_id", "embedding")
     val pairs = Dedup.embeddingNearDups(vecs, minCosine = 0.9)
       .select("a", "b").as[(Long, Long)].collect().toSet

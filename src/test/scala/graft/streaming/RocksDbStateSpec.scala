@@ -18,9 +18,8 @@ import graft.streaming.StreamingFunnel.{ClosedSession, Event}
   * residency. These specs pin that invisibility — the custom
   * mapGroupsWithState shapes (Sessionizer) and built-in update-mode
   * aggregation (runningCounters, the q100 shape) emit IDENTICAL results
-  * under RocksDB — so the r13/r15 plateau measurements
-  * (`BenchAuditProbe state <m> rocksdb`) stand on a provider the specs
-  * prove correct, not just one they assume. */
+  * under RocksDB — so the r13/r15 RocksDB plateau measurements stand on
+  * a provider the specs prove correct, not just one they assume. */
 class RocksDbStateSpec extends SparkSpec {
   import spark.implicits._
 
