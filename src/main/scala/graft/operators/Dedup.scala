@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,6 +33,18 @@ object Dedup {
     docs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
+  /** `localCheckpoint(true)` `df` and read the aggregate `metrics` off the
+    * SAME job through an `Observation` — an iterative loop's per-round
+    * convergence signature (or a census count) then costs no query of its
+    * own (`ParquetWarehouse.writeVerified` counts its source the same way).
+    * Returns the checkpoint and the metric values by name. */
+  private[operators] def checkpointObserving(
+      df: DataFrame, metric: Column, more: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = new Observation()
+    val cp = df.observe(obs, metric, more: _*).localCheckpoint(true)
+    (cp, obs.get)
+  }
+
   /** Distributed connected components over an undirected candidate-pair
     * edge list — the CLUSTERING step a production dedup pipeline runs
     * after MinHash/Jaccard pair generation: near-dup similarity is not
@@ -46,16 +58,16 @@ object Dedup {
     * component diameter; near-dup clusters are dense (diameter ~2-3), so
     * a handful of rounds suffice even at 100 TB. Each round is one
     * shuffle join (edges ⋈ labels on the neighbor id) + one min-combine
-    * aggregation (map-side combinable); the driver's only action per
-    * round is a `limit(1).count` convergence probe. Each round's labels
-    * are `localCheckpoint`ed — iteration under a driver loop MUST
-    * truncate lineage, or the logical plan nests one level per round and
-    * planning (AQE's plan re-explain in particular) blows up
-    * exponentially long before the data does. On a cluster where
-    * executor loss matters, swap in reliable `checkpoint` with a
-    * checkpoint dir — same plan shape. For adversarial long-chain graphs
-    * the O(log²n)-round large-star/small-star variant (Kiveris et al.,
-    * SoCC'14) drops in behind the same signature.
+    * aggregation (map-side combinable). Each round's labels are
+    * `localCheckpoint`ed — iteration under a driver loop MUST truncate
+    * lineage, or the logical plan nests one level per round and planning
+    * (AQE's plan re-explain in particular) blows up exponentially long
+    * before the data does — and the checkpoint is the round's ONLY job:
+    * the convergence signature is observed in it (see
+    * [[checkpointObserving]]). On a cluster where executor loss matters,
+    * swap in reliable `checkpoint` with a checkpoint dir — same plan
+    * shape. For adversarial long-chain graphs use
+    * [[connectedComponentsStars]] (O(log D) rounds for diameter D).
     *
     * Output: (node, cluster_id) for every NON-NULL node that appears in
     * an edge (a half-null edge never propagates labels but its real
@@ -82,47 +94,38 @@ object Dedup {
       .union(base.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .localCheckpoint(true)
+    // convergence signature, observed in each checkpoint's own job: the
+    // node set is FIXED across rounds (every round unions the previous
+    // labels back in and groups per node) and a label only ever
+    // DECREASES, so Σ cluster_id is unchanged exactly when no label
+    // changed — an exact test, no hash (decimal: overflow-free under ANSI)
+    def checkpointLabels(l: DataFrame) =
+      checkpointObserving(l, sum(col("cluster_id").cast("decimal(38,0)")).as("sig"))
     // r21: the node census and the FIRST propagation round are one
     // aggregation — labels₀(v) = min(v, Γ(v)) instead of v. Min-label
     // propagation is monotone and converges to the component minimum from
     // any node-dominated start (labels₀ ≤ v and ≥ the component min), so
     // the fixpoint — and the "one full no-change round" convergence
     // criterion — is unchanged while every multi-round graph saves one
-    // whole iteration (join over sym + agg + checkpoint + probe). Nodes
+    // whole iteration (join over sym + agg + checkpoint). Nodes
     // appearing only in half-null edges are absent from `sym` but present
     // in the census branches, so they still surface as singletons.
-    var labels = base.select(col("src").as("node"))
-      .union(base.select(col("dst").as("node")))
-      .filter(col("node").isNotNull)
-      .select(col("node"), col("node").as("cluster_id"))
-      .union(sym.select(col("src").as("node"), col("dst").as("cluster_id")))
-      .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
-      .localCheckpoint(true)
+    var (labels, sig) = checkpointLabels(
+      base.select(col("src").as("node"))
+        .union(base.select(col("dst").as("node")))
+        .filter(col("node").isNotNull)
+        .select(col("node"), col("node").as("cluster_id"))
+        .union(sym.select(col("src").as("node"), col("dst").as("cluster_id")))
+        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
     base.unpersist() // sym and the initial labels are both materialized
-    // convergence probe: the node set is FIXED across rounds (every round
-    // unions the previous labels back in and groupBys per node), so
-    // "no label changed" ⇔ the (order-independent) Σ xxhash64(node, label)
-    // signature is unchanged — ONE tiny aggregate over the just-
-    // materialized checkpoint instead of the previous join + limit +
-    // count probe job per round (same deterministic-signature contract,
-    // including the ≪2⁻⁶⁰ false-stop bound, as connectedComponentsStars;
-    // labels also only ever DECREASE, so a changed round can only hash
-    // equal through a collision).
-    def labelSig(l: DataFrame): java.math.BigDecimal =
-      l.agg(coalesce(
-        sum(xxhash64(col("node"), col("cluster_id")).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    var sig = labelSig(labels)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val neighborLabels = sym
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("cluster_id"))
-      val round = labels.unionByName(neighborLabels)
-        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
-      val updated = round.localCheckpoint(true)
-      val nextSig = labelSig(updated)
+      val (updated, nextSig) = checkpointLabels(labels.unionByName(neighborLabels)
+        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
       labels.unpersist()
       labels = updated
       converged = nextSig == sig
@@ -157,11 +160,15 @@ object Dedup {
     * r21 groupBy(min)+equi-join spelling paid an extra aggregate, a join,
     * and a duplicate subtree evaluation for the same result; see the
     * half-round comments) and every round `localCheckpoint`s (same lineage
-    * trap as `connectedComponents`). The fixpoint probe compares the
-    * (count, Σ xxhash64) signature of consecutive edge sets: all-integer
-    * and deterministic, with a vanishing (≪2⁻⁶⁰ per round) false-stop
-    * probability; the paired spec cross-checks labels against the
-    * min-label implementation exactly. */
+    * trap as `connectedComponents`). The fixpoint test compares the
+    * (count, Σ xxhash64(src, dst)) signature of consecutive edge sets,
+    * observed in each checkpoint's own job like min-label's: all-integer
+    * and deterministic, but a HASH — edge sets do not shrink monotonically
+    * the way labels do — so it keeps a vanishing (≪2⁻⁶⁰ per round)
+    * false-stop probability; the paired specs cross-check labels against
+    * the min-label implementation and a union-find exactly. At the
+    * fixpoint every component is a star on its minimum, so the labels are
+    * one left join of the node census onto the contracted edges. */
   def connectedComponentsStars(
       edges: DataFrame,
       aCol: String = "a",
@@ -219,15 +226,8 @@ object Dedup {
         .select(explode(array(col("dst"), col("src"))).as("src"), col("mn").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
-    def signature(e: DataFrame): (Long, java.math.BigDecimal) = {
-      // decimal sum: overflow-free under ANSI mode, order-independent
-      val r = e.agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)).as("h"))
-        .head()
-      (r.getLong(0), r.getDecimal(1))
-    }
+    def checkpointEdges(e: DataFrame) = checkpointObserving(e,
+      count(lit(1)).as("n"), sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")).as("h"))
     // same edge contract as connectedComponents: half-null edges never
     // contract but their real endpoint survives as a singleton, and
     // self-loop-only nodes surface as singleton components. The input is
@@ -241,16 +241,13 @@ object Dedup {
       .unionByName(base.select(col("dst").as("node")))
       .filter(col("node").isNotNull).distinct()
       .localCheckpoint(true)
-    var cur = base
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .localCheckpoint(true)
+    var (cur, sig) = checkpointEdges(base
+      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst")))
     base.unpersist() // allNodes and the round-0 edges are materialized
-    var sig = signature(cur)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val next = smallStarOriented(largeStar(cur)).localCheckpoint(true)
-      val nextSig = signature(next)
+      val (next, nextSig) = checkpointEdges(smallStarOriented(largeStar(cur)))
       cur.unpersist()
       cur = next
       converged = nextSig == sig
@@ -260,17 +257,14 @@ object Dedup {
     if (!converged) throw new IllegalStateException(
       s"connectedComponentsStars: not converged after $maxIter rounds; " +
         "raise maxIter (star contraction needs O(log diameter) rounds)")
-    val roots = cur.select(col("dst")).distinct()
-      .join(cur.select(col("src").as("dst")).distinct(), Seq("dst"), "left_anti")
-    val labeled = cur.select(col("src").as("node"), col("dst").as("cluster_id"))
-      .unionByName(roots.select(col("dst").as("node"), col("dst").as("cluster_id")))
-      .distinct()
-    // nodes that appeared ONLY in self-loops have no contracted edge —
-    // they are their own singleton components, exactly as in the
+    // at the fixpoint each non-root node is the src of exactly ONE edge
+    // (onto its component minimum), so one left join labels every node;
+    // roots, and nodes that appeared only in self-loops or half-null
+    // edges, have no edge and label themselves — exactly as in the
     // min-label implementation
-    labeled.unionByName(
-      allNodes.join(labeled.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("cluster_id")))
+    allNodes.join(cur.select(col("src").as("node"), col("dst").as("cluster_id")),
+        Seq("node"), "left")
+      .select(col("node"), coalesce(col("cluster_id"), col("node")).as("cluster_id"))
   }
 
   /** Keep one representative document per near-dup cluster: the row whose
@@ -793,6 +787,32 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** `embeddingNearDups`' default block count for `embeddings`, from its
+    * analyzed-plan size estimate (already materialized at Dataset
+    * creation: no optimizer pass, no job). A leaf without real stats — an
+    * RDD-backed or checkpointed frame — reports the session's
+    * `spark.sql.defaultSizeInBytes` placeholder, and every estimate above
+    * such a leaf is derived from it (scaled by row widths, so not always
+    * equal to it); either way the estimate is unknown, not huge. */
+  private[operators] def derivedEmbedBlocks(embeddings: DataFrame): Int = {
+    val plan = embeddings.queryExecution.analyzed
+    val placeholder = BigInt(embeddings.sparkSession.sessionState.conf.defaultSizeInBytes)
+    val bytes =
+      if (plan.collectLeaves().exists(_.stats.sizeInBytes >= placeholder)) placeholder
+      else plan.stats.sizeInBytes
+    embedBlocks(bytes, placeholder)
+  }
+
+  /** Blocks for an estimated input of `bytes`: ceil(bytes / 64 MB), floor
+    * 16, cap 2²⁰. An estimate at or above `placeholder` (the session's
+    * `defaultSizeInBytes`) means "no estimate" and maps to the floor — the
+    * cap would make the explode O(2²⁰·n) on an input of any size. */
+  private[operators] def embedBlocks(bytes: BigInt, placeholder: BigInt): Int = {
+    val target = BigInt(64L << 20)
+    if (bytes >= placeholder) 16
+    else ((bytes + target - 1) / target).max(16).min(1 << 20).toInt
+  }
+
   /** EXACT embedding-cosine near-dup pairs above `minCosine` — every
     * qualifying pair is returned (no LSH recall loss; the approximate
     * bucketed path is `Similarity.srpBuckets`/`lshAnnTopK`).
@@ -824,22 +844,16 @@ object Dedup {
     * (min blk, max blk) for any count ≥ 1), only the replication factor
     * (shuffle volume ∝ blocks·n — the inherent exact-all-pairs trade
     * between shuffle and per-task memory/compute). The floor 16 is the
-    * measured bench optimum; an explicit positive `blocks` overrides. */
+    * measured bench optimum, and also the answer when the input has no
+    * real size estimate (see [[derivedEmbedBlocks]]); an explicit
+    * positive `blocks` overrides. */
   def embeddingNearDups(
       embeddings: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       minCosine: Double = 0.4,
       blocks: Int = 0): DataFrame = {
-    val nBlocks =
-      if (blocks > 0) blocks
-      else {
-        // analyzed-plan stats: already materialized at Dataset creation,
-        // no second optimizer pass for a threshold decision
-        val bytes = embeddings.queryExecution.analyzed.stats.sizeInBytes
-        val target = BigInt(64L << 20)
-        ((bytes + target - 1) / target).max(16).min(1 << 20).toInt
-      }
+    val nBlocks = if (blocks > 0) blocks else derivedEmbedBlocks(embeddings)
     val base = embeddings.select(
       col(idCol).as("id"), col(vecCol).as("v"),
       VectorFunctions.norm(col(vecCol)).as("nrm"),

@@ -54,10 +54,11 @@ object PageRank {
     require(iterations >= 0, s"iterations must be >= 0: $iterations")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
-    val n = nodes.count()
+    // the node count rides the census checkpoint's own job
+    val (nodes, census) = Dedup.checkpointObserving(
+      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct(),
+      count(lit(1)).as("n"))
+    val n = census("n").asInstanceOf[Long]
     require(n > 0, "PageRank needs a non-empty graph")
     val base = (15L * Scale) / (100L * n)
     var ranks = nodes.withColumn("rank", lit(Scale / n))

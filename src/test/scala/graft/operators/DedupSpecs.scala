@@ -1,9 +1,46 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
 
 import graft.{SparkSpec, Tables}
 import graft.maef.Chunker
+
+/** `body`'s result and the `funcName`s of the queries it executes, in
+  * order — "which actions did this builder run?". A QueryExecutionListener
+  * records every query between two marker queries; listener events arrive
+  * asynchronously but in order, so once the closing marker has been seen
+  * every query `body` ran has been seen too. */
+object ExecutedQueries extends Eventually {
+  def during[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).collectAsList() // opening marker
+      val result = body
+      spark.range(1).tail(1) // closing marker
+      eventually(timeout(60.seconds), interval(50.millis)) {
+        assert(seen.contains("tail"), "closing marker query never reported")
+      }
+      val all = seen.asScala.toSeq
+      (result, all.slice(all.indexOf("collectAsList") + 1, all.lastIndexOf("tail")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -121,6 +158,30 @@ class DedupSpec extends SparkSpec {
     assert(kept === Set(1L, 3L))
   }
 
+  private def labels(cc: DataFrame): Seq[(Long, Long)] =
+    cc.as[(Long, Long)].collect().toSeq.sorted
+
+  /** Driver-side union-find under the kernels' edge contract: every
+    * non-null endpoint is a node, only edges with two non-null endpoints
+    * join components; one sorted (node, component min) row per node. */
+  private def unionFind(edges: Seq[(Option[Long], Option[Long])]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach {
+      case (Some(a), Some(b)) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      case (a, b) => (a ++ b).foreach(find)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).sorted
+  }
+
+  private def both(edges: Seq[(Long, Long)]): Seq[(Option[Long], Option[Long])] =
+    edges.map { case (a, b) => (Some(a), Some(b)) }
+
   test("connectedComponents equals a union-find reference (randomized)") {
     for (seed <- 1 to 3) {
       val rng = new scala.util.Random(seed)
@@ -129,48 +190,82 @@ class DedupSpec extends SparkSpec {
       val edges = (Seq.tabulate(8)(i => (i.toLong * 3, i.toLong * 3 + 3)) ++ // a chain
         Seq.fill(25)((rng.nextInt(n).toLong, rng.nextInt(n).toLong)))
         .filter { case (a, b) => a != b }
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
-
-      // driver-side union-find
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      val expected = nodes
-        .groupBy(find)
-        .flatMap { case (_, members) => members.map(_ -> members.min) }
-        .toMap
-      assert(got === expected, s"seed=$seed")
+      val got = labels(Dedup.connectedComponents(edges.toDF("a", "b")))
+      assert(got === unionFind(both(edges)), s"seed=$seed")
     }
   }
 
   test("connectedComponentsStars matches min-label labels; converges on a chain min-label cannot finish") {
-    // equivalence on random graphs (same shape as the union-find test)
+    // equivalence on random graphs (same shape as the union-find test),
+    // compared row for row: a duplicated node row must not hide in a Map
     for (seed <- 1 to 3) {
       val rng = new scala.util.Random(seed + 100)
       val edges = (Seq.tabulate(8)(i => (i.toLong * 3, i.toLong * 3 + 3)) ++
         Seq.fill(25)((rng.nextInt(40).toLong, rng.nextInt(40).toLong)))
         .filter { case (a, b) => a != b }
-      val viaStars = Dedup.connectedComponentsStars(edges.toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
-      val viaLabels = Dedup.connectedComponents(edges.toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
+      val viaStars = labels(Dedup.connectedComponentsStars(edges.toDF("a", "b")))
+      val viaLabels = labels(Dedup.connectedComponents(edges.toDF("a", "b")))
       assert(viaStars === viaLabels, s"seed=$seed")
     }
     // adversarial diameter: a 200-node path. Min-label needs ~200 rounds
     // (one hop per round); star contraction must land it in ≤ 12.
     val chain = (0L until 199L).map(i => (i, i + 1))
-    val labels = Dedup.connectedComponentsStars(chain.toDF("a", "b"), maxIter = 12)
-      .as[(Long, Long)].collect()
-    assert(labels.length === 200)
-    assert(labels.forall(_._2 === 0L), "chain did not contract to its minimum")
+    val got = labels(Dedup.connectedComponentsStars(chain.toDF("a", "b"), maxIter = 12))
+    assert(got === (0L until 200L).map(_ -> 0L))
+  }
+
+  test("both kernels equal union-find on hostile shapes: chain, hub, clique, singleton mix, empty") {
+    val rng = new scala.util.Random(11)
+    val hub = (1L to 300L).map(leaf => (1000L, leaf)) // the hub is not the minimum
+    val clique = for (a <- 500L until 530L; b <- a + 1 until 530L) yield (b, a)
+    val mixed: Seq[(Option[Long], Option[Long])] =
+      Seq((Some(900L), Some(900L)), (Some(3L), Some(3L)), // self-loops
+        (None, Some(901L)), (Some(902L), None), (Some(5L), None)) ++ // half-null
+        both(Seq.fill(40)((rng.nextInt(60).toLong, rng.nextInt(60).toLong)))
+    val shapes = Seq(
+      "200-chain" -> both((0L until 199L).map(i => (i + 1, i))),
+      "40-chain" -> both((0L until 39L).map(i => (i, i + 1))),
+      "300-leaf hub" -> both(hub),
+      "30-clique" -> both(clique),
+      "singleton mix" -> mixed,
+      "self-loops only" -> both(Seq((7L, 7L), (8L, 8L))), // no edge survives round 0
+      "empty" -> Seq.empty)
+    for ((name, edges) <- shapes) {
+      val df = edges.toDF("a", "b")
+      val expected = unionFind(edges)
+      assert(labels(Dedup.connectedComponentsStars(df)) === expected, s"stars: $name")
+      // min-label needs one round per hop: the 200-chain is stars-only
+      if (name != "200-chain")
+        assert(labels(Dedup.connectedComponents(df)) === expected, s"min-label: $name")
+    }
+  }
+
+  test("exhausting maxIter throws instead of returning partial labels (both kernels)") {
+    val chain60 = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
+    val minLabel = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain60, maxIter = 3)
+    }
+    assert(minLabel.getMessage.contains("not converged after 3 rounds"))
+    val chain200 = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+    val stars = intercept[IllegalStateException] {
+      Dedup.connectedComponentsStars(chain200, maxIter = 2)
+    }
+    assert(stars.getMessage.contains("not converged after 2 rounds"))
+  }
+
+  test("the component loops run no query but their checkpoints") {
+    // a multi-round graph: a 12-chain plus a star, for both kernels; each
+    // round's convergence signature rides its checkpoint's job, so the
+    // loops submit no separate probe query (the returned frame is lazy)
+    val edges = ((0L until 11L).map(i => (i, i + 1)) ++ (21L to 30L).map((20L, _)))
+      .toDF("a", "b")
+    for ((name, kernel) <- Seq[(String, DataFrame => DataFrame)](
+        "min-label" -> (Dedup.connectedComponents(_)),
+        "stars" -> (Dedup.connectedComponentsStars(_)))) {
+      val (out, queries) = ExecutedQueries.during(spark)(kernel(edges))
+      assert(queries.nonEmpty && queries.forall(_ == "localCheckpoint"), s"$name ran $queries")
+      assert(labels(out) === ((0L to 11L).map(_ -> 0L) ++ (20L to 30L).map(_ -> 20L)), name)
+    }
   }
 
   test("representatives keeps one doc per cluster plus all unclustered docs") {
@@ -476,10 +571,10 @@ class DedupSimilarityEdgeSpec extends SparkSpec {
       (Option.empty[Long], Some(7L)) // half-null: 7 survives as a singleton
     ).toDF("a", "b")
     val viaMin = Dedup.connectedComponents(edges)
-      .as[(Long, Long)].collect().toSet
+      .as[(Long, Long)].collect().toSeq.sorted
     val viaStars = Dedup.connectedComponentsStars(edges)
-      .as[(Long, Long)].collect().toSet
-    assert(viaMin === Set((5L, 5L), (1L, 1L), (2L, 1L), (7L, 7L)))
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(viaMin === Seq((1L, 1L), (2L, 1L), (5L, 5L), (7L, 7L)))
     assert(viaStars === viaMin)
   }
 
@@ -541,5 +636,52 @@ class DedupSimilarityEdgeSpec extends SparkSpec {
     assert(run(1) === derived)
     assert(run(3) === derived)
     assert(run(64) === derived)
+  }
+
+  test("embedBlocks: the placeholder and 0 map to the floor, 64 MB per block, capped") {
+    val placeholder = BigInt(Long.MaxValue) // the defaultSizeInBytes default
+    val mb64 = BigInt(64L << 20)
+    assert(Dedup.embedBlocks(placeholder, placeholder) === 16)
+    assert(Dedup.embedBlocks(placeholder * 2, placeholder) === 16) // a join's product estimate
+    assert(Dedup.embedBlocks(0, placeholder) === 16)
+    assert(Dedup.embedBlocks(mb64 * 20, placeholder) === 20)
+    assert(Dedup.embedBlocks(mb64 * 20 + 1, placeholder) === 21)
+    assert(Dedup.embedBlocks(placeholder - 1, placeholder) === (1 << 20))
+    // a session that lowers defaultSizeInBytes moves the "unknown" line
+    assert(Dedup.embedBlocks(mb64 * 20, mb64 * 20) === 16)
+  }
+
+  test("embeddingNearDups on an RDD-backed frame derives the floor, not 2^20 blocks") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Sequence}
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(3)
+    val rows = Seq.tabulate(40) { i =>
+      Row(i.toLong, Seq.fill(4)(rng.nextFloat() * 2 - 1), s"title $i")
+    }
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("title", StringType)))
+    val rddBacked = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    // a projection scales the placeholder by row widths: no longer equal
+    // to it, still no estimate
+    val projected = rddBacked.select("vec_id", "embedding")
+    val placeholder = BigInt(Long.MaxValue)
+    assert(rddBacked.queryExecution.analyzed.stats.sizeInBytes >= placeholder)
+    assert(projected.queryExecution.analyzed.stats.sizeInBytes < placeholder)
+    assert(Dedup.derivedEmbedBlocks(rddBacked) === 16)
+    assert(Dedup.derivedEmbedBlocks(projected) === 16)
+    // end to end: the operator's explode runs over blocks 0..15, and the
+    // pairs are those of a single block
+    val derived = Dedup.embeddingNearDups(projected, minCosine = 0.4)
+    val stops = derived.queryExecution.analyzed
+      .flatMap(_.expressions.flatMap(_.collect { case s: Sequence => s.stop }))
+      .collect { case Literal(v: Int, _) => v }
+    assert(stops === Seq(15))
+    def pairs(df: DataFrame) = df.as[(Long, Long, Double)].collect().toSeq.sorted
+    val got = pairs(derived)
+    assert(got.nonEmpty)
+    assert(got === pairs(Dedup.embeddingNearDups(projected, minCosine = 0.4, blocks = 1)))
   }
 }

@@ -87,6 +87,14 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
+  test("PageRank.run runs no query but its checkpoints (the node count rides the census)") {
+    val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"))
+    val (out, queries) = ExecutedQueries.during(spark)(
+      PageRank.run(edges.toDF("src", "dst"), "src", "dst", iterations = 2))
+    assert(queries.nonEmpty && queries.forall(_ == "localCheckpoint"), s"ran $queries")
+    assert(out.as[(String, Long)].collect().toMap === reference(edges, 2))
+  }
+
   test("hand graph: sinks keep base rank, hubs accumulate, mass never grows") {
     // a -> b, a -> c, b -> c ; c is a sink (dangling mass dropped)
     val df = Seq(("a", "b"), ("a", "c"), ("b", "c")).toDF("src", "dst")
