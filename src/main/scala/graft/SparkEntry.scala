@@ -586,21 +586,22 @@ object SparkEntry {
     // candidate pairs. Near-dup similarity is not transitive, so the unit
     // of dedup is the component of the similarity graph, not the pair —
     // this is the step a production pipeline runs between pair generation
-    // and representative selection. Iterative min-label propagation
-    // (diameter-bounded rounds, one shuffle each); the oracle replays it
+    // and representative selection. Large-star/small-star contraction
+    // (O(log diameter) rounds, one checkpoint each); the oracle replays it
     // as a recursive-CTE transitive closure over the same edges.
     "q36_dedup_clusters" -> ((s, dir) =>
       Dedup.connectedComponents(
         Dedup.ngramJaccard(Tables.documents(s, dir), minJaccard = 0.5,
           prefixFilter = Some(false), corpusHint = Some(docsHint(s, dir))))),
 
-    // Same clustering through the large-star/small-star contraction —
-    // the O(log diameter) path for adversarial similarity graphs. Shares
-    // q36's transitive-closure oracle: both must land the same labels.
+    // q36's clustering with every pair reversed (b → a): the kernel must
+    // not depend on edge orientation. Shares q36's transitive-closure
+    // oracle: both must land the same labels.
     "q40_dedup_clusters_stars" -> ((s, dir) =>
-      Dedup.connectedComponentsStars(
+      Dedup.connectedComponents(
         Dedup.ngramJaccard(Tables.documents(s, dir), minJaccard = 0.5,
-          prefixFilter = Some(false), corpusHint = Some(docsHint(s, dir))))),
+          prefixFilter = Some(false), corpusHint = Some(docsHint(s, dir))),
+        aCol = "b", bCol = "a")),
 
     // MinHash+LSH near-dup, portable md5-derived hash family so the DuckDB
     // twin replays the ENTIRE sketch pipeline (signatures → bands →
@@ -2294,7 +2295,7 @@ object SparkEntry {
 
     "q36_dedup_clusters" -> DedupClustersSql,
 
-    // The star-contraction implementation must land byte-identical labels.
+    // q36 over the reversed edges must land byte-identical labels.
     "q40_dedup_clusters_stars" -> DedupClustersSql,
 
 

@@ -52,219 +52,107 @@ object Dedup {
     * little; the standard policy is one representative per connected
     * component of the similarity graph.
     *
-    * Algorithm: iterative min-label propagation. Every node starts
-    * labelled with itself; each round every node takes the minimum of its
-    * own label and its neighbors' labels, until a fixpoint. Rounds =
-    * component diameter; near-dup clusters are dense (diameter ~2-3), so
-    * a handful of rounds suffice even at 100 TB. Each round is one
-    * shuffle join (edges ⋈ labels on the neighbor id) + one min-combine
-    * aggregation (map-side combinable). Each round's labels are
-    * `localCheckpoint`ed — iteration under a driver loop MUST truncate
-    * lineage, or the logical plan nests one level per round and planning
-    * (AQE's plan re-explain in particular) blows up exponentially long
-    * before the data does — and the checkpoint is the round's ONLY job:
-    * the convergence signature is observed in it (see
-    * [[checkpointObserving]]). On a cluster where executor loss matters,
-    * swap in reliable `checkpoint` with a checkpoint dir — same plan
-    * shape. For adversarial long-chain graphs use
-    * [[connectedComponentsStars]] (O(log D) rounds for diameter D).
+    * Algorithm: alternating large-star/small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14). Per round,
+    * each node u with neighborhood Γ(u) and m = min(Γ(u)∪{u}):
+    *  - large-star rewires every neighbor LARGER than u to m,
+    *  - small-star rewires every neighbor ≤ u (and u itself) to m.
+    * Both emit strictly larger→smaller edges, so the edge set is a forest
+    * of partial stars that monotonically contracts; at the fixpoint every
+    * component is a star on its minimum. Label propagation moves a label
+    * one hop per round and needs D rounds on a component of diameter D;
+    * contraction rewires whole neighborhoods onto their minimum, so the
+    * distance to the root shrinks geometrically and a chain of D nodes
+    * converges in O(log D) rounds (a 2000-node chain in ≤ 12). Each
+    * half-round is one window-min over the src-partitioned edge frame.
     *
-    * Output: (node, cluster_id) for every NON-NULL node that appears in
-    * an edge (a half-null edge never propagates labels but its real
-    * endpoint survives as a singleton; self-loops yield singletons too —
-    * connectedComponentsStars shares this exact contract), cluster_id =
-    * the minimum node id of its component. All-integer arithmetic —
-    * bit-exact on any engine (oracle: q36's recursive CTE).
-    */
+    * Edge contract: a NULL endpoint never contracts (the half-null edge
+    * is broken), but its non-null partner still EXISTS and surfaces as a
+    * singleton; a self-loop likewise contributes its node as a singleton.
+    * Output: (node, cluster_id) for every NON-NULL node that appears in an
+    * edge, cluster_id = the minimum node id of its component. All-integer
+    * arithmetic — bit-exact on any engine (oracle: q36's recursive CTE).
+    *
+    * Every round `localCheckpoint`s its edges: iteration under a driver
+    * loop MUST truncate lineage, or the logical plan nests one level per
+    * round and planning (AQE's plan re-explain in particular) blows up
+    * exponentially long before the data does. On a cluster where executor
+    * loss matters, swap in reliable `checkpoint` with a checkpoint dir —
+    * same plan shape. The checkpoint is the round's ONLY job: the fixpoint
+    * test compares the (count, Σ xxhash64(src, dst)) signature of
+    * consecutive edge sets, observed in each checkpoint's own job (see
+    * [[checkpointObserving]]); round 0's signature rides the input's
+    * checkpoint. The test is a HASH — edge sets do not shrink
+    * monotonically, so no exact scalar summary exists — and a changed
+    * edge set with an equal count and an equal 64-bit hash sum stops the
+    * loop early with probability ≪2⁻⁶⁰ per round; the union-find specs
+    * cross-check the labels exactly.
+    *
+    * The labels are one aggregation: every endpoint offers (node, node),
+    * every contracted edge (src, dst), and each node takes the minimum.
+    * At the fixpoint a non-root node's only edge points at its component
+    * minimum, so the minimum wins; roots, self-loop and half-null nodes
+    * label themselves. The returned plan therefore reads the input, which
+    * stays checkpointed so the (often expensive) upstream pair generation
+    * is evaluated once. */
   def connectedComponents(
       edges: DataFrame,
       aCol: String = "a",
       bCol: String = "b",
       maxIter: Int = 50): DataFrame = {
-    // shared edge contract with connectedComponentsStars: a NULL endpoint
-    // never propagates labels (the half-null edge is broken), but its
-    // non-null partner still EXISTS — it surfaces as a singleton;
-    // self-loops likewise contribute their node as a singleton component.
-    // The input is checkpointed ONCE so the (often expensive) upstream
-    // pair generation is not re-evaluated for the node census.
-    val base = edges
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .localCheckpoint(true)
-    val sym = base
-      .union(base.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(true)
-    // convergence signature, observed in each checkpoint's own job: the
-    // node set is FIXED across rounds (every round unions the previous
-    // labels back in and groups per node) and a label only ever
-    // DECREASES, so Σ cluster_id is unchanged exactly when no label
-    // changed — an exact test, no hash (decimal: overflow-free under ANSI)
-    def checkpointLabels(l: DataFrame) =
-      checkpointObserving(l, sum(col("cluster_id").cast("decimal(38,0)")).as("sig"))
-    // r21: the node census and the FIRST propagation round are one
-    // aggregation — labels₀(v) = min(v, Γ(v)) instead of v. Min-label
-    // propagation is monotone and converges to the component minimum from
-    // any node-dominated start (labels₀ ≤ v and ≥ the component min), so
-    // the fixpoint — and the "one full no-change round" convergence
-    // criterion — is unchanged while every multi-round graph saves one
-    // whole iteration (join over sym + agg + checkpoint). Nodes
-    // appearing only in half-null edges are absent from `sym` but present
-    // in the census branches, so they still surface as singletons.
-    var (labels, sig) = checkpointLabels(
-      base.select(col("src").as("node"))
-        .union(base.select(col("dst").as("node")))
-        .filter(col("node").isNotNull)
-        .select(col("node"), col("node").as("cluster_id"))
-        .union(sym.select(col("src").as("node"), col("dst").as("cluster_id")))
-        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
-    base.unpersist() // sym and the initial labels are both materialized
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborLabels = sym
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("cluster_id"))
-      val (updated, nextSig) = checkpointLabels(labels.unionByName(neighborLabels)
-        .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id")))
-      labels.unpersist()
-      labels = updated
-      converged = nextSig == sig
-      sig = nextSig
-      i += 1
-    }
-    sym.unpersist()
-    // unconverged labels are NOT component ids — downstream representatives
-    // would silently mis-dedup, so exhausting maxIter is an error
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: not converged after $maxIter rounds " +
-        "(component diameter exceeds maxIter — raise it, or use " +
-        "connectedComponentsStars for long-chain graphs)")
-    labels
-  }
-
-  /** Connected components via alternating large-star/small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the drop-in for `connectedComponents` when the similarity
-    * graph can be adversarial: a path/chain component of length D costs
-    * min-label propagation D rounds (label moves one hop per join), but
-    * star contraction squares progress each round and converges in
-    * O(log D) rounds. Same contract: (node, cluster_id = component min).
-    *
-    * Per round, each node u with neighborhood Γ(u) and m = min(Γ(u)∪{u}):
-    *  - large-star rewires every neighbor LARGER than u to m,
-    *  - small-star rewires every neighbor ≤ u (and u itself) to m.
-    * Both emit strictly larger→smaller edges, so the edge set is a forest
-    * of partial stars that monotonically contracts; at the fixpoint every
-    * node points directly at its component minimum. Each half-round is one
-    * window-min over the src-partitioned edge frame (one exchange — the
-    * r21 groupBy(min)+equi-join spelling paid an extra aggregate, a join,
-    * and a duplicate subtree evaluation for the same result; see the
-    * half-round comments) and every round `localCheckpoint`s (same lineage
-    * trap as `connectedComponents`). The fixpoint test compares the
-    * (count, Σ xxhash64(src, dst)) signature of consecutive edge sets,
-    * observed in each checkpoint's own job like min-label's: all-integer
-    * and deterministic, but a HASH — edge sets do not shrink monotonically
-    * the way labels do — so it keeps a vanishing (≪2⁻⁶⁰ per round)
-    * false-stop probability; the paired specs cross-check labels against
-    * the min-label implementation and a union-find exactly. At the
-    * fixpoint every component is a star on its minimum, so the labels are
-    * one left join of the node census onto the contracted edges. */
-  def connectedComponentsStars(
-      edges: DataFrame,
-      aCol: String = "a",
-      bCol: String = "b",
-      maxIter: Int = 50): DataFrame = {
-    def sym(e: DataFrame): DataFrame =
+    // the distinct() collapses large-star's per-edge output (heavy
+    // same-(dst, min) duplication in dense components) back to a
+    // near-node-sized set before small-star re-consumes it. It is fed
+    // through ONE exchange keyed on the NEW src: HashPartitioning(src)
+    // satisfies the distinct's ClusteredDistribution(src, dst) AND
+    // small-star's window partitioning, so the half-round boundary costs
+    // one shuffle, not two.
+    def largeStar(e: DataFrame): DataFrame =
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    // r22 (guide §2.4): both half-rounds compute "min(dst) over each src's
-    // neighborhood" and attach it back to every neighborhood row. The r21
-    // spelling was groupBy(min) + equi-join — per half-round that is one
-    // aggregate, one broadcast/shuffle JOIN (a separate broadcast-build job
-    // per round at bench scale, an extra shuffle at cluster scale), and two
-    // evaluations of the input subtree. A window min over the SAME
-    // partitioning key is one pass: the exchange on src is established
-    // once, the min rides the window buffer, and no join or second subtree
-    // evaluation exists. (A sort-merge join at scale would have sorted the
-    // frame by src anyway, so the window's sort is not new work — the
-    // aggregate, the join, and the duplicate leg are what disappear.)
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      // NOTE (r21, still true in the window spelling): the distinct()
-      // collapses the per-edge output (heavy same-(dst, min) duplication
-      // in dense components) back to a near-node-sized set BEFORE the
-      // next half-round re-consumes it; an r21 probe of the no-distinct
-      // variant measured no improvement and lost the shared Exchange.
-      // r22: the distinct is fed through ONE exchange keyed on the NEW
-      // src — HashPartitioning(src) satisfies the distinct's
-      // ClusteredDistribution(src, dst) (same-key rows stay co-located
-      // under the coarser key) AND small-star's window partitioning, so
-      // the half-round boundary costs one shuffle instead of two
-      // (hash(src,dst) for the distinct + hash(src) for the window).
-      s.withColumn("mn", min(col("dst")).over(Window.partitionBy(col("src"))))
+        .withColumn("mn", min(col("dst")).over(Window.partitionBy(col("src"))))
         .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), least(col("mn"), col("src")).as("dst"))
         .filter(col("src") =!= col("dst"))
         .repartition(col("src"))
         .distinct()
-    }
-    // r22: smallStar is only ever applied to largeStar's output, whose
-    // rows are ALL strictly larger→smaller oriented (largeStar emits
-    // (dst, least(mn, src)) with dst > src ≥ least(mn, src) and filters
-    // src =!= dst). On such input the general small-star's
-    // sym(d).filter(dst < src) is the IDENTITY: every original row keeps
-    // dst < src, every flipped row has dst > src and is dropped. The
-    // general spelling therefore evaluated the whole largeStar subtree
-    // TWICE per round (union branches share exchanges but re-run the
-    // final distinct aggregate) and pushed 2|E| rows through the filter
-    // to keep |E| — this specialization consumes the input once, as-is.
-    // The (src → mn) self-edges the old `.union(mins…)` branch emitted
-    // once per distinct src are emitted here once per EDGE via the
-    // explode; the trailing distinct() collapses them identically (its
-    // partial aggregate removes the duplicates map-side).
-    def smallStarOriented(d: DataFrame): DataFrame =
+    // small-star on largeStar's output, whose rows are all strictly
+    // larger→smaller: general small-star's symmetrized, dst < src-filtered
+    // input is that output itself, so it is consumed once, as-is. Each edge also emits
+    // its (src → mn) rewiring; the trailing distinct() collapses the
+    // per-edge duplicates map-side.
+    def smallStar(d: DataFrame): DataFrame =
       d.withColumn("mn", min(col("dst")).over(Window.partitionBy(col("src"))))
         .select(explode(array(col("dst"), col("src"))).as("src"), col("mn").as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
+    // the signature counts only contractible edges, so round 0's can be
+    // read off the raw input's checkpoint (later rounds hold no others)
+    val valid = col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst")
     def checkpointEdges(e: DataFrame) = checkpointObserving(e,
-      count(lit(1)).as("n"), sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")).as("h"))
-    // same edge contract as connectedComponents: half-null edges never
-    // contract but their real endpoint survives as a singleton, and
-    // self-loop-only nodes surface as singleton components. The input is
-    // checkpointed ONCE so the node census does not re-evaluate the
-    // (often expensive) upstream pair generation; the tiny node list is
-    // itself checkpointed because it rides into the RETURNED plan.
-    val base = edges
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .localCheckpoint(true)
-    val allNodes = base.select(col("src").as("node"))
-      .unionByName(base.select(col("dst").as("node")))
-      .filter(col("node").isNotNull).distinct()
-      .localCheckpoint(true)
-    var (cur, sig) = checkpointEdges(base
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst")))
-    base.unpersist() // allNodes and the round-0 edges are materialized
+      count(when(valid, 1)).as("n"),
+      coalesce(sum(when(valid, xxhash64(col("src"), col("dst"))).cast("decimal(38,0)")),
+        lit(0)).as("h"))
+    val (base, sig0) = checkpointEdges(
+      edges.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
+    var cur = base.filter(valid)
+    var sig = sig0
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val (next, nextSig) = checkpointEdges(smallStarOriented(largeStar(cur)))
-      cur.unpersist()
+      val (next, nextSig) = checkpointEdges(smallStar(largeStar(cur)))
       cur = next
       converged = nextSig == sig
       sig = nextSig
       i += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStars: not converged after $maxIter rounds; " +
+      s"connectedComponents: not converged after $maxIter rounds; " +
         "raise maxIter (star contraction needs O(log diameter) rounds)")
-    // at the fixpoint each non-root node is the src of exactly ONE edge
-    // (onto its component minimum), so one left join labels every node;
-    // roots, and nodes that appeared only in self-loops or half-null
-    // edges, have no edge and label themselves — exactly as in the
-    // min-label implementation
-    allNodes.join(cur.select(col("src").as("node"), col("dst").as("cluster_id")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("cluster_id"), col("node")).as("cluster_id"))
+    base.select(explode(array(col("src"), col("dst"))).as("node"))
+      .filter(col("node").isNotNull)
+      .select(col("node"), col("node").as("cluster_id"))
+      .union(cur.select(col("src").as("node"), col("dst").as("cluster_id")))
+      .groupBy(col("node")).agg(min(col("cluster_id")).as("cluster_id"))
   }
 
   /** Keep one representative document per near-dup cluster: the row whose

@@ -161,7 +161,7 @@ class DedupSpec extends SparkSpec {
   private def labels(cc: DataFrame): Seq[(Long, Long)] =
     cc.as[(Long, Long)].collect().toSeq.sorted
 
-  /** Driver-side union-find under the kernels' edge contract: every
+  /** Driver-side union-find under the kernel's edge contract: every
     * non-null endpoint is a node, only edges with two non-null endpoints
     * join components; one sorted (node, component min) row per node. */
   private def unionFind(edges: Seq[(Option[Long], Option[Long])]): Seq[(Long, Long)] = {
@@ -195,26 +195,21 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponentsStars matches min-label labels; converges on a chain min-label cannot finish") {
-    // equivalence on random graphs (same shape as the union-find test),
-    // compared row for row: a duplicated node row must not hide in a Map
-    for (seed <- 1 to 3) {
-      val rng = new scala.util.Random(seed + 100)
-      val edges = (Seq.tabulate(8)(i => (i.toLong * 3, i.toLong * 3 + 3)) ++
-        Seq.fill(25)((rng.nextInt(40).toLong, rng.nextInt(40).toLong)))
-        .filter { case (a, b) => a != b }
-      val viaStars = labels(Dedup.connectedComponentsStars(edges.toDF("a", "b")))
-      val viaLabels = labels(Dedup.connectedComponents(edges.toDF("a", "b")))
-      assert(viaStars === viaLabels, s"seed=$seed")
-    }
-    // adversarial diameter: a 200-node path. Min-label needs ~200 rounds
-    // (one hop per round); star contraction must land it in ≤ 12.
+  test("connectedComponents converges in O(log D) rounds on long chains") {
+    // label propagation needs one round per hop (~200 and ~2000 here);
+    // star contraction must land both chains in ≤ 12
     val chain = (0L until 199L).map(i => (i, i + 1))
-    val got = labels(Dedup.connectedComponentsStars(chain.toDF("a", "b"), maxIter = 12))
+    val got = labels(Dedup.connectedComponents(chain.toDF("a", "b"), maxIter = 12))
     assert(got === (0L until 200L).map(_ -> 0L))
+    // shuffled ids: the component minimum sits mid-chain and hops run in
+    // both directions
+    val ids = new scala.util.Random(7).shuffle((0L until 2000L).toVector)
+    val shuffled = both(ids.sliding(2).map(p => (p(0), p(1))).toSeq)
+    assert(labels(Dedup.connectedComponents(shuffled.toDF("a", "b"), maxIter = 12))
+      === unionFind(shuffled))
   }
 
-  test("both kernels equal union-find on hostile shapes: chain, hub, clique, singleton mix, empty") {
+  test("connectedComponents equals union-find on hostile shapes: chain, hub, clique, singleton mix, empty") {
     val rng = new scala.util.Random(11)
     val hub = (1L to 300L).map(leaf => (1000L, leaf)) // the hub is not the minimum
     val clique = for (a <- 500L until 530L; b <- a + 1 until 530L) yield (b, a)
@@ -222,6 +217,10 @@ class DedupSpec extends SparkSpec {
       Seq((Some(900L), Some(900L)), (Some(3L), Some(3L)), // self-loops
         (None, Some(901L)), (Some(902L), None), (Some(5L), None)) ++ // half-null
         both(Seq.fill(40)((rng.nextInt(60).toLong, rng.nextInt(60).toLong)))
+    val contract: Seq[(Option[Long], Option[Long])] = Seq(
+      (Some(5L), Some(5L)), // self-loop: node 5 is a singleton
+      (Some(1L), Some(2L)),
+      (None, Some(7L))) // half-null: 7 survives as a singleton
     val shapes = Seq(
       "200-chain" -> both((0L until 199L).map(i => (i + 1, i))),
       "40-chain" -> both((0L until 39L).map(i => (i, i + 1))),
@@ -229,43 +228,35 @@ class DedupSpec extends SparkSpec {
       "30-clique" -> both(clique),
       "singleton mix" -> mixed,
       "self-loops only" -> both(Seq((7L, 7L), (8L, 8L))), // no edge survives round 0
-      "empty" -> Seq.empty)
-    for ((name, edges) <- shapes) {
-      val df = edges.toDF("a", "b")
-      val expected = unionFind(edges)
-      assert(labels(Dedup.connectedComponentsStars(df)) === expected, s"stars: $name")
-      // min-label needs one round per hop: the 200-chain is stars-only
-      if (name != "200-chain")
-        assert(labels(Dedup.connectedComponents(df)) === expected, s"min-label: $name")
-    }
+      "empty" -> Seq.empty).map { case (name, edges) => (name, edges, unionFind(edges)) } :+
+      (("self-loop + half-null contract", contract, Seq((1L, 1L), (2L, 1L), (5L, 5L), (7L, 7L))))
+    for ((name, edges, expected) <- shapes)
+      assert(labels(Dedup.connectedComponents(edges.toDF("a", "b"))) === expected, name)
   }
 
-  test("exhausting maxIter throws instead of returning partial labels (both kernels)") {
-    val chain60 = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    val minLabel = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain60, maxIter = 3)
-    }
-    assert(minLabel.getMessage.contains("not converged after 3 rounds"))
+  test("exhausting maxIter throws instead of returning partial labels") {
     val chain200 = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
-    val stars = intercept[IllegalStateException] {
-      Dedup.connectedComponentsStars(chain200, maxIter = 2)
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain200, maxIter = 2)
     }
-    assert(stars.getMessage.contains("not converged after 2 rounds"))
+    assert(e.getMessage.contains("not converged after 2 rounds"))
   }
 
   test("the component loops run no query but their checkpoints") {
-    // a multi-round graph: a 12-chain plus a star, for both kernels; each
-    // round's convergence signature rides its checkpoint's job, so the
-    // loops submit no separate probe query (the returned frame is lazy)
+    // a multi-round graph: a 12-chain plus a star; each round's
+    // convergence signature rides its checkpoint's job, so the loop
+    // submits no separate probe query (the returned frame is lazy)
     val edges = ((0L until 11L).map(i => (i, i + 1)) ++ (21L to 30L).map((20L, _)))
       .toDF("a", "b")
-    for ((name, kernel) <- Seq[(String, DataFrame => DataFrame)](
-        "min-label" -> (Dedup.connectedComponents(_)),
-        "stars" -> (Dedup.connectedComponentsStars(_)))) {
-      val (out, queries) = ExecutedQueries.during(spark)(kernel(edges))
-      assert(queries.nonEmpty && queries.forall(_ == "localCheckpoint"), s"$name ran $queries")
-      assert(labels(out) === ((0L to 11L).map(_ -> 0L) ++ (20L to 30L).map(_ -> 20L)), name)
-    }
+    val (out, queries) = ExecutedQueries.during(spark)(Dedup.connectedComponents(edges))
+    assert(queries.nonEmpty && queries.forall(_ == "localCheckpoint"), s"ran $queries")
+    assert(labels(out) === ((0L to 11L).map(_ -> 0L) ++ (20L to 30L).map(_ -> 20L)))
+    // one edge: the input's checkpoint (round 0's signature) and two
+    // rounds (the second confirms the fixpoint) — no census, no extra copy
+    val (one, oneQueries) =
+      ExecutedQueries.during(spark)(Dedup.connectedComponents(Seq((1L, 2L)).toDF("a", "b")))
+    assert(oneQueries === Seq.fill(3)("localCheckpoint"))
+    assert(labels(one) === Seq((1L, 1L), (2L, 1L)))
   }
 
   test("representatives keeps one doc per cluster plus all unclustered docs") {
@@ -562,20 +553,6 @@ class DedupSimilarityEdgeSpec extends SparkSpec {
     val pairs = Dedup.ngramJaccard(docs, minJaccard = 0.5, prefixFilter = Some(false))
       .select("a", "b").as[(String, String)].collect().toSet
     assert(pairs === Set(("doc-a1", "doc-b2")))
-  }
-
-  test("stars ≡ min-label on self-loops and half-null edges (shared contract)") {
-    val edges = Seq(
-      (Some(5L), Some(5L)),  // self-loop: node 5 is a singleton
-      (Some(1L), Some(2L)),
-      (Option.empty[Long], Some(7L)) // half-null: 7 survives as a singleton
-    ).toDF("a", "b")
-    val viaMin = Dedup.connectedComponents(edges)
-      .as[(Long, Long)].collect().toSeq.sorted
-    val viaStars = Dedup.connectedComponentsStars(edges)
-      .as[(Long, Long)].collect().toSeq.sorted
-    assert(viaMin === Seq((1L, 1L), (2L, 1L), (5L, 5L), (7L, 7L)))
-    assert(viaStars === viaMin)
   }
 
   test("fixed-dim SRP: a short vector fails LOUDLY (known-dim contract), not silent mis-bucketing") {
