@@ -304,13 +304,15 @@ object SparkEntry {
     *     bench/verify results stay order-independent. */
   /** Injective scratch key: sanitize + md5 suffix (sanitization alone maps
     * `a/b` and `a_b` to the same path, and concurrent runs on colliding
-    * keys would delete each other's scratch). */
-  private def scratchDir(prefix: String, dir: String, tag: String): String = {
+    * keys would delete each other's scratch). Rooted at `java.io.tmpdir`,
+    * read per call, so a launcher that points the JVM's temp dir at its
+    * own work dir keeps every gate's scratch there. */
+  private[graft] def scratchDir(prefix: String, dir: String, tag: String): String = {
     val raw = s"${dir}_$tag"
     val safe = raw.replaceAll("[^A-Za-z0-9._-]", "_")
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(raw.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/tmp/${prefix}_${safe}_$h"
+    new java.io.File(System.getProperty("java.io.tmpdir"), s"${prefix}_${safe}_$h").getPath
   }
 
   /** State-store shuffle-partition count for a gated stream, derived from

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *     of updates over the existing table by key. For incremental runs
   *     at scale this is the read-union-dedup-rewrite strategy (a table
   *     format with MERGE would replace the rewrite, not the semantics).
-  *   - `writeDatePartitioned` (§7.3): hive-style date partitioning so
-  *     date-bounded scans (the v1 lookback window, the reporting HAVING)
-  *     prune partitions instead of reading the full table.
+  *   - `upsertPartitioned` (§7.3): the same merge on a hive-style
+  *     date-partitioned table, so date-bounded scans (the v1 lookback
+  *     window, the reporting HAVING) prune partitions instead of reading
+  *     the full table, and a batch rewrites only the dates it touches.
   */
 object ParquetWarehouse {
 
@@ -140,13 +141,14 @@ object ParquetWarehouse {
         //    is the whole payload — EOF-as-0 connectors keep working;
         //    an unterminated prefix is unreadable → None);
         //  - total size is capped, always → None (a real payload is
-        //    one ~100-byte line; the janitor feeds this ANY
-        //    *.__lock-named file under a root, and a stray multi-GB
-        //    match must not OOM the driver through an unbounded
-        //    buffer). The cap is checked BEFORE the chunk is appended,
-        //    so the buffer itself never exceeds it — the check-after
-        //    spelling let the buffer overshoot by one read chunk, a
-        //    bound looser than the one documented here (r16 ADVICE).
+        //    one ~100-byte line; the tombstone sweep feeds this ANY
+        //    file matching the table's tomb glob, and a stray or
+        //    corrupt multi-GB file at a lock or tomb path must not
+        //    OOM the driver through an unbounded buffer). The cap is
+        //    checked BEFORE the chunk is appended, so the buffer
+        //    itself never exceeds it — the check-after spelling let
+        //    the buffer overshoot by one read chunk, a bound looser
+        //    than the one documented here (r16 ADVICE).
         val MaxPayloadBytes = 64 * 1024
         var zeros = 0
         var overCap = false
@@ -188,8 +190,8 @@ object ParquetWarehouse {
       // RuntimeExceptions (Hadoop's Shell wraps a failed fork's exit
       // code — the r17 soak hit exactly that shape), and "unreadable
       // payload" must mean the same thing — None, the corpse path — on
-      // every store, or the writer and janitor would diverge on which
-      // corpses they can retire (None == None in retireIfUnchanged).
+      // every store, or an unreadable corpse could never be retired
+      // (retireIfUnchanged's re-read must compare None == None).
       case scala.util.control.NonFatal(_) => LockUnreadable
     }
 
@@ -264,9 +266,9 @@ object ParquetWarehouse {
     * [[withWriterLock]] ABORTS the hold: it revokes the ownership flag,
     * interrupts the writer thread, and the write fails loudly — well
     * before the stale horizon (3 of the 6 beats a horizon holds), so a
-    * janitor can only ever reap a lock whose holder is dead or has
-    * already aborted, NEVER one that is live and still beating. The
-    * former residual (silent drift to the horizon on a store where
+    * contending writer can only ever age-break a lock whose holder is
+    * dead or has already aborted, NEVER one that is live and still
+    * beating. The former residual (silent drift to the horizon on a store where
     * every channel faults persistently) is thereby an invariant, at the
     * price of a deliberately CONSERVATIVE abort: a store whose setTimes
     * works but whose stats and reads fault for three straight beats may
@@ -283,8 +285,8 @@ object ParquetWarehouse {
     * rewrite gets two chances to rescue the lock before the write is
     * failed. At the production cadence ([[heartbeatIntervalMs]] = 10 min)
     * the abort lands ~30-40 min after the last proven signal — half the
-    * [[LockStaleMs]] horizon, two full beats of margin before a janitor
-    * could judge the lock dead. */
+    * [[LockStaleMs]] horizon, two full beats of margin before a
+    * contending writer could judge the lock aged out. */
   private[graft] val AbortHoldAfterUnprovenBeats = ForceRewriteAfterAssumedBeats + 1
 
   /** The abort decision, shared verbatim by the [[withWriterLock]]
@@ -313,10 +315,10 @@ object ParquetWarehouse {
         // NonFatal, not just IOException, throughout this beat:
         // connectors wrap stat/utime faults in RuntimeExceptions
         // (Hadoop's Shell — the same shape readLockPayload and the
-        // janitor tolerate), and an escaping RTE would be swallowed by
-        // the heartbeat's own NonFatal catch WITHOUT counting an
-        // assumed beat — the drift remedy would never engage on exactly
-        // the stores that need it.
+        // tombstone sweep tolerate), and an escaping RTE would be
+        // swallowed by the heartbeat's own NonFatal catch WITHOUT
+        // counting an assumed beat — the drift remedy would never
+        // engage on exactly the stores that need it.
         def stat(): (Boolean, Option[Long]) =
           try (false, Some(fs.getFileStatus(lock).getModificationTime))
           catch {
@@ -489,8 +491,9 @@ object ParquetWarehouse {
     * ownership, interrupts the writer, and this method throws
     * IllegalStateException instead of returning — failing the write
     * loudly at ~half the stale horizon rather than carrying a lock a
-    * janitor would legitimately reap under a still-running write. A
-    * live-and-beating owner is therefore never reaped.
+    * contending writer would legitimately age-break under a
+    * still-running write. A live-and-beating owner is therefore never
+    * broken.
     *
     * ABORT on CONFIRMED loss (r20, closing the r19 ADVICE residual): a
     * beat that verifiably answers "not ours" — the lock file gone, or its
@@ -621,16 +624,16 @@ object ParquetWarehouse {
           abortWhy.compareAndSet(null,
             s"the heartbeat CONFIRMED ownership loss — the lock at $path.__lock is " +
               "verifiably gone or verifiably carries another writer's token (manual " +
-              "unlock, or a janitor/successor takeover), so continuing would write " +
+              "unlock, or a successor's takeover), so continuing would write " +
               "without exclusivity while a successor may hold the path")
           if (held.compareAndSet(true, false)) writerThread.interrupt()
         }
         // ABORT path (r18 verdict #4): if nothing has provably advanced
         // for the whole abort window, this lock is drifting toward the
-        // horizon where a janitor legitimately reaps it out from under a
-        // live write. Do not carry it there: revoke the hold (winning
-        // the CAS against the owner's release), fail the write loudly
-        // via interrupt, and stop beating. The alternative — keep
+        // horizon where a contending writer legitimately age-breaks it
+        // out from under a live write. Do not carry it there: revoke
+        // the hold (winning the CAS against the owner's release), fail
+        // the write loudly via interrupt, and stop beating. The alternative — keep
         // holding and hope — is exactly the reaped-under-a-live-writer
         // corruption the lock exists to prevent.
         else if (shouldAbortHold(unprovenBeats)) {
@@ -638,7 +641,7 @@ object ParquetWarehouse {
             s"the heartbeat could not PROVE any liveness signal advanced for " +
               s"$AbortHoldAfterUnprovenBeats consecutive beats (stats/reads faulting " +
               s"and no rewrite landed), so the lock was drifting toward the " +
-              s"${LockStaleMs / 60000}-min stale horizon where a janitor or contending " +
+              s"${LockStaleMs / 60000}-min stale horizon where a contending " +
               "writer would legitimately reap it under this still-running write — a " +
               "live-and-beating owner is never reaped")
           if (held.compareAndSet(true, false)) writerThread.interrupt()
@@ -741,7 +744,7 @@ object ParquetWarehouse {
     * aged-at-birth tomb inside the two-FS-call gap, meeting a straggler
     * whose payload re-read predates the retire — is a multi-party
     * microsecond race accepted under the lock's advisory contract. */
-  private[graft] def retireDeadLock(
+  private def retireDeadLock(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path,
       tomb: org.apache.hadoop.fs.Path): Boolean = {
@@ -766,18 +769,17 @@ object ParquetWarehouse {
     retired
   }
 
-  /** The abandon-if-changed takeover discipline, shared by the contended
-    * writer acquisition and the janitor so the two can never drift (the
-    * r16 review caught the janitor's hand-mirrored copy flattening an
-    * unreadable payload to "" and refusing corpses the writer retires):
-    * re-read the payload and abandon if it changed since `observed` (a
-    * successor who already took over is a LIVE holder), refuse while the
-    * payload-derived tombstone exists (the straggler guard), else retire
-    * atomically. Tombstone name = f(observed payload), so racers who
-    * judged the same corpse contend on ONE atomic retire. JUDGING
-    * (holderDead/agedOut) stays with the caller — the janitor reports
-    * reasons, the writer only gates. */
-  private[graft] def retireIfUnchanged(
+  /** The abandon-if-changed takeover discipline of a contended
+    * acquisition: re-read the payload and abandon if it changed since
+    * `observed` (a successor who already took over is a LIVE holder),
+    * refuse while the payload-derived tombstone exists (the straggler
+    * guard), else retire atomically. `observed` stays an Option end to
+    * end — an unreadable payload compares None == None, so a corpse
+    * whose payload cannot be read is still retirable (flattening it to
+    * "" would refuse it forever). Tombstone name = f(observed payload),
+    * so racers who judged the same corpse contend on ONE atomic retire.
+    * JUDGING (holderDead/agedOut) stays with the caller. */
+  private def retireIfUnchanged(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path,
       tablePath: String,
@@ -849,501 +851,12 @@ object ParquetWarehouse {
       }
     } catch {
       // NonFatal, not just IOException — the glob/delete can race a
-      // janitor reaping the same aged tomb, and connectors wrap that
-      // vanished-file shape in RuntimeExceptions (the r17 soak
-      // finding); "a sweep failure never fails the write it piggybacks
+      // contending writer reaping the same aged tomb, and connectors
+      // wrap that vanished-file shape in RuntimeExceptions (the r17
+      // soak finding); "a sweep failure never fails the write it piggybacks
       // on" must hold for every class the store throws
       case scala.util.control.NonFatal(_) => ()
     }
-
-  /** One row of a [[sweepLocks]] report: a piece of lock litter found
-    * under the root, how it was judged, and whether the janitor removed
-    * (for a lock: retired) it. `ageMs` is the liveness age — time since
-    * the YOUNGER of file mtime and any parseable payload `ts`, the same
-    * two-signal rule acquisition uses. */
-  final case class LockSweepEntry(
-      path: String,
-      kind: String, // "lock" | "tombstone" | "sweep-truncated" (sentinel:
-                    // the walk ended early and the report is PARTIAL)
-      ageMs: Long,  // -1 on the sentinel row
-      judgedDead: Boolean,
-      reason: String,
-      removed: Boolean)
-
-  /** Operational janitor for lock/tombstone litter under `root`. A
-    * crashed fleet (many table paths at once) can strand `.__lock`
-    * markers and takeover tombstones that are only cleaned when a FUTURE
-    * writer contends on that same table — tables nobody writes again
-    * keep their litter indefinitely, and an operator auditing a
-    * warehouse has no tool to list or clean it. This walks the tree,
-    * judges every lock and tombstone by the EXACT rules acquisition uses
-    * (same-host pid liveness; the two-signal mtime/payload-ts age
-    * horizon), and — only with `clean = true` — removes what the writer
-    * path itself would remove:
-    *   - a judged-dead LOCK is retired through [[retireDeadLock]], the
-    *     same atomic rename/link takeover a contending writer performs —
-    *     NOT a bare delete — so the janitor is safe to run even while
-    *     writers are live: a racing takeover and the janitor contend on
-    *     one atomic retire, and a lock that changed hands between judge
-    *     and retire is left alone (payload re-read, like the writer's).
-    *     The retire deliberately leaves a FRESH tombstone (the straggler
-    *     guard); a later run reaps it once aged — litter convergence
-    *     takes two passes a horizon apart, by design.
-    *   - an AGED tombstone is deleted (the [[sweepAgedTombstones]] rule).
-    * Live locks and fresh tombstones are always reported, never touched.
-    * Report-only by default; returns entries sorted by path. Best-effort
-    * on I/O errors WITHIN a running sweep — a faulting entry or subtree
-    * yields no entries (or an "unverifiable" row) rather than failing
-    * the sweep — but a ROOT-level fault propagates loudly: an audit
-    * that could not even start must not return the same empty report a
-    * clean warehouse does. A missing root is a quiet no-op.
-    *
-    * SCALE CAVEAT (r16 verdict): this walks the ENTIRE tree via a
-    * recursive listing and fresh-stats every lock-named match on the
-    * driver — cost is O(all files under root), not O(litter). That is
-    * the right trade for an AUDIT tool (a name-filtered per-directory
-    * glob would miss locks at depths the glob doesn't enumerate, and
-    * litter is by definition where no writer looks), but it prices a
-    * sweep at one full warehouse listing: the r17 sweep-scale
-    * measurement (README table) timed the driver-side walk at growing
-    * file counts so an operator can budget it — on a 100 TB /
-    * many-million-file store, use [[sweepLocksPerTable]] /
-    * [[sweepUnits]] (r18): the same judgment split into O(tables)
-    * bounded, independently-runnable increments instead of one
-    * unbounded walk. */
-  def sweepLocks(
-      spark: SparkSession,
-      root: String,
-      clean: Boolean = false): Seq[LockSweepEntry] =
-    sweepLocksOn(
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      root, clean)
-
-  /** `private[graft]`: the FS-injection seam — specs drive the sweep
-    * through a misbehaving FilterFileSystem (payload reads that throw,
-    * exactly the unreadable-corpse state the writer path retires via
-    * None == None) which the public overload cannot reach. */
-  private[graft] def sweepLocksOn(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String,
-      clean: Boolean): Seq[LockSweepEntry] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    // Root-level treatment is deliberately DIFFERENT from per-entry:
-    //  - a MISSING root is a quiet no-op (Seq.empty, spec-pinned) —
-    //    FileSystem.exists swallows FileNotFoundException itself, and a
-    //    root deleted between the check and the listing maps the same
-    //    way below;
-    //  - a root-level FAULT (transient stat/list error, wrapped or not)
-    //    PROPAGATES loudly. Mapping it to Seq.empty would make a failed
-    //    audit indistinguishable from "warehouse is clean" — the
-    //    invisible-litter outcome the per-entry unverifiable rows exist
-    //    to prevent, total instead of partial. Best-effort applies to
-    //    entries WITHIN a sweep that is running; an audit that could
-    //    not even start must say so.
-    // On a connector that wraps its not-found condition in an unchecked
-    // exception, a MISSING root therefore degrades to the loud failure
-    // rather than the quiet no-op — deliberately: the two states are
-    // indistinguishable there, and loud-on-missing is an inconvenience
-    // while quiet-on-faulted is invisible litter.
-    if (!fs.exists(rootPath)) return Seq.empty
-    val found = scala.collection.mutable.ArrayBuffer.empty[LockSweepEntry]
-    val it = try fs.listFiles(rootPath, /* recursive = */ true)
-             catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    // best-effort REALLY means best-effort: the iterator's fetch may
-    // throw mid-walk, and a failure on ONE entry must not lose the rest
-    // of the report. Two shapes, both found the hard way:
-    //  - dir deleted between listing batches (remote store) — an
-    //    IOException from next();
-    //  - a file deleted between the directory listing and its
-    //    located-status load — the MOST ROUTINE concurrent event under
-    //    this sweep (a writer RELEASED its lock mid-sweep), and on some
-    //    stores it surfaces as a RuntimeException, not an IOException
-    //    (RawLocal loads permissions by forking `ls` and wraps the exit
-    //    code; the r17 janitor-vs-live-writers soak killed the whole
-    //    sweep through exactly this). So the fetch tolerates NonFatal,
-    //    not just IOException, and RETRIES a bounded few times — the
-    //    faulting element is consumed on stores like RawLocal, so a
-    //    retry continues PAST the vanished entry instead of truncating
-    //    the report at the first released lock; a persistently-throwing
-    //    iterator ends the walk with what was gathered.
-    // DOCUMENTED RESIDUAL: a fetch fault cannot name the element it
-    // consumed (the path rides only in store-specific message text), so
-    // if the faulting entry was REAL litter whose located-status load
-    // failed transiently, that entry is invisible THIS PASS — unlike a
-    // judged entry, whose transient failures all downgrade to an
-    // "unverifiable" row. Litter is persistent and faults are
-    // transient, so the standing "re-run the sweep" discipline covers
-    // it; emitting a row per fetch fault is not an option (most files
-    // under a warehouse root are data files, and a flaky store would
-    // drown the report in false litter alarms).
-    // listedAny upholds the loud-root contract against LAZY stores: an
-    // iterator that defers its first LIST call past the listFiles
-    // constructor (paged object-store listings) surfaces a root-level
-    // fault from the FIRST fetch — swallowing it three times and
-    // returning an empty report would be the failed-audit-looks-clean
-    // outcome again. A persistent fault BEFORE anything was listed
-    // rethrows; after at least one successful fetch it degrades to
-    // best-effort end-of-walk with what was gathered.
-    var listedAny = false
-    // A persistently-throwing iterator MID-walk ends the sweep with a
-    // PARTIAL report — which must not read as a complete clean audit
-    // (an operator running clean=true would take "no more rows" as
-    // "rest of the warehouse is clean"; r17 ADVICE). The truncation is
-    // surfaced as a sentinel row (kind = "sweep-truncated") appended to
-    // the report, so both programmatic consumers and a human reading
-    // the sorted entries see that the walk ended on exhausted retries
-    // rather than iterator exhaustion.
-    var truncatedBy: Option[Throwable] = None
-    def advance(): org.apache.hadoop.fs.LocatedFileStatus = {
-      var attempts = 0
-      var last: Throwable = null
-      while (attempts < 3) {
-        try {
-          val n = if (it.hasNext) it.next() else null
-          listedAny = true
-          return n
-        } catch {
-          case scala.util.control.NonFatal(e) => last = e; attempts += 1
-        }
-      }
-      // FileNotFoundException is exempt from the loud rethrow ONLY when
-      // the root is verifiably gone: a root deleted between the exists
-      // check and a LAZY iterator's first fetch is the missing-root
-      // quiet no-op, same as the eager constructor's FNF catch above.
-      // The re-check matters — an FNF for a SUBDIRECTORY vanishing
-      // before the first file was yielded (root alive, litter present)
-      // must stay loud, or the failed audit reads as clean; and if the
-      // verifying exists itself faults, the root may well be present,
-      // so loud again.
-      if (!listedAny) {
-        val rootGone = last.isInstanceOf[java.io.FileNotFoundException] &&
-          verifiablyAbsent(fs, rootPath, last)
-        if (!rootGone) throw last
-      } else truncatedBy = Some(last)
-      null
-    }
-    var st = advance()
-    while (st != null) {
-      judgeLockLitter(fs, st, clean, found)
-      st = advance()
-    }
-    // The sentinel is appended AFTER the sort so it is genuinely the
-    // LAST row: its path is the root, which sorts lexicographically
-    // before every child path, so a pre-sort append buried it FIRST —
-    // and USAGE.md tells consumers "a report whose last row has kind =
-    // sweep-truncated ended early", so a consumer checking report.last
-    // per the docs would read a partial audit as complete (r18 ADVICE;
-    // position pinned in LockJanitorSpec).
-    found.sortBy(_.path).toSeq ++ truncatedBy.map { t =>
-      LockSweepEntry(
-        path = rootPath.toString,
-        kind = "sweep-truncated",
-        ageMs = -1L,
-        judgedDead = false,
-        reason = "walk ended on exhausted listing retries — report is PARTIAL, " +
-          s"not a clean audit; re-run the sweep. Last fault: ${t.getClass.getName}: " +
-          Option(t.getMessage).getOrElse("").take(200),
-        removed = false)
-    }
-  }
-
-  /** Judge ONE listed lock/tombstone candidate by the EXACT rules
-    * acquisition uses and append a report row to `found`; non-candidates
-    * (data files) are skipped for free. Extracted so the recursive walk
-    * ([[sweepLocksOn]]) and the bounded per-table units
-    * ([[sweepLocksPerTable]]) share one judgment — two hand-mirrored
-    * copies is how the r16 janitor drifted from the writer path.
-    * Best-effort: a NonFatal anywhere skips the entry (the per-entry
-    * discipline documented in the walk). */
-  private def judgeLockLitter(
-      fs: org.apache.hadoop.fs.FileSystem,
-      st: org.apache.hadoop.fs.FileStatus,
-      clean: Boolean,
-      found: scala.collection.mutable.ArrayBuffer[LockSweepEntry]): Unit = {
-      try {
-        val p = st.getPath
-        val name = p.getName
-        val isTomb = name.contains(".__lock.__tomb-")
-        val isLock = !isTomb && name.endsWith(".__lock")
-        if (isLock || isTomb) {
-          // EVERY judgment — the reported reason and the removal alike —
-          // comes from a FRESH stat + payload read taken here, not from
-          // the listing's FileStatus snapshot: the listing can be
-          // arbitrarily stale by the time a long sweep reaches this
-          // entry (suspend, GC pause, huge tree), and a live holder's
-          // heartbeat may have bumped ONLY the mtime since. Judging the
-          // frozen snapshot would not just mis-retire (the writer path
-          // stats immediately before judging for the same reason) — it
-          // would mis-REPORT, and an operator following the documented
-          // "delete the lock manually once the holder is confirmed
-          // dead" guidance acts on this report. The fresh read's OPTION
-          // is kept end-to-end: an unreadable payload must compare as
-          // None == None in retireIfUnchanged's abandon-if-changed
-          // re-read — the writer path retires exactly such corpses, and
-          // flattening to "" made the first-cut janitor refuse them
-          // forever. An entry whose file vanished between listing and
-          // stat was released/reaped mid-sweep: not litter, no row. A
-          // TRANSIENT stat failure must not silently drop the entry
-          // from a report-only audit (an invisible stranded lock wedges
-          // the next writer with no operator warning) — it falls back
-          // to the listing snapshot for REPORTING, flagged in the
-          // reason, and is never removed on that stale basis.
-          // Every per-entry FS call below tolerates NonFatal, not just
-          // IOException: connectors that wrap a vanished-file or
-          // permission-load race in a RuntimeException (RawLocal forks
-          // `ls` — the r17 soak finding) would otherwise punt the
-          // exception to the entry-level catch and silently drop a
-          // JUDGED row from the report, the exact invisible-litter
-          // failure the unverifiable-row discipline exists to prevent.
-          val (statFresh, fresh) =
-            try (true, Some(fs.getFileStatus(p)))
-            catch {
-              case _: java.io.FileNotFoundException => (true, None)
-              case scala.util.control.NonFatal(_) => (false, Some(st))
-            }
-          fresh.foreach { f =>
-            val tNow = System.currentTimeMillis()
-            val observed = readLockPayload(fs, p)
-            val payload = observed.getOrElse("")
-            val ts = parseKv(payload).get("ts").flatMap(_.toLongOption).getOrElse(Long.MinValue)
-            val age = tNow - math.max(f.getModificationTime, ts)
-            // An unverifiable entry (transient stat failure) claims NO
-            // verdict: judgedDead computed from the stale listing
-            // snapshot would be indistinguishable from a fresh one, and
-            // a programmatic consumer (or an operator following the
-            // "delete the lock manually once the holder is confirmed
-            // dead" guidance) acting on it could delete a LIVE holder's
-            // heartbeat-refreshed lock. The reason carries the stale
-            // signals as a SUGGESTION only. The removal action is also
-            // guarded per-call — an I/O throw inside it must downgrade
-            // to removed=false, never skip the row (the invisible-litter
-            // failure again, one call later).
-            if (isLock) {
-              val dead = statFresh && holderDead(payload)
-              val aged = statFresh && !dead && agedOut(f.getModificationTime, payload)
-              val reason =
-                if (!statFresh)
-                  "unverifiable this pass (transient stat failure) — listing-snapshot " +
-                    s"signals suggest ${if (holderDead(payload)) "dead"
-                      else if (agedOut(f.getModificationTime, payload)) "aged"
-                      else "live"}; re-run the sweep"
-                else if (dead) "holder dead (same-host pid gone)"
-                else if (aged) "aged out (mtime and payload ts both past the stale horizon)"
-                else s"live holder (age ${age / 1000}s of ${LockStaleMs / 1000}s horizon)"
-              val removed = (dead || aged) && clean &&
-                (try retireIfUnchanged(fs, p, p.toString.stripSuffix(".__lock"), observed)
-                 catch { case scala.util.control.NonFatal(_) => false })
-              found += LockSweepEntry(p.toString, "lock", age, dead || aged, reason, removed)
-            } else {
-              val aged = statFresh && age > LockStaleMs
-              val reason =
-                if (!statFresh)
-                  "unverifiable this pass (transient stat failure) — listing-snapshot " +
-                    s"signals suggest ${if (age > LockStaleMs) "aged" else "fresh"}; re-run the sweep"
-                else if (aged) "aged tombstone (past the stale horizon; no straggler can be in flight)"
-                else s"fresh tombstone (guards its takeover's stragglers for ${(LockStaleMs - age) / 1000}s more)"
-              val removed = aged && clean &&
-                (try fs.delete(p, false)
-                 catch { case scala.util.control.NonFatal(_) => false })
-              found += LockSweepEntry(p.toString, "tombstone", age, aged, reason, removed)
-            }
-          }
-        }
-      } catch {
-        // skip this entry, keep sweeping — NonFatal, not just
-        // IOException, for the same reason as the listing fetch in
-        // sweepLocksOn (a connector wrapping a vanished file in a
-        // RuntimeException must not kill a best-effort audit)
-        case scala.util.control.NonFatal(_) => ()
-      }
-  }
-
-  /** Bounded, resumable alternative to one monolithic [[sweepLocks]] walk
-    * (r17 verdict #4): the full sweep is O(all files under root) on the
-    * driver — measured at ~98-108 min per 1M files on the local shim
-    * (r17 sweep-scale measurement, README table) — which prices a
-    * whole-warehouse audit as one unbounded increment. This splits it
-    * into O(tables) bounded units along the warehouse's natural
-    * first-level structure:
-    *
-    *   - unit 0 — the root's DIRECT child files, judged without any
-    *     recursion. Table locks live as SIBLING files of the table dir
-    *     (`root/t1` ⇒ `root/t1.__lock`), so for the common layout
-    *     (tables as first-level dirs) this one cheap unit covers every
-    *     table-level lock and tombstone in the warehouse;
-    *   - one unit per first-level DIRECTORY — the existing recursive
-    *     sweep scoped to that table, catching litter at any depth
-    *     (partition-grain locks, nested table families).
-    *
-    * The union of all units' reports covers exactly what the monolithic
-    * walk covers (spec-pinned): a recursive listing yields only files,
-    * every file is either a direct root child (unit 0) or under some
-    * first-level dir (that dir's unit). Each unit is independent —
-    * callers needing resumability or parallelism iterate
-    * [[sweepUnits]] themselves and run `sweepLocks(spark, unit, clean)`
-    * per table on their own schedule; this method is the sequential
-    * convenience that returns per-unit reports (unit 0 is keyed
-    * `"<root> (top-level files)"`). `clean` semantics are identical to
-    * [[sweepLocks]]. Root-level treatment matches the monolithic walk:
-    * missing root → empty, root-level fault → loud. */
-  def sweepLocksPerTable(
-      spark: SparkSession,
-      root: String,
-      clean: Boolean = false): Seq[(String, Seq[LockSweepEntry])] =
-    sweepLocksPerTableOn(
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      root, clean)
-
-  private[graft] def sweepLocksPerTableOn(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String,
-      clean: Boolean): Seq[(String, Seq[LockSweepEntry])] = {
-    val shallow = (s"$root (top-level files)", sweepLocksShallowOn(fs, root, clean))
-    shallow +: sweepUnitsOn(fs, root).map(u => (u, sweepLocksOn(fs, u, clean)))
-  }
-
-  /** The per-table sweep units under `root`: its first-level directories,
-    * sorted. Missing root → empty; a root-level listing fault is loud
-    * (same doctrine as [[sweepLocksOn]] — a failed audit must not read
-    * as a clean one). */
-  def sweepUnits(spark: SparkSession, root: String): Seq[String] =
-    sweepUnitsOn(
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf()), root)
-
-  private[graft] def sweepUnitsOn(
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Seq[String] =
-    try fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory).map(_.getPath.toString).sorted.toSeq
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
-
-  /** Unit 0 of the per-table sweep: judge the root's DIRECT child files
-    * (one non-recursive listing — O(first-level entries), no tree walk).
-    * Table-path locks are siblings of their table dir, so this is where
-    * they all live when tables are first-level dirs. */
-  private[graft] def sweepLocksShallowOn(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String,
-      clean: Boolean): Seq[LockSweepEntry] = {
-    val found = scala.collection.mutable.ArrayBuffer.empty[LockSweepEntry]
-    val sts =
-      try fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    sts.filterNot(_.isDirectory).foreach(judgeLockLitter(fs, _, clean, found))
-    found.sortBy(_.path).toSeq
-  }
-
-  /** Result of one [[sweepAllTables]] call: the units swept THIS call
-    * (in order, with their reports), the units skipped because a prior
-    * aborted run's ledger already records them complete, and whether the
-    * whole warehouse is now covered (every unit complete and none
-    * truncated — only then is the ledger cleared). */
-  final case class WarehouseSweepRun(
-      swept: Seq[(String, Seq[LockSweepEntry])],
-      skippedCompleted: Seq[String],
-      completed: Boolean)
-
-  /** Resumable whole-warehouse sweep driver (r18 verdict #5).
-    * [[sweepLocksPerTable]] bounds each INCREMENT to one table, but the
-    * loop over tables was still caller-authored — an aborted multi-hour
-    * audit (at the measured ~100 min/1M files, a many-million-file
-    * warehouse is hours of driver walking) restarted from zero. This is
-    * the one-entry-point loop with on-disk progress: each unit's key is
-    * APPENDED to the ledger file (flushed + fsynced) only after that
-    * unit's sweep completes UNTRUNCATED, so a kill/crash loses at most
-    * the in-flight unit; the next call with the same ledger path skips
-    * the recorded units and resumes at the aborted one. Contract pinned
-    * by WarehouseSweepResumeSpec: across an abort+resume sequence every
-    * unit is swept exactly once — none twice, none skipped — and a unit
-    * whose report carries the sweep-truncated sentinel is NOT recorded
-    * (a partial audit must not read as covered; it re-sweeps on resume).
-    * A unit-level root fault propagates loudly (the failed-audit
-    * doctrine of [[sweepLocksOn]]), leaving the ledger resumable.
-    *
-    * When every unit completes, the ledger is DELETED: the next call is
-    * a fresh full audit. Tables created between abort and resume are
-    * picked up by the resume (units are re-listed each call); tables
-    * deleted in between leave stale ledger lines that are simply
-    * ignored. The ledger is driver-local state (same discipline as the
-    * cross-process soak's ledgers) — use one path per (root, audit).
-    *
-    * Ledger robustness (r20): keys are derived from the fs-QUALIFIED
-    * root, so an abort under `/wh/` resumes correctly under `file:/wh`
-    * (spelling-independent membership); and a unit counts as recorded
-    * only by a newline-terminated line — a torn final line from a crash
-    * mid-append is treated as "not recorded" and re-swept, never matched
-    * (a torn prefix can spell another unit's full key). Both pinned by
-    * WarehouseSweepResumeSpec. */
-  def sweepAllTables(
-      spark: SparkSession,
-      root: String,
-      ledgerPath: String,
-      clean: Boolean = false): WarehouseSweepRun =
-    sweepAllTablesOn(
-      new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      root, ledgerPath, clean)
-
-  private[graft] def sweepAllTablesOn(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String,
-      ledgerPath: String,
-      clean: Boolean): WarehouseSweepRun = {
-    // Ledger keys must be SPELLING-INDEPENDENT across abort/resume calls
-    // (r19 ADVICE): table units come out of listStatus fs-qualified, but
-    // the shallow key used to embed the caller's root verbatim — resuming
-    // with a trailing slash, or a bare path where the abort used a file:/
-    // URI, made every recorded line miss the membership check and
-    // silently re-sweep the whole warehouse, breaking the spec-pinned
-    // exactly-once contract. Qualify once; every key derives from the
-    // qualified spelling.
-    val qroot = fs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString
-    val ledgerFile = java.nio.file.Paths.get(ledgerPath)
-    val done: Set[String] =
-      if (java.nio.file.Files.exists(ledgerFile)) {
-        val raw = new String(java.nio.file.Files.readAllBytes(ledgerFile), "UTF-8")
-        // a unit is recorded ONLY by a newline-TERMINATED line: a torn
-        // final line (crash between the append's first byte and its
-        // newline reaching disk) means "unit not recorded" — it re-sweeps,
-        // which is safe; COUNTING it would be poisoning, because a torn
-        // prefix can spell a DIFFERENT unit's full key (".../t10" torn one
-        // byte short reads ".../t1") and mark a never-swept unit done
-        val terminated = raw.lastIndexOf('\n') match {
-          case -1 => ""
-          case i  => raw.substring(0, i + 1)
-        }
-        terminated.linesIterator.filter(_.nonEmpty).toSet
-      } else Set.empty
-    val shallowKey = s"$qroot (top-level files)"
-    val units = shallowKey +: sweepUnitsOn(fs, qroot)
-    val (skip, todo) = units.partition(done)
-    Option(ledgerFile.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val swept = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[LockSweepEntry])]
-    var truncatedAny = false
-    val out = new java.io.FileOutputStream(ledgerFile.toFile, /* append = */ true)
-    try {
-      for (u <- todo) {
-        val report =
-          if (u == shallowKey) sweepLocksShallowOn(fs, qroot, clean)
-          else sweepLocksOn(fs, u, clean)
-        swept += ((u, report))
-        if (report.exists(_.kind == "sweep-truncated")) truncatedAny = true
-        else {
-          // fsync per unit, not just flush: the ledger's whole purpose is
-          // surviving the process dying mid-sweep, and a unit costs
-          // minutes against one synced write
-          out.write((u + "\n").getBytes("UTF-8"))
-          out.flush()
-          out.getFD.sync()
-        }
-      }
-    } finally out.close()
-    val completed = !truncatedAny
-    if (completed) java.nio.file.Files.deleteIfExists(ledgerFile)
-    WarehouseSweepRun(swept.toSeq, skip, completed)
-  }
 
   /** The upsert-rewrite REBALANCE decision, shared with its spec (same
     * pattern as [[shouldAbortHold]]): rebalance once the committed
@@ -1581,23 +1094,6 @@ object ParquetWarehouse {
     }
   }
 
-  /** Hive-style date-partitioned write, shaped against the dynamic-
-    * partition small-files explosion: without the pre-write repartition
-    * on the partition column, EVERY task holding rows of a date opens a
-    * file under that date's dir — T tasks × D dates files (measured in
-    * the r13 10× scale run: 32 tasks × 3 000 dates ≈ 96 k files turned a 10×
-    * data step into a 32× write-time step and poisoned every later
-    * partition DISCOVERY listing of the table). Hash-clustering rows by
-    * date first lands each date in exactly one task → one file per date
-    * (the same task-alignment idea as [[writeBucketed]]'s
-    * repartition-to-bucket). A date whose rows exceed one comfortable
-    * file is the caller's cue to pre-split (e.g. repartition on
-    * (date, hour)) — for the daily-grain warehouse tables this sink
-    * serves, one file per day is the right shape. */
-  def writeDatePartitioned(df: DataFrame, path: String, dateCol: String): Unit =
-    df.repartition(col(dateCol))
-      .write.partitionBy(dateCol).mode(SaveMode.Overwrite).parquet(path)
-
   /** Overwrite `path` with `df` as parquet and verify the landed row count
     * — the reference's source→target copy + COUNT(*) check
     * (db_utils.py:67-102). The source is counted by an `Observation` in
@@ -1617,7 +1113,7 @@ object ParquetWarehouse {
     * merges. [[upsert]] is read-union-dedup-REWRITE: every batch rewrites
     * the full table, so a small daily batch against a 100 TB table costs
     * O(table) I/O. This variant prunes the merge to the hive partitions
-    * (`partitionCol=value` dirs, as [[writeDatePartitioned]] lays out)
+    * (`partitionCol=value` dirs, as this method's create branch lays out)
     * that the updates batch actually touches: untouched partitions are
     * neither read nor written — merge cost is O(affected partitions),
     * which for a date-partitioned warehouse and a daily batch is O(day),
@@ -1736,8 +1232,7 @@ object ParquetWarehouse {
     // rewrite lands under channel=7 while channel=007 stays live —
     // silent row duplication). Read as the verbatim dir string, the
     // value survives untouched; the cast to the updates' dtype below
-    // restores the typed column for the merge union (same fix
-    // [[compactPartitions]] uses for the identical hazard).
+    // restores the typed column for the merge union.
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
     val affectedDirs = affected
       .map(v => new org.apache.hadoop.fs.Path(destPath, partitionCol + "=" + esc(v)))
@@ -1751,7 +1246,7 @@ object ParquetWarehouse {
         }
         require(t.columns.contains(partitionCol),
           s"existing table at $path has no partition column '$partitionCol' — " +
-            "upsertPartitioned requires the hive-partitioned layout writeDatePartitioned/upsertPartitioned produce")
+            "upsertPartitioned requires the hive-partitioned layout its create branch produces")
         require(keys.filterNot(_ == partitionCol).forall(t.columns.contains),
           s"existing table at $path is missing merge key(s): " +
             keys.filterNot(k => k == partitionCol || t.columns.contains(k)).mkString(", "))
@@ -1773,14 +1268,14 @@ object ParquetWarehouse {
     // timestamps, trailing-zero decimals) fail LOUDLY before anything is
     // swapped, instead of silently leaving the old dir live as duplicates
     stageAndSwapPartitions(fs, destPath, path, partitionCol, merged,
-      expectedDirNames = Some(affected.map(v => partitionCol + "=" + esc(v)).toSet))
+      expectedDirNames = affected.map(v => partitionCol + "=" + esc(v)).toSet)
   }
 
   /** Partition-value TYPE inference turns dir-name strings back into
-    * typed values by guessing ("007" → int 7) — every writer path here
+    * typed values by guessing ("007" → int 7) — the partitioned merge
     * needs the VERBATIM string instead (the dir name IS the value's
-    * committed spelling), so reads run under inference-off and the
-    * caller restores the typed column itself via an explicit cast.
+    * committed spelling), so its discovery read runs under inference-off
+    * and restores the typed column itself via an explicit cast.
     *
     * The conf is SESSION-global, so flipping it on the caller's session
     * — even under a monitor — would string-type the partition columns of
@@ -1813,54 +1308,47 @@ object ParquetWarehouse {
     body(clone)
   }
 
-  /** Shared commit machinery for the partitioned writers
-    * ([[upsertPartitioned]], [[compactPartitions]]): write `staged`
-    * (shaped one-task-per-partition) into a fresh `.__ptmp-*` sibling,
-    * then swap each produced partition dir into the live table with its
-    * predecessor staged in a `.__pold-*` backup; on ANY failure, restore
-    * backups for still-missing partitions and remove the staging dirs.
-    * Dir names are whatever the WRITE produced (hive-escaped), so no
-    * value formatting of our own. `expectedDirNames`, when given, is the
-    * dir-name set the CALLER's discovery used, and is enforced in BOTH
-    * directions: a staged dir outside it means the writer's
-    * partition-value rendering diverged from the spelling discovery
-    * matched against (so the old dir would survive the swap as silent
-    * duplicates) — checked BEFORE any rename, failing loudly with both
-    * spellings while the live table is still untouched; and an expected
-    * LIVE dir the write produced nothing for is RETIRED through the same
-    * `.__pold-*` backup (its merged/rewritten row set is empty — e.g. a
-    * partition holding only zero-row files — and leaving it live would
-    * make the rewrite non-idempotent: every subsequent pass would select
-    * it again, never converging to 0). A crash mid-retire resurrects the
-    * dir from the backup like any interrupted swap; the next pass simply
-    * retires it again. */
+  /** The commit machinery of [[upsertPartitioned]]'s merge branch:
+    * write `staged` (shaped one-task-per-partition) into a fresh
+    * `.__ptmp-*` sibling, then swap each produced partition dir into the
+    * live table with its predecessor staged in a `.__pold-*` backup; on
+    * ANY failure, restore backups for still-missing partitions and
+    * remove the staging dirs. Dir names are whatever the WRITE produced
+    * (hive-escaped), so no value formatting of our own.
+    * `expectedDirNames` is the dir-name set the caller's discovery used:
+    * a staged dir outside it means the writer's partition-value
+    * rendering diverged from the spelling discovery matched against (so
+    * the old dir would survive the swap as silent duplicates) — checked
+    * BEFORE any rename, failing loudly with both spellings while the
+    * live table is still untouched. The reverse direction needs no
+    * check: every expected dir comes from an update row, and last-wins
+    * keeps exactly one row per key (the partition value among them), so
+    * the write produces output for every expected dir. */
   private def stageAndSwapPartitions(
       fs: org.apache.hadoop.fs.FileSystem,
       destPath: org.apache.hadoop.fs.Path,
       path: String,
       partitionCol: String,
       staged: DataFrame,
-      expectedDirNames: Option[Set[String]] = None): Unit = {
+      expectedDirNames: Set[String]): Unit = {
     val batchId = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(path + ".__ptmp-" + batchId)
     val pold = new org.apache.hadoop.fs.Path(path + ".__pold-" + batchId)
     try {
-      // same task-per-partition shaping as writeDatePartitioned: without
-      // it every task holding rows of an affected partition opens its own
-      // file there (tasks × partitions small files per batch)
+      // the create branch's task-per-partition shaping: without it every
+      // task holding rows of an affected partition opens its own file
+      // there (tasks × partitions small files per batch)
       staged.repartition(col(partitionCol))
         .write.partitionBy(partitionCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
       val newParts = fs.listStatus(tmp).filter(s =>
         s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      expectedDirNames.foreach { exp =>
-        val rogue = newParts.map(_.getPath.getName).toSet -- exp
-        require(rogue.isEmpty,
-          s"staged write produced partition dir(s) ${rogue.mkString(", ")} outside " +
-            s"the affected set ${exp.mkString(", ")} at $path — the partition value's " +
-            "string form does not round-trip through its dir-name rendering " +
-            "(see upsertPartitioned's round-trip contract); aborted before swap, " +
-            "live table untouched")
-      }
+      val rogue = newParts.map(_.getPath.getName).toSet -- expectedDirNames
+      require(rogue.isEmpty,
+        s"staged write produced partition dir(s) ${rogue.mkString(", ")} outside " +
+          s"the affected set ${expectedDirNames.mkString(", ")} at $path — the partition value's " +
+          "string form does not round-trip through its dir-name rendering " +
+          "(see upsertPartitioned's round-trip contract); aborted before swap, " +
+          "live table untouched")
       fs.mkdirs(pold)
       for (np <- newParts) {
         val live = new org.apache.hadoop.fs.Path(destPath, np.getPath.getName)
@@ -1871,18 +1359,6 @@ object ParquetWarehouse {
         require(fs.rename(np.getPath, live),
           s"could not move staged partition ${np.getPath.getName} into place at $path")
       }
-      // reverse direction: an expected live dir with NO staged output was
-      // rewritten/merged to zero rows — retire it through the backup so
-      // the table converges (see the method doc)
-      expectedDirNames.foreach { exp =>
-        val produced = newParts.map(_.getPath.getName).toSet
-        for (name <- exp if !produced.contains(name)) {
-          val live = new org.apache.hadoop.fs.Path(destPath, name)
-          if (fs.exists(live))
-            require(fs.rename(live, new org.apache.hadoop.fs.Path(pold, name)),
-              s"could not retire empty-rewrite partition $name at $path")
-        }
-      }
       fs.delete(pold, true)
       fs.delete(tmp, true)
     } catch {
@@ -1891,181 +1367,6 @@ object ParquetWarehouse {
         catch { case cleanup: Throwable => t.addSuppressed(cleanup) }
         throw t
     }
-  }
-
-  /** Compact fragmented partitions of a hive-partitioned table back to
-    * one file each. Incremental merges fragment: every
-    * [[upsertPartitioned]] batch rewrites its touched partitions as one
-    * file, but a table can also be fed by appends or unshaped writers,
-    * and at 100 TB a partition holding hundreds of small files taxes
-    * every subsequent scan (footer reads, task scheduling) and listing.
-    * Only partitions with more than `maxFilesPerPartition` data files
-    * are rewritten — healthy partitions' files are not touched (same
-    * physical-untouched contract as the merge path, spec-pinned) — and
-    * the rewrite commits through the same per-partition crash-safe
-    * write-then-swap as the merge ([[stageAndSwapPartitions]]).
-    * Compaction is row-preserving by construction: it reads and
-    * rewrites, never merges — mixed-schema partitions merge their
-    * schemas into the rewrite (see the read options below), and dir
-    * names round-trip verbatim (partition values are read untyped, so
-    * "007" stays `=007`, unlike the typed round-trip contract the merge
-    * path needs). Same single-writer-per-path contract as [[upsert]] —
-    * guarded by the same advisory lock.
-    *
-    * `uniformSchema = true` additionally rewrites any partition whose
-    * files do not carry the table's full MERGED column set — the
-    * schema-uniformization pass that closes [[upsertPartitioned]]'s
-    * `evolveSchema` loose end: evolution only rewrites TOUCHED
-    * partitions, so a single-file old-schema partition would otherwise
-    * stay old forever and force `mergeSchema` (its footer-merge job +
-    * the silent-miss risk of a plain read) on every reader indefinitely.
-    * After the pass a PLAIN read sees the evolved columns table-wide
-    * (missing columns null-filled, exactly what the evolving merge
-    * union does); partitions already uniform — and not fragmented — are
-    * physically untouched, so the pass is cheap to run repeatedly.
-    * Column presence is checked per FILE via driver-side parquet footer
-    * reads — one footer per data file, the same metadata a mergeSchema
-    * read would pull, without launching a job.
-    *
-    * Returns the number of partitions rewritten. */
-  def compactPartitions(
-      spark: SparkSession,
-      path: String,
-      partitionCol: String,
-      maxFilesPerPartition: Int = 1,
-      uniformSchema: Boolean = false): Int = {
-    require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
-    val destPath = new org.apache.hadoop.fs.Path(path)
-    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(destPath)) return 0
-    withWriterLock(fs, path) {
-      compactPartitionsLocked(spark, path, partitionCol, maxFilesPerPartition,
-        uniformSchema, destPath, fs)
-    }
-  }
-
-  /** `private[graft]`: the fault-injection seam for the compaction
-    * entry point's partition swaps — see [[upsertPartitionedLocked]]. */
-  private[graft] def compactPartitionsLocked(
-      spark: SparkSession,
-      path: String,
-      partitionCol: String,
-      maxFilesPerPartition: Int,
-      uniformSchema: Boolean,
-      destPath: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Int = {
-    recoverInterruptedPartitionSwaps(fs, path)
-    val children = fs.listStatus(destPath)
-    val partDirs = children.filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-    // a wrong/typo'd partition column must fail loudly, not read as "all
-    // healthy": a table with DIRECTORY children none of which match is
-    // either not partitioned or partitioned by something else, and a
-    // table with DATA FILES at the root is a flat (non-hive) layout.
-    // Only marker-file children (_SUCCESS) don't count — a legitimately
-    // EMPTY partitioned table is a dir holding just those, and that
-    // reads as "0 compacted", not as a wrong column.
-    require(partDirs.nonEmpty || children.forall(c =>
-        !c.isDirectory && !c.getPath.getName.endsWith(".parquet")),
-      s"table at $path has no '$partitionCol=' partition dirs — " +
-        "wrong partition column, or not a hive-partitioned layout?")
-    val filesOf: Map[org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.Path]] =
-      partDirs.map { d =>
-        d.getPath -> fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-      }.toMap
-    val fragmented = partDirs.filter(d => filesOf(d.getPath).length > maxFilesPerPartition)
-    // uniformSchema: a partition needs rewriting when any of its files
-    // lacks a column some other file in the TABLE carries (evolution
-    // only ADDS nullable columns, so name-set union is the full merged
-    // schema; types never change under the evolving union's contract)
-    val (staleSchema, repFiles) =
-      if (!uniformSchema)
-        (Array.empty[org.apache.hadoop.fs.FileStatus], Array.empty[String])
-      else {
-        val conf = spark.sessionState.newHadoopConf()
-        def fieldNames(p: org.apache.hadoop.fs.Path): Set[String] = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-          try {
-            import scala.jdk.CollectionConverters._
-            r.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-          } finally r.close()
-        }
-        // footer reads are independent driver-side I/O (~6 ms each
-        // measured sequential at 100×: 19 s over 3 000 single-file
-        // partitions — the pass's whole fixed cost), so run them on a
-        // bounded pool; parquet footer reads and local/HDFS FS opens are
-        // concurrency-safe
-        val allFiles = partDirs.flatMap(d => filesOf(d.getPath).map(f => (d, f)))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, math.max(1, allFiles.length)))
-        val namesByFile =
-          try {
-            import scala.jdk.CollectionConverters._
-            val tasks: java.util.List[java.util.concurrent.Callable[
-              (org.apache.hadoop.fs.FileStatus, org.apache.hadoop.fs.Path, Set[String])]] =
-              allFiles.map { case (d, f) =>
-                new java.util.concurrent.Callable[
-                  (org.apache.hadoop.fs.FileStatus, org.apache.hadoop.fs.Path, Set[String])] {
-                  def call() = (d, f, fieldNames(f))
-                }
-              }.toSeq.asJava
-            pool.invokeAll(tasks).asScala.map(_.get()).toArray
-          } finally pool.shutdown()
-        val tableCols = namesByFile.foldLeft(Set.empty[String])(_ ++ _._3)
-        val stale = namesByFile.filter(_._3 != tableCols).map(_._1).distinct
-        // one representative file per distinct footer column-set: enough
-        // for a mergeSchema read to recover the full merged schema WITH
-        // types — the rewrite below must null-fill columns that only
-        // appear in partitions NOT selected for rewriting (a stale dir
-        // can miss a column every selected sibling also misses)
-        val reps = namesByFile.groupBy(_._3).map(_._2.head._2.toString).toArray
-        (stale, reps)
-      }
-    val toRewrite = (fragmented ++ staleSchema).distinct
-    if (toRewrite.isEmpty) return 0
-    // Two read options are load-bearing for "row-preserving":
-    //  - mergeSchema: partitions can carry MIXED schemas (the documented
-    //    upsertPartitioned evolveSchema state, or append-fed dirs) — a
-    //    single sampled footer would silently DROP the evolved columns
-    //    from the rewrite, and the swap then deletes the only copy;
-    //  - partition-type inference OFF: the rewrite re-derives each dir
-    //    name from the partition VALUE, and an inferred type changes the
-    //    spelling for values that don't round-trip ("007" → int 7 →
-    //    channel=7 written while channel=007 stays live: duplicated rows
-    //    and a forever-non-idempotent compact). As strings, the dir name
-    //    round-trips verbatim; the files themselves don't store the
-    //    partition column, so downstream typed reads are unaffected.
-    val read = withPartitionInferenceOff(spark) { s =>
-      s.read
-        .option("basePath", path)
-        .option("mergeSchema", "true")
-        .parquet(toRewrite.map(_.getPath.toString).toSeq: _*)
-    }
-    // under uniformSchema the rewrite must carry the TABLE's merged
-    // column set, not just the union over the dirs being rewritten: a
-    // stale partition can miss a column every OTHER selected partition
-    // also misses (present only in already-uniform dirs), and rewriting
-    // it from its own files alone would leave it stale forever. The
-    // representative-file read recovers the merged schema with types;
-    // missing columns null-fill — exactly what the evolving merge union
-    // does for rows from the old-schema side.
-    val staged =
-      if (!uniformSchema) read
-      else {
-        val tableSchema = spark.read.option("mergeSchema", "true")
-          .parquet(repFiles.toSeq: _*).schema
-        val cols = tableSchema.fields.filterNot(_.name == partitionCol).map { f =>
-          if (read.columns.contains(f.name)) col(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        } :+ col(partitionCol)
-        read.select(cols.toSeq: _*)
-      }
-    stageAndSwapPartitions(fs, destPath, path, partitionCol, staged,
-      expectedDirNames = Some(toRewrite.map(_.getPath.getName).toSet))
-    toRewrite.length
   }
 
   /** Heal interrupted [[upsertPartitioned]] swaps before the table is
@@ -2091,42 +1392,28 @@ object ParquetWarehouse {
     // that does not exist, and loud-on-missing would fail the create
     // permanently, not retryably. But a spurious FNF while the table
     // EXISTS must stay loud, or the skipped restore reopens the
-    // silent-history-loss window above; unverifiable counts as exists.
+    // silent-history-loss window above; unverifiable counts as exists. A
+    // faulting probe rides on the rethrown not-found as suppressed, so
+    // the operator sees both the not-found AND the store error that made
+    // presence unverifiable. (On a connector whose exists faults
+    // DETERMINISTICALLY, a genuinely-absent table stays loud — a retry or
+    // an operator look, never a skipped restore.)
     val polds = try fs.globStatus(new org.apache.hadoop.fs.Path(globEscape(path) + ".__pold-*"))
                 catch {
                   case e: java.io.FileNotFoundException =>
-                    if (!verifiablyAbsent(fs, dest, e)) throw e
+                    val absent =
+                      try !fs.exists(dest)
+                      catch {
+                        case scala.util.control.NonFatal(probe) =>
+                          e.addSuppressed(probe)
+                          false
+                      }
+                    if (!absent) throw e
                     null
                 }
     if (polds != null) polds.foreach(p => restorePartitionBackups(fs, dest, p.getPath, deleteTmp = None))
     sweepStaleStaging(fs, new org.apache.hadoop.fs.Path(globEscape(path) + ".__ptmp-*"))
   }
-
-  /** The verify-absence discipline shared by every not-found quiet-path
-    * exemption (the janitor's lazy missing root, the partition
-    * recovery's missing-parent create): "absent" must be CONFIRMED by a
-    * fresh exists probe — unverifiable counts as PRESENT, so the caller
-    * stays loud. One helper, not two hand-rolled copies, so the
-    * discipline cannot drift (same reason sweepStaleStaging is shared).
-    * A faulting probe is attached to `carrier` as suppressed: the
-    * operator then sees both the original not-found AND the store error
-    * that made presence unverifiable, instead of misreading the rethrow
-    * as a clean "missing". Documented degradation: on a connector where
-    * the probe faults DETERMINISTICALLY (e.g. exists wraps not-found in
-    * an unchecked exception), a genuinely-absent target stays loud —
-    * deliberate, because the quiet side of this gate guards against
-    * irreversible outcomes (skipped restores, failed audits reading as
-    * clean) while the loud side costs a retry or an operator look. */
-  private def verifiablyAbsent(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path,
-      carrier: Throwable): Boolean =
-    try !fs.exists(p)
-    catch {
-      case scala.util.control.NonFatal(probe) =>
-        carrier.addSuppressed(probe)
-        false
-    }
 
   /** Best-effort removal of never-committed staging dirs matching
     * `glob` — OPTIONAL cleanup piggybacking on a write, so NonFatal is

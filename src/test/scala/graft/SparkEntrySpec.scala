@@ -50,4 +50,18 @@ class SparkEntrySpec extends SparkSpec {
     val vals = probes.map(SparkEntry.stateStorePartitions)
     assert(vals === vals.sorted, s"non-monotone: ${probes.zip(vals)}")
   }
+
+  test("scratch dirs are rooted at java.io.tmpdir") {
+    val root = java.nio.file.Files.createTempDirectory("graft_tmpdir_spec").toRealPath()
+    val saved = System.getProperty("java.io.tmpdir")
+    try {
+      System.setProperty("java.io.tmpdir", root.toString)
+      val p = java.nio.file.Paths.get(SparkEntry.scratchDir("graft_stream", "/data/sf0.1", "q34"))
+      assert(p.getParent === root, s"$p is not directly under $root")
+      assert(p.getFileName.toString.startsWith("graft_stream_"))
+    } finally {
+      System.setProperty("java.io.tmpdir", saved)
+      java.nio.file.Files.deleteIfExists(root)
+    }
+  }
 }

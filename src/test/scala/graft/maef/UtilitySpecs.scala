@@ -441,7 +441,7 @@ class ParquetWarehouseSpec extends SparkSpec {
   test("date-partitioned write produces hive-style partition dirs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/t"
     val df = Seq(("2023-08-01", 1L), ("2023-08-02", 2L)).toDF("date", "v")
-    ParquetWarehouse.writeDatePartitioned(df, dir, "date")
+    ParquetWarehouse.upsertPartitioned(df, dir, Seq("date"), "date")
     val dirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("date="))
     assert(dirs.toSet === Set("date=2023-08-01", "date=2023-08-02"))
     // partition filter prunes: only one partition's files are read
@@ -457,7 +457,7 @@ class ParquetWarehouseSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_part1f").toString + "/t"
     val df = (1 to 600).map(i => (f"2023-08-${i % 3 + 1}%02d", i.toLong))
       .toDF("date", "v").repartition(13)
-    ParquetWarehouse.writeDatePartitioned(df, dir, "date")
+    ParquetWarehouse.upsertPartitioned(df, dir, Seq("date", "v"), "date")
     for (d <- Seq("date=2023-08-01", "date=2023-08-02", "date=2023-08-03")) {
       val files = new java.io.File(s"$dir/$d").listFiles()
         .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
@@ -687,74 +687,6 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     assert(!untouched.columns.contains("model"))
   }
 
-  test("compactPartitions rewrites only fragmented partitions, preserving rows and healthy files") {
-    val dir = freshDir("graft_compact")
-    // fragment 09-01 (5-task unshaped write → up to 5 files); 09-02 stays
-    // healthy at one file
-    (1 to 200).map(i => ("2023-09-01", i.toLong)).toDF("date", "v")
-      .repartition(5).write.partitionBy("date").mode("append").parquet(dir)
-    (201 to 300).map(i => ("2023-09-02", i.toLong)).toDF("date", "v")
-      .coalesce(1).write.partitionBy("date").mode("append").parquet(dir)
-    def files(d: String): Seq[String] = listing(s"$dir/$d").toSeq.map(_._1)
-    assert(files("date=2023-09-01").length > 1, "fixture must start fragmented")
-    val healthyBefore = listing(s"$dir/date=2023-09-02")
-    val before = spark.read.parquet(dir).select("date", "v")
-      .as[(String, Long)].collect().toSet
-    Thread.sleep(1100)
-    val n = ParquetWarehouse.compactPartitions(spark, dir, "date")
-    assert(n === 1, "exactly the fragmented partition compacts")
-    assert(files("date=2023-09-01").length === 1)
-    assert(listing(s"$dir/date=2023-09-02") === healthyBefore,
-      "healthy partition's files must not be touched")
-    val after = spark.read.parquet(dir).select("date", "v")
-      .as[(String, Long)].collect().toSet
-    assert(after === before, "compaction must be row-preserving")
-    // idempotent: nothing left to compact
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 0)
-  }
-
-  test("compactPartitions merges mixed partition schemas instead of dropping evolved columns") {
-    // the data-loss hazard: a partition fed by files with DIFFERENT
-    // schemas (append after evolution) must compact to the union schema —
-    // a single sampled footer would silently drop the evolved column and
-    // the swap would delete the only copy
-    val dir = freshDir("graft_compact_mixed")
-    Seq(("2023-09-01", 1L)).toDF("date", "v")
-      .coalesce(1).write.partitionBy("date").mode("append").parquet(dir)
-    Seq(("2023-09-01", 2L, "m")).toDF("date", "v", "model")
-      .coalesce(1).write.partitionBy("date").mode("append").parquet(dir)
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 1)
-    val got = spark.read.parquet(dir).select("v", "model")
-      .as[(Long, Option[String])].collect().toSet
-    assert(got === Set((1L, None), (2L, Some("m"))))
-  }
-
-  test("compactPartitions preserves dir names that do not round-trip typed inference") {
-    // "007" would infer as int 7 and be rewritten under channel=7 while
-    // channel=007 stayed live (duplicated rows, never-idempotent
-    // compact); untyped partition reading keeps the dir name verbatim
-    val dir = freshDir("graft_compact_007")
-    Seq(("007", 1L)).toDF("channel", "v")
-      .coalesce(1).write.partitionBy("channel").mode("append").parquet(dir)
-    Seq(("007", 2L)).toDF("channel", "v")
-      .coalesce(1).write.partitionBy("channel").mode("append").parquet(dir)
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "channel") === 1)
-    val dirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("channel="))
-    assert(dirs.toSet === Set("channel=007"), s"dir names drifted: ${dirs.mkString(",")}")
-    assert(spark.read.parquet(dir).count() === 2)
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "channel") === 0)
-  }
-
-  test("compactPartitions fails loudly on a wrong partition column") {
-    val dir = freshDir("graft_compact_wrongcol")
-    Seq(("2023-09-01", 1L)).toDF("date", "v")
-      .write.partitionBy("date").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.compactPartitions(spark, dir, "event_dt")
-    }
-    assert(e.getMessage.contains("event_dt"))
-  }
-
   test("a failing CREATE-branch write leaves no torn table at the live path") {
     // the create branch must stage through .__ptmp + rename like every
     // other path: a direct write would leave a partial table that the
@@ -792,8 +724,7 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
   }
 
   test("upsertPartitioned merge path round-trips partition values typed inference would re-spell") {
-    // the merge-path sibling of the compactPartitions "007" trap: with
-    // partition-type inference ON, the affected-dirs read re-infers
+    // with partition-type inference ON, the affected-dirs read re-infers
     // "007" as int 7, the cast back to string spells it "7", and the
     // rewrite lands under channel=7 while channel=007 stays live —
     // silent row duplication. The inference-off read keeps the dir
@@ -810,93 +741,6 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     val got = spark.read.parquet(dir).select("session_id", "v")
       .as[(String, Double)].collect().toSet
     assert(got === Set(("s1", 2.0), ("s2", 3.0)), "old-spelling rows survived as duplicates")
-  }
-
-  test("compactPartitions retires zero-row partitions instead of re-selecting them forever") {
-    // a partition holding only zero-row parquet files (streaming-sink or
-    // filtered-rewrite leftovers) produces NO staged dir when rewritten;
-    // leaving it live would make every subsequent pass select it again —
-    // the pass must retire it (crash-safely, through the backup) so the
-    // table converges to "0 compacted"
-    val dir = freshDir("graft_compact_zerorow")
-    Seq(("2023-09-01", 1L)).toDF("date", "v")
-      .coalesce(1).write.partitionBy("date").mode("append").parquet(dir)
-    // fabricate date=2023-09-02 from two ZERO-ROW parquet files (written
-    // schema-only, then moved in) so the partition reads as fragmented
-    val scratch = java.nio.file.Files.createTempDirectory("graft_zerorow_src").toString + "/s"
-    Seq((1L)).toDF("v").filter(lit(false)).coalesce(1).write.parquet(scratch)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val emptyPart = fs.listStatus(new org.apache.hadoop.fs.Path(scratch))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    assert(emptyPart.nonEmpty, "fixture needs a schema-only parquet file")
-    val zp = new org.apache.hadoop.fs.Path(s"$dir/date=2023-09-02")
-    fs.mkdirs(zp)
-    fs.rename(emptyPart.head.getPath, new org.apache.hadoop.fs.Path(zp, "part-a.parquet"))
-    fs.copyFromLocalFile(new org.apache.hadoop.fs.Path(zp, "part-a.parquet"),
-      new org.apache.hadoop.fs.Path(zp, "part-b.parquet"))
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 1)
-    assert(!fs.exists(zp), "zero-row partition must be retired, not left live")
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 0,
-      "pass must converge after retiring the zero-row partition")
-    assert(spark.read.parquet(dir).select("v").as[Long].collect().toSeq === Seq(1L))
-  }
-
-  test("compactPartitions still fails loudly on a FLAT (non-partitioned) parquet table") {
-    // the _SUCCESS-only relaxation must not extend to real data files at
-    // the table root — that is a non-hive layout, the original misuse
-    // the guard exists to catch
-    val dir = freshDir("graft_compact_flat")
-    Seq(("2023-09-01", 1L)).toDF("date", "v").write.parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.compactPartitions(spark, dir, "date")
-    }
-    assert(e.getMessage.contains("partition"))
-  }
-
-  test("compactPartitions returns 0 on a legitimately empty partitioned table") {
-    // an empty partitioned write leaves a dir holding only _SUCCESS; the
-    // wrong-column guard must not mistake that for a mis-named column
-    val dir = freshDir("graft_compact_empty")
-    ParquetWarehouse.writeDatePartitioned(
-      Seq.empty[(String, Long)].toDF("date", "v"), dir, "date")
-    assert(new java.io.File(dir).exists, "fixture must write the table dir")
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 0)
-  }
-
-  test("compactPartitions uniformSchema rewrites stale-schema partitions so a plain read sees evolved columns") {
-    val dir = freshDir("graft_compact_uniform")
-    ParquetWarehouse.upsertPartitioned(
-      Seq(("2023-09-01", "ch1", 10.0), ("2023-09-02", "ch1", 30.0))
-        .toDF("date", "channel", "spend"),
-      dir, Seq("date", "channel"), "date")
-    ParquetWarehouse.upsertPartitioned(
-      Seq(("2023-09-01", "ch1", 11.0, "modelB")).toDF("date", "channel", "spend", "model"),
-      dir, Seq("date", "channel"), "date", evolveSchema = true)
-    // the documented evolveSchema loose end: 09-02 is single-file and
-    // old-schema, so the default (fragmentation-only) compact leaves it
-    // stale forever and every reader pays mergeSchema indefinitely
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 0)
-    val evolvedBefore = listing(s"$dir/date=2023-09-01")
-    Thread.sleep(1100)
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date", uniformSchema = true) === 1,
-      "exactly the stale-schema partition rewrites")
-    assert(listing(s"$dir/date=2023-09-01") === evolvedBefore,
-      "already-uniform partition must be physically untouched")
-    // the point of the pass: a PLAIN read — no mergeSchema, no declared
-    // schema — now sees the evolved column table-wide, null-filled where
-    // history predates it. The stale partition missed `model` even
-    // though every OTHER selected partition missed it too (the column
-    // lives only in the already-uniform dir), so this also pins the
-    // representative-file schema recovery.
-    val plain = spark.read.parquet(dir)
-      .select("date", "channel", "spend", "model")
-      .as[(String, String, Double, Option[String])].collect().toSet
-    assert(plain === Set(
-      ("2023-09-01", "ch1", 11.0, Some("modelB")),
-      ("2023-09-02", "ch1", 30.0, None)))
-    // idempotent: everything uniform now
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date", uniformSchema = true) === 0)
   }
 
   test("warehouse writers hold an advisory single-writer lock: held fails loudly, stale breaks, always released") {
@@ -920,10 +764,6 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
         dir, Seq("date", "conv_id"), "date")
     }
     assert(e2.getMessage.contains("lock"))
-    val e3 = intercept[IllegalArgumentException] {
-      ParquetWarehouse.compactPartitions(spark, dir, "date")
-    }
-    assert(e3.getMessage.contains("lock"))
     assert(spark.read.parquet(dir).count() === 1, "locked-out writers must not have written")
     // a STALE lock is a crashed holder: the next writer breaks it and
     // proceeds (backdate past the stale horizon to simulate the crash age)

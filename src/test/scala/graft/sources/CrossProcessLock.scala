@@ -1,25 +1,23 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.hadoop.fs.Path
 
 /** Cross-PROCESS lock contention soak (r17 verdict #1).
   *
-  * Every lock soak before r18 (LockSoak, LockJanitorSpec's concurrent
-  * janitor case) raced THREADS inside one JVM: one shared Hadoop
-  * `FileSystem` cache instance, one set of JVM memory barriers — an
-  * in-process race can pass on accidental JVM-level synchronization that
-  * separate processes do not share. The fleet reality the advisory lock
-  * exists for is separate writer PROCESSES on separate hosts (reference
-  * behavior: the loader's rerun-safe upsert, src/etl/load.py:126-143,
-  * under concurrent runs). This harness forks N child JVMs — each with
-  * its own SparkSession — that contend REAL `ParquetWarehouse` upserts
-  * on ONE table path, with a separate janitor process running
-  * `sweepLocks(clean = true)` over the warehouse root the whole time,
-  * and proves the single-writer invariant through on-disk evidence the
-  * parent verifies post-hoc:
+  * Every lock soak before r18 (LockSoak) raced THREADS inside one JVM:
+  * one shared Hadoop `FileSystem` cache instance, one set of JVM memory
+  * barriers — an in-process race can pass on accidental JVM-level
+  * synchronization that separate processes do not share. The fleet
+  * reality the advisory lock exists for is separate writer PROCESSES on
+  * separate hosts (reference behavior: the loader's rerun-safe upsert,
+  * src/etl/load.py:126-143, under concurrent runs). This harness forks
+  * N child JVMs — each with its own SparkSession — that contend REAL
+  * `ParquetWarehouse` upserts on ONE table path, and proves the
+  * single-writer invariant through on-disk evidence the parent verifies
+  * post-hoc:
   *
   *   - a per-child append-only LEDGER of (acquire ts, release ts) rows
   *     written INSIDE the lock hold (acquire after the lock is granted,
@@ -37,9 +35,7 @@ import org.apache.hadoop.fs.Path
   *   - the TABLE itself: child c's iteration i upserts key c·100000+i,
   *     so the final row count equals total successful upserts iff no
   *     merge ever rebuilt the table from a partial view (upsert is
-  *     read-union-rewrite: a racing writer would drop history);
-  *   - the JANITOR's ledger: sweep count, entries removed, and a
-  *     violation row if it ever removed an entry it did not judge dead.
+  *     read-union-rewrite: a racing writer would drop history).
   *
   * Children acquire through the PUBLIC writer path composition
   * (`withWriterLock` + `upsertLocked`, exactly what `upsert` runs) and
@@ -54,102 +50,81 @@ object CrossProcessLockChild {
     w.write(line + "\n"); w.flush()
   }
 
-  def main(args: Array[String]): Unit = args(0) match {
-    case "upsert" =>
-      val Array(_, table, ledgerDir, childIdS, itersS) = args
-      val childId = childIdS.toInt
-      val iters = itersS.toInt
-      val ledger = new java.io.FileWriter(s"$ledgerDir/child-$childId.log", true)
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .appName(s"graft-xproc-child-$childId")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          Files.createTempDirectory(s"graft_xproc_wh_$childId").toString)
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      import spark.implicits._
-      val destPath = new Path(table)
-      val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val critDir = new File(new File(ledgerDir), "critical")
-      critDir.mkdirs()
-      val counterFile = Paths.get(ledgerDir, "counter")
-      val rnd = new java.util.Random(childId * 7919L)
-      try {
-        for (i <- 1 to iters) {
-          var done = false
-          var attempts = 0
-          while (!done) {
-            try {
-              ParquetWarehouse.withWriterLock(fs, table) {
-                log(ledger, s"acquire $childId $i ${System.currentTimeMillis()}")
-                // presence: no foreign holder may coexist
-                val marker = new File(critDir, s"holder-$childId")
-                if (!marker.createNewFile())
-                  log(ledger, s"violation $childId $i own-marker-already-present")
-                val foreign = Option(critDir.list()).getOrElse(Array.empty)
-                  .filter(_ != s"holder-$childId")
-                if (foreign.nonEmpty)
-                  log(ledger, s"violation $childId $i foreign-holders:${foreign.mkString(",")}")
-                // counter: read-modify-write with a deliberate window
-                val v = if (Files.exists(counterFile))
-                  new String(Files.readAllBytes(counterFile), "UTF-8").trim.toLong
-                else 0L
-                Thread.sleep(20 + rnd.nextInt(30))
-                // the real contended work: a keyed last-wins merge into
-                // the shared table (read-union-rewrite, crash-safe swap)
-                ParquetWarehouse.upsertLocked(
-                  Seq((childId * 100000L + i, s"c$childId-i$i")).toDF("k", "v"),
-                  table, Seq("k"), evolveSchema = false, spark, destPath, fs)
-                val tmp = Paths.get(ledgerDir, s"counter.tmp-$childId")
-                Files.write(tmp, (v + 1).toString.getBytes("UTF-8"))
-                Files.move(tmp, counterFile, StandardCopyOption.ATOMIC_MOVE,
-                  StandardCopyOption.REPLACE_EXISTING)
-                if (!marker.delete())
-                  log(ledger, s"violation $childId $i marker-delete-failed")
-                log(ledger, s"release $childId $i ${System.currentTimeMillis()}")
-              }
-              done = true
-            } catch {
-              case e: IllegalArgumentException
-                  if Option(e.getMessage).exists(_.contains("another writer holds")) =>
-                // the documented loud refusal — back off and retry
-                attempts += 1
-                if (attempts > 2400) {
-                  log(ledger, s"violation $childId $i starved-after-$attempts-attempts")
-                  throw e
-                }
-                Thread.sleep(30 + rnd.nextInt(70))
+  def main(args: Array[String]): Unit = {
+    val Array(table, ledgerDir, childIdS, itersS) = args
+    val childId = childIdS.toInt
+    val iters = itersS.toInt
+    val ledger = new java.io.FileWriter(s"$ledgerDir/child-$childId.log", true)
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]")
+      .appName(s"graft-xproc-child-$childId")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        Files.createTempDirectory(s"graft_xproc_wh_$childId").toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val destPath = new Path(table)
+    val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val critDir = new File(new File(ledgerDir), "critical")
+    critDir.mkdirs()
+    val counterFile = Paths.get(ledgerDir, "counter")
+    val rnd = new java.util.Random(childId * 7919L)
+    try {
+      for (i <- 1 to iters) {
+        var done = false
+        var attempts = 0
+        while (!done) {
+          try {
+            ParquetWarehouse.withWriterLock(fs, table) {
+              log(ledger, s"acquire $childId $i ${System.currentTimeMillis()}")
+              // presence: no foreign holder may coexist
+              val marker = new File(critDir, s"holder-$childId")
+              if (!marker.createNewFile())
+                log(ledger, s"violation $childId $i own-marker-already-present")
+              val foreign = Option(critDir.list()).getOrElse(Array.empty)
+                .filter(_ != s"holder-$childId")
+              if (foreign.nonEmpty)
+                log(ledger, s"violation $childId $i foreign-holders:${foreign.mkString(",")}")
+              // counter: read-modify-write with a deliberate window
+              val v = if (Files.exists(counterFile))
+                new String(Files.readAllBytes(counterFile), "UTF-8").trim.toLong
+              else 0L
+              Thread.sleep(20 + rnd.nextInt(30))
+              // the real contended work: a keyed last-wins merge into
+              // the shared table (read-union-rewrite, crash-safe swap)
+              ParquetWarehouse.upsertLocked(
+                Seq((childId * 100000L + i, s"c$childId-i$i")).toDF("k", "v"),
+                table, Seq("k"), evolveSchema = false, spark, destPath, fs)
+              val tmp = Paths.get(ledgerDir, s"counter.tmp-$childId")
+              Files.write(tmp, (v + 1).toString.getBytes("UTF-8"))
+              Files.move(tmp, counterFile, StandardCopyOption.ATOMIC_MOVE,
+                StandardCopyOption.REPLACE_EXISTING)
+              if (!marker.delete())
+                log(ledger, s"violation $childId $i marker-delete-failed")
+              log(ledger, s"release $childId $i ${System.currentTimeMillis()}")
             }
+            done = true
+          } catch {
+            case e: IllegalArgumentException
+                if Option(e.getMessage).exists(_.contains("another writer holds")) =>
+              // the documented loud refusal — back off and retry
+              attempts += 1
+              if (attempts > 2400) {
+                log(ledger, s"violation $childId $i starved-after-$attempts-attempts")
+                throw e
+              }
+              Thread.sleep(30 + rnd.nextInt(70))
           }
         }
-        log(ledger, s"done $childId ${System.currentTimeMillis()}")
-      } finally {
-        ledger.close()
-        spark.stop()
       }
-
-    case "janitor" =>
-      val Array(_, root, ledgerDir) = args
-      val ledger = new java.io.FileWriter(s"$ledgerDir/janitor.log", true)
-      val fs = new Path(root).getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val stop = Paths.get(ledgerDir, "stop")
-      var sweeps = 0
-      var removed = 0
-      try {
-        while (!Files.exists(stop)) {
-          val entries = ParquetWarehouse.sweepLocksOn(fs, root, clean = true)
-          sweeps += 1
-          removed += entries.count(_.removed)
-          entries.filter(e => e.removed && !e.judgedDead).foreach { e =>
-            log(ledger, s"violation janitor removed-without-dead-verdict ${e.path} ${e.reason}")
-          }
-          Thread.sleep(100)
-        }
-        log(ledger, s"janitor-done sweeps=$sweeps removed=$removed")
-      } finally ledger.close()
+      log(ledger, s"done $childId ${System.currentTimeMillis()}")
+    } finally {
+      ledger.close()
+      spark.stop()
+    }
   }
 }
 
@@ -159,13 +134,11 @@ object CrossProcessLockHarness {
   final case class Summary(
       children: Int, iters: Int,
       acquisitions: Int, overlaps: Int, violations: Int,
-      counter: Long, tableRows: Long,
-      janitorSweeps: Int, janitorRemoved: Int) {
+      counter: Long, tableRows: Long) {
     def ok: Boolean =
       overlaps == 0 && violations == 0 &&
         acquisitions == children * iters &&
-        counter == children * iters && tableRows == children * iters &&
-        janitorSweeps > 0 && janitorRemoved == 0
+        counter == children * iters && tableRows == children * iters
   }
 
   private def jdk17AddOpens: Seq[String] = Seq(
@@ -201,9 +174,8 @@ object CrossProcessLockHarness {
     Files.createDirectories(Paths.get(warehouse))
     Files.createDirectories(Paths.get(ledgerDir))
 
-    val janitor = fork(Seq("janitor", warehouse, ledgerDir), new File(s"$base/janitor.out"))
     val writers = (1 to children).map { c =>
-      fork(Seq("upsert", table, ledgerDir, c.toString, iters.toString),
+      fork(Seq(table, ledgerDir, c.toString, iters.toString),
         new File(s"$base/child-$c.out"))
     }
     writers.zipWithIndex.foreach { case (p, idx) =>
@@ -212,10 +184,6 @@ object CrossProcessLockHarness {
       require(p.exitValue() == 0,
         s"child ${idx + 1} exited ${p.exitValue()} — see $base/child-${idx + 1}.out")
     }
-    Files.write(Paths.get(ledgerDir, "stop"), Array.emptyByteArray)
-    require(janitor.waitFor(2, java.util.concurrent.TimeUnit.MINUTES),
-      "janitor did not stop")
-    require(janitor.exitValue() == 0, s"janitor exited ${janitor.exitValue()}")
 
     // ---- post-hoc verification from the on-disk evidence ----
     final case class Hold(child: Int, iter: Int, t0: Long, var t1: Long = -1L)
@@ -240,19 +208,8 @@ object CrossProcessLockHarness {
     val overlaps = sorted.sliding(2).count(w => w.size == 2 && w(1).t0 < w(0).t1)
     val counter = new String(
       Files.readAllBytes(Paths.get(ledgerDir, "counter")), "UTF-8").trim.toLong
-    val janLog = Files.readAllLines(Paths.get(ledgerDir, "janitor.log"))
-    violations += janLog.asScala.count(_.startsWith("violation"))
-    val janSummary = janLog.asScala.find(_.startsWith("janitor-done")).getOrElse("")
-    val sweeps = "sweeps=(\\d+)".r.findFirstMatchIn(janSummary).map(_.group(1).toInt).getOrElse(0)
-    val removed = "removed=(\\d+)".r.findFirstMatchIn(janSummary).map(_.group(1).toInt).getOrElse(-1)
     val rows = graft.TestSession.spark.read.parquet(table).count()
-    Summary(children, iters, holds.size, overlaps, violations, counter, rows, sweeps, removed)
-  }
-
-  private implicit class JListOps[T](l: java.util.List[T]) {
-    def asScala: Seq[T] = {
-      val b = Seq.newBuilder[T]; l.forEach(x => b += x); b.result()
-    }
+    Summary(children, iters, holds.size, overlaps, violations, counter, rows)
   }
 }
 
@@ -267,8 +224,7 @@ object CrossProcessLockSoak {
     val s = CrossProcessLockHarness.run(children, iters)
     println(f"[xproc-soak] $children processes x $iters upserts: " +
       f"acquisitions=${s.acquisitions} overlaps=${s.overlaps} violations=${s.violations} " +
-      f"counter=${s.counter} rows=${s.tableRows} janitorSweeps=${s.janitorSweeps} " +
-      f"janitorRemoved=${s.janitorRemoved} (${(System.nanoTime() - t0) / 1e9}%.0f s)")
+      f"counter=${s.counter} rows=${s.tableRows} (${(System.nanoTime() - t0) / 1e9}%.0f s)")
     require(s.ok, s"cross-process soak FAILED: $s")
     println("[xproc-soak] single-writer invariant held across processes, 0 violations")
   }

@@ -29,7 +29,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   *   exempt. On such a store no signal can be advanced without risking a
   *   successor-clobber, so the lock WILL drift toward the stale horizon
   *   — and the remedy is that the OWNER knows to abort its hold before a
-  *   janitor can legitimately reap it: after any window of
+  *   contending writer can legitimately break it: after any window of
   *   [[ParquetWarehouse.AbortHoldAfterUnprovenBeats]] consecutive beats
   *   with no PROVEN advancement, [[ParquetWarehouse.shouldAbortHold]]
   *   must answer true (the heartbeat then fails the write loudly — see

@@ -189,7 +189,7 @@ class LockFaultInjectionSpec extends SparkSpec {
     // false via the outer catch without ever engaging the counter,
     // drifting identically with no remedy. Both positions must count,
     // and in BOTH exception classes a connector picks (IOException, or
-    // the RuntimeException Shell-wrap shape the janitor soak surfaced —
+    // the RuntimeException Shell-wrap shape a lock soak surfaced —
     // an escaping RTE lands in the heartbeat's silent NonFatal catch
     // without counting, which is the same drift one class over).
     for ((shape, mk) <- Seq(
@@ -253,7 +253,7 @@ class LockFaultInjectionSpec extends SparkSpec {
   test("contended takeover whose tombstone pre-sweep THROWS a RuntimeException still acquires (best-effort sweep)") {
     // sweepAgedTombstones' contract: a sweep failure never fails the
     // write it piggybacks on — including the connector-wrapped
-    // RuntimeException shape (glob racing a janitor reaping the same
+    // RuntimeException shape (glob racing another writer reaping the same
     // aged tomb). Before the r17 third review pass, only IOException was
     // tolerated and the RTE failed the whole upsert.
     val dir = freshDir("graft_inj_tombsweep")

@@ -6,7 +6,7 @@ import org.scalatest.Args
   * takeover/heartbeat specs are timing-sensitive concurrency tests
   * guarding the engine's only mutual-exclusion primitive, so one green
   * run is weak evidence. This executes WriterLockSpec +
-  * LockFaultInjectionSpec + LockJanitorSpec N times in ONE JVM (a forked
+  * LockFaultInjectionSpec N times in ONE JVM (a forked
   * `testOnly` loop would spend ~25 s per iteration on JVM+session start)
   * and fails loudly on the first red test, printing per-iteration
   * timing so a creeping slowdown is visible too.
@@ -20,7 +20,7 @@ object LockSoak {
     val t0 = System.nanoTime()
     for (i <- 1 to n) {
       val it0 = System.nanoTime()
-      for (suite <- Seq(new WriterLockSpec, new LockFaultInjectionSpec, new LockJanitorSpec)) {
+      for (suite <- Seq(new WriterLockSpec, new LockFaultInjectionSpec)) {
         val rep = new org.scalatest.Reporter {
           def apply(event: org.scalatest.events.Event): Unit = event match {
             case f: org.scalatest.events.TestFailed =>

@@ -2,17 +2,16 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
-import org.apache.spark.sql.SaveMode
 
 /** Fault-injected filesystem misbehavior against the PARTITION-grain
   * swap windows (r17, closing the r16 verdict's directive 1): the
   * table-level swap is covered both ways (staged-state recovery +
   * mid-flight injection in LockFaultInjectionSpec), but
-  * `upsertPartitionedLocked` / `compactPartitionsLocked` — the actual
-  * 100 TB write path — had only the staged-state spec. These cases
-  * refuse or throw a rename INSIDE the `.__pold-` / `.__ptmp-` windows
-  * of [[ParquetWarehouse.stageAndSwapPartitions]] on BOTH entry points
-  * and pin that the in-process catch restore and
+  * `upsertPartitionedLocked` — the actual 100 TB write path — had only
+  * the staged-state spec. These cases refuse or throw a rename INSIDE
+  * the `.__pold-` / `.__ptmp-` windows of
+  * [[ParquetWarehouse.stageAndSwapPartitions]] and the create branch's
+  * publish, and pin that the in-process catch restore and
   * `recoverInterruptedPartitionSwaps` agree on every interruption
   * point:
   *
@@ -26,9 +25,7 @@ import org.apache.spark.sql.SaveMode
   *     NEXT writer call heals before merging — history is never lost
   *     and never rebuilt from one batch;
   *   - the CREATE branch's single publish rename refuses → no table, no
-  *     orphan staging, clean retry works;
-  *   - compact's empty-rewrite RETIRE rename refuses → aborted with the
-  *     zero-row partition still live; a clean pass retires it.
+  *     orphan staging, clean retry works.
   *
   * Same injection idiom as LockFaultInjectionSpec (FilterFileSystem →
   * Hadoop-API branch, the connector-shaped path). Reference behavior
@@ -59,10 +56,6 @@ class PartitionSwapFaultSpec extends SparkSpec {
     assert(fs.globStatus(new Path(dir + ".__pold-*")).isEmpty,
       "no .__pold-* backup dir may remain")
   }
-
-  private def dataFiles(fs: FileSystem, dir: String, part: String): Int =
-    fs.listStatus(new Path(dir + "/" + part))
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
   /** Two-partition fixture table via the real create path. */
   private def mkTable(dir: String): Unit =
@@ -178,86 +171,6 @@ class PartitionSwapFaultSpec extends SparkSpec {
     assert(rows(dir) === Set((1L, "2024-01-01", "a")))
   }
 
-  /** Fragment one partition: append a second file under its dir. */
-  private def fragment(dir: String, rows: (Long, String, String)*): Unit =
-    df(rows: _*).write.mode(SaveMode.Append).partitionBy("date").parquet(dir)
-
-  test("compactPartitions: stage-aside rename REFUSES mid-compact — loud, rows and file layout untouched") {
-    val dir = freshDir("graft_psf_c_w1")
-    mkTable(dir)
-    fragment(dir, (3L, "2024-01-01", "c"))
-    val fs = fsFor(dir)
-    assert(dataFiles(fs, dir, "date=2024-01-01") === 2, "fixture: fragmented")
-    val stageAsideRefuses = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (dst.toString.contains(".__pold-")) false else super.rename(src, dst)
-    }
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.compactPartitionsLocked(
-        spark, dir, "date", maxFilesPerPartition = 1, uniformSchema = false,
-        new Path(dir), stageAsideRefuses)
-    }
-    assert(e.getMessage.contains("stage partition"), s"got: ${e.getMessage}")
-    assert(rows(dir) === Set(
-      (1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"), (3L, "2024-01-01", "c")))
-    assert(dataFiles(fs, dir, "date=2024-01-01") === 2,
-      "the live files must be physically untouched by the refused compact")
-    noLitter(fs, dir)
-    // clean pass compacts
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 1)
-    assert(dataFiles(fs, dir, "date=2024-01-01") === 1)
-    assert(rows(dir) === Set(
-      (1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"), (3L, "2024-01-01", "c")),
-      "compaction is row-preserving")
-  }
-
-  test("compactPartitions: publish THROWS between the renames — catch restores; a wedged restore heals on the next call") {
-    val dir = freshDir("graft_psf_c_w2")
-    mkTable(dir)
-    fragment(dir, (3L, "2024-01-01", "c"))
-    val fs = fsFor(dir)
-    val expected = Set(
-      (1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"), (3L, "2024-01-01", "c"))
-    // first: in-process restore
-    val publishThrows = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (src.toString.contains(".__ptmp-"))
-          throw new java.io.IOException("injected: failed between the partition renames")
-        else super.rename(src, dst)
-    }
-    val e = intercept[java.io.IOException] {
-      ParquetWarehouse.compactPartitionsLocked(
-        spark, dir, "date", maxFilesPerPartition = 1, uniformSchema = false,
-        new Path(dir), publishThrows)
-    }
-    assert(e.getMessage.contains("injected"))
-    assert(rows(dir) === expected, "catch-restored table must be bit-identical")
-    assert(dataFiles(fs, dir, "date=2024-01-01") === 2, "still fragmented — nothing committed")
-    noLitter(fs, dir)
-    // then: restore ALSO refuses → crash-window state → the next call heals
-    val wedged = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (src.toString.contains(".__ptmp-"))
-          throw new java.io.IOException("injected: failed between the partition renames")
-        else if (src.toString.contains(".__pold-")) false
-        else super.rename(src, dst)
-    }
-    val e2 = intercept[java.io.IOException] {
-      ParquetWarehouse.compactPartitionsLocked(
-        spark, dir, "date", maxFilesPerPartition = 1, uniformSchema = false,
-        new Path(dir), wedged)
-    }
-    assert(e2.getMessage.contains("injected"))
-    assert(!fs.exists(new Path(dir + "/date=2024-01-01")) &&
-      fs.globStatus(new Path(dir + ".__pold-*")).nonEmpty,
-      "fixture: the crash window state")
-    // the next compact heals, then compacts — rows preserved end to end
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 1)
-    assert(rows(dir) === expected, "healed + compacted table must carry every row")
-    assert(dataFiles(fs, dir, "date=2024-01-01") === 1)
-    noLitter(fs, dir)
-  }
-
   test("recovery's stale-.__ptmp sweep is best-effort (RTE tolerated); the backup glob is LOUD (r17 review, fourth pass)") {
     val dir = freshDir("graft_psf_recovery_globs")
     mkTable(dir)
@@ -345,40 +258,5 @@ class PartitionSwapFaultSpec extends SparkSpec {
     assert(loud.getSuppressed.exists(_.getMessage.contains("probe fault")),
       "unverifiable presence rides the rethrow as suppressed")
     assert(rows(dir) === Set((1L, "2024-01-01", "A"), (2L, "2024-01-02", "b")))
-  }
-
-  test("compactPartitions: the empty-rewrite RETIRE rename refuses — aborted with the zero-row partition live; a clean pass retires it") {
-    val dir = freshDir("graft_psf_c_retire")
-    mkTable(dir)
-    val fs = fsFor(dir)
-    // a partition holding only zero-row data files, fragmented past the
-    // threshold: the rewrite produces NO staged output for it, so the
-    // swap's reverse direction retires the live dir through .__pold —
-    // the one rename window the other cases can't reach
-    val emptyPart = dir + "/date=2024-01-03"
-    val zero = df().select("id", "v").filter(org.apache.spark.sql.functions.lit(false))
-    zero.coalesce(1).write.mode(SaveMode.Overwrite).parquet(emptyPart)
-    zero.coalesce(1).write.mode(SaveMode.Append).parquet(emptyPart)
-    assert(dataFiles(fs, dir, "date=2024-01-03") === 2, "fixture: fragmented zero-row partition")
-    val retireRefuses = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (dst.toString.contains(".__pold-")) false else super.rename(src, dst)
-    }
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.compactPartitionsLocked(
-        spark, dir, "date", maxFilesPerPartition = 1, uniformSchema = false,
-        new Path(dir), retireRefuses)
-    }
-    assert(e.getMessage.contains("retire"), s"got: ${e.getMessage}")
-    assert(fs.exists(new Path(emptyPart)),
-      "the zero-row partition must still be live after the refused retire")
-    assert(rows(dir) === Set((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")))
-    noLitter(fs, dir)
-    // clean pass retires it, and the pass converges (selects nothing after)
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 1)
-    assert(!fs.exists(new Path(emptyPart)), "retired — the rewrite converges to zero")
-    assert(ParquetWarehouse.compactPartitions(spark, dir, "date") === 0,
-      "idempotent: nothing left to rewrite")
-    assert(rows(dir) === Set((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")))
   }
 }

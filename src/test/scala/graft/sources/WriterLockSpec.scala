@@ -131,8 +131,8 @@ class WriterLockSpec extends SparkSpec {
     // residual: every liveness channel dead AT ONCE — stats fault,
     // payload opens fault, setTimes silently no-ops, overwrite-creates
     // fault. No beat can advance or verify a signal, so the lock drifts
-    // toward the stale horizon where a janitor legitimately reaps it
-    // out from under the still-running write. The remedy under test:
+    // toward the stale horizon where a contending writer legitimately
+    // breaks it out from under the still-running write. The remedy under test:
     // after AbortHoldAfterUnprovenBeats consecutive unproven beats the
     // heartbeat revokes the hold and the write FAILS LOUDLY instead.
     val sick = new org.apache.hadoop.fs.FilterFileSystem(fs) {
@@ -210,7 +210,7 @@ class WriterLockSpec extends SparkSpec {
     assert(!Thread.currentThread().isInterrupted,
       "the abort's interrupt must not leak to the caller as thread state")
 
-    // foreign-token variant: a janitor reaped the lock and a successor
+    // foreign-token variant: a writer broke the lock and a successor
     // staked its own — the aborted writer's release must leave the
     // successor's lock untouched (owned release discipline)
     val dir2 = freshDir("graft_lock_loss_taken")
