@@ -4,8 +4,8 @@ import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, struct, to_json}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, struct, to_json}
 import org.apache.spark.sql.types.StructType
 
 /** The reference's file interchange formats (SURVEY §2.1 S5-S7):
@@ -27,16 +27,18 @@ object JsonArrayIO {
 
   /** Pretty JSON array with field order taken from the schema — byte-style
     * parity with python's `json.dump(..., indent=4)` for string/int
-    * fields. */
-  def writePrettyJsonArray(df: DataFrame, path: String): Unit = {
+    * fields. Returns the row count, which the collected rows give for
+    * free; `check` sees it before the file is created, so a gate on it
+    * leaves no artifact behind. */
+  def writePrettyJsonArray(df: DataFrame, path: String, check: Long => Unit = _ => ()): Long = {
     val spark = df.sparkSession
-    val fields = df.schema.fields
     // ignoreNullFields=false: python's json.dump writes "field": null where
     // df.toJSON would DROP the key entirely — a schema-strict consumer of
     // the artifact (or a byte-level golden comparison) needs every key
     val rows = df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*),
         java.util.Collections.singletonMap("ignoreNullFields", "false")).as("j"))
       .collect().map(_.getString(0)) // compact per-row JSON, schema field order
+    check(rows.length.toLong)
     val indented = rows.map { r =>
       // re-indent each record: {"a": 1} -> 4-space pretty block
       val obj = r.stripPrefix("{").stripSuffix("}")
@@ -51,7 +53,7 @@ object JsonArrayIO {
       out.write(indented.mkString(",\n"))
       out.write("\n]")
     } finally out.close()
-    val _ = fields // field order is the schema's; kept for clarity
+    rows.length.toLong
   }
 
   /** Split a JSON object body on top-level commas (values here are scalars
@@ -73,16 +75,20 @@ object JsonArrayIO {
     parts.toSeq
   }
 
-  /** S7: header CSV as exactly one file at `path`. */
-  def writeSingleCsv(df: DataFrame, path: String): Unit = {
+  /** S7: header CSV as exactly one file at `path`. Returns the row count,
+    * observed on the write itself. */
+  def writeSingleCsv(df: DataFrame, path: String): Long = {
     val spark = df.sparkSession
     val tmp = path + "_tmp_csvdir"
-    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp)
+    val rows = new Observation()
+    df.observe(rows, count(lit(1)).as("n"))
+      .coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(tmp).getFileSystem(conf)
     val part = fs.globStatus(new Path(tmp, "part-*")).head.getPath
     fs.delete(new Path(path), false)
     org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, new Path(path), false, conf)
     fs.delete(new Path(tmp), true)
+    rows.get("n").asInstanceOf[Long]
   }
 }

@@ -86,11 +86,18 @@ object Loader {
 
   /** A6: the reference's post-load verification — COUNT(*) WHERE ihc > 0
     * must be ≥ 1 (load.py:149-169). */
-  def verifyLoaded(acj: DataFrame): Long = {
-    val n = acj.filter(col("ihc") > 0).count()
-    require(n >= 1, "post-load verification failed: no rows with ihc > 0")
-    n
+  def verifyLoaded(acj: DataFrame): Long = requireLoaded(acj.filter(col("ihc") > 0).count())
+
+  /** A6 on a count taken elsewhere (an `Observation`): `nPositive` rows
+    * with ihc > 0 must be ≥ 1. Returns it. */
+  def requireLoaded(nPositive: Long): Long = {
+    require(nPositive >= 1, "post-load verification failed: no rows with ihc > 0")
+    nPositive
   }
+
+  /** A4: Σihc > 0 (load.py:120-123). */
+  def requireValidIhc(totalIhc: Double): Unit =
+    require(totalIhc > 0, s"Attribution data contains no valid IHC values (total=$totalIhc)")
 
   /** Full load from a JSON-array response file, with the reference's
     * Σihc > 0 gate (load.py:120-123). */
@@ -101,8 +108,7 @@ object Loader {
     // downstream consumer would recompute it from scratch.
     val out = validateAndDedup(flattenEnvelopes(envelopes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totalIhc = out.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0)
-    require(totalIhc > 0, s"Attribution data contains no valid IHC values (total=$totalIhc)")
+    requireValidIhc(out.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0))
     out
   }
 }

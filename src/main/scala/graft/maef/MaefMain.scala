@@ -1,6 +1,6 @@
 package graft.maef
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's `main.py` as a runnable Spark CLI — the literal drop-in
@@ -40,8 +40,8 @@ object MaefMain {
       warehouseDir: String,
       outDir: String,
       window: Option[DateWindow.Window] = None): Artifacts = {
-    // the three frames persisted below are released once the artifacts
-    // are counted, so neither a CLI pass nor a library call leaves
+    // the two frames persisted below are released once the artifacts
+    // are written, so neither a CLI pass nor a library call leaves
     // cached blocks behind
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cache(df: DataFrame): DataFrame = {
@@ -50,12 +50,15 @@ object MaefMain {
     }
     try {
       // Step 1: copy the warehouse and verify counts (S3/S4)
-      val tables = Map(
-        "conversions" -> spark.read.schema(MaefModel.Conversions).parquet(s"$warehouseDir/conversions"),
-        "session_sources" -> spark.read.schema(MaefModel.SessionSources).parquet(s"$warehouseDir/session_sources"),
-        "session_costs" -> spark.read.schema(MaefModel.SessionCosts).parquet(s"$warehouseDir/session_costs"))
-      MaefPipeline.copyAndVerify(tables, s"$outDir/warehouse")
-      val target = (name: String) => spark.read.parquet(s"$outDir/warehouse/$name")
+      val schemas = Map(
+        "conversions" -> MaefModel.Conversions,
+        "session_sources" -> MaefModel.SessionSources,
+        "session_costs" -> MaefModel.SessionCosts)
+      MaefPipeline.copyAndVerify(
+        schemas.map { case (name, schema) => name -> spark.read.schema(schema).parquet(s"$warehouseDir/$name") },
+        s"$outDir/warehouse")
+      // read in the schema the copy was written in: no inference job per read
+      val target = (name: String) => spark.read.schema(schemas(name)).parquet(s"$outDir/warehouse/$name")
 
       // Step 2: transform (windowed like the reference's date-bounded runs)
       val conversions = window match {
@@ -63,17 +66,18 @@ object MaefMain {
           .filter(col("conv_date") >= w.startString && col("conv_date") <= w.endString)
         case None => target("conversions")
       }
-      // Gate on the un-persisted plan (shared helper — one partial pass),
-      // THEN persist: journeys has three consumers here (JSON sink, count,
-      // attribution), so the cache is justified, unlike MaefPipeline.run.
-      val journeysPlan = MaefJourneys.transform(conversions, target("session_sources"))
-      MaefPipeline.requireNonEmpty(journeysPlan, "transform produced no journey entries") // transform.py:264-265
-      val journeys = cache(journeysPlan)
-      JsonArrayIO.writePrettyJsonArray(journeys, s"$outDir/target_data.json")
-      val nTransformed = journeys.count()
+      // journeys has two consumers (the JSON sink, attribution), so it is
+      // persisted, unlike in MaefPipeline.run. The sink's collected rows
+      // are its count, and the non-empty gate (transform.py:264-265) runs
+      // on that count before target_data.json is created.
+      val journeys = cache(MaefJourneys.transform(conversions, target("session_sources")))
+      val nTransformed = JsonArrayIO.writePrettyJsonArray(journeys, s"$outDir/target_data.json",
+        n => require(n > 0, "transform produced no journey entries"))
 
       // Step 3: attribution (native model in place of the external API)
       val attribution = cache(MaefPipeline.nativeAttribution(journeys, roundTo = Some(4)))
+      // step 4's gate inputs and the row count, observed in the sink's scan
+      val observed = new Observation()
       // the artifact is ENVELOPE-shaped like the reference's api_response.json
       // (an array of {statusCode, value:[records]}) so the pipeline's own
       // output replays through MaefPipeline.run(recordedResponses = ...) —
@@ -81,6 +85,10 @@ object MaefMain {
       // ResponseEnvelope schema and fail the Σihc gate. One native "chunk" =
       // one 200 envelope; records sorted for a deterministic artifact.
       val responseEnvelope = attribution
+        .observe(observed,
+          coalesce(sum(col("ihc")), lit(0.0)).as("total_ihc"),
+          count(when(col("ihc") > 0, lit(1))).as("positive"),
+          count(lit(1)).as("rows"))
         .agg(sort_array(collect_list(struct(
           col("conv_id").as("conversion_id"), col("session_id"),
           col("initializer"), col("holder"), col("closer"), col("ihc")))).as("value"))
@@ -94,24 +102,25 @@ object MaefMain {
       JsonArrayIO.writePrettyJsonArray(responseEnvelope, s"$outDir/api_response.json")
 
       // Step 4: load-side verification gates (A4/A6)
-      val totalIhc = attribution.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0)
-      require(totalIhc > 0, s"Attribution data contains no valid IHC values (total=$totalIhc)")
-      val nPositive = Loader.verifyLoaded(attribution)
+      val gates = observed.get
+      Loader.requireValidIhc(gates("total_ihc").asInstanceOf[Double])
+      val nPositive = Loader.requireLoaded(gates("positive").asInstanceOf[Long])
 
       // Step 5: channel report + export. The FULL conversions table feeds
       // the report, not the windowed view: reporting.py:97's HAVING bound is
       // `(SELECT MIN(conv_date) FROM conversions)` over the whole table, so
       // report rows dated before the run window (attribution from pre-window
       // sessions of in-window conversions) must survive — the windowed
-      // attribution already scopes WHICH conversions are reported
-      val report = cache(MaefReporting.`export`(
+      // attribution already scopes WHICH conversions are reported. The CSV
+      // write is the report's one consumer, and it counts the rows.
+      val report = MaefReporting.`export`(
         MaefReporting.channelReport(
           attribution, // nativeAttribution already emits (conv_id, session_id, ihc)
           target("session_sources"), target("session_costs"), target("conversions"),
-          fanout = false, exactSums = true)))
-      JsonArrayIO.writeSingleCsv(report, s"$outDir/channel_report.csv")
+          fanout = false, exactSums = true))
+      val nReport = JsonArrayIO.writeSingleCsv(report, s"$outDir/channel_report.csv")
 
-      Artifacts(nTransformed, attribution.count(), nPositive, report.count())
+      Artifacts(nTransformed, gates("rows").asInstanceOf[Long], nPositive, nReport)
     } finally cached.foreach(_.unpersist())
   }
 

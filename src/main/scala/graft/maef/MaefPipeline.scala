@@ -54,10 +54,10 @@ object MaefPipeline {
 
   /** Non-empty gate (transform.py:264-265) on an UN-persisted plan:
     * `limit(1)` short-circuits after the first produced row, so the gate
-    * costs one partial pass — never a full materialization. Shared by both
-    * entry points (MaefPipeline.run, MaefMain.run) so the gate pattern
-    * can't drift. Call BEFORE persisting the frame: gating a persisted
-    * frame would partially cache and pay the serialization barrier. */
+    * costs one partial pass — never a full materialization. Call BEFORE
+    * persisting the frame: gating a persisted frame would partially cache
+    * and pay the serialization barrier. (MaefMain.run needs no extra pass:
+    * it gates on the row count its JSON sink collects anyway.) */
   private[maef] def requireNonEmpty(df: DataFrame, msg: String): Unit =
     require(df.limit(1).count() == 1L, msg)
 

@@ -1099,14 +1099,33 @@ object ParquetWarehouse {
     * (db_utils.py:67-102). The source is counted by an `Observation` in
     * the SAME scan that writes it, so the source is read exactly once: no
     * second decode of a SQLite file, no cache, and no re-query of a live
-    * JDBC store that could race concurrent writers. Returns the count. */
+    * JDBC store that could race concurrent writers. The landed count is
+    * summed from the written files' footers ([[landedRows]]), so the copy
+    * is the write job and nothing else. Returns the count. */
   def writeVerified(df: DataFrame, path: String): Long = {
     val rows = new org.apache.spark.sql.Observation()
     df.observe(rows, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(path)
     val n = rows.get("n").asInstanceOf[Long]
-    val copied = df.sparkSession.read.parquet(path).count()
+    val copied = landedRows(df.sparkSession, path)
     require(n == copied, s"verification failed for $path: $n != $copied")
     copied
+  }
+
+  /** Rows in the flat (unpartitioned) parquet table at `path`, summed on
+    * the driver from its data files' footers: the same row-group counts a
+    * Spark `count()` over the table reads, without a job. Data files are
+    * the ones Spark's file index reads: names not starting with `_` or
+    * `.` (so `_SUCCESS` and checksum files are skipped). */
+  private[graft] def landedRows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(path)
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map { s =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 
   /** Partition-scoped last-wins upsert — the scale path for incremental
@@ -1205,8 +1224,7 @@ object ParquetWarehouse {
       val createTmp = new org.apache.hadoop.fs.Path(
         path + ".__ptmp-" + java.util.UUID.randomUUID().toString.take(8))
       try {
-        lastWins(updates, keys).repartition(col(partitionCol))
-          .write.partitionBy(partitionCol).mode(SaveMode.Overwrite).parquet(createTmp.toString)
+        writeOneFilePerPartition(lastWins(updates, keys), partitionCol, affected.length, createTmp)
         Option(destPath.getParent).foreach(fs.mkdirs)
         require(fs.rename(createTmp, destPath),
           s"could not publish created table at $path")
@@ -1241,6 +1259,10 @@ object ParquetWarehouse {
       if (affectedDirs.isEmpty) None
       else {
         val t = withPartitionInferenceOff(spark) { s =>
+          // list the affected dirs on the driver, which has just stat-ed
+          // each of them: above 32 paths Spark would otherwise list them
+          // through a distributed job (0.3-0.43 s for ~45 dirs, 4 cores)
+          s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
           s.read.option("basePath", path)
             .parquet(affectedDirs.map(_.toString).toSeq: _*)
         }
@@ -1308,8 +1330,24 @@ object ParquetWarehouse {
     body(clone)
   }
 
+  /** Write `df` hive-partitioned by `partitionCol` into `dest` with ONE
+    * file per partition: hash-shuffled on the partition column, so each
+    * partition value lands in one task (without it every task holding
+    * rows of a partition opens its own file there: tasks × partitions
+    * small files per batch). The task count is explicit,
+    * min(`partitions`, defaultParallelism): AQE coalesces a shuffle
+    * without one into a single task, which then writes every partition
+    * serially (0.85-1.4 s for ~60 partitions of 725 rows, 4 cores). */
+  private def writeOneFilePerPartition(
+      df: DataFrame, partitionCol: String, partitions: Int,
+      dest: org.apache.hadoop.fs.Path): Unit = {
+    val tasks = math.max(1, math.min(partitions, df.sparkSession.sparkContext.defaultParallelism))
+    df.repartition(tasks, col(partitionCol))
+      .write.partitionBy(partitionCol).mode(SaveMode.Overwrite).parquet(dest.toString)
+  }
+
   /** The commit machinery of [[upsertPartitioned]]'s merge branch:
-    * write `staged` (shaped one-task-per-partition) into a fresh
+    * write `staged` (one file per partition, [[writeOneFilePerPartition]]) into a fresh
     * `.__ptmp-*` sibling, then swap each produced partition dir into the
     * live table with its predecessor staged in a `.__pold-*` backup; on
     * ANY failure, restore backups for still-missing partitions and
@@ -1335,11 +1373,7 @@ object ParquetWarehouse {
     val tmp = new org.apache.hadoop.fs.Path(path + ".__ptmp-" + batchId)
     val pold = new org.apache.hadoop.fs.Path(path + ".__pold-" + batchId)
     try {
-      // the create branch's task-per-partition shaping: without it every
-      // task holding rows of an affected partition opens its own file
-      // there (tasks × partitions small files per batch)
-      staged.repartition(col(partitionCol))
-        .write.partitionBy(partitionCol).mode(SaveMode.Overwrite).parquet(tmp.toString)
+      writeOneFilePerPartition(staged, partitionCol, expectedDirNames.size, tmp)
       val newParts = fs.listStatus(tmp).filter(s =>
         s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
       val rogue = newParts.map(_.getPath.getName).toSet -- expectedDirNames

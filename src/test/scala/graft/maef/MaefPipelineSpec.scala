@@ -116,9 +116,9 @@ class MaefPipelineSpec extends SparkSpec {
   }
 
   test("MaefMain.run releases the frames it persists") {
-    // journeys, attribution and report are cached for their several
-    // consumers inside run; neither a CLI pass nor a library call may
-    // leave them pinned in the block manager
+    // journeys and attribution are cached for their several consumers
+    // inside run; neither a CLI pass nor a library call may leave them
+    // pinned in the block manager
     val wh = parquetWarehouse()
     val out = java.nio.file.Files.createTempDirectory("graft_out_cache").toString
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
