@@ -2,15 +2,16 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.funnel.Funnel
 import graft.functions.RollingHash
+import graft.maef.{MaefPipeline, MaefReporting}
 import graft.sources.ParquetWarehouse
-import graft.operators.{AsofJoin, Attribution, Bm25, Chunking, Compaction, Curation, Decontamination, Dedup, FuzzyJoin, Journeys, MarkovAttribution, PageRank, Layout, Multimodal, Packing, Quantiles, RangeJoin, Redaction, Reporting, Sampling, Sessionize, Similarity, Sketches, Skew, TextOps, TopK}
+import graft.operators.{AsofJoin, Attribution, Bm25, Chunking, Compaction, Curation, Decontamination, Dedup, FuzzyJoin, Journeys, MarkovAttribution, PageRank, Layout, Multimodal, Packing, Quantiles, RangeJoin, Redaction, Sampling, Sessionize, Similarity, Sketches, Skew, TextOps, TopK}
 
 /** Driver contract — one entry per implemented operator from SURVEY.md §2,
   * each paired with DuckDB oracle SQL over the same parquet tables.
@@ -147,7 +148,9 @@ object SparkEntry {
        |      + CAST(0.3 AS DOUBLE) * (CASE WHEN journey_pos = journey_len THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) AS ihc
        |  FROM p
        |)""".stripMargin
-  /** Oracle twin of Reporting.channelReport (strict cost mode). */
+  /** Oracle twin of q04's `MaefReporting.channelReport` (strict cost mode,
+    * exact sums) over the events-mapped MAEF tables: the journeys of `j`,
+    * every non-purchase event's `value` as its cost. */
   private val ChannelReportSql =
     s"""$AttributionSql,
        |ar AS (
@@ -289,6 +292,45 @@ object SparkEntry {
   private def events(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
   private def journey(s: SparkSession, dir: String): DataFrame =
     Journeys.construct(Funnel.conversions(events(s, dir)), Funnel.sessions(events(s, dir)))
+
+  /** `events` mapped onto the reference's MAEF tables on their own schema
+    * (MaefModel): string ids, `yyyy-MM-dd` dates and `HH:mm:ss` times.
+    * Returns (conversions, session_sources, session_costs); the cost rows
+    * are the events `costEvents` selects, each with its `value` as cost. */
+  private def maefTables(ev: DataFrame, costEvents: Column): (DataFrame, DataFrame, DataFrame) = {
+    val conv = ev.filter(col("event_type") === "purchase").select(
+      col("event_id").cast("string").as("conv_id"),
+      col("user_id").cast("string").as("user_id"),
+      date_format(col("ts"), "yyyy-MM-dd").as("conv_date"),
+      date_format(col("ts"), "HH:mm:ss").as("conv_time"),
+      col("value").as("revenue"))
+    val sess = ev.filter(col("event_type") =!= "purchase").select(
+      col("event_id").cast("string").as("session_id"),
+      col("user_id").cast("string").as("user_id"),
+      date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
+      date_format(col("ts"), "HH:mm:ss").as("event_time"),
+      col("event_type").as("channel_name"),
+      (col("event_type") === "view").cast("int").as("holder_engagement"),
+      (col("event_type") === "click").cast("int").as("closer_engagement"),
+      (col("event_type") === "signup").cast("int").as("impression_interaction"))
+    val costs = ev.filter(costEvents).select(
+      col("event_id").cast("string").as("session_id"),
+      col("value").as("cost"))
+    (conv, sess, costs)
+  }
+
+  /** q04/q05's rollup: the CLI's reporting kernel over the MAEF tables,
+    * every non-purchase event a cost row. Attribution stays on q03's
+    * long-id, timestamp-ordered journeys (so the journey tiebreak is q03's);
+    * only its ids cross to the string schema. */
+  private def channelReport(s: SparkSession, dir: String): DataFrame = {
+    val (conv, sess, costs) = maefTables(events(s, dir), col("event_type") =!= "purchase")
+    val attribution = Attribution.ihc(journey(s, dir)).select(
+      col("conversion_id").cast("string").as("conv_id"),
+      col("session_id").cast("string").as("session_id"),
+      col("ihc"))
+    MaefReporting.channelReport(attribution, sess, costs, conv, fanout = false, exactSums = true)
+  }
 
   /** Shared harness for oracle-gating Structured Streaming operators
     * (q34/q53/q55): stage one sf-dir parquet file into a fresh scratch
@@ -458,18 +500,10 @@ object SparkEntry {
       col("initializer"), col("holder"), col("closer"), col("ihc"))),
 
     // A2+J3..J6+A3+P6 — the reporting rollup (src/etl/reporting.py:57-98).
-    "q04_channel_report" -> ((s, dir) =>
-      Reporting.channelReport(
-        Attribution.ihc(journey(s, dir)),
-        Funnel.sessions(events(s, dir)),
-        Funnel.conversions(events(s, dir)))),
+    "q04_channel_report" -> ((s, dir) => channelReport(s, dir)),
 
     // P7+O1 — export projection with CPO/ROAS (src/etl/reporting.py:150-167).
-    "q05_report_export" -> ((s, dir) =>
-      Reporting.exportReport(Reporting.channelReport(
-        Attribution.ihc(journey(s, dir)),
-        Funnel.sessions(events(s, dir)),
-        Funnel.conversions(events(s, dir))))),
+    "q05_report_export" -> ((s, dir) => MaefReporting.`export`(channelReport(s, dir))),
 
     // A1/A5 — per-journey rollup: exact integer micros arithmetic.
     "q06_journey_stats" -> ((s, dir) => Journeys.journeyStats(journey(s, dir))),
@@ -651,32 +685,13 @@ object SparkEntry {
           round(element_at(col("features"), 3), 6).as("f_b"))),
 
     // The reference's full 5-step pipeline on its own string-dated schema
-    // (main.py:20-83), events mapped to MAEF tables. Strict cost join +
-    // exact decimal sums keep the output hash-stable; fanout parity mode
-    // is covered by ReportingSpec.
+    // (main.py:20-83), events mapped to MAEF tables with the clicks as the
+    // cost rows. Strict cost join + exact decimal sums keep the output
+    // hash-stable; fanout parity mode is covered by ReportingSpec.
     "q26_maef_pipeline" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val conv = ev.filter(col("event_type") === "purchase").select(
-        col("event_id").cast("string").as("conv_id"),
-        col("user_id").cast("string").as("user_id"),
-        date_format(col("ts"), "yyyy-MM-dd").as("conv_date"),
-        date_format(col("ts"), "HH:mm:ss").as("conv_time"),
-        col("value").as("revenue"))
-      val sess = ev.filter(col("event_type") =!= "purchase").select(
-        col("event_id").cast("string").as("session_id"),
-        col("user_id").cast("string").as("user_id"),
-        date_format(col("ts"), "yyyy-MM-dd").as("event_date"),
-        date_format(col("ts"), "HH:mm:ss").as("event_time"),
-        col("event_type").as("channel_name"),
-        (col("event_type") === "view").cast("int").as("holder_engagement"),
-        (col("event_type") === "click").cast("int").as("closer_engagement"),
-        (col("event_type") === "signup").cast("int").as("impression_interaction"))
-      val costs = ev.filter(col("event_type") === "click").select(
-        col("event_id").cast("string").as("session_id"),
-        col("value").as("cost"))
-      graft.maef.MaefPipeline.run(s, conv, sess, costs,
-        graft.maef.MaefPipeline.Config(
-          fanoutCosts = false, roundIhcTo = None, exactSums = true))
+      val (conv, sess, costs) = maefTables(events(s, dir), col("event_type") === "click")
+      MaefPipeline.run(s, conv, sess, costs,
+        MaefPipeline.Config(fanoutCosts = false, roundIhcTo = None, exactSums = true))
     }),
 
     // Grouping sets: ROLLUP with decimal-exact sums (subtotal + grand rows).

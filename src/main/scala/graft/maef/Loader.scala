@@ -103,11 +103,10 @@ object Loader {
     * Σihc > 0 gate (load.py:120-123). */
   def load(spark: SparkSession, path: String): DataFrame = {
     val envelopes = JsonArrayIO.readJsonArray(spark, path, MaefModel.ResponseEnvelope)
-    // Persist BEFORE the Σihc gate: the gate's full-table aggregate would
-    // otherwise execute the whole flatten+dedup lineage once, and every
-    // downstream consumer would recompute it from scratch.
+    // The gate runs on the lazy plan and nothing is persisted, so a load
+    // leaves no cached blocks behind: a consumer recomputes the flatten +
+    // dedup from the (API-boundary sized) JSON file.
     val out = validateAndDedup(flattenEnvelopes(envelopes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     requireValidIhc(out.agg(coalesce(sum(col("ihc")), lit(0.0))).first().getDouble(0))
     out
   }

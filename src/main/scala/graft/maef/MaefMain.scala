@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   *   5. channel report → `channel_report.csv`      (reporting.py:57-167)
   *
   * Run:
-  *   runMain graft.maef.MaefMain <warehouseDir> <outputDir> [start end]
+  *   runMain graft.maef.MaefMain <warehouseDir|warehouse.db> <outputDir> [start end]
   *
-  * `<warehouseDir>` holds parquet tables `conversions`, `session_sources`,
-  * `session_costs` (MaefModel schemas — land a SQLite/JDBC warehouse there
-  * with `sources.JdbcWarehouse.migrate`). The optional [start end]
+  * The warehouse is either the reference's SQLite file itself (`.db` or
+  * `.sqlite`, main.py:43-47 opens challenge.db), read page-level by step
+  * 1's copy, or a directory of parquet tables `conversions`,
+  * `session_sources`, `session_costs` (MaefModel schemas — land a JDBC
+  * warehouse there with `sources.JdbcWarehouse.migrate`). The optional [start end]
   * (yyyy-MM-dd, validated like the reference's DAG window) filters
   * conversions by `conv_date`; when absent, the CLI falls back like the
   * DAG (ihc_api_dag.py:40-63): `ATTRIBUTION_START_DATE`/
@@ -35,9 +37,31 @@ object MaefMain {
       transformedRows: Long, attributionRows: Long, positiveIhcRows: Long,
       reportRows: Long)
 
+  private val schemas = Map(
+    "conversions" -> MaefModel.Conversions,
+    "session_sources" -> MaefModel.SessionSources,
+    "session_costs" -> MaefModel.SessionCosts)
+
+  /** The warehouse's three tables in the MaefModel schemas. A SQLite file is
+    * read page-level and cast to the reference DDL types (SQLite INTEGER
+    * affinity widens to i64 on read; the cast is the one a JDBC driver
+    * applies); a parquet directory is read in the schema, so no read runs
+    * an inference job. */
+  private def sourceTables(
+      spark: SparkSession, warehouse: String, sqlite: Boolean): Map[String, DataFrame] =
+    schemas.map { case (name, schema) =>
+      name -> (
+        if (sqlite)
+          graft.sources.SQLiteWarehouse.readTable(spark, warehouse, name)
+            .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+        else spark.read.schema(schema).parquet(s"$warehouse/$name"))
+    }
+
+  /** One CLI pass over `warehouse` (a `.db`/`.sqlite` file or a parquet
+    * directory, see above), writing every artifact under `outDir`. */
   def run(
       spark: SparkSession,
-      warehouseDir: String,
+      warehouse: String,
       outDir: String,
       window: Option[DateWindow.Window] = None): Artifacts = {
     // the two frames persisted below are released once the artifacts
@@ -49,14 +73,10 @@ object MaefMain {
       df
     }
     try {
-      // Step 1: copy the warehouse and verify counts (S3/S4)
-      val schemas = Map(
-        "conversions" -> MaefModel.Conversions,
-        "session_sources" -> MaefModel.SessionSources,
-        "session_costs" -> MaefModel.SessionCosts)
-      MaefPipeline.copyAndVerify(
-        schemas.map { case (name, schema) => name -> spark.read.schema(schema).parquet(s"$warehouseDir/$name") },
-        s"$outDir/warehouse")
+      // Step 1: copy the warehouse and verify counts (S3/S4). A SQLite
+      // file is read once, by this copy.
+      val sqlite = warehouse.endsWith(".db") || warehouse.endsWith(".sqlite")
+      MaefPipeline.copyAndVerify(sourceTables(spark, warehouse, sqlite), s"$outDir/warehouse")
       // read in the schema the copy was written in: no inference job per read
       val target = (name: String) => spark.read.schema(schemas(name)).parquet(s"$outDir/warehouse/$name")
 
@@ -115,7 +135,7 @@ object MaefMain {
       // write is the report's one consumer, and it counts the rows.
       val report = MaefReporting.`export`(
         MaefReporting.channelReport(
-          attribution, // nativeAttribution already emits (conv_id, session_id, ihc)
+          attribution,
           target("session_sources"), target("session_costs"), target("conversions"),
           fanout = false, exactSums = true))
       val nReport = JsonArrayIO.writeSingleCsv(report, s"$outDir/channel_report.csv")
@@ -125,20 +145,13 @@ object MaefMain {
   }
 
   /** Stage a SQLite warehouse file into `stagingDir` as parquet, cast on
-    * read to the reference DDL types (SQLite INTEGER affinity widens to
-    * i64 on page-level read; the cast is the same one a JDBC driver
-    * applies) and written once, with verified counts.
-    * Returns the directory `run` accepts as its `warehouseDir` — the
-    * migrate-once pattern the JdbcWarehouse scaladoc prescribes. */
+    * read to the reference DDL types and written once, with verified
+    * counts. Returns the directory `run` accepts as its warehouse — the
+    * migrate-once pattern the JdbcWarehouse scaladoc prescribes, for
+    * callers that run many passes over one file (`run` also takes the
+    * file itself). */
   def stageSqliteWarehouse(spark: SparkSession, dbPath: String, stagingDir: String): String = {
-    val tables = Seq(
-        "conversions" -> MaefModel.Conversions,
-        "session_sources" -> MaefModel.SessionSources,
-        "session_costs" -> MaefModel.SessionCosts).map { case (name, schema) =>
-      name -> graft.sources.SQLiteWarehouse.readTable(spark, dbPath, name)
-        .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    }
-    MaefPipeline.copyAndVerify(tables.toMap, stagingDir)
+    MaefPipeline.copyAndVerify(sourceTables(spark, dbPath, sqlite = true), stagingDir)
     stagingDir
   }
 
@@ -160,14 +173,7 @@ object MaefMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      // literal drop-in for the reference's entry point: pointing the CLI
-      // at the SQLite file itself (main.py:43-47 opens challenge.db)
-      // stages the warehouse into parquet first
-      val warehouseDir =
-        if (args(0).endsWith(".db") || args(0).endsWith(".sqlite"))
-          stageSqliteWarehouse(spark, args(0), s"${args(1)}/sqlite_warehouse")
-        else args(0)
-      val a = run(spark, warehouseDir, args(1), window)
+      val a = run(spark, args(0), args(1), window)
       println(s"pipeline complete: ${a.transformedRows} journey rows, " +
         s"${a.attributionRows} attribution rows (${a.positiveIhcRows} with ihc>0), " +
         s"${a.reportRows} report rows")

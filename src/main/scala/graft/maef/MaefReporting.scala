@@ -4,7 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's reporting query on its own schema, re-expressed as one
-  * Catalyst plan (src/etl/reporting.py:57-98 + export 150-167).
+  * Catalyst plan (src/etl/reporting.py:57-98 + export 150-167) — the one
+  * reporting kernel: the CLI (`MaefMain.run`), `MaefPipeline.run` and the
+  * q04/q05/q26 gates all run it.
+  *
+  * Pipeline shape (SURVEY §3.3): attribution ⋈ sessions (J3) ⋈
+  * conversions (J4) → attributed revenue (P7), channel/date rollup (A2),
+  * cost side via sessions ⟕ costs (J5), revenue-grain ⟕ cost-grain (J6),
+  * HAVING with an uncorrelated scalar subquery (A3), cpo/roas projection
+  * (P7), ORDER BY (O1).
   *
   * `fanout = true` reproduces the reference verbatim, INCLUDING its
   * chasm-trap J6: `attribution_revenue` rows (session grain) LEFT JOIN
@@ -21,10 +29,15 @@ object MaefReporting {
     * cast (then back to double) so the aggregate is independent of
     * partial-aggregation order — required when a bit-exact external oracle
     * checks the output. Default `false` = reference-faithful plain double
-    * sums. */
-  /** `minDateFilter = false` disables the reference's A3 HAVING
+    * sums.
+    *
+    * `minDateFilter = false` disables the reference's A3 HAVING
     * (`date >= MIN(conv_date)`) which silently drops attribution landing
-    * before the first conversion — a surprising-but-faithful default. */
+    * before the first conversion — a surprising-but-faithful default.
+    *
+    * `attribution` may carry more than its key and measure (a journey-shaped
+    * frame does); it is projected to (conv_id, session_id, ihc) first, so
+    * its other columns cannot collide with the conversions' `revenue`. */
   def channelReport(
       attribution: DataFrame, // conv_id, session_id, ihc
       sessions: DataFrame,    // MaefModel.SessionSources
@@ -34,16 +47,21 @@ object MaefReporting {
       exactSums: Boolean = false,
       minDateFilter: Boolean = true): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // exact mode rescales the decimal sum to scale 6 before the double
-    // cast — see Reporting.sumExact for why (engine-neutral decimal→double
-    // needs the unscaled value under 2^53)
+    // Exact mode rescales the DECIMAL(28,12) sum HALF_UP to scale 6 before
+    // the double cast so the unscaled value stays below 2^53: past that, an
+    // engine converting decimal→double via (double)unscaled / 10^scale
+    // (DuckDB's int128 path) lands one ulp away from a correctly-rounded
+    // conversion (Spark's BigDecimal path) — measured as 1-ulp mismatches
+    // on sums ≥ ~10^4 at sf0.1. The q04/q05 oracle mirrors the HALF_UP
+    // rescale as truncate(sum + 0.0000005), since its decimal→decimal cast
+    // truncates.
     def s(c: org.apache.spark.sql.Column) =
       if (exactSums)
         sum(c.cast(DecimalType(28, 12))).cast(DecimalType(28, 6)).cast("double")
       else sum(c)
 
     // CTE attribution_revenue (reporting.py:58-73)
-    val ar = attribution
+    val ar = attribution.select(col("conv_id"), col("session_id"), col("ihc"))
       .join(sessions, Seq("session_id"))
       .join(conversions.select(col("conv_id"), col("conv_date"), col("revenue")), Seq("conv_id"))
       .filter(
@@ -96,16 +114,6 @@ object MaefReporting {
         .filter(col("date") >= col("min_conv_date"))
         .drop("min_conv_date")
     else unknownFiltered
-  }
-
-  /** A5: the reference's post-aggregation summary log line
-    * (reporting.py:124-130) — exact counts, not approximate. */
-  def summary(report: DataFrame): (Long, Long, Long) = {
-    val r = report.agg(
-      count(lit(1)).as("record_count"),
-      countDistinct(col("channel_name")).as("channel_count"),
-      countDistinct(col("date")).as("date_count")).first()
-    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** Export projection (reporting.py:150-167): CPO/ROAS + ORDER BY. */

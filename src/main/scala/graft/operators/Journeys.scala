@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Customer-journey construction — the reference's core operator (J1/J2).
@@ -59,19 +58,6 @@ object Journeys {
         col("impression_interaction"),
         col("revenue"),
         col("cost"))
-  }
-
-  /** Deterministic per-journey ordering: position and journey size, used by
-    * attribution and by the API-chunking boundary. Ordering is
-    * (session_ts, session_id) — the explicit tiebreak the reference lacks
-    * (it inherits pandas row order; SURVEY §2.4 A1 note).
-    */
-  def withPosition(journeys: DataFrame): DataFrame = {
-    val w = Window.partitionBy("conversion_id").orderBy(col("session_ts"), col("session_id"))
-    val wAll = Window.partitionBy("conversion_id")
-    journeys
-      .withColumn("journey_pos", row_number().over(w))
-      .withColumn("journey_len", count(lit(1)).over(wAll))
   }
 
   /** A1/A5-style per-journey rollup: size, span, distinct channels.

@@ -28,6 +28,45 @@ class MaefMainSpec extends SparkSpec {
     assert(run.jobs === 21, s"MaefMain.run ran ${run.jobs} jobs")
   }
 
+  test("run reads a .db warehouse itself: the staged run's artifacts from one copy") {
+    val staged = MaefMain.stageSqliteWarehouse(spark, db, tmp("graft_db_staged"))
+    val viaStaging = tmp("graft_db_ref_out")
+    val expected = MaefMain.run(spark, staged, viaStaging)
+    val out = tmp("graft_db_out")
+    val (art, direct) = JobProbe(spark.sparkContext)(MaefMain.run(spark, db, out))
+    assert(art === expected)
+    def csv(dir: String) = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"$dir/channel_report.csv"))
+    assert(csv(out) === csv(viaStaging))
+    // the .db is read once, by step 1's copy: no staging directory, and a
+    // CLI pass runs run's 21 jobs instead of staging's 3 on top of them
+    assert(new java.io.File(out).list().filterNot(_.startsWith(".")).sorted.toSeq ===
+      Seq("api_response.json", "channel_report.csv", "target_data.json", "warehouse"))
+    assert(direct.jobs === 21, s"MaefMain.run on the .db ran ${direct.jobs} jobs")
+  }
+
+  test("Loader.load leaves nothing cached and keeps its gate message") {
+    def response(ihc: Double) = {
+      val f = java.nio.file.Files.createTempFile("graft_load", ".json")
+      java.nio.file.Files.writeString(f,
+        s"""[{"statusCode": 200, "value": [
+           |  {"conversion_id": "c1", "session_id": "s1", "ihc": $ihc},
+           |  {"conversion_id": "c1", "session_id": "s2", "ihc": 0.0}]}]""".stripMargin)
+      f.toString
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val loaded = Loader.load(spark, response(1.0))
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.lookupCachedData(loaded.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before === Set.empty)
+    assert(loaded.count() === 2L)
+    val e = intercept[IllegalArgumentException](Loader.load(spark, response(0.0)))
+    assert(e.getMessage ===
+      "requirement failed: Attribution data contains no valid IHC values (total=0.0)")
+  }
+
   test("a window without conversions fails the journey gate before target_data.json is written") {
     val wh = tmp("graft_gate_wh")
     Seq(("c1", "u1", "2023-08-02", "10:00:00", 100.0))

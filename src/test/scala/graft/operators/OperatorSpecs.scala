@@ -271,6 +271,29 @@ class ReportingSpec extends SparkSpec {
     assert(unfiltered.count() === 1)
     assert(unfiltered.first().getAs[String]("channel_name") === "Direct")
   }
+
+  test("a journey-shaped attribution frame is projected to its key and measure") {
+    // attribution straight off a journey join carries the journey's
+    // columns next to ihc, among them a `revenue` that must not collide
+    // with the conversions' own
+    val acj = Seq(("c1", "s1", "u1", "Direct", 100.0, 0.6), ("c1", "s2", "u1", "Direct", 100.0, 0.4))
+      .toDF("conv_id", "session_id", "user_id", "channel_label", "revenue", "ihc")
+    val sessions = Seq(
+      ("s1", "u1", "2023-08-01", "09:00:00", "Direct", 1, 0, 0),
+      ("s2", "u1", "2023-08-01", "10:00:00", "Email", 0, 1, 0))
+      .toDF("session_id", "user_id", "event_date", "event_time",
+        "channel_name", "holder_engagement", "closer_engagement", "impression_interaction")
+    val costs = Seq(("s1", 10.0)).toDF("session_id", "cost")
+    val conv = Seq(("c1", "u1", "2023-08-01", "11:00:00", 50.0))
+      .toDF("conv_id", "user_id", "conv_date", "conv_time", "revenue")
+    val rep = MaefReporting.channelReport(acj, sessions, costs, conv, fanout = false, exactSums = true)
+      .orderBy("channel_name").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+    // the revenue is the conversion's 50.0, the channel the session's
+    assert(rep.toSeq === Seq(
+      ("Direct", "2023-08-01", 10.0, 0.6, 30.0),
+      ("Email", "2023-08-01", 0.0, 0.4, 20.0)))
+  }
 }
 
 class SessionizeSpec extends SparkSpec {
