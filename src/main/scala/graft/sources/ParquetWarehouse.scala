@@ -53,13 +53,11 @@ object ParquetWarehouse {
     case c => c.toString
   }
 
-  /** A lock older than this is presumed abandoned by a crashed writer and
-    * may be broken by the next acquirer. Generous on purpose: a legitimate
-    * 100 TB-scale merge can run long, and a FALSE stale-break reintroduces
-    * the double-writer corruption the lock exists to prevent; a true crash
-    * on the SAME host is detected much faster via pid liveness (below) —
-    * the age horizon only governs crashes the next writer cannot verify
-    * (another host's pid). */
+  /** Tombstone TTL. A tombstone left by a takeover is swept once older
+    * than this (see [[sweepAgedTombstones]]): long enough to outlive any
+    * straggler from that takeover's race, whose window is seconds. It is
+    * NOT a lock age-out — a held lock is broken only when its holder is
+    * provably dead (see [[withWriterLock]]), whatever its age. */
   private[graft] val LockStaleMs: Long = 60L * 60 * 1000
 
   private[graft] def lockHost: String =
@@ -74,16 +72,6 @@ object ParquetWarehouse {
   private[graft] def lockPayload(host: String, pid: Long, token: String, ts: Long): String =
     s"host=$host pid=$pid token=$token ts=$ts\n"
 
-  /** While a writer's body runs, a daemon heartbeat bumps the lock file's
-    * mtime at this cadence, so a LIVE holder's lock never ages past
-    * [[LockStaleMs]] however long its merge runs — without the heartbeat,
-    * a legitimate cross-host merge longer than the horizon would get its
-    * lock age-broken by the next writer, silently reintroducing exactly
-    * the double-writer race the lock exists to prevent. One-sixth of the
-    * horizon: several consecutive missed beats (FS hiccups) still leave
-    * the mtime far inside it. */
-  private[graft] def heartbeatIntervalMs: Long = LockStaleMs / 6
-
   /** The one place that decides "this FS needs NIO-level atomicity":
     * Hadoop's local create(overwrite=false) is check-then-act and its
     * rename is POSIX (overwrites the destination), so both lock
@@ -96,59 +84,33 @@ object ParquetWarehouse {
     case _ => false
   }
 
-  /** Three-way outcome of a lock-payload read. Most callers only need
-    * "readable or not" ([[readLockPayload]]'s Option), but the heartbeat's
-    * ENTRY gate must tell a payload that is readably NOT OURS (ownership
-    * lost — stop beating) from one that could not be read at all
-    * (ownership UNKNOWN — a store faulting every open would otherwise
-    * never count an assumed beat and the r17 drift remedy could not
-    * engage; r17 ADVICE). */
-  private[graft] sealed trait LockRead
-  private[graft] final case class LockPayloadRead(payload: String) extends LockRead
-  private[graft] case object LockMissing extends LockRead
-  private[graft] case object LockUnreadable extends LockRead
-
+  /** The payload of the lock (or tombstone) at `lock`, or None when it
+    * cannot be read: missing, faulting, over the size cap, or cut short
+    * by a stalled stream. */
   private[graft] def readLockPayload(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[String] =
-    readLockPayloadEx(fs, lock) match {
-      case LockPayloadRead(s) => Some(s)
-      case _                  => None
-    }
-
-  private[graft] def readLockPayloadEx(
-      fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path): LockRead =
     try {
       val in = fs.open(lock)
       try {
         // read to EOF, not a single read(): on remote stores a legal
         // short read can truncate the one-line payload BEFORE the token,
         // and every ownership check downstream (owned release delete,
-        // heartbeat refresh, takeover abandon) would then misjudge — e.g.
-        // a holder failing to delete its own lock on the way out, wedging
-        // the table for up to the stale horizon
+        // takeover abandon) would then misjudge — e.g. a holder failing
+        // to delete its own lock on the way out, wedging the table
         val out = new java.io.ByteArrayOutputStream(256)
         val buf = new Array[Byte](4096)
-        // Two boundedness guards against a misbehaving stream — a
-        // partial payload missing the token would misjudge every
-        // ownership check, the exact failure this loop exists to
-        // prevent:
+        // Two boundedness guards against a misbehaving stream:
         //  - a stream returning 0 for a non-empty buffer must not spin
         //    forever inside lock acquisition: a few consecutive
         //    zero-reads are tolerated, then the read is abandoned and
-        //    judged by COMPLETENESS below (a newline-terminated buffer
-        //    is the whole payload — EOF-as-0 connectors keep working;
-        //    an unterminated prefix is unreadable → None);
-        //  - total size is capped, always → None (a real payload is
-        //    one ~100-byte line; the tombstone sweep feeds this ANY
-        //    file matching the table's tomb glob, and a stray or
-        //    corrupt multi-GB file at a lock or tomb path must not
-        //    OOM the driver through an unbounded buffer). The cap is
-        //    checked BEFORE the chunk is appended, so the buffer
-        //    itself never exceeds it — the check-after spelling let
-        //    the buffer overshoot by one read chunk, a bound looser
-        //    than the one documented here (r16 ADVICE).
+        //    judged by COMPLETENESS below;
+        //  - total size is capped, always → None (a real payload is one
+        //    ~100-byte line; the tombstone sweep feeds this ANY file
+        //    matching the table's tomb glob, and a stray multi-GB file
+        //    at a lock or tomb path must not OOM the driver). The cap
+        //    is checked BEFORE the chunk is appended, so the buffer
+        //    itself never exceeds it.
         val MaxPayloadBytes = 64 * 1024
         var zeros = 0
         var overCap = false
@@ -167,273 +129,19 @@ object ParquetWarehouse {
         val s = out.toString("UTF-8")
         // A zero-read stall is only UNREADABLE when it truncated the
         // payload. Every payload this module writes (lock lines, tomb
-        // re-stamps) is newline-terminated by construction, so a
-        // terminated buffer is COMPLETE — connectors that signal EOF
-        // with 0 instead of -1 must not have their fully-delivered
-        // payload discarded (that would blind the live holder's
-        // heartbeat and owned release on exactly those stores). An
-        // unterminated stall is a prefix that may have lost the token:
-        // unreadable, routed through the corpse paths.
-        if (overCap || (stalled && !s.endsWith("\n"))) LockUnreadable
-        else LockPayloadRead(s)
+        // re-stamps) is newline-terminated, so a terminated buffer is
+        // COMPLETE — connectors that signal EOF with 0 instead of -1 keep
+        // their fully-delivered payload (and with it the owned release).
+        // An unterminated stall is a prefix that may have lost the token.
+        if (overCap || (stalled && !s.endsWith("\n"))) None else Some(s)
       } finally in.close()
     } catch {
-      // A verifiable not-found is its own state: the heartbeat's entry
-      // gate maps it to "lock vanished" (stop beating), which an
-      // unreadable-fault must NOT be conflated with. A connector that
-      // wraps its not-found in a RuntimeException degrades to
-      // LockUnreadable — safe in every consumer (the Option view is None
-      // either way; the heartbeat then beats optimistically instead of
-      // stopping, and the released lock's delete still wins).
-      case _: java.io.FileNotFoundException => LockMissing
       // NonFatal, not just IOException: connectors wrap I/O failures in
       // RuntimeExceptions (Hadoop's Shell wraps a failed fork's exit
-      // code — the r17 soak hit exactly that shape), and "unreadable
-      // payload" must mean the same thing — None, the corpse path — on
+      // code), and "unreadable payload" must mean the same thing on
       // every store, or an unreadable corpse could never be retired
       // (retireIfUnchanged's re-read must compare None == None).
-      case scala.util.control.NonFatal(_) => LockUnreadable
-    }
-
-  /** One heartbeat: re-young the lock iff the payload still carries OUR
-    * token. The ownership re-check matters — a holder whose lock was
-    * (wrongly or rightly) broken and replaced must not keep the
-    * SUCCESSOR's lock artificially young. Primary signal is `setTimes`
-    * on the mtime; because `FileSystem.setTimes` is a silent NO-OP on
-    * some connectors (object-store shims inherit the base class's empty
-    * implementation), the refresh VERIFIES the mtime actually advanced
-    * and otherwise rewrites the payload with a fresh `ts` — the age
-    * check honours the younger of the two signals, so either one
-    * advancing keeps a live holder unbreakable. (The rewrite is the
-    * fallback, not the default: an overwrite is not atomic, and on
-    * stores where it briefly unlinks the path a racing `tryAcquire`
-    * could slip in — but those are exactly the stores whose
-    * create-no-overwrite is already best-effort, per the lock's
-    * documented advisory contract.) Returns whether the lock still
-    * carried OUR token at entry — the beat's liveness signal — NOT
-    * whether anything was physically written: the common branch needs
-    * no rewrite at all, and the rewrite fallback deliberately skips
-    * when the release fence or a changed payload says the lock is no
-    * longer ours to touch (both still return true; the beat then exits
-    * on the revoked flag at its next loop check). A lock that vanished
-    * mid-beat returns false. False is RESERVED for ownership ANSWERS
-    * (r20): the lock verifiably missing, or its payload readably carrying
-    * a foreign token — the heartbeat aborts the hold on that answer (see
-    * [[withWriterLock]]). A fault escaping every inner catch is ownership
-    * UNKNOWN: it counts an unproven beat and returns true, so a transient
-    * backstop-level fault can never masquerade as confirmed loss.
-    *
-    * `assumedBeats` threads the one piece of cross-beat state the
-    * heartbeat needs: a transient IOException on the verifying re-stat
-    * is treated as "assume setTimes worked, skip the rewrite" — correct
-    * for a one-off hiccup, but on a store where setTimes is a silent
-    * no-op AND the re-stat fails on several CONSECUTIVE beats, neither
-    * mtime nor payload ts ever advances and a live lock drifts toward
-    * the stale horizon with every beat reporting success (r16 ADVICE).
-    * After [[ForceRewriteAfterAssumedBeats]] consecutive assumed beats
-    * the fallback rewrite is FORCED (with its existing ownership
-    * guards), re-stamping the payload ts so at least one liveness
-    * signal provably advances; any successful re-stat resets the
-    * count. Standalone callers get a fresh counter per call — only the
-    * heartbeat's repeated beats accumulate.
-    *
-    * The ENTRY read is part of the counted surface too (r18, closing the
-    * r17 ADVICE): a store that faults the payload OPEN itself every beat
-    * is the same drift one FS call earlier — mapping the fault to "not
-    * ours, return false" neither counted an assumed beat nor attempted
-    * setTimes, so neither liveness signal could ever advance. An
-    * UNREADABLE entry read (fault, cap, stall-truncation — ownership
-    * UNKNOWN) now attempts setTimes (it may well succeed: a faulting
-    * open does not imply a faulting utime) and counts an assumed beat,
-    * whose forced rewrite stays gated on a read that CONFIRMS our token
-    * — blind-overwriting a lock whose payload cannot be read could
-    * clobber a live successor. A readably-NOT-OURS payload and a
-    * verifiably MISSING lock still return false uncounted — those are
-    * ownership ANSWERS, not faults.
-    *
-    * `unprovenBeats` (r19, closing the r18 residual) counts something
-    * subtly different from `assumedBeats`: consecutive beats on which NO
-    * liveness signal PROVABLY advanced — a verified mtime bump, a
-    * rewrite that ran, or a verifiably-young lock all reset it; an
-    * unverifiable beat (faulted stats/reads) or a stuck-mtime beat whose
-    * fallback rewrite failed increments it. (`assumedBeats` resets on
-    * any successful re-stat even when the mtime is STUCK — right for
-    * pacing the forced rewrite, wrong for judging drift: a store with
-    * working stats, a no-op setTimes, and a faulting overwrite-create
-    * never accumulates assumed beats yet drifts all the way to the
-    * horizon.) Once [[AbortHoldAfterUnprovenBeats]] consecutive beats
-    * prove nothing ([[shouldAbortHold]]), the heartbeat in
-    * [[withWriterLock]] ABORTS the hold: it revokes the ownership flag,
-    * interrupts the writer thread, and the write fails loudly — well
-    * before the stale horizon (3 of the 6 beats a horizon holds), so a
-    * contending writer can only ever age-break a lock whose holder is
-    * dead or has already aborted, NEVER one that is live and still
-    * beating. The former residual (silent drift to the horizon on a store where
-    * every channel faults persistently) is thereby an invariant, at the
-    * price of a deliberately CONSERVATIVE abort: a store whose setTimes
-    * works but whose stats and reads fault for three straight beats may
-    * be advancing the mtime unverifiably, and the writer still aborts —
-    * the owner cannot distinguish that store from one drifting to reap,
-    * and a loud failed write beats a write that completes without
-    * provable exclusivity (fault-schedule property:
-    * HeartbeatFaultScheduleSpec, which drops the old exemption;
-    * enumerated end-to-end case: WriterLockSpec's abort test). */
-  private[graft] val ForceRewriteAfterAssumedBeats = 2
-
-  /** Consecutive no-proven-advancement beats before the owner aborts its
-    * hold: one more than the forced-rewrite threshold, so the forced
-    * rewrite gets two chances to rescue the lock before the write is
-    * failed. At the production cadence ([[heartbeatIntervalMs]] = 10 min)
-    * the abort lands ~30-40 min after the last proven signal — half the
-    * [[LockStaleMs]] horizon, two full beats of margin before a
-    * contending writer could judge the lock aged out. */
-  private[graft] val AbortHoldAfterUnprovenBeats = ForceRewriteAfterAssumedBeats + 1
-
-  /** The abort decision, shared verbatim by the [[withWriterLock]]
-    * heartbeat and the fault-schedule property so the spec tests the
-    * production rule, not a re-implementation. */
-  private[graft] def shouldAbortHold(
-      unprovenBeats: java.util.concurrent.atomic.AtomicInteger): Boolean =
-    unprovenBeats.get() >= AbortHoldAfterUnprovenBeats
-
-  private[graft] def refreshLockIfOwned(
-      fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path,
-      token: String,
-      stillHeld: () => Boolean = () => true,
-      assumedBeats: java.util.concurrent.atomic.AtomicInteger =
-        new java.util.concurrent.atomic.AtomicInteger(0),
-      unprovenBeats: java.util.concurrent.atomic.AtomicInteger =
-        new java.util.concurrent.atomic.AtomicInteger(0)): Boolean = {
-      try {
-        val now = System.currentTimeMillis()
-        // (gone, mtime): gone means the lock VANISHED (owner released
-        // under a slow beat — nothing left to keep young, and falling
-        // through to the rewrite would RESURRECT a released lock and
-        // wedge the table for a horizon); mtime None means the stat
-        // itself failed transiently.
-        // NonFatal, not just IOException, throughout this beat:
-        // connectors wrap stat/utime faults in RuntimeExceptions
-        // (Hadoop's Shell — the same shape readLockPayload and the
-        // tombstone sweep tolerate), and an escaping RTE would be
-        // swallowed by the heartbeat's own NonFatal catch WITHOUT
-        // counting an assumed beat — the drift remedy would never
-        // engage on exactly the stores that need it.
-        def stat(): (Boolean, Option[Long]) =
-          try (false, Some(fs.getFileStatus(lock).getModificationTime))
-          catch {
-            case _: java.io.FileNotFoundException => (true, None)
-            case scala.util.control.NonFatal(_) => (false, None)
-          }
-        // The fallback rewrite, guarded twice — the owner may have
-        // started releasing while this beat was blocked in an FS call
-        // (stillHeld is revoked BEFORE the release deletes), and the
-        // payload may have changed hands; either would make the
-        // overwrite a resurrection or a successor-clobber, not a
-        // refresh. Returns whether the rewrite actually RAN — the
-        // forced path resets its streak only on that signal (a
-        // guard-skipped or failed force must keep the pressure on,
-        // not restart the window while reporting success).
-        def guardedRewrite(): Boolean =
-          if (stillHeld() &&
-              readLockPayload(fs, lock).exists(_.contains(s"token=$token"))) {
-            val out = fs.create(lock, /* overwrite = */ true)
-            try out.write(lockPayload(
-              lockHost, ProcessHandle.current().pid(), token).getBytes("UTF-8"))
-            finally out.close()
-            true
-          } else false
-        // A TRANSIENT stat failure — at EITHER position — is not "mtime
-        // stuck": setTimes may well have worked, and mapping the failure
-        // to "stuck" would trigger the non-atomic rewrite fallback,
-        // needlessly opening its documented unlink/slip-in window on
-        // exactly the flaky stores most likely to hiccup a stat. Assume
-        // refreshed and skip the rewrite this beat — but only
-        // ForceRewriteAfterAssumedBeats times in a ROW: past that the
-        // optimistic assumption is doing the stale-drift it exists to
-        // avoid (see the scaladoc), and the rewrite is forced. (The
-        // original fix counted only failed AFTER re-stats; a store
-        // failing the BEFORE stat each beat drifted identically and
-        // never engaged the counter.)
-        def assumedBeat(): Boolean = {
-          var proved = false
-          if (assumedBeats.incrementAndGet() >= ForceRewriteAfterAssumedBeats) {
-            try { if (guardedRewrite()) { assumedBeats.set(0); proved = true } }
-            catch { case scala.util.control.NonFatal(_) => () } // keep the pressure on
-          }
-          // an assumed beat that did not land a rewrite PROVED nothing —
-          // setTimes may well have worked, but unverifiably, and the
-          // abort rule is about what the owner can prove (see scaladoc)
-          if (proved) unprovenBeats.set(0) else unprovenBeats.incrementAndGet()
-          true
-        }
-        def ownedBeat(): Boolean = stat() match {
-          case (true, _) => false
-          case (false, None) =>
-            // setTimes is still attempted — it may succeed and advance
-            // the mtime even while stats fail — but unverifiable either
-            // way, so this is an assumed beat
-            try fs.setTimes(lock, now, -1)
-            catch { case scala.util.control.NonFatal(_) => () }
-            assumedBeat()
-          case (false, Some(before)) =>
-            // a THROWING setTimes (vs the silent no-op) must not abort
-            // the beat uncounted: swallow, and let the verifying re-stat
-            // decide — a stuck mtime then routes through the ordinary
-            // fallback rewrite below, which is the correct remedy
-            try fs.setTimes(lock, now, -1)
-            catch { case scala.util.control.NonFatal(_) => () }
-            stat() match {
-              case (true, _) => false
-              case (false, None) => assumedBeat()
-              case (false, Some(m)) =>
-                assumedBeats.set(0) // a verified beat breaks the streak
-                if (m <= before && now - before > heartbeatIntervalMs / 2) {
-                  // setTimes was a no-op here: re-stamp the payload ts
-                  // instead, so the age check's second signal advances.
-                  // Best-effort like the forced path — a transient
-                  // create fault must not turn a confirmed-ownership
-                  // beat into the return-false "lock vanished" signal;
-                  // the next beat simply retries the rewrite.
-                  val ran = try guardedRewrite()
-                            catch { case scala.util.control.NonFatal(_) => false }
-                  // stats verify fine here, but the SIGNAL is stuck: a
-                  // store whose setTimes no-ops and whose rewrite keeps
-                  // failing drifts with assumedBeats at 0 — the abort
-                  // counter must see it (see the scaladoc's distinction)
-                  if (ran) unprovenBeats.set(0) else unprovenBeats.incrementAndGet()
-                } else unprovenBeats.set(0) // mtime advanced, or verifiably young
-                true
-            }
-        }
-        readLockPayloadEx(fs, lock) match {
-          case LockPayloadRead(p) if !p.contains(s"token=$token") =>
-            false // readably not ours — ownership answered, stop beating
-          case LockMissing =>
-            false // lock verifiably vanished (owner released) — stop
-          case LockUnreadable =>
-            // ownership UNKNOWN, not lost: attempt setTimes (best-effort,
-            // unverifiable) and count an assumed beat so the forced
-            // rewrite engages if the read recovers — see the scaladoc's
-            // entry-read paragraph (r17 ADVICE)
-            try fs.setTimes(lock, now, -1)
-            catch { case scala.util.control.NonFatal(_) => () }
-            assumedBeat()
-          case LockPayloadRead(_) =>
-            ownedBeat() // token confirmed ours — the ordinary beat
-        }
-      } catch { case scala.util.control.NonFatal(_) =>
-        // The backstop for a fault escaping every inner catch. Ownership
-        // here is UNKNOWN, not answered — so keep beating, but count the
-        // beat as unproven (it advanced nothing verifiably) so the abort
-        // window still closes on a store this broken. Returning false
-        // would read to the heartbeat as CONFIRMED ownership loss and
-        // abort a hold whose lock may be perfectly healthy (r19 ADVICE:
-        // false is now reserved for the answered-lost states — lock
-        // verifiably gone, or verifiably carrying a foreign token).
-        unprovenBeats.incrementAndGet()
-        true
-      }
+      case scala.util.control.NonFatal(_) => None
     }
 
   /** Advisory single-writer lock for a table path — the GUARD behind the
@@ -448,18 +156,18 @@ object ParquetWarehouse {
     * silent-corruption race into an explicit error for every coordinated
     * deployment, which is the operational bar here.
     *
-    * A crashed holder never releases, so a held lock is re-examined:
-    *   - the payload names the holder's host and pid — when the host is
-    *     THIS host and the pid is no longer alive, the holder is provably
-    *     dead and the lock breaks immediately (a crash mid-swap therefore
-    *     heals on the very next same-host writer call, not an hour later;
-    *     pid recycling can only delay breaking, never break a live lock);
-    *   - otherwise (another host, unreadable payload) the lock breaks
-    *     only past the [[LockStaleMs]] age horizon, judged on the YOUNGER
-    *     of file mtime and payload `ts` — a live holder keeps mtime fresh
-    *     via the heartbeat ([[refreshLockIfOwned]]), and even where
-    *     `setTimes` is a no-op (some object-store shims) a recent payload
-    *     `ts` alone vetoes the age-break.
+    * A crashed holder never releases, so a held lock is re-examined, and
+    * broken ONLY when its holder is provably dead ([[holderDead]]): the
+    * payload names THIS host and the pid is no longer alive. A crash
+    * mid-swap therefore heals on the very next same-host writer call;
+    * pid recycling can only delay breaking, never break a live lock.
+    * Every other held lock — another host's, of any age, or one whose
+    * payload cannot be read — is refused with an IllegalArgumentException
+    * naming the lock file and its holder. Nothing breaks a lock by age,
+    * so no live holder can be broken however long its merge runs or
+    * however skewed its clock; the price is that a writer that crashed
+    * on ANOTHER host leaves its table locked until an operator confirms
+    * it dead and deletes the lock file by hand.
     *
     * Breaking is a RENAME-BASED TAKEOVER, not delete-then-create. The
     * breaker renames the dead lock to a tombstone whose name is a pure
@@ -473,41 +181,17 @@ object ParquetWarehouse {
     * The payload is re-read immediately before the rename and the break
     * is abandoned if it changed — a successor who already took over and
     * staked a fresh lock is a LIVE holder, and the fresh lock must not be
-    * torn down on a stale observation (the old stat-then-delete spelling
-    * had exactly that defect). Tombstones are not deleted by their maker
-    * (a surviving tombstone is what turns a straggler's late rename into
-    * a loud no-op); they are swept opportunistically once older than the
-    * stale horizon.
+    * torn down on a stale observation. Tombstones are not deleted by their
+    * maker (a surviving tombstone is what turns a straggler's late rename
+    * into a loud no-op); they are swept opportunistically once older than
+    * [[LockStaleMs]].
     *
     * Release is OWNED: the holder deletes the lock only if the payload
-    * still carries its own token, so a long writer whose lock was broken
-    * past the horizon cannot delete the successor's lock on its way out.
-    * Released on completion, success or failure alike.
-    *
-    * ABORT (r19): if the heartbeat cannot PROVE any liveness signal
-    * advanced for [[AbortHoldAfterUnprovenBeats]] consecutive beats
-    * (every stat/read faulting and no rewrite landing — see
-    * [[refreshLockIfOwned]]), the hold is aborted: the heartbeat revokes
-    * ownership, interrupts the writer, and this method throws
-    * IllegalStateException instead of returning — failing the write
-    * loudly at ~half the stale horizon rather than carrying a lock a
-    * contending writer would legitimately age-break under a
-    * still-running write. A live-and-beating owner is therefore never
-    * broken.
-    *
-    * ABORT on CONFIRMED loss (r20, closing the r19 ADVICE residual): a
-    * beat that verifiably answers "not ours" — the lock file gone, or its
-    * payload carrying a foreign token (manual unlock; a cross-host
-    * clock-skew reap followed by a successor's stake) — aborts the hold
-    * the same way, immediately, without waiting out the unproven-beat
-    * window: a writer whose exclusivity is provably lost must stop
-    * writing at the first answer, not keep going unlocked while a
-    * successor holds the path. `beatMs` is the beat cadence — production
-    * default [[heartbeatIntervalMs]]; the parameter exists as the spec
-    * seam for exercising the abort paths in test time. */
+    * still carries its own token, so a writer whose lock was removed by
+    * hand cannot delete a successor's lock on its way out. Released on
+    * completion, success or failure alike. */
   private[graft] def withWriterLock[T](
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      beatMs: Long = heartbeatIntervalMs)(body: => T): T = {
+      fs: org.apache.hadoop.fs.FileSystem, path: String)(body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(path + ".__lock")
     val token = java.util.UUID.randomUUID().toString
     def tryAcquire(): Boolean = {
@@ -545,17 +229,15 @@ object ParquetWarehouse {
           if (fs.exists(lock)) false else throw e
       }
     }
-    // the takeover primitive — see [[retireDeadLock]]'s doc
     var acquired = tryAcquire()
+    var holder = "holder unknown"
     if (!acquired) {
       // reap aged tombstones BEFORE judging the held lock: a tombstone
       // only guards its own takeover's race window (seconds), but its
-      // NAME is a pure function of the victim payload — an unreadable/
-      // empty payload always maps to the same name, so without this
-      // sweep a second empty-payload crash after the first's tombstone
+      // NAME is a pure function of the victim payload, so without this
+      // sweep a second same-payload corpse after the first's tombstone
       // aged would be permanently unbreakable (takeover refuses while
-      // the tombstone exists, and the post-acquire sweep can never run
-      // because nobody can acquire)
+      // the tombstone exists, and nobody can acquire to sweep it)
       sweepAgedTombstones(fs, path)
       val st = try Some(fs.getFileStatus(lock))
                catch { case _: java.io.FileNotFoundException => None }
@@ -565,152 +247,46 @@ object ParquetWarehouse {
           acquired = tryAcquire()
         case Some(s) =>
           val observed = readLockPayload(fs, lock)
-          val payload = observed.getOrElse("")
-          if (holderDead(payload) || agedOut(s.getModificationTime, payload)) {
-            if (retireIfUnchanged(fs, lock, path, observed)) acquired = tryAcquire()
+          observed.filter(holderDead).foreach { corpse =>
+            if (retireIfUnchanged(fs, lock, path, corpse)) acquired = tryAcquire()
           }
+          holder = describeHolder(observed, s.getModificationTime)
       }
     }
     require(acquired,
-      s"another writer holds $path.__lock — the warehouse is single-writer " +
-        s"per table path (see upsert's concurrency contract); a dead " +
-        s"same-host holder is detected immediately, other holders' locks " +
-        s"go stale after ${LockStaleMs / 60000} min, or delete the lock " +
-        "file manually once the holder is confirmed dead")
-    // `held` is the ownership revocation the release uses to fence a
-    // SLOW heartbeat: a beat blocked in an FS call can outlive the
-    // bounded join below, and without the flag its no-op-setTimes
-    // fallback could rewrite the lock AFTER the release deleted it —
-    // resurrecting a lock nobody holds. Revoked before the delete, and
-    // checked by the beat immediately before any rewrite.
-    val held = new java.util.concurrent.atomic.AtomicBoolean(true)
-    // The abort handshake rides entirely on the `held` CAS: exactly one
-    // of {owner release, heartbeat abort} wins it, so an abort can only
-    // fire while the body is still running, and the owner detects the
-    // abort on its own FAILED release-CAS below — no separate flag whose
-    // write could lag the race.
-    val writerThread = Thread.currentThread()
-    // why the heartbeat revoked the hold — set BEFORE the revoking CAS so
-    // the owner's failed release-CAS below always finds it populated
-    val abortWhy = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val heartbeat = new Thread(() => {
-      // shared across this holder's beats: consecutive assumed-refreshed
-      // beats (failed verifying re-stats) force the payload-ts rewrite
-      // so a no-op-setTimes store with a flaky stat can't drift a live
-      // lock to the stale horizon (see refreshLockIfOwned's scaladoc);
-      // unprovenBeats drives the drift abort (no PROVEN advancement)
-      val assumedBeats = new java.util.concurrent.atomic.AtomicInteger(0)
-      val unprovenBeats = new java.util.concurrent.atomic.AtomicInteger(0)
-      try while (!Thread.currentThread().isInterrupted && held.get()) {
-        Thread.sleep(beatMs)
-        // a broken FS must not kill the beat (the lock would then age out
-        // under a live merge — the exact failure the heartbeat prevents);
-        // InterruptedException still exits via the outer catch. A false
-        // return is an ANSWER, not a fault: the beat verifiably saw the
-        // lock gone or carrying a foreign token (refreshLockIfOwned
-        // reserves false for exactly those states).
-        val owned =
-          try refreshLockIfOwned(fs, lock, token, () => held.get(), assumedBeats, unprovenBeats)
-          catch { case scala.util.control.NonFatal(_) => true }
-        // ABORT on CONFIRMED ownership loss (r19 ADVICE): a writer whose
-        // lock is provably gone or provably someone else's is writing
-        // WITHOUT exclusivity while a successor may hold the path — a
-        // strictly stronger violation than the unproven drift below, and
-        // previously the one the abort machinery did not fire on (the
-        // beat's answer was discarded). If the owner is mid-release the
-        // CAS below loses — that is the ordinary slow-beat-on-release
-        // race, not a loss — and the loop exits on held=false.
-        if (!owned) {
-          abortWhy.compareAndSet(null,
-            s"the heartbeat CONFIRMED ownership loss — the lock at $path.__lock is " +
-              "verifiably gone or verifiably carries another writer's token (manual " +
-              "unlock, or a successor's takeover), so continuing would write " +
-              "without exclusivity while a successor may hold the path")
-          if (held.compareAndSet(true, false)) writerThread.interrupt()
-        }
-        // ABORT path (r18 verdict #4): if nothing has provably advanced
-        // for the whole abort window, this lock is drifting toward the
-        // horizon where a contending writer legitimately age-breaks it
-        // out from under a live write. Do not carry it there: revoke
-        // the hold (winning the CAS against the owner's release), fail
-        // the write loudly via interrupt, and stop beating. The alternative — keep
-        // holding and hope — is exactly the reaped-under-a-live-writer
-        // corruption the lock exists to prevent.
-        else if (shouldAbortHold(unprovenBeats)) {
-          abortWhy.compareAndSet(null,
-            s"the heartbeat could not PROVE any liveness signal advanced for " +
-              s"$AbortHoldAfterUnprovenBeats consecutive beats (stats/reads faulting " +
-              s"and no rewrite landed), so the lock was drifting toward the " +
-              s"${LockStaleMs / 60000}-min stale horizon where a contending " +
-              "writer would legitimately reap it under this still-running write — a " +
-              "live-and-beating owner is never reaped")
-          if (held.compareAndSet(true, false)) writerThread.interrupt()
-        }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-lock-heartbeat-${new org.apache.hadoop.fs.Path(path).getName}")
-    heartbeat.setDaemon(true)
-    heartbeat.start()
-    // Not try/finally: the release must know whether the OWNER revoked
-    // the hold (ordinary) or the heartbeat ABORTED it first (the CAS
-    // below fails) — and an aborted writer must clear the interrupt flag
-    // BEFORE the release's FS calls (join throws InterruptedException on
-    // an interrupted caller; NIO channels fault on the interrupt bit).
-    val outcome = try Right(body) catch { case t: Throwable => Left(t) }
-    val ownerRevoked = held.compareAndSet(true, false)
-    if (!ownerRevoked) Thread.interrupted() // aborted: swallow our own interrupt
-    heartbeat.interrupt()
-    // the abort's interrupt can land a hair after the owner's CAS (the
-    // heartbeat won the race but hadn't called interrupt() yet) — absorb
-    // it once and finish the join rather than abandoning the release
-    def joinQuietly(ms: Long): Unit =
-      try heartbeat.join(ms)
-      catch { case _: InterruptedException => Thread.interrupted(); heartbeat.join(ms) }
-    joinQuietly(10000)
-    if (readLockPayload(fs, lock).exists(_.contains(s"token=$token")))
-      fs.delete(lock, false)
-    // second chance for the one resurrection window the flag cannot
-    // fence: a beat that passed its guards and then stalled INSIDE the
-    // rewrite call can land its create after the delete above. If the
-    // beat is still running, wait it out once and re-delete anything
-    // carrying our token. A beat wedged in a hung FS call beyond this
-    // grace is a daemon thread on a store where the whole lock is
-    // best-effort by contract — documented residual, not fenced.
-    if (heartbeat.isAlive) {
-      joinQuietly(30000)
+      s"another writer holds $path.__lock ($holder) — the warehouse is " +
+        "single-writer per table path (see upsert's concurrency contract). " +
+        "A lock whose holder is provably dead (this host, pid gone) is broken " +
+        "automatically; any other lock stays until its holder releases it. Once " +
+        s"that holder is confirmed dead, delete $path.__lock by hand and retry")
+    try body
+    finally
       if (readLockPayload(fs, lock).exists(_.contains(s"token=$token")))
         fs.delete(lock, false)
-    }
-    if (!ownerRevoked)
-      throw new IllegalStateException(
-        s"write to $path aborted: " +
-          Option(abortWhy.get).getOrElse(
-            "the writer-lock heartbeat revoked the hold") +
-          ". The hold was aborted and the write failed loudly instead. Check the " +
-          "store's health (getFileStatus/open/setTimes/create on the lock path) " +
-          "and retry.",
-        outcome.left.toOption.orNull)
-    outcome.fold(t => throw t, identity)
   }
 
-  private[graft] def parseKv(payload: String): Map[String, String] =
+  /** The holder named by a held lock's payload, for the refusal message:
+    * `host`, `pid` and age (payload `ts`, else the file's mtime). */
+  private def describeHolder(observed: Option[String], mtime: Long): String = {
+    val kv = observed.map(parseKv).getOrElse(Map.empty)
+    val since = kv.get("ts").flatMap(_.toLongOption).getOrElse(mtime)
+    val age = s"${(System.currentTimeMillis() - since) / 60000} min old"
+    if (observed.isEmpty) s"payload unreadable, $age"
+    else s"host=${kv.getOrElse("host", "?")} pid=${kv.getOrElse("pid", "?")}, $age"
+  }
+
+  private def parseKv(payload: String): Map[String, String] =
     payload.trim.split("\\s+")
       .flatMap(_.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None })
       .toMap
 
-  /** A held lock is breakable when its holder is PROVABLY dead: the
+  /** A held lock is breakable only when its holder is PROVABLY dead: the
     * payload names THIS host and the pid is no longer alive. */
   private[graft] def holderDead(payload: String): Boolean = {
     val kv = parseKv(payload)
     kv.get("host").contains(lockHost) &&
       kv.get("pid").flatMap(_.toLongOption)
         .exists(p => java.lang.ProcessHandle.of(p).isEmpty)
-  }
-
-  /** ... or when every liveness signal available — mtime AND any
-    * parseable payload ts — is past the stale horizon. */
-  private[graft] def agedOut(mtime: Long, payload: String): Boolean = {
-    val ts = parseKv(payload).get("ts").flatMap(_.toLongOption)
-    System.currentTimeMillis() - math.max(mtime, ts.getOrElse(Long.MinValue)) > LockStaleMs
   }
 
   /** The takeover primitive: atomically retire the dead `lock` into
@@ -732,18 +308,16 @@ object ParquetWarehouse {
     * pre-sweep reaps it: a bounded wedge, never a second acquirer.)
     *
     * Rename and link both PRESERVE the source mtime — a tombstone born
-    * from an AGE-broken corpse would be past the horizon at birth and
-    * reaped by the very next sweep, voiding the straggler guard the
-    * tombstone exists to provide. So the WINNER re-stamps the tombstone
-    * right after the retire: an overwrite-create refreshes the mtime on
-    * every store (including the ones whose setTimes is a no-op — which
-    * is why the corpse's mtime is NOT bumped beforehand; that spelling
-    * also turned any transiently-failed retire into a fresh-looking
-    * corpse nobody could re-break for a horizon). Best-effort: the
-    * retire already succeeded, and the residual — a sweep reaping the
-    * aged-at-birth tomb inside the two-FS-call gap, meeting a straggler
-    * whose payload re-read predates the retire — is a multi-party
-    * microsecond race accepted under the lock's advisory contract. */
+    * from an old corpse (a dead-pid lock left for a week) would be past
+    * [[LockStaleMs]] at birth and reaped by the very next sweep, voiding
+    * the straggler guard the tombstone exists to provide. So the WINNER
+    * re-stamps the tombstone right after the retire: an overwrite-create
+    * refreshes the mtime on every store (including the ones whose
+    * setTimes is a no-op). Best-effort: the retire already succeeded,
+    * and the residual — a sweep reaping the aged-at-birth tomb inside the
+    * two-FS-call gap, meeting a straggler whose payload re-read predates
+    * the retire — is a multi-party microsecond race accepted under the
+    * lock's advisory contract. */
   private def retireDeadLock(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path,
@@ -773,20 +347,16 @@ object ParquetWarehouse {
     * acquisition: re-read the payload and abandon if it changed since
     * `observed` (a successor who already took over is a LIVE holder),
     * refuse while the payload-derived tombstone exists (the straggler
-    * guard), else retire atomically. `observed` stays an Option end to
-    * end — an unreadable payload compares None == None, so a corpse
-    * whose payload cannot be read is still retirable (flattening it to
-    * "" would refuse it forever). Tombstone name = f(observed payload),
-    * so racers who judged the same corpse contend on ONE atomic retire.
-    * JUDGING (holderDead/agedOut) stays with the caller. */
+    * guard), else retire atomically. Tombstone name = f(observed
+    * payload), so racers who judged the same corpse contend on ONE
+    * atomic retire. JUDGING ([[holderDead]]) stays with the caller. */
   private def retireIfUnchanged(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path,
       tablePath: String,
-      observed: Option[String]): Boolean = {
-    val tomb = new org.apache.hadoop.fs.Path(
-      tombstoneName(tablePath, observed.getOrElse("")))
-    readLockPayload(fs, lock) == observed && !fs.exists(tomb) &&
+      observed: String): Boolean = {
+    val tomb = new org.apache.hadoop.fs.Path(tombstoneName(tablePath, observed))
+    readLockPayload(fs, lock).contains(observed) && !fs.exists(tomb) &&
       retireDeadLock(fs, lock, tomb)
   }
 
@@ -795,7 +365,7 @@ object ParquetWarehouse {
     * every racer that judged the SAME corpse contends on ONE atomic
     * retire. The name needs cross-PAYLOAD collisions to be negligible
     * too: two DIFFERENT corpses mapping to the same tomb name would
-    * refuse the second takeover for up to the stale horizon while the
+    * refuse the second takeover for up to [[LockStaleMs]] while the
     * first's tomb is fresh (a bounded wedge, but an avoidable one). A
     * 32-bit hash put that at ~2⁻³², close enough to matter across a
     * fleet's lifetime of takeovers; this uses the first 64 bits of an
@@ -821,8 +391,8 @@ object ParquetWarehouse {
 
   /** Tombstones from past takeovers are left in place on purpose (see
     * [[withWriterLock]]) and reaped here — by every CONTENDED
-    * acquisition, BEFORE it judges the held lock — once older than the
-    * stale horizon, by which point no straggler from that takeover race
+    * acquisition, BEFORE it judges the held lock — once older than
+    * [[LockStaleMs]], by which point no straggler from that takeover race
     * can still be in flight. Sweeping pre-judge (rather than
     * post-acquire) matters: the tombstone name is a pure function of
     * the victim payload, so a second corpse with an identical payload
@@ -840,8 +410,7 @@ object ParquetWarehouse {
       val tombs = fs.globStatus(glob)
       if (tombs != null) tombs.foreach { t =>
         // age = the younger of mtime and the winner's re-stamped payload
-        // ts (same two-signal rule as the lock's own age-break), so a
-        // tomb stays protective for a full horizon even where mtimes
+        // ts, so a tomb stays protective for a full TTL even where mtimes
         // misbehave — as long as EITHER signal is fresh it survives
         val ts = parseKv(readLockPayload(fs, t.getPath).getOrElse(""))
           .get("ts").flatMap(_.toLongOption).getOrElse(Long.MinValue)
@@ -858,12 +427,12 @@ object ParquetWarehouse {
       case scala.util.control.NonFatal(_) => ()
     }
 
-  /** The upsert-rewrite REBALANCE decision, shared with its spec (same
-    * pattern as [[shouldAbortHold]]): rebalance once the committed
-    * table's on-disk bytes exceed 2× the AQE advisory partition size —
-    * below that the whole rewrite fits one-or-two advisory-sized files
-    * whatever the window partitioning did, and the extra exchange is
-    * pure fixed cost (r22 measured +0.3-0.5 s per KB-scale upsert). */
+  /** The upsert-rewrite REBALANCE decision, shared with its spec:
+    * rebalance once the committed table's on-disk bytes exceed 2× the
+    * AQE advisory partition size — below that the whole rewrite fits
+    * one-or-two advisory-sized files whatever the window partitioning
+    * did, and the extra exchange is pure fixed cost (r22 measured
+    * +0.3-0.5 s per KB-scale upsert). */
   private[graft] def shouldRebalance(tableBytes: Long, advisoryBytes: Long): Boolean =
     tableBytes > 2L * advisoryBytes
 
@@ -952,8 +521,10 @@ object ParquetWarehouse {
     * are fully independent. The contract is now GUARDED, not just
     * documented: every writer entry point takes the advisory
     * [[withWriterLock]] on the path, so a second concurrent writer fails
-    * loudly instead of corrupting (stale locks from crashed holders
-    * self-expire — see the lock's doc).
+    * loudly instead of corrupting. A lock left by a crashed holder on
+    * this host is broken on the next call; any other lock is refused
+    * until its holder releases it or an operator removes it by hand (see
+    * the lock's doc).
     *
     * `evolveSchema = true` is the incremental-pipeline schema-evolution
     * mode: a run that ADDS a column (or a table that has columns a

@@ -743,7 +743,7 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     assert(got === Set(("s1", 2.0), ("s2", 3.0)), "old-spelling rows survived as duplicates")
   }
 
-  test("warehouse writers hold an advisory single-writer lock: held fails loudly, stale breaks, always released") {
+  test("warehouse writers hold an advisory single-writer lock: held fails loudly, stale is still refused, always released") {
     val dir = freshDir("graft_lock")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -765,14 +765,21 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("lock"))
     assert(spark.read.parquet(dir).count() === 1, "locked-out writers must not have written")
-    // a STALE lock is a crashed holder: the next writer breaks it and
-    // proceeds (backdate past the stale horizon to simulate the crash age)
+    // a lock backdated past LockStaleMs whose holder cannot be proven
+    // dead (no host in its payload) is STILL refused: age breaks nothing
     fs.setTimes(lock, System.currentTimeMillis() - ParquetWarehouse.LockStaleMs - 60000, -1)
+    val e3 = intercept[IllegalArgumentException] {
+      ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    }
+    assert(e3.getMessage.contains("lock"))
+    assert(fs.exists(lock), "a stale lock of an unproven holder must survive the refusal")
+    // the manual unlock: delete the lock file, and the next writer proceeds
+    fs.delete(lock, false)
     ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(!fs.exists(lock), "stale lock must be broken, then released")
+    assert(!fs.exists(lock), "lock must be released after the write")
     assert(spark.read.parquet(dir).count() === 2)
     // the failure path releases too — a held-forever lock after a failed
-    // write would wedge the table until the stale horizon
+    // write would wedge the table until removed by hand
     val poison = Seq(("c3", "not-a-date")).toDF("conv_id", "v")
       .withColumn("v", to_date(col("v")).cast("string"))
     intercept[Exception] { ParquetWarehouse.upsert(poison, dir, Seq("conv_id")) }
