@@ -1541,10 +1541,9 @@ object SparkEntry {
     }),
 
     // Z-order (Morton) curve index over the two hottest filter columns —
-    // the write-time layout op behind `Layout.writeZOrdered` (Delta-style
-    // OPTIMIZE ZORDER). Pure integer bit-interleaving, zero shuffle here;
-    // the write path adds one range partitioning. Gated row-level so the
-    // oracle pins every interleaved bit.
+    // the sort key of a Delta-style OPTIMIZE ZORDER layout. Pure integer
+    // bit-interleaving, zero shuffle. Gated row-level so the oracle pins
+    // every interleaved bit.
     "q75_zorder" -> ((s, dir) =>
       events(s, dir)
         .select(col("event_id"),
@@ -1923,9 +1922,9 @@ object SparkEntry {
     // sessions are written ONCE as catalog tables bucketed (and sorted) by
     // user_id, then the J1 join runs over the bucketed scans — Catalyst
     // sees both sides already hash-distributed on the join key and plans a
-    // sort-merge join with ZERO Exchange (PlanAudit-pinned; the `merge`
-    // hint keeps the small sf0.001 side from broadcast-converting, which
-    // would hide the co-location being demonstrated). This is the "bucket
+    // sort-merge join with ZERO Exchange (pinned by its `plans/` digest;
+    // the `merge` hint keeps the small sf0.001 side from broadcast-
+    // converting, which would hide the co-location being demonstrated). This is the "bucket
     // once, join shuffle-free forever" strategy for the 100 TB journey
     // join (reference loop: src/etl/transform.py:229-238). Results must be
     // byte-identical to q01 — bucketing is a physical layout property.

@@ -32,27 +32,6 @@ object Loader {
       .select(col("envelope_idx"), col("record_idx"), col("r.*"))
   }
 
-  /** A7: per-envelope error histogram (load.py:30-67's defaultdict). A
-    * NULL statusCode is classified like structureSamples classifies it —
-    * both `=== 200` and `=!= 200` are SQL-NULL for it, so without the
-    * explicit branch the otherwise("ok") would swallow exactly the
-    * envelopes the diagnostic histogram exists to surface. The structure
-    * test for the null/non-200 path deliberately consults ONLY
-    * `data`/`results`, NOT `value`: [[flattenEnvelopes]]'s dispatcher
-    * (mirroring load.py's `if status == 200` branch) never reads `value`
-    * on the fallback path, so a value-bearing null-status envelope yields
-    * ZERO records — `invalid_structure` reports what the flatten actually
-    * extracts; classing it "ok" would claim records that are never
-    * emitted. */
-  def errorHistogram(envelopes: DataFrame): DataFrame =
-    envelopes.select(
-      when(col("statusCode") === 200 && col("value").isNull, lit("missing_value"))
-        .when((col("statusCode").isNull || col("statusCode") =!= 200) &&
-            col("data").isNull && col("results").isNull,
-          lit("invalid_structure"))
-        .otherwise(lit("ok")).as("error_class"))
-      .groupBy(col("error_class")).agg(count(lit(1)).as("n"))
-
   /** P9 + L2 + A4: validate, cast, dedup first-wins, gate on Σihc > 0.
     * Output matches attribution_customer_journey. */
   def validateAndDedup(records: DataFrame): DataFrame = {

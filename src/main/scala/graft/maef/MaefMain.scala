@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   *   1. warehouse copy + row-count verify          (db_utils.py:67-102)
   *   2. transform → `target_data.json`             (transform.py:229-260)
   *   3. attribution → `api_response.json`          (native model replaces
-  *      the external IHC API; `AttributionApiConnector` remains available
-  *      for a real endpoint)
+  *      the external IHC API)
   *   4. load + verification gates                  (load.py:120-169)
   *   5. channel report → `channel_report.csv`      (reporting.py:57-167)
   *
@@ -20,8 +19,8 @@ import org.apache.spark.sql.functions._
   * The warehouse is either the reference's SQLite file itself (`.db` or
   * `.sqlite`, main.py:43-47 opens challenge.db), read page-level by step
   * 1's copy, or a directory of parquet tables `conversions`,
-  * `session_sources`, `session_costs` (MaefModel schemas — land a JDBC
-  * warehouse there with `sources.JdbcWarehouse.migrate`). The optional [start end]
+  * `session_sources`, `session_costs` (MaefModel schemas — land a SQLite
+  * file there once with [[stageSqliteWarehouse]]). The optional [start end]
   * (yyyy-MM-dd, validated like the reference's DAG window) filters
   * conversions by `conv_date`; when absent, the CLI falls back like the
   * DAG (ihc_api_dag.py:40-63): `ATTRIBUTION_START_DATE`/
@@ -147,9 +146,8 @@ object MaefMain {
   /** Stage a SQLite warehouse file into `stagingDir` as parquet, cast on
     * read to the reference DDL types and written once, with verified
     * counts. Returns the directory `run` accepts as its warehouse — the
-    * migrate-once pattern the JdbcWarehouse scaladoc prescribes, for
-    * callers that run many passes over one file (`run` also takes the
-    * file itself). */
+    * stage-once pattern for callers that run many passes over one file
+    * (`run` also takes the file itself). */
   def stageSqliteWarehouse(spark: SparkSession, dbPath: String, stagingDir: String): String = {
     MaefPipeline.copyAndVerify(sourceTables(spark, dbPath, sqlite = true), stagingDir)
     stagingDir

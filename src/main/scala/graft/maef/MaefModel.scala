@@ -32,12 +32,6 @@ object MaefModel {
     StructField("session_id", StringType, nullable = false),
     StructField("cost", DoubleType)))
 
-  /** attribution_customer_journey (challenge_db_create.sql:34-39). */
-  val AttributionCustomerJourney: StructType = StructType(Seq(
-    StructField("conv_id", StringType, nullable = false),
-    StructField("session_id", StringType, nullable = false),
-    StructField("ihc", DoubleType)))
-
   /** channel_reporting (challenge_db_create.sql:41-48). */
   val ChannelReporting: StructType = StructType(Seq(
     StructField("channel_name", StringType, nullable = false),

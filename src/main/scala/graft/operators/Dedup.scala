@@ -25,14 +25,6 @@ import graft.functions.VectorFunctions
   */
 object Dedup {
 
-  /** Exact dedup: first-wins by (fingerprint, orderCol) — the scalable
-    * version of the reference's `seen`-set (src/etl/load.py:107-114).
-    * Returns the surviving rows only. */
-  def exactDedup(docs: DataFrame, keyCol: String, orderCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol))
-    docs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
-
   /** `localCheckpoint(true)` `df` and read the aggregate `metrics` off the
     * SAME job through an `Observation` — an iterative loop's per-round
     * convergence signature (or a census count) then costs no query of its
@@ -923,8 +915,9 @@ object Dedup {
     // merged is TINY (one row per cut island) but fans out to four
     // consumers (gaps/tails/stats/stitch) — without lineage truncation
     // each would re-run the full fingerprint scan (same discipline as
-    // the IVF centroids; the PlanAudit digest showed the duplicated
-    // Generate→Window chains before this checkpoint)
+    // the IVF centroids; a plan dump showed the duplicated
+    // Generate→Window chains before this checkpoint, and q102's
+    // `plans/` digest pins the shape after it)
     val merged = spans
       .withColumn("mpe",
         max(col("end")).over(wOrd.rowsBetween(Window.unboundedPreceding, -1)))

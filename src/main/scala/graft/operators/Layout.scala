@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Data-layout operators for scan pruning at rest — the write-time half of
-  * the 100 TB story. A table range-partitioned on a Z-order (Morton) curve
-  * over its two hottest filter columns gives every file a tight min/max
-  * envelope on BOTH columns, so parquet row-group and file skipping work
-  * for either predicate (the Delta/Iceberg `OPTIMIZE ZORDER` technique).
+/** The Z-order (Morton) curve index behind scan pruning at rest. A table
+  * range-partitioned on it over its two hottest filter columns gives every
+  * file a tight min/max envelope on BOTH columns, so parquet row-group and
+  * file skipping work for either predicate (the Delta/Iceberg
+  * `OPTIMIZE ZORDER` technique).
   *
   * The z-value is pure integer bit-interleaving — exact on any engine, no
   * UDF: bit i of a and bit i of b land at positions 2i and 2i+1.
@@ -23,24 +23,5 @@ object Layout {
       val bi = shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1)
       ai + bi
     }.reduce(_ + _).cast("long")
-  }
-
-  /** Write `df` z-ordered on (a, b): range-partition by z-value into
-    * `numFiles` buckets, sort within each, drop the helper column. Range
-    * partitioning gives globally disjoint z-ranges per file — each file's
-    * (a, b) min/max envelope is a small curve segment, which is what makes
-    * file skipping effective for filters on either column. */
-  def writeZOrdered(
-      df: DataFrame,
-      path: String,
-      aCol: String,
-      bCol: String,
-      numFiles: Int = 32,
-      bits: Int = 16): Unit = {
-    df.withColumn("__z", zValue(col(aCol), col(bCol), bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 }

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with a typed metadata struct; decode / feature-extract
@@ -18,14 +17,6 @@ import org.apache.spark.sql.types._
   * decode boundary with the same schema/null contract.
   */
 object Multimodal {
-
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType, nullable = true),
-      StructField("n_bytes", LongType, nullable = true),
-      StructField("source", StringType, nullable = true))), nullable = true)))
 
   /** Wrap a text corpus as a media table: payload = utf8 bytes. Stands in
     * for `spark.read.format("binaryFile")` at test scale. */

@@ -143,9 +143,9 @@ object TextOps {
     * only the bigram histogram explodes, and both its groupBys partial-
     * aggregate map-side, so the exchange carries |distinct (doc,bigram)|
     * rows, not the token stream. The final doc_id join broadcasts the
-    * per-doc signal table while it fits (PlanAudit shows BHJ at test
-    * sizes) and degrades to a co-partitioned shuffle join at corpus
-    * scale — both shapes reuse the second groupBy's partitioning.
+    * per-doc signal table while it fits (its `plans/` digest shows BHJ
+    * at bench sizes) and degrades to a co-partitioned shuffle join at
+    * corpus scale — both shapes reuse the second groupBy's partitioning.
     */
   def repetitionSignals(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val toks = array_remove(split(col(textCol), " "), "")

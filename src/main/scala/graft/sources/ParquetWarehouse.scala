@@ -526,20 +526,15 @@ object ParquetWarehouse {
     * until its holder releases it or an operator removes it by hand (see
     * the lock's doc).
     *
-    * `evolveSchema = true` is the incremental-pipeline schema-evolution
-    * mode: a run that ADDS a column (or a table that has columns a
-    * re-run no longer produces) merges by name with the missing side
-    * null-filled — the same additive evolution a MERGE-capable table
-    * format performs. The default stays strict: silent schema drift in
-    * a warehouse table is usually a bug, so mismatches throw. */
+    * The schema is strict: `updates` must carry exactly the table's
+    * columns (matched by name, in any order), or the merge throws an
+    * `AnalysisException` and the table is left as it was — silent schema
+    * drift in a warehouse table is usually a bug. */
   def upsert(
       updates: DataFrame,
       path: String,
-      keys: Seq[String],
-      evolveSchema: Boolean = false): Unit = {
-    // evolution may null-fill VALUE columns, never keys: a missing key
-    // column would null-group every update row and the last-wins window
-    // would silently collapse them to one surviving row
+      keys: Seq[String]): Unit = {
+    // a missing merge key is named here, before anything is read
     require(keys.forall(updates.columns.contains),
       s"updates must carry every merge key; missing: " +
         keys.filterNot(updates.columns.contains).mkString(", "))
@@ -547,7 +542,7 @@ object ParquetWarehouse {
     val spark = updates.sparkSession
     val destPath = new org.apache.hadoop.fs.Path(path)
     val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-    withWriterLock(fs, path) { upsertLocked(updates, path, keys, evolveSchema, spark, destPath, fs) }
+    withWriterLock(fs, path) { upsertLocked(updates, path, keys, spark, destPath, fs) }
   }
 
   /** `__src` and `__rn` are lastWins' internal batch marker and window
@@ -573,7 +568,6 @@ object ParquetWarehouse {
       updates: DataFrame,
       path: String,
       keys: Seq[String],
-      evolveSchema: Boolean,
       spark: SparkSession,
       destPath: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
@@ -583,17 +577,14 @@ object ParquetWarehouse {
     val merged = readIfExists(spark, path) match {
       case None => lastWins(updates, keys)
       case Some(existing) =>
-        // the guard is symmetric: an EXISTING table missing a key column
-        // would have that key null-filled by the evolving union, and the
-        // last-wins window would then collapse all history rows into one
-        // survivor per null-key group — same failure mode, other side
+        // the guard is symmetric: an EXISTING table missing a merge key
+        // is named too, not left to the union's column-mismatch error
         require(keys.forall(existing.columns.contains),
           s"existing table at $path is missing merge key(s): " +
             keys.filterNot(existing.columns.contains).mkString(", "))
         lastWins(
           existing.withColumn("__src", lit(0))
-            .unionByName(updates.withColumn("__src", lit(1)),
-              allowMissingColumns = evolveSchema),
+            .unionByName(updates.withColumn("__src", lit(1))),
           keys)
     }
     // write-then-swap, never overwrite-in-place: the old table stays
@@ -727,14 +718,10 @@ object ParquetWarehouse {
     *     re-infer as ints do not) — the dir name IS the value's string
     *     form.
     *   - same single-writer-per-path contract as [[upsert]].
-    *   - `evolveSchema = true` evolves only the TOUCHED partitions'
-    *     files (untouched partitions are, by design, not rewritten), so
-    *     the table's partitions carry mixed schemas until every
-    *     partition has been merged once. Readers must use
-    *     `option("mergeSchema", true)` (or a declared schema) to see the
-    *     evolved column table-wide — a plain read samples one footer and
-    *     can silently miss it. [[upsert]]'s full rewrite keeps schemas
-    *     uniform; that uniformity is part of what its O(table) I/O buys.
+    *   - the same strict schema as [[upsert]], held table-wide: a batch
+    *     whose touched partitions are all new is checked against one
+    *     existing partition's schema, so a plain read (which samples one
+    *     footer) never meets partitions of mixed schemas.
     *
     * A crash between a partition's two renames leaves that one partition
     * missing with its backup in `.__pold-*`; every other partition —
@@ -744,8 +731,7 @@ object ParquetWarehouse {
       updates: DataFrame,
       path: String,
       keys: Seq[String],
-      partitionCol: String,
-      evolveSchema: Boolean = false): Unit = {
+      partitionCol: String): Unit = {
     require(keys.contains(partitionCol),
       s"partitionCol '$partitionCol' must be part of the merge keys ${keys.mkString("(", ", ", ")")} — " +
         "partition-scoped merge treats the partition value as row identity")
@@ -757,7 +743,7 @@ object ParquetWarehouse {
     val destPath = new org.apache.hadoop.fs.Path(path)
     val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
     withWriterLock(fs, path) {
-      upsertPartitionedLocked(updates, path, keys, partitionCol, evolveSchema, spark, destPath, fs)
+      upsertPartitionedLocked(updates, path, keys, partitionCol, spark, destPath, fs)
     }
   }
 
@@ -772,7 +758,6 @@ object ParquetWarehouse {
       path: String,
       keys: Seq[String],
       partitionCol: String,
-      evolveSchema: Boolean,
       spark: SparkSession,
       destPath: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
@@ -826,34 +811,37 @@ object ParquetWarehouse {
     val affectedDirs = affected
       .map(v => new org.apache.hadoop.fs.Path(destPath, partitionCol + "=" + esc(v)))
       .filter(fs.exists)
-    val existingAffected =
-      if (affectedDirs.isEmpty) None
-      else {
-        val t = withPartitionInferenceOff(spark) { s =>
-          // list the affected dirs on the driver, which has just stat-ed
-          // each of them: above 32 paths Spark would otherwise list them
-          // through a distributed job (0.3-0.43 s for ~45 dirs, 4 cores)
-          s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
-          s.read.option("basePath", path)
-            .parquet(affectedDirs.map(_.toString).toSeq: _*)
-        }
-        require(t.columns.contains(partitionCol),
-          s"existing table at $path has no partition column '$partitionCol' — " +
-            "upsertPartitioned requires the hive-partitioned layout its create branch produces")
-        require(keys.filterNot(_ == partitionCol).forall(t.columns.contains),
-          s"existing table at $path is missing merge key(s): " +
-            keys.filterNot(k => k == partitionCol || t.columns.contains(k)).mkString(", "))
-        Some(t.withColumn(partitionCol, col(partitionCol).cast(pcType)))
+    def readPartitions(dirs: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
+      val t = withPartitionInferenceOff(spark) { s =>
+        // list the affected dirs on the driver, which has just stat-ed
+        // each of them: above 32 paths Spark would otherwise list them
+        // through a distributed job (0.3-0.43 s for ~45 dirs, 4 cores)
+        s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
+        s.read.option("basePath", path).parquet(dirs.map(_.toString): _*)
       }
-    val merged = existingAffected match {
-      case None => lastWins(updates, keys) // every touched partition is new
-      case Some(existing) =>
-        lastWins(
-          existing.withColumn("__src", lit(0))
-            .unionByName(updates.withColumn("__src", lit(1)),
-              allowMissingColumns = evolveSchema),
-          keys)
+      require(t.columns.contains(partitionCol),
+        s"existing table at $path has no partition column '$partitionCol' — " +
+          "upsertPartitioned requires the hive-partitioned layout its create branch produces")
+      require(keys.filterNot(_ == partitionCol).forall(t.columns.contains),
+        s"existing table at $path is missing merge key(s): " +
+          keys.filterNot(k => k == partitionCol || t.columns.contains(k)).mkString(", "))
+      t.withColumn(partitionCol, col(partitionCol).cast(pcType))
     }
+    val merged =
+      if (affectedDirs.nonEmpty)
+        lastWins(
+          readPartitions(affectedDirs.toSeq).withColumn("__src", lit(0))
+            .unionByName(updates.withColumn("__src", lit(1))),
+          keys)
+      else {
+        // every touched partition is new: hold the batch to one existing
+        // partition's schema with the merge's own strict union (analysed,
+        // never run), so a mismatch throws before anything is staged
+        fs.listStatus(destPath)
+          .find(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
+          .foreach(p => readPartitions(Seq(p.getPath)).unionByName(updates))
+        lastWins(updates, keys)
+      }
     // the staged write re-renders each partition value through Spark's
     // own dir-name formatting; handing the swap the dir names DISCOVERY
     // used makes any spelling divergence (a type whose Cast string form
@@ -1072,8 +1060,8 @@ object ParquetWarehouse {
     * N-partition frame writes N×buckets small files; (b) Spark only trusts
     * the `sortBy` metadata (and can skip the SMJ sort) when a bucket is a
     * single file. `location` makes the table EXTERNAL at that path —
-    * callers that run outside a configured warehouse (Verify/Bench/
-    * PlanAudit sessions) pass a scratch dir instead of polluting
+    * callers that run outside a configured warehouse (Verify/Bench
+    * sessions) pass a scratch dir instead of polluting
     * `$PWD/spark-warehouse`. */
   def writeBucketed(
       df: DataFrame,

@@ -13,11 +13,10 @@ import org.apache.spark.sql.types._
   * Why this exists: the reference's warehouse IS a SQLite file —
   * `main.py:43-47` / `src/database/db_utils.py:29-65` open `challenge.db`
   * with the sqlite3 module and read `session_sources` / `conversions` /
-  * `session_costs` into pandas. The drop-in JDBC path (`JdbcWarehouse`)
-  * needs the sqlite-jdbc driver, which this zero-egress build cannot
-  * fetch — so the page-level reader closes the last reference-surface gap:
-  * a user holding the reference's `.db` points `SQLiteWarehouse.readTable`
-  * at it and gets a DataFrame with no driver jar at all.
+  * `session_costs` into pandas. Spark's JDBC source would need the
+  * sqlite-jdbc driver jar; the page-level reader needs none: a user
+  * holding the reference's `.db` points `SQLiteWarehouse.readTable` at it
+  * and gets a DataFrame.
   *
   * Supported (everything the reference's warehouse uses, and then some):
   * UTF-8 databases, any page size, rowid table b-trees (interior + leaf),
@@ -32,10 +31,12 @@ import org.apache.spark.sql.types._
   * the data bytes — are decoded in parallel, one task per leaf batch, each
   * task reading its pages (plus any overflow chains) straight from the
   * file. On a cluster the file must sit on storage every executor mounts
-  * (the same contract as any single-file source); the intended 100 TB
-  * pattern is `migrate`: land the operational store into parquet once and
-  * run everything against the columnar copy — SQLite is an ingestion edge,
-  * not a query engine.
+  * (the same contract as any single-file source); the intended pattern is
+  * to land the operational store into parquet once
+  * (`MaefMain.stageSqliteWarehouse` for the MAEF tables, `readTable` +
+  * `ParquetWarehouse.writeVerified` for any other) and run everything
+  * against the columnar copy — SQLite is an ingestion edge, not a query
+  * engine.
   */
 object SQLiteWarehouse {
 
@@ -359,12 +360,6 @@ object SQLiteWarehouse {
     }
   }
 
-  /** Spark schema the reader will produce for `table`. */
-  def tableSchema(path: String, table: String): StructType = {
-    val m = findTable(path, table)
-    StructType(parseColumns(m.sql).map(c => StructField(c.name, c.spark, nullable = true)))
-  }
-
   private def findTable(path: String, table: String): MasterRow = {
     val m = master(path).find(m => m.tpe == "table" && m.name == table).getOrElse(
       throw new IllegalArgumentException(
@@ -439,15 +434,6 @@ object SQLiteWarehouse {
     }
     spark.createDataFrame(rdd, schema)
   }
-
-  /** S3/S4 over a SQLite file: copy each table into the parquet warehouse
-    * and verify row counts — the reference's source→target copy + COUNT(*)
-    * check (db_utils.py:67-102) with the source read page-level, once. */
-  def migrate(spark: SparkSession, dbPath: String, tables: Seq[String],
-              targetDir: String): Map[String, Long] =
-    tables.map { t =>
-      t -> ParquetWarehouse.writeVerified(readTable(spark, dbPath, t), s"$targetDir/$t")
-    }.toMap
 
   // ---------- minimal writer (single-table fixtures / round-trips) ----------
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.TextOps
 
 /** Streaming exact dedup — the continuous-ingest twin of the batch
-  * first-wins dedup (operators/Dedup.exactDedup; reference analogue:
+  * first-wins dedup (maef.Loader.validateAndDedup's L2 step; reference analogue:
   * src/attribution/loader.py first-wins keep, SURVEY.md §2.5 L2).
   *
   * A training-data ingest pipeline dedups documents as they arrive, not in

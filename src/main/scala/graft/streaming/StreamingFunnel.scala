@@ -11,8 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * pipeline ingests events continuously, so the engine ships the streaming
   * surface as a first-class module:
   *
-  *   - `windowedChannelStats`: watermarked event-time tumbling-window
-  *     rollup (the streaming A2);
+  *   - `runningCounters`: update-mode unwindowed per-key counters;
   *   - `Sessionizer`: gap-based sessionization with explicit per-user
   *     state via `flatMapGroupsWithState` — emits a session exactly once,
   *     when its closing gap is observed. Matches the batch
@@ -23,19 +22,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batch→stream port unchanged.
   */
 object StreamingFunnel {
-
-  /** Watermarked windowed rollup — late events beyond `watermark` are
-    * dropped, window results finalize once the watermark passes. */
-  def windowedChannelStats(
-      events: DataFrame,
-      windowLength: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLength), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value")).as("total_value"))
 
   /** Update-mode running counters — the seventh streaming shape:
     * UNWINDOWED global per-key aggregation. No watermark, no window —
@@ -71,22 +57,6 @@ object StreamingFunnel {
     * would round toward zero, off by a full second. */
   private[streaming] def micros(t: Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Streaming journey construction: conversions arrive as a stream and
-    * join the (slowly-changing, periodically reloaded) static session
-    * history — a stream-static inner equi join on user_id with the J1
-    * range residual, exactly the batch operator's shape. Each conversion
-    * micro-batch emits its full journey rows once; downstream windowed
-    * attribution then runs per conversion_id within the batch. */
-  def streamingJourneys(
-      conversionStream: DataFrame, // streaming: conv_id, user_id, conv_ts
-      staticSessions: DataFrame    // static: session_id, user_id, session_ts, ...
-  ): DataFrame =
-    conversionStream.join(staticSessions, Seq("user_id"))
-      .filter(col("session_ts") < col("conv_ts"))
-      .select(
-        col("conv_id").as("conversion_id"), col("session_id"),
-        col("user_id"), col("session_ts"), col("conv_ts"))
 
   case class OpenSession(sessionNum: Long, startUs: Long, lastUs: Long,
       nEvents: Long, totalValue: Double)

@@ -60,79 +60,6 @@ class DateWindowSpec extends SparkSpec {
   }
 }
 
-class AttributionApiConnectorSpec extends SparkSpec {
-  import spark.implicits._
-  import AttributionApiConnector._
-
-  test("chunk payloads serialize each chunk's journey entries as one JSON array") {
-    val chunked = Seq(
-      (0, "c1", "s1", "2023-08-01 10:00:00", "Direct", 1, 0, 0, 0),
-      (0, "c1", "s2", "2023-08-01 11:00:00", "Email", 0, 1, 0, 0),
-      (1, "c2", "s3", "2023-08-02 09:00:00", "Direct", 1, 0, 0, 0))
-      .toDF("chunk_id", "conversion_id", "session_id", "timestamp", "channel_label",
-        "holder_engagement", "closer_engagement", "conversion", "impression_interaction")
-    val payloads = chunkPayloads(chunked)
-    assert(payloads.map(_.chunkId) === Seq(0, 1))
-    assert(payloads.head.body.startsWith("[{"))
-    assert(payloads.head.body.contains("\"conversion_id\":\"c1\""))
-    assert(payloads(1).body.contains("\"session_id\":\"s3\""))
-  }
-
-  test("chunk payloads are byte-identical across partitionings (journey order inside each chunk)") {
-    // collect_list order is shuffle-arrival order — unsorted, two runs
-    // over the same data could send byte-different request bodies
-    val rows = (1 to 40).map(i => (i % 3, s"c${i % 5}", s"s$i",
-      f"2023-08-01 ${i % 24}%02d:00:00", "Direct", 1, 0, 0, 0))
-    val df = rows.toDF("chunk_id", "conversion_id", "session_id", "timestamp",
-      "channel_label", "holder_engagement", "closer_engagement", "conversion",
-      "impression_interaction")
-    val a = chunkPayloads(df.repartition(1)).map(_.body)
-    val b = chunkPayloads(df.repartition(13)).map(_.body)
-    assert(a === b)
-    // and entries ride in journey order: conversion, then time, then session
-    assert(a.head.indexOf("\"c0\"") >= 0)
-  }
-
-  test("error histogram: a NULL statusCode with no payload is invalid_structure, not ok") {
-    val envelopes = spark.read.schema(MaefModel.ResponseEnvelope)
-      .json(Seq(
-        """{"statusCode": 200, "value": [{"conversion_id":"c1","session_id":"s1","ihc":1.0}]}""",
-        """{"statusCode": null, "value": null, "data": null, "results": null}""",
-        """{"statusCode": 500, "data": null, "results": null}""").toDS())
-    val got = Loader.errorHistogram(envelopes)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got.getOrElse("invalid_structure", 0L) === 2L) // the null AND the 500
-    assert(got.getOrElse("ok", 0L) === 1L)
-  }
-
-  test("delivery retries with exponential backoff and paces successful chunks") {
-    val sleeps = Seq.newBuilder[Long]
-    var calls = 0
-    val transport: ChunkPayload => String = { p =>
-      calls += 1
-      // chunk 0 fails twice then succeeds; chunk 1 succeeds immediately
-      if (p.chunkId == 0 && calls < 3) throw new RuntimeException("boom")
-      s"ok-${p.chunkId}"
-    }
-    val out = deliver(
-      Seq(ChunkPayload(0, "[]"), ChunkPayload(1, "[]")),
-      transport, Policy(), sleeps += _)
-    assert(out === Seq("ok-0", "ok-1"))
-    // 2^1, 2^2 backoff for the failures, then 1s pacing after chunk 0
-    assert(sleeps.result() === Seq(2000L, 4000L, 1000L))
-  }
-
-  test("delivery drops a chunk after max attempts but fails only if nothing succeeded") {
-    val bad: ChunkPayload => String = p =>
-      if (p.chunkId == 0) throw new RuntimeException("down") else "ok-1"
-    val out = deliver(Seq(ChunkPayload(0, "[]"), ChunkPayload(1, "[]")), bad, Policy(), _ => ())
-    assert(out === Seq("ok-1"))
-    intercept[IllegalArgumentException] {
-      deliver(Seq(ChunkPayload(0, "[]")), bad, Policy(), _ => ())
-    }
-  }
-}
-
 class ParquetWarehouseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -203,31 +130,17 @@ class ParquetWarehouseSpec extends SparkSpec {
     }
   }
 
-  test("upsert schema evolution: an added column null-fills history; strict mode throws") {
+  test("upsert schema is strict: an added column throws") {
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert_ev").toString + "/t"
     ParquetWarehouse.upsert(
       Seq(("c1", 0.5), ("c2", 0.7)).toDF("conv_id", "ihc"),
       dir, Seq("conv_id"))
     val v2 = Seq(("c1", 0.9, "modelB"), ("c3", 0.1, "modelB"))
       .toDF("conv_id", "ihc", "model")
-    // strict default: silent drift is a bug, the mismatch must throw
+    // silent drift is a bug, the mismatch must throw
     intercept[org.apache.spark.sql.AnalysisException] {
       ParquetWarehouse.upsert(v2, dir, Seq("conv_id"))
     }
-    ParquetWarehouse.upsert(v2, dir, Seq("conv_id"), evolveSchema = true)
-    val got = spark.read.parquet(dir)
-      .as[(String, Double, Option[String])].collect().toSet
-    assert(got === Set(
-      ("c1", 0.9, Some("modelB")), // replaced, carries the new column
-      ("c2", 0.7, None),           // untouched history null-fills it
-      ("c3", 0.1, Some("modelB"))))
-    // a later run missing the evolved column still merges when evolving
-    ParquetWarehouse.upsert(
-      Seq(("c2", 0.8)).toDF("conv_id", "ihc"), dir, Seq("conv_id"), evolveSchema = true)
-    val got2 = spark.read.parquet(dir)
-      .as[(String, Double, Option[String])].collect().toSet
-    assert(got2 === Set(
-      ("c1", 0.9, Some("modelB")), ("c2", 0.8, None), ("c3", 0.1, Some("modelB"))))
   }
 
   test("upsert survivor for intra-batch duplicate keys is partitioning-independent") {
@@ -351,7 +264,7 @@ class ParquetWarehouseSpec extends SparkSpec {
     Seq((0.5, "m")).toDF("ihc", "model").write.parquet(dir)
     val up = Seq(("c1", 0.9, "m")).toDF("conv_id", "ihc", "model")
     val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsert(up, dir, Seq("conv_id"), evolveSchema = true)
+      ParquetWarehouse.upsert(up, dir, Seq("conv_id"))
     }
     assert(e.getMessage.contains("conv_id"))
   }
@@ -464,49 +377,6 @@ class ParquetWarehouseSpec extends SparkSpec {
       assert(files.length === 1, s"$d has ${files.length} files: ${files.mkString(",")}")
     }
     assert(spark.read.parquet(dir).count() === 600)
-  }
-}
-
-class JdbcWarehouseSpec extends SparkSpec {
-  import graft.sources.JdbcWarehouse
-
-  // Embedded Derby as the JDBC fixture (it ships in Spark's jar dir; the
-  // sqlite path is the same code with url jdbc:sqlite:… + its driver).
-  private lazy val dbUrl: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jdbc").toString
-    val url = s"jdbc:derby:$dir/wh;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE session_sources (session_id VARCHAR(32), channel_name VARCHAR(32), cost DOUBLE)")
-      val ins = conn.prepareStatement("INSERT INTO session_sources VALUES (?, ?, ?)")
-      for (i <- 1 to 100) {
-        ins.setString(1, s"s$i"); ins.setString(2, if (i % 2 == 0) "Direct" else "Email")
-        ins.setDouble(3, i * 1.5); ins.executeUpdate()
-      }
-      st.execute("CREATE TABLE conversions (conv_id INT, revenue DOUBLE)")
-      val ins2 = conn.prepareStatement("INSERT INTO conversions VALUES (?, ?)")
-      for (i <- 1 to 40) { ins2.setInt(1, i); ins2.setDouble(2, i * 10.0); ins2.executeUpdate() }
-    } finally conn.close()
-    url
-  }
-
-  test("JDBC read: full scan and range-partitioned parallel scan agree (S2 drop-in)") {
-    val whole = JdbcWarehouse.readTable(spark, dbUrl, "session_sources")
-    assert(whole.count() === 100)
-    assert(whole.columns.map(_.toLowerCase).toSet === Set("session_id", "channel_name", "cost"))
-    val par = JdbcWarehouse.readTable(
-      spark, dbUrl, "conversions", partition = Some(("conv_id", 1L, 40L, 4)))
-    assert(par.rdd.getNumPartitions === 4)
-    assert(par.agg(org.apache.spark.sql.functions.sum("revenue")).first().getDouble(0) === 8200.0)
-  }
-
-  test("migrate lands JDBC tables into parquet with verified counts (S3/S4)") {
-    val target = java.nio.file.Files.createTempDirectory("graft_jdbc_mig").toString
-    val counts = JdbcWarehouse.migrate(
-      spark, dbUrl, Seq("session_sources", "conversions"), target)
-    assert(counts === Map("session_sources" -> 100L, "conversions" -> 40L))
-    assert(spark.read.parquet(s"$target/conversions").count() === 40)
   }
 }
 
@@ -659,32 +529,53 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".__ptmp-*")).isEmpty)
   }
 
-  test("upsertPartitioned evolveSchema: touched partition carries the new column; mergeSchema sees it table-wide") {
+  test("upsertPartitioned schema is strict: an added column on a touched partition throws") {
     val dir = freshDir("graft_pup_evolve")
     ParquetWarehouse.upsertPartitioned(
       Seq(("2023-09-01", "ch1", 10.0), ("2023-09-02", "ch1", 30.0))
         .toDF("date", "channel", "spend"),
       dir, Seq("date", "channel"), "date")
-    // strict default: the added column must throw, like upsert
+    // the added column must throw, like upsert
     val v2 = Seq(("2023-09-01", "ch1", 11.0, "modelB"))
       .toDF("date", "channel", "spend", "model")
     intercept[org.apache.spark.sql.AnalysisException] {
       ParquetWarehouse.upsertPartitioned(v2, dir, Seq("date", "channel"), "date")
     }
-    ParquetWarehouse.upsertPartitioned(v2, dir, Seq("date", "channel"), "date",
-      evolveSchema = true)
-    // the documented mixed-schema contract: only the TOUCHED partition's
-    // files carry the column; a mergeSchema read sees it table-wide with
-    // untouched history null-filled
-    val all = spark.read.option("mergeSchema", "true").parquet(dir)
-      .select("date", "channel", "spend", "model")
-      .as[(String, String, Double, Option[String])].collect().toSet
-    assert(all === Set(
-      ("2023-09-01", "ch1", 11.0, Some("modelB")),
-      ("2023-09-02", "ch1", 30.0, None)))
-    // and the untouched partition's files really don't have the column
-    val untouched = spark.read.parquet(s"$dir/date=2023-09-02")
-    assert(!untouched.columns.contains("model"))
+  }
+
+  test("upsertPartitioned schema is strict on an all-new-partition batch too: nothing is staged") {
+    // with no touched partition on disk there is nothing to merge with;
+    // accepted, an added column would be invisible to a plain read (it
+    // samples one footer) and a missing one would land a partition
+    // without it, so the batch is held to an existing partition's schema
+    val dir = freshDir("graft_pup_strict_new")
+    val keys = Seq("date", "channel")
+    ParquetWarehouse.upsertPartitioned(
+      Seq(("2023-09-01", "ch1", 10.0), ("2023-09-02", "ch1", 30.0))
+        .toDF("date", "channel", "spend"),
+      dir, keys, "date")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def files(f: java.io.File): Set[(String, Long)] =
+      if (f.isDirectory) f.listFiles().toSet.flatMap(files)
+      else Set((f.getPath, f.lastModified()))
+    def rows: Set[String] = spark.read.parquet(dir).collect().map(_.toString).toSet
+    val (filesBefore, rowsBefore) = (files(new java.io.File(dir)), rows)
+    val extra = Seq(("2023-09-05", "ch1", 50.0, "modelB")).toDF("date", "channel", "spend", "model")
+    val missing = Seq(("2023-09-06", "ch1")).toDF("date", "channel")
+    for (bad <- Seq(extra, missing)) {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        ParquetWarehouse.upsertPartitioned(bad, dir, keys, "date")
+      }
+      assert(files(new java.io.File(dir)) === filesBefore, bad.columns.mkString(","))
+      assert(rows === rowsBefore, bad.columns.mkString(","))
+      assert(fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".__ptmp-*")).isEmpty)
+      assert(fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".__pold-*")).isEmpty)
+    }
+    // the refused calls released the writer lock: a same-schema batch lands
+    ParquetWarehouse.upsertPartitioned(
+      Seq(("2023-09-07", "ch1", 70.0)).toDF("date", "channel", "spend"), dir, keys, "date")
+    assert(spark.read.parquet(dir).count() === 3)
   }
 
   test("a failing CREATE-branch write leaves no torn table at the live path") {

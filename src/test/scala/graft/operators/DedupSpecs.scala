@@ -151,13 +151,6 @@ class DedupSpec extends SparkSpec {
     assert(exact === Set((1L, 2L)))
   }
 
-  test("exactDedup keeps exactly the first row per key") {
-    val df = Seq((1L, "k1", "x"), (2L, "k1", "y"), (3L, "k2", "z"))
-      .toDF("id", "key", "payload")
-    val kept = Dedup.exactDedup(df, "key", "id").select("id").as[Long].collect().toSet
-    assert(kept === Set(1L, 3L))
-  }
-
   private def labels(cc: DataFrame): Seq[(Long, Long)] =
     cc.as[(Long, Long)].collect().toSeq.sorted
 

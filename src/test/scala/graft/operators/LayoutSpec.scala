@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -17,27 +17,5 @@ class LayoutSpec extends SparkSpec {
     out.foreach { case (a, b, z) => assert(z === ref(a, b), s"z($a,$b)") }
     // locality sanity: neighbors in (a, b) are near on the curve
     assert(ref(2, 2) - ref(2, 1) < ref(2, 2) - 0)
-  }
-
-  test("writeZOrdered produces files with pairwise-disjoint z ranges (skippable layout)") {
-    val ev = Tables.events(spark, TinySf)
-      .select(col("event_id"),
-        col("user_id").bitwiseAND(lit(65535L)).as("a"),
-        dayofmonth(col("ts")).cast("long").as("b"))
-    val path = java.nio.file.Files.createTempDirectory("graft_zorder_test").toString + "/t"
-    Layout.writeZOrdered(ev, path, "a", "b", numFiles = 8)
-    val back = spark.read.parquet(path)
-    assert(back.count() === ev.count(), "z-ordered write must be lossless")
-    val ranges = back
-      .withColumn("z", Layout.zValue(col("a"), col("b")))
-      .withColumn("f", input_file_name())
-      .groupBy("f").agg(min("z").as("lo"), max("z").as("hi"))
-      .as[(String, Long, Long)].collect().sortBy(_._2)
-    assert(ranges.length > 1, "expected multiple files")
-    ranges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) =>
-        assert(hi1 <= lo2, s"overlapping z ranges: $hi1 > $lo2")
-      case _ =>
-    }
   }
 }

@@ -97,7 +97,7 @@ object CrossProcessLockChild {
               // the shared table (read-union-rewrite, crash-safe swap)
               ParquetWarehouse.upsertLocked(
                 Seq((childId * 100000L + i, s"c$childId-i$i")).toDF("k", "v"),
-                table, Seq("k"), evolveSchema = false, spark, destPath, fs)
+                table, Seq("k"), spark, destPath, fs)
               val tmp = Paths.get(ledgerDir, s"counter.tmp-$childId")
               Files.write(tmp, (v + 1).toString.getBytes("UTF-8"))
               Files.move(tmp, counterFile, StandardCopyOption.ATOMIC_MOVE,

@@ -215,7 +215,7 @@ class LockFaultInjectionSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       ParquetWarehouse.upsertLocked(
         Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"),
-        evolveSchema = false, spark, destPath, stageAsideRefuses)
+        spark, destPath, stageAsideRefuses)
     }
     assert(e.getMessage.contains("stage"), s"got: ${e.getMessage}")
     assert(rows(dir) === Set(("c1", "a")), "the live table must be untouched")
@@ -243,7 +243,7 @@ class LockFaultInjectionSpec extends SparkSpec {
     val e = intercept[java.io.IOException] {
       ParquetWarehouse.upsertLocked(
         Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"),
-        evolveSchema = false, spark, destPath, secondRenameThrows)
+        spark, destPath, secondRenameThrows)
     }
     assert(e.getMessage.contains("injected"))
     assert(fs.exists(destPath), "the catch must restore dest from .__old before rethrowing")
@@ -274,7 +274,7 @@ class LockFaultInjectionSpec extends SparkSpec {
     val e = intercept[java.io.IOException] {
       ParquetWarehouse.upsertLocked(
         Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"),
-        evolveSchema = false, spark, destPath, wedged)
+        spark, destPath, wedged)
     }
     assert(e.getMessage.contains("injected"))
     assert(!fs.exists(destPath) && fs.exists(new Path(dir + ".__old")),

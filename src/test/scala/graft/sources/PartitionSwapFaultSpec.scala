@@ -74,7 +74,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "A")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), stageAsideRefuses)
+        spark, new Path(dir), stageAsideRefuses)
     }
     assert(e.getMessage.contains("stage partition"), s"got: ${e.getMessage}")
     assert(rows(dir) === Set((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b")),
@@ -102,7 +102,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val e = intercept[java.io.IOException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "A")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), publishThrows)
+        spark, new Path(dir), publishThrows)
     }
     assert(e.getMessage.contains("injected"))
     assert(fs.exists(new Path(dir + "/date=2024-01-01")),
@@ -133,7 +133,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val e = intercept[java.io.IOException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "A")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), wedged)
+        spark, new Path(dir), wedged)
     }
     assert(e.getMessage.contains("injected"))
     assert(!fs.exists(new Path(dir + "/date=2024-01-01")) &&
@@ -160,7 +160,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "a")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), publishRefuses)
+        spark, new Path(dir), publishRefuses)
     }
     assert(e.getMessage.contains("publish"), s"got: ${e.getMessage}")
     assert(!fs.exists(new Path(dir)),
@@ -185,7 +185,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     }
     ParquetWarehouse.upsertPartitionedLocked(
       df((1L, "2024-01-01", "A")), dir, Seq("id", "date"), "date",
-      evolveSchema = false, spark, new Path(dir), ptmpGlobThrows)
+      spark, new Path(dir), ptmpGlobThrows)
     assert(rows(dir) === Set((1L, "2024-01-01", "A"), (2L, "2024-01-02", "b")),
       "the merge must complete despite the throwing optional-cleanup glob")
     // the .__pold BACKUP glob is correctness-critical: if it faulted and
@@ -201,7 +201,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val e = intercept[java.io.IOException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "B")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), poldGlobThrows)
+        spark, new Path(dir), poldGlobThrows)
     }
     assert(e.getMessage.contains("injected"))
     assert(rows(dir) === Set((1L, "2024-01-01", "A"), (2L, "2024-01-02", "b")),
@@ -218,7 +218,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     intercept[java.io.FileNotFoundException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "C")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), poldGlobFnf)
+        spark, new Path(dir), poldGlobFnf)
     }
     assert(rows(dir) === Set((1L, "2024-01-01", "A"), (2L, "2024-01-02", "b")))
     // ... while a first-ever CREATE whose connector surfaces the missing
@@ -226,7 +226,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val freshTable = freshDir("graft_psf_fnf_create")
     ParquetWarehouse.upsertPartitionedLocked(
       df((1L, "2024-01-01", "a")), freshTable, Seq("id", "date"), "date",
-      evolveSchema = false, spark, new Path(freshTable),
+      spark, new Path(freshTable),
       new FilterFileSystem(fsFor(freshTable)) {
         override def globStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
           if (p.toString.contains(".__pold-"))
@@ -253,7 +253,7 @@ class PartitionSwapFaultSpec extends SparkSpec {
     val loud = intercept[java.io.FileNotFoundException] {
       ParquetWarehouse.upsertPartitionedLocked(
         df((1L, "2024-01-01", "D")), dir, Seq("id", "date"), "date",
-        evolveSchema = false, spark, new Path(dir), probeFaults)
+        spark, new Path(dir), probeFaults)
     }
     assert(loud.getSuppressed.exists(_.getMessage.contains("probe fault")),
       "unverifiable presence rides the rethrow as suppressed")

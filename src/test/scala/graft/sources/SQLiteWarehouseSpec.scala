@@ -130,7 +130,7 @@ class SQLiteWarehouseSpec extends SparkSpec {
   }
 
   test("sqlite: schema from CREATE TABLE via affinity rules") {
-    assert(SQLiteWarehouse.tableSchema(db, "conversions") === StructType(Seq(
+    assert(SQLiteWarehouse.readTable(spark, db, "conversions").schema === StructType(Seq(
       StructField("conv_id", StringType), StructField("user_id", StringType),
       StructField("conv_date", StringType), StructField("conv_time", StringType),
       StructField("revenue", DoubleType))))
@@ -189,8 +189,9 @@ class SQLiteWarehouseSpec extends SparkSpec {
 
   test("sqlite: migrate lands tables in parquet with verified counts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sqlite_migrate").toString
-    val counts = SQLiteWarehouse.migrate(spark, db,
-      Seq("session_sources", "conversions", "session_costs"), dir)
+    val staged = graft.maef.MaefMain.stageSqliteWarehouse(spark, db, dir)
+    val counts = Seq("session_sources", "conversions", "session_costs")
+      .map(t => t -> spark.read.parquet(s"$staged/$t").count()).toMap
     assert(counts === Map("session_sources" -> 3000L, "conversions" -> 4L, "session_costs" -> 3L))
     assert(spark.read.parquet(s"$dir/session_sources").count() === 3000L)
   }

@@ -197,33 +197,6 @@ class StreamingFunnelSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-static journey join emits each conversion's prior sessions once") {
-    implicit val sqlCtx = spark.sqlContext
-    val sessions = Seq(
-      (10L, 7L, ts("2024-01-01 09:00:00")),
-      (11L, 7L, ts("2024-01-01 11:00:00")), // after the conversion → excluded
-      (12L, 8L, ts("2024-01-01 09:30:00")))
-      .toDF("session_id", "user_id", "session_ts")
-    val convs = MemoryStream[(Long, Long, Timestamp)]
-    val journeys = StreamingFunnel.streamingJourneys(
-      convs.toDF().toDF("conv_id", "user_id", "conv_ts"), sessions)
-    val q = journeys.writeStream
-      .format("memory").queryName("stream_journeys")
-      .outputMode("append").start()
-    try {
-      convs.addData((100L, 7L, ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("stream_journeys")
-        .select("conversion_id", "session_id").as[(Long, Long)].collect().toSet
-      assert(got === Set((100L, 10L))) // only user 7's prior session
-      convs.addData((101L, 8L, ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      val all = spark.table("stream_journeys")
-        .select("conversion_id", "session_id").as[(Long, Long)].collect().toSet
-      assert(all === Set((100L, 10L), (101L, 12L)))
-    } finally q.stop()
-  }
-
   test("streaming attribution equals batch Attribution.ihc bit-for-bit") {
     implicit val sqlCtx = spark.sqlContext
     val events = Seq(
@@ -355,31 +328,6 @@ class StreamingFunnelSpec extends SparkSpec {
       new StreamingAttribution.Attributor(flushWatermark = Some("10 minutes"))
     }
     assert(e.getMessage.contains("lookback"))
-  }
-
-  test("watermarked windowed rollup finalizes windows past the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val agg = StreamingFunnel.windowedChannelStats(
-      input.toDF(), windowLength = "5 minutes", watermark = "1 minute")
-    val q = agg.writeStream
-      .format("memory").queryName("windowed_stats")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        Event(1L, ts("2024-01-01 10:00:10"), 7L, "view", 1.0),
-        Event(2L, ts("2024-01-01 10:02:00"), 8L, "view", 2.0),
-        Event(3L, ts("2024-01-01 10:03:00"), 7L, "click", 4.0))
-      q.processAllAvailable()
-      // advance event time far past the watermark to finalize the window
-      input.addData(Event(9L, ts("2024-01-01 11:00:00"), 9L, "view", 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("windowed_stats")
-        .select(col("event_type"), col("n_events"), col("total_value"))
-        .as[(String, Long, Double)].collect().toSet
-      assert(rows.contains(("view", 2L, 3.0)))
-      assert(rows.contains(("click", 1L, 4.0)))
-    } finally q.stop()
   }
 
   test("q34 file-stream attribution equals batch q03 on sf0.001") {

@@ -1,21 +1,24 @@
 #!/usr/bin/env bash
-# One-command verify gate — runs the FULL recipe and fails loudly on any
-# stage, so no commit ships on a partial check:
+# One-command verify gate — runs the FULL recipe, reports every stage and
+# fails loudly if any stage failed, so no commit ships on a partial check:
 #
 #   0. tools/leakcopy_check.py (leak + verbatim-reference-line scan over
 #      tracked files — mirrors the driver's LEAKCHECK/COPYCHECK sweeps
 #      so a leak can't sit in the repo between rounds)
 #   1. graft.Verify at sf0.01  (dump every query result + oracle SQL)
 #   2. graft.Bench plans-only  (dump formatted plans at the bench SF)
-#   3. sbt test                (all operator specs)
-#   4. tools/check.py          (DuckDB oracle compare; exits 1 on mismatch)
-#   5. tools/plan_digest.py + diff -rq vs plans/  (plan-shape regression)
+#   3. tools/check.py          (DuckDB oracle compare; exits 1 on mismatch)
+#   4. tools/plan_digest.py + diff -rq vs plans/  (plan-shape regression)
+#   5. sbt test                (all operator specs)
 #
-# Stages 1-3 share ONE sbt batch invocation (cold JVM start costs ~2 min;
-# sbt batch mode aborts the command list on the first failing command and
-# exits nonzero). The timed bench is NOT part of the gate — plan digests
-# catch shape regressions cheaply; run `runMain graft.Bench` separately
-# when numbers are the question.
+# Every stage runs whatever an earlier one returned: a failing stage is
+# recorded, and the script ends with the list of failed stages and exits
+# nonzero if there is one. Each sbt stage is its own batch invocation
+# (sbt batch mode drops the rest of a command list at the first failing
+# command), and `sbt test` runs last, so failing specs cannot hide the
+# oracle compare or the digest diff. The timed bench is NOT part of the
+# gate — plan digests catch shape regressions cheaply; run
+# `runMain graft.Bench` separately when numbers are the question.
 #
 # Usage: tools/verify_all.sh            (from anywhere; cd's to the repo)
 #   env overrides: SF_SMALL, SF_BENCH, OUT, PLANS
@@ -30,25 +33,39 @@ DIGESTS=${DIGESTS:-/tmp/graft_plan_digests}
 rm -rf "$OUT" "$PLANS" "$DIGESTS"
 
 stage() { printf '\n== verify_all: %s ==\n' "$1"; }
+FAILED=()
+# run <name> <command...>: run one stage, record it if it fails
+run() {
+  local name=$1 rc=0
+  shift
+  stage "$name"
+  "$@" || rc=$?
+  if (( rc != 0 )); then
+    FAILED+=("$name (exit $rc)")
+    printf '== verify_all: FAILED: %s (exit %d) ==\n' "$name" "$rc"
+  fi
+}
 
-stage "leak/copy scan (tools/leakcopy_check.py)"
-python3 tools/leakcopy_check.py
+digest_diff() {
+  python3 tools/plan_digest.py "$PLANS" "$DIGESTS" &&
+  # -x r*: per-round optimization deliverables (plans/r21/... formatted
+  # before/after plans) live under plans/ but are not digests
+  diff -rq -x 'r[0-9]*' plans "$DIGESTS"
+}
 
-stage "Verify (sf=$SF_SMALL) + plan dump (sf=$SF_BENCH) + sbt test"
-sbt -batch \
+run "leak/copy scan (tools/leakcopy_check.py)" python3 tools/leakcopy_check.py
+
+run "Verify (sf=$SF_SMALL)" sbt -batch "runMain graft.Verify $SF_SMALL $OUT"
+
+run "plan dump (sf=$SF_BENCH)" sbt -batch \
   "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SF_BENCH\", \"SPARK_GRAFT_CPUS\" -> \"8\", \"SPARK_GRAFT_PLANS_ONLY\" -> \"1\", \"SPARK_GRAFT_EXPLAIN_DIR\" -> \"$PLANS\")" \
-  "runMain graft.Verify $SF_SMALL $OUT" \
-  "runMain graft.Bench" \
-  test
+  "runMain graft.Bench"
 
-stage "DuckDB oracle compare"
-python3 tools/check.py "$SF_SMALL" "$OUT"
+run "DuckDB oracle compare" python3 tools/check.py "$SF_SMALL" "$OUT"
 
-stage "plan digest diff vs plans/"
-python3 tools/plan_digest.py "$PLANS" "$DIGESTS"
-# -x r*: per-round optimization deliverables (plans/r21/... formatted
-# before/after plans) live under plans/ but are not digests
-diff -rq -x 'r[0-9]*' plans "$DIGESTS"
+run "plan digest diff vs plans/" digest_diff
+
+run "sbt test" sbt -batch test
 
 # Opt-in scaling-slope probe (r18 verdict #3): SLOPE_MULT=3 tools/verify_all.sh
 # Builds a referential-integrity-preserving mult-x copy of SF_BENCH
@@ -62,9 +79,8 @@ diff -rq -x 'r[0-9]*' plans "$DIGESTS"
 # cost ~25-30 min, too slow for the per-commit gate, but a regression
 # that turns a linear operator quadratic has no other gate until an
 # sf1.0 run is re-done by hand.
-if [[ -n "${SLOPE_MULT:-}" ]]; then
-  stage "scaling-slope probe (mult=$SLOPE_MULT)"
-  SLOPE_DIR=${SLOPE_DIR:-/tmp/graft_slope}
+slope_probe() {
+  local SLOPE_DIR=${SLOPE_DIR:-/tmp/graft_slope}
   rm -rf "$SLOPE_DIR"
   mkdir -p "$SLOPE_DIR"
   sbt -batch \
@@ -72,8 +88,16 @@ if [[ -n "${SLOPE_MULT:-}" ]]; then
     "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SF_BENCH\", \"SPARK_GRAFT_CPUS\" -> \"32\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/small.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/small_runs.json\")" \
     "runMain graft.Bench" \
     "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SLOPE_DIR/scaled\", \"SPARK_GRAFT_CPUS\" -> \"32\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/big.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/big_runs.json\")" \
-    "runMain graft.Bench"
+    "runMain graft.Bench" &&
   python3 tools/scaling_slope.py "$SLOPE_DIR/small.json" "$SLOPE_DIR/big.json" --gate "$SLOPE_MULT"
+}
+if [[ -n "${SLOPE_MULT:-}" ]]; then
+  run "scaling-slope probe (mult=$SLOPE_MULT)" slope_probe
 fi
 
+if (( ${#FAILED[@]} > 0 )); then
+  stage "FAILED STAGES (${#FAILED[@]})"
+  printf '  %s\n' "${FAILED[@]}"
+  exit 1
+fi
 stage "ALL STAGES GREEN"
