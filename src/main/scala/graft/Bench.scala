@@ -118,7 +118,7 @@ object Bench {
     val startNs = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startNs) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // non-numeric → default, ≤0 → 1: a bad env var must not crash the bench
     val iters = math.max(1, sys.env.get("SPARK_GRAFT_ITERS").flatMap(_.toIntOption).getOrElse(3))
     // Optional wall-clock budget (r19 verdict #1): when the suite will
@@ -139,12 +139,7 @@ object Bench {
       case o @ ("roundrobin" | "backtoback" | "both") => o
       case _ => "both"
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // SparkEntry.queries is a def that rebuilds the 103-entry ListMap —
     // materialize ONCE (r10 rebuilt it per (iteration, query) lookup)
     val qs = SparkEntry.queries.toSeq
@@ -326,7 +321,7 @@ object Bench {
         // under "total_rr"/"medians_roundrobin" would hand cross-round
         // tooling b2b numbers with rr labels (the two differ ~12-18%)
         val parts = Seq(
-          Some(s""""sf":${jsonStr(sfDir)},"iters":$effIters,"order":${jsonStr(order)},"cpus":${jsonStr(cpus)}"""),
+          Some(s""""sf":${jsonStr(sfDir)},"iters":$effIters,"order":${jsonStr(order)},"cpus":${jsonStr(cpus.toString)}"""),
           rrMedians.map(m => s""""total_rr":${fmt(totalOf(m))}"""),
           b2bMedians.map(m => s""""total_b2b":${fmt(totalOf(m))}"""),
           noopMedians.map(m => s""""total_noop":${fmt(totalOf(m))}"""),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-query measurement probe for optimization work — NOT part of the
   * driver contract. Times a selected subset of SparkEntry.queries through
@@ -8,24 +7,18 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: sbt "runMain graft.QueryProbe q30_redistribution,q97_incremental_upsert"
   *   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-  *        SPARK_GRAFT_CPUS   (default 32)
+  *        SPARK_GRAFT_CPUS   (default: the processor count, see graft.Session)
   *        SPARK_GRAFT_PROBE_ITERS (default 5)
   *        SPARK_GRAFT_PROBE_EXPLAIN_DIR (optional: write <name>.txt plans)
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.get("SPARK_GRAFT_PROBE_ITERS").flatMap(_.toIntOption).getOrElse(5)
     val wanted: Seq[String] =
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq
       else args(0).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val qs = SparkEntry.queries
     val missing = wanted.filterNot(qs.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")

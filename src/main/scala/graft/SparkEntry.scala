@@ -641,14 +641,14 @@ object SparkEntry {
 
     // MinHash+LSH near-dup, portable md5-derived hash family so the DuckDB
     // twin replays the ENTIRE sketch pipeline (signatures → bands →
-    // candidates → exact verify). xxhash64 stays the default fast path.
+    // candidates → exact verify).
     "q19_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshDedup(Tables.documents(s, dir), minJaccard = 0.8, portable = true)),
+      Dedup.minhashLshDedup(Tables.documents(s, dir), minJaccard = 0.8)),
 
     // SimHash near-dup pairs, portable 60-bit md5-derived signature
     // (oracle-checkable); quadrant pigeonhole still complete ≤ hamming 3.
     "q20_simhash" -> ((s, dir) =>
-      Dedup.simhashNearDups(Tables.documents(s, dir), maxHamming = 3, portable = true)),
+      Dedup.simhashNearDups(Tables.documents(s, dir), maxHamming = 3)),
 
     // Embedding-cosine near-dup pairs (rounded cosine ⇒ engine-stable).
     "q21_embed_neardup" -> ((s, dir) =>
@@ -2317,7 +2317,7 @@ object SparkEntry {
 
     // Full portable-MinHash-LSH replay: 60-bit md5 hash → mod-P seeded
     // family → per-band polynomial buckets → candidate pairs → exact
-    // Jaccard verify. Mirrors Dedup.minhashLshDedup(portable = true).
+    // Jaccard verify. Mirrors Dedup.minhashLshDedup.
     "q19_minhash_lsh" ->
       """WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sh AS (

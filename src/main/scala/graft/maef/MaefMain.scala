@@ -163,13 +163,7 @@ object MaefMain {
       explicit = if (args.length >= 4) Some((args(2), args(3))) else None,
       variables = sys.env.get,
       today = java.time.LocalDate.now()))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(sys.env.get("SPARK_MASTER"))
     try {
       val a = run(spark, args(0), args(1), window)
       println(s"pipeline complete: ${a.transformedRows} journey rows, " +

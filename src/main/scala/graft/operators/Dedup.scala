@@ -17,11 +17,12 @@ import graft.functions.VectorFunctions
   *     compare within buckets — the 100 TB path (sketches are ~k·8 bytes
   *     per doc regardless of doc size, and the band join shuffles sketches,
   *     not text);
-  *   - SimHash: 64-bit near-dup signature, hamming-bucket candidates;
+  *   - SimHash: 60-bit near-dup signature, hamming-bucket candidates;
   *   - embedding near-dup: cosine threshold over vector pairs.
   *
-  * All hashing is xxhash64 (Spark-native, codegen'd, deterministic across
-  * executors) except where the DuckDB oracle needs to reproduce it (md5).
+  * Hashing is xxhash64 (Spark-native, codegen'd, deterministic across
+  * executors) except in the MinHash/SimHash sketches, which hash with an
+  * md5-derived family the DuckDB oracle reproduces.
   */
 object Dedup {
 
@@ -499,9 +500,8 @@ object Dedup {
   /** Portable 60-bit hash both engines can compute: the first 15 hex chars
     * of md5, parsed base-16. Spark: `conv(substring(md5(x),1,15),16,10)`;
     * DuckDB: positional strpos/shift arithmetic over the same substring.
-    * Used by the `portable = true` sketch variants so the whole
-    * MinHash/SimHash pipeline is reproducible by the SQL oracle; the
-    * default sketches keep xxhash64 (codegen'd, no md5 cost). */
+    * The MinHash/SimHash sketches hash with it, so the whole pipeline is
+    * reproducible by the SQL oracle (q19, q20). */
   private[operators] def hex64(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
@@ -523,26 +523,20 @@ object Dedup {
     * form is also the 100 TB shape: map-side combine means only one
     * k-long row per doc ever shuffles.
     *
-    * `portable = false` (default): hash_i = xxhash64(i, s).
-    * `portable = true`: the md5-derived seeded family above, bit-identical
-    * to the DuckDB oracle (q19). */
+    * hash_i is the md5-derived seeded family above, bit-identical to the
+    * DuckDB oracle (q19). */
   def minhashSignatures(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       k: Int = 32,
-      n: Int = 3,
-      portable: Boolean = false): DataFrame = {
-    val sh = docs.select(
+      n: Int = 3): DataFrame = {
+    val hashed = docs.select(
       col(idCol).as("doc_id"),
       explode(TextOps.shingles(docs.sparkSession, col(textCol), n)).as("shingle"))
-    val hashed =
-      if (portable) sh.withColumn("h0", hex64(col("shingle")) % PortableP) else sh
+      .withColumn("h0", hex64(col("shingle")) % PortableP)
     val mins = (0 until k).map { i =>
-      val h =
-        if (portable) (lit(portableSeedMul(i)) * col("h0") + lit(i.toLong)) % PortableP
-        else xxhash64(lit(i), col("shingle"))
-      min(h).as(s"mh_$i")
+      min((lit(portableSeedMul(i)) * col("h0") + lit(i.toLong)) % PortableP).as(s"mh_$i")
     }
     hashed.groupBy(col("doc_id"))
       .agg(mins.head, mins.tail: _*)
@@ -560,18 +554,14 @@ object Dedup {
       textCol: String = "text",
       k: Int = 32,
       bands: Int = 8,
-      n: Int = 3,
-      portable: Boolean = false): DataFrame = {
+      n: Int = 3): DataFrame = {
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
     val r = k / bands
-    val sigs = minhashSignatures(docs, idCol, textCol, k, n, portable)
-    def bucketOf(bnd: Int): org.apache.spark.sql.Column = {
-      val elems = (0 until r).map(i => element_at(col("signature"), bnd * r + i + 1))
-      if (portable)
-        // polynomial fold mod P — same fold the oracle's list_reduce runs
-        elems.foldLeft(lit(bnd.toLong)) { (acc, m) => (acc * lit(1000003L) + m) % PortableP }
-      else xxhash64(lit(bnd) +: elems: _*)
-    }
+    val sigs = minhashSignatures(docs, idCol, textCol, k, n)
+    // polynomial fold mod P — same fold the oracle's list_reduce runs
+    def bucketOf(bnd: Int): org.apache.spark.sql.Column =
+      (0 until r).map(i => element_at(col("signature"), bnd * r + i + 1))
+        .foldLeft(lit(bnd.toLong)) { (acc, m) => (acc * lit(1000003L) + m) % PortableP }
     val banded = sigs.select(
       col("doc_id"),
       posexplode(array((0 until bands).map(bucketOf): _*))
@@ -595,9 +585,8 @@ object Dedup {
       k: Int = 32,
       bands: Int = 8,
       n: Int = 3,
-      minJaccard: Double = 0.8,
-      portable: Boolean = false): DataFrame = {
-    val cands = minhashLshCandidates(docs, idCol, textCol, k, bands, n, portable)
+      minJaccard: Double = 0.8): DataFrame = {
+    val cands = minhashLshCandidates(docs, idCol, textCol, k, bands, n)
     val shingleSets = docs.select(
       col(idCol).as("doc_id"), TextOps.shingles(docs.sparkSession, col(textCol), n).as("sh"))
     cands
@@ -611,24 +600,22 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** 64-bit SimHash over word features: bit b of the signature is the sign
-    * of Σ_words (2·bit_b(xxhash64(word)) − 1). Near-dup docs differ in few
-    * bits; bucketing by 16-bit quadrants finds all pairs within hamming
-    * distance 3 (pigeonhole: ≤3 differing bits leave ≥1 identical quadrant). */
+  /** 60-bit SimHash over word features: bit b of the signature is the sign
+    * of Σ_words (2·bit_b(hex64(word)) − 1), the md5-derived hash the
+    * oracle replays (q20). Near-dup docs differ in few bits; bucketing by
+    * 15-bit quadrants finds all pairs within hamming distance 3
+    * (pigeonhole: ≤3 differing bits leave ≥1 identical quadrant). */
   def simhash(
       docs: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      portable: Boolean = false): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // Explode words once, hash once, then `bits` partial-aggregable SUM
     // votes — same re-inlining / shuffle-shape rationale as
-    // minhashSignatures. portable = md5-derived 60-bit hash (oracle-
-    // reproducible, q20); default = xxhash64 over the full 64 bits.
-    val bits = if (portable) 60 else 64
+    // minhashSignatures.
+    val bits = 60
     val words = docs
       .select(col(idCol).as("doc_id"), explode(split(col(textCol), " ")).as("w"))
-      .select(col("doc_id"),
-        (if (portable) hex64(col("w")) else xxhash64(col("w"))).as("h"))
+      .select(col("doc_id"), hex64(col("w")).as("h"))
     val votes = (0 until bits).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)).as(s"v_$b"))
     val sig = (0 until bits)
@@ -640,17 +627,16 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs within `maxHamming` (≤ 3 guaranteed complete
-    * via quadrant bucketing — pigeonhole over 4 quadrants of 16 (or 15,
-    * portable) bits; higher distances may miss pairs). */
+    * via quadrant bucketing — pigeonhole over 4 quadrants of 15 bits;
+    * higher distances may miss pairs). */
   def simhashNearDups(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      maxHamming: Int = 3,
-      portable: Boolean = false): DataFrame = {
-    val quadBits = if (portable) 15 else 16
+      maxHamming: Int = 3): DataFrame = {
+    val quadBits = 15
     val quadMask = (1L << quadBits) - 1
-    val sigs = simhash(docs, idCol, textCol, portable)
+    val sigs = simhash(docs, idCol, textCol)
     val quads = sigs.select(
       col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(q =>

@@ -53,40 +53,32 @@ object ParquetWarehouse {
     case c => c.toString
   }
 
-  /** Tombstone TTL. A tombstone left by a takeover is swept once older
-    * than this (see [[sweepAgedTombstones]]): long enough to outlive any
-    * straggler from that takeover's race, whose window is seconds. It is
-    * NOT a lock age-out — a held lock is broken only when its holder is
-    * provably dead (see [[withWriterLock]]), whatever its age. */
-  private[graft] val LockStaleMs: Long = 60L * 60 * 1000
-
   private[graft] def lockHost: String =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: java.net.UnknownHostException => "unknown-host" }
 
   /** The lock file's one-line payload; `private[graft]` so specs can
-    * fabricate a crashed holder's lock verbatim. */
+    * fabricate a holder's lock verbatim. */
   private[graft] def lockPayload(host: String, pid: Long, token: String): String =
     lockPayload(host, pid, token, System.currentTimeMillis())
 
   private[graft] def lockPayload(host: String, pid: Long, token: String, ts: Long): String =
     s"host=$host pid=$pid token=$token ts=$ts\n"
 
-  /** The one place that decides "this FS needs NIO-level atomicity":
-    * Hadoop's local create(overwrite=false) is check-then-act and its
-    * rename is POSIX (overwrites the destination), so both lock
-    * primitives take kernel-level paths there. (A FilterFileSystem
-    * WRAPPING a local FS falls into the Hadoop-API branch — atomicity
-    * then depends on the wrapper, same as any other connector.) */
+  /** The one place that decides which lock primitive a store gets: a
+    * local filesystem takes the kernel's advisory file lock, every other
+    * store the create-no-overwrite marker (see [[withWriterLock]]). A
+    * FilterFileSystem WRAPPING a local FS falls into the marker branch —
+    * atomicity then depends on the wrapper, same as any other connector. */
   private def isLocalFs(fs: org.apache.hadoop.fs.FileSystem): Boolean = fs match {
     case _: org.apache.hadoop.fs.LocalFileSystem |
          _: org.apache.hadoop.fs.RawLocalFileSystem => true
     case _ => false
   }
 
-  /** The payload of the lock (or tombstone) at `lock`, or None when it
-    * cannot be read: missing, faulting, over the size cap, or cut short
-    * by a stalled stream. */
+  /** The payload of the lock at `lock`, or None when it cannot be read:
+    * missing, faulting, over the size cap, or cut short by a stalled
+    * stream. */
   private[graft] def readLockPayload(
       fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[String] =
@@ -95,9 +87,9 @@ object ParquetWarehouse {
       try {
         // read to EOF, not a single read(): on remote stores a legal
         // short read can truncate the one-line payload BEFORE the token,
-        // and every ownership check downstream (owned release delete,
-        // takeover abandon) would then misjudge — e.g. a holder failing
-        // to delete its own lock on the way out, wedging the table
+        // and the owned release downstream would then misjudge — a
+        // holder failing to delete its own lock on the way out, wedging
+        // the table
         val out = new java.io.ByteArrayOutputStream(256)
         val buf = new Array[Byte](4096)
         // Two boundedness guards against a misbehaving stream:
@@ -106,11 +98,9 @@ object ParquetWarehouse {
         //    zero-reads are tolerated, then the read is abandoned and
         //    judged by COMPLETENESS below;
         //  - total size is capped, always → None (a real payload is one
-        //    ~100-byte line; the tombstone sweep feeds this ANY file
-        //    matching the table's tomb glob, and a stray multi-GB file
-        //    at a lock or tomb path must not OOM the driver). The cap
-        //    is checked BEFORE the chunk is appended, so the buffer
-        //    itself never exceeds it.
+        //    ~100-byte line, and a stray multi-GB file at a lock path
+        //    must not OOM the driver). The cap is checked BEFORE the
+        //    chunk is appended, so the buffer itself never exceeds it.
         val MaxPayloadBytes = 64 * 1024
         var zeros = 0
         var overCap = false
@@ -128,146 +118,121 @@ object ParquetWarehouse {
         }
         val s = out.toString("UTF-8")
         // A zero-read stall is only UNREADABLE when it truncated the
-        // payload. Every payload this module writes (lock lines, tomb
-        // re-stamps) is newline-terminated, so a terminated buffer is
-        // COMPLETE — connectors that signal EOF with 0 instead of -1 keep
-        // their fully-delivered payload (and with it the owned release).
-        // An unterminated stall is a prefix that may have lost the token.
+        // payload. Every payload this module writes is newline-
+        // terminated, so a terminated buffer is COMPLETE — connectors
+        // that signal EOF with 0 instead of -1 keep their fully-delivered
+        // payload (and with it the owned release). An unterminated stall
+        // is a prefix that may have lost the token.
         if (overCap || (stalled && !s.endsWith("\n"))) None else Some(s)
       } finally in.close()
     } catch {
       // NonFatal, not just IOException: connectors wrap I/O failures in
       // RuntimeExceptions (Hadoop's Shell wraps a failed fork's exit
       // code), and "unreadable payload" must mean the same thing on
-      // every store, or an unreadable corpse could never be retired
-      // (retireIfUnchanged's re-read must compare None == None).
+      // every store
       case scala.util.control.NonFatal(_) => None
     }
+
+  /** The local lock files this JVM holds, by file key (device + inode),
+    * with the payload each holder wrote — see [[withWriterLock]]. */
+  private val heldLocalLocks = new java.util.concurrent.ConcurrentHashMap[AnyRef, String]
 
   /** Advisory single-writer lock for a table path — the GUARD behind the
     * documented single-writer contract ([[upsert]]). Two concurrent
     * writers to one path can delete each other's staging dirs mid-write
     * and race the live/backup renames; parquet has no table lock to lean
-    * on (a MERGE-capable table format supplies one), so this stakes an
-    * `path.__lock` marker via create-no-overwrite: the second acquirer
-    * fails LOUDLY instead of corrupting. Advisory, not watertight —
-    * create-no-overwrite is atomic on HDFS and local FS but only
-    * best-effort on eventually-consistent object stores; it converts the
-    * silent-corruption race into an explicit error for every coordinated
-    * deployment, which is the operational bar here.
+    * on (a MERGE-capable table format supplies one), so the second
+    * acquirer of `path.__lock` fails LOUDLY, with an
+    * IllegalArgumentException naming the lock file and its holder,
+    * instead of corrupting. Released on completion, success or failure
+    * alike.
     *
-    * A crashed holder never releases, so a held lock is re-examined, and
-    * broken ONLY when its holder is provably dead ([[holderDead]]): the
-    * payload names THIS host and the pid is no longer alive. A crash
-    * mid-swap therefore heals on the very next same-host writer call;
-    * pid recycling can only delay breaking, never break a live lock.
-    * Every other held lock — another host's, of any age, or one whose
-    * payload cannot be read — is refused with an IllegalArgumentException
-    * naming the lock file and its holder. Nothing breaks a lock by age,
-    * so no live holder can be broken however long its merge runs or
-    * however skewed its clock; the price is that a writer that crashed
-    * on ANOTHER host leaves its table locked until an operator confirms
-    * it dead and deletes the lock file by hand.
+    * On a local filesystem the lock is the kernel's advisory lock on
+    * `path.__lock` (`FileChannel.tryLock`, an fcntl lock — the lock
+    * SQLite's unix VFS takes for the reference's load step). The kernel
+    * drops it when the holder exits, however it exits, so a crash
+    * mid-swap heals on the next writer call and nothing ever has to
+    * judge whether a holder is dead. The file is never deleted: between
+    * writers it holds nothing but the last holder's payload, which names
+    * the holder in a refusal. Deleting it by hand while a writer runs
+    * would admit a second writer on a new inode. fcntl locks belong to
+    * the PROCESS, not the channel: a second channel on the same file in
+    * this JVM gets OverlappingFileLockException from tryLock, and closing
+    * that channel silently drops the first channel's lock. So a JVM-wide
+    * map of held lock files refuses an in-JVM second acquirer before it
+    * opens anything.
     *
-    * Breaking is a RENAME-BASED TAKEOVER, not delete-then-create. The
-    * breaker renames the dead lock to a tombstone whose name is a pure
-    * function of the observed payload, so every waiter that judged the
-    * SAME dead lock targets the SAME tombstone: rename is atomic, exactly
-    * one renamer wins, and the losers see their rename fail (source gone,
-    * or destination already present) and report "held". The winner then
-    * goes through the ordinary create-no-overwrite gate — the rename only
-    * ever REMOVES a dead lock; it never by itself grants the lock, so a
-    * third writer racing the gap still serializes on the atomic create.
-    * The payload is re-read immediately before the rename and the break
-    * is abandoned if it changed — a successor who already took over and
-    * staked a fresh lock is a LIVE holder, and the fresh lock must not be
-    * torn down on a stale observation. Tombstones are not deleted by their
-    * maker (a surviving tombstone is what turns a straggler's late rename
-    * into a loud no-op); they are swept opportunistically once older than
-    * [[LockStaleMs]].
-    *
-    * Release is OWNED: the holder deletes the lock only if the payload
-    * still carries its own token, so a writer whose lock was removed by
-    * hand cannot delete a successor's lock on its way out. Released on
-    * completion, success or failure alike. */
+    * On other stores (HDFS) the lock is a `path.__lock` marker staked
+    * via create-no-overwrite, atomic at the NameNode (only best-effort on
+    * eventually-consistent object stores). Every held marker is refused,
+    * whatever its age or payload: a writer that crashed leaves its table
+    * locked until an operator confirms it dead and deletes the marker by
+    * hand. Release is OWNED: the holder deletes the marker only if the
+    * payload still carries its own token, so a writer whose marker was
+    * removed by hand cannot delete a successor's on its way out. */
   private[graft] def withWriterLock[T](
       fs: org.apache.hadoop.fs.FileSystem, path: String)(body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(path + ".__lock")
     val token = java.util.UUID.randomUUID().toString
-    def tryAcquire(): Boolean = {
-      val payload =
-        lockPayload(lockHost, ProcessHandle.current().pid(), token).getBytes("UTF-8")
+    val payload = lockPayload(lockHost, ProcessHandle.current().pid(), token)
+    def refuse(observed: Option[String], mtime: => Long, remedy: String): Nothing =
+      throw new IllegalArgumentException(
+        s"another writer holds $path.__lock (${describeHolder(observed, mtime)}) — the " +
+          "warehouse is single-writer per table path (see upsert's concurrency " +
+          s"contract). $remedy")
+    Option(lock.getParent).foreach(fs.mkdirs)
+    if (isLocalFs(fs)) {
+      import java.nio.file.{Files, StandardOpenOption}
+      val io = java.nio.file.Paths.get(lock.toUri.getPath)
+      def mtime = Files.getLastModifiedTime(io).toMillis
+      val remedy = "The lock is released when that writer exits; never delete the lock file."
+      try Files.createFile(io)
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      val key = Files.readAttributes(
+        io, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+      // checked BEFORE any channel is opened: opening and closing one
+      // here would drop the in-JVM holder's kernel lock
+      Option(heldLocalLocks.putIfAbsent(key, payload))
+        .foreach(p => refuse(Some(p), mtime, remedy))
       try {
-        Option(lock.getParent).foreach(fs.mkdirs)
-        if (isLocalFs(fs)) {
-          // RawLocalFileSystem's create(overwrite = false) is CHECK-THEN-ACT
-          // (an exists() test, then a plain open) — two same-instant racers
-          // can both pass it, which is no gate at all. On a local FS the
-          // real gate is the kernel's O_CREAT|O_EXCL, reached via NIO.
-          val io = java.nio.file.Paths.get(lock.toUri.getPath)
-          try {
-            java.nio.file.Files.write(io, payload,
-              java.nio.file.StandardOpenOption.CREATE_NEW,
-              java.nio.file.StandardOpenOption.WRITE)
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        } else {
-          // HDFS (and HDFS-semantics stores): create-no-overwrite IS
-          // atomic at the NameNode
+        val ch = java.nio.channels.FileChannel.open(
+          io, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+        try {
+          if (ch.tryLock() == null) refuse(readLockPayload(fs, lock), mtime, remedy)
+          ch.truncate(0)
+          ch.write(java.nio.ByteBuffer.wrap(payload.getBytes("UTF-8")))
+          body
+        } finally ch.close()
+      } finally heldLocalLocks.remove(key)
+    } else {
+      val staked =
+        try {
           val out = fs.create(lock, /* overwrite = */ false)
-          try out.write(payload)
+          try out.write(payload.getBytes("UTF-8"))
           finally out.close()
           true
+        } catch {
+          // only "the lock already exists" means HELD; any other I/O
+          // failure (permissions, transient FS errors) must surface as
+          // itself, not masquerade as a phantom concurrent writer
+          case e: java.io.IOException =>
+            if (fs.exists(lock)) false else throw e
         }
-      } catch {
-        // only "the lock already exists" means HELD; any other I/O
-        // failure (permissions, transient FS errors) must surface as
-        // itself, not masquerade as a phantom concurrent writer
-        case e: java.io.IOException =>
-          if (fs.exists(lock)) false else throw e
-      }
+      if (!staked)
+        refuse(readLockPayload(fs, lock),
+          try fs.getFileStatus(lock).getModificationTime
+          catch { case _: java.io.FileNotFoundException => System.currentTimeMillis() },
+          s"Once that holder is confirmed dead, delete $path.__lock by hand and retry.")
+      try body
+      finally
+        if (readLockPayload(fs, lock).exists(_.contains(s"token=$token")))
+          fs.delete(lock, false)
     }
-    var acquired = tryAcquire()
-    var holder = "holder unknown"
-    if (!acquired) {
-      // reap aged tombstones BEFORE judging the held lock: a tombstone
-      // only guards its own takeover's race window (seconds), but its
-      // NAME is a pure function of the victim payload, so without this
-      // sweep a second same-payload corpse after the first's tombstone
-      // aged would be permanently unbreakable (takeover refuses while
-      // the tombstone exists, and nobody can acquire to sweep it)
-      sweepAgedTombstones(fs, path)
-      val st = try Some(fs.getFileStatus(lock))
-               catch { case _: java.io.FileNotFoundException => None }
-      st match {
-        case None =>
-          // holder released between attempts — just retry the gate
-          acquired = tryAcquire()
-        case Some(s) =>
-          val observed = readLockPayload(fs, lock)
-          observed.filter(holderDead).foreach { corpse =>
-            if (retireIfUnchanged(fs, lock, path, corpse)) acquired = tryAcquire()
-          }
-          holder = describeHolder(observed, s.getModificationTime)
-      }
-    }
-    require(acquired,
-      s"another writer holds $path.__lock ($holder) — the warehouse is " +
-        "single-writer per table path (see upsert's concurrency contract). " +
-        "A lock whose holder is provably dead (this host, pid gone) is broken " +
-        "automatically; any other lock stays until its holder releases it. Once " +
-        s"that holder is confirmed dead, delete $path.__lock by hand and retry")
-    try body
-    finally
-      if (readLockPayload(fs, lock).exists(_.contains(s"token=$token")))
-        fs.delete(lock, false)
   }
 
   /** The holder named by a held lock's payload, for the refusal message:
     * `host`, `pid` and age (payload `ts`, else the file's mtime). */
-  private def describeHolder(observed: Option[String], mtime: Long): String = {
+  private def describeHolder(observed: Option[String], mtime: => Long): String = {
     val kv = observed.map(parseKv).getOrElse(Map.empty)
     val since = kv.get("ts").flatMap(_.toLongOption).getOrElse(mtime)
     val age = s"${(System.currentTimeMillis() - since) / 60000} min old"
@@ -279,153 +244,6 @@ object ParquetWarehouse {
     payload.trim.split("\\s+")
       .flatMap(_.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None })
       .toMap
-
-  /** A held lock is breakable only when its holder is PROVABLY dead: the
-    * payload names THIS host and the pid is no longer alive. */
-  private[graft] def holderDead(payload: String): Boolean = {
-    val kv = parseKv(payload)
-    kv.get("host").contains(lockHost) &&
-      kv.get("pid").flatMap(_.toLongOption)
-        .exists(p => java.lang.ProcessHandle.of(p).isEmpty)
-  }
-
-  /** The takeover primitive: atomically retire the dead `lock` into
-    * `tomb` such that AT MOST ONE racer succeeds, and a LIVE successor
-    * lock can never be retired by a straggler. On HDFS-semantics stores,
-    * rename is that primitive (atomic; fails when the destination
-    * exists, so a straggler arriving after the winner loses on
-    * tomb-exists). On a LOCAL filesystem POSIX rename OVERWRITES an
-    * existing destination — a straggler that passed its payload re-read
-    * before the winner's rename could rename the winner's fresh lock
-    * onto the tombstone, freeing the lock path for a second acquirer —
-    * so there the primitive is a hard LINK (atomic, fails on existing
-    * destination) followed by unlink of the lock path; between link and
-    * unlink the lock path stays occupied, so no third writer can slip
-    * through the gap, and every straggler fails the link on tomb-exists.
-    * (The unlink's result is checked: a failed unlink after a successful
-    * link — or a crash between the two — leaves lock + fresh tomb
-    * coexisting, which reads as HELD until the tomb ages and the
-    * pre-sweep reaps it: a bounded wedge, never a second acquirer.)
-    *
-    * Rename and link both PRESERVE the source mtime — a tombstone born
-    * from an old corpse (a dead-pid lock left for a week) would be past
-    * [[LockStaleMs]] at birth and reaped by the very next sweep, voiding
-    * the straggler guard the tombstone exists to provide. So the WINNER
-    * re-stamps the tombstone right after the retire: an overwrite-create
-    * refreshes the mtime on every store (including the ones whose
-    * setTimes is a no-op). Best-effort: the retire already succeeded,
-    * and the residual — a sweep reaping the aged-at-birth tomb inside the
-    * two-FS-call gap, meeting a straggler whose payload re-read predates
-    * the retire — is a multi-party microsecond race accepted under the
-    * lock's advisory contract. */
-  private def retireDeadLock(
-      fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path,
-      tomb: org.apache.hadoop.fs.Path): Boolean = {
-    val retired =
-      if (isLocalFs(fs)) {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(tomb.toUri.getPath),
-            java.nio.file.Paths.get(lock.toUri.getPath))
-          fs.delete(lock, false)
-        } catch { case _: java.io.IOException => false }
-      } else {
-        try fs.rename(lock, tomb) catch { case _: java.io.IOException => false }
-      }
-    if (retired) {
-      try {
-        val out = fs.create(tomb, /* overwrite = */ true)
-        try out.write(s"retired ts=${System.currentTimeMillis()}\n".getBytes("UTF-8"))
-        finally out.close()
-      } catch { case _: java.io.IOException => () }
-    }
-    retired
-  }
-
-  /** The abandon-if-changed takeover discipline of a contended
-    * acquisition: re-read the payload and abandon if it changed since
-    * `observed` (a successor who already took over is a LIVE holder),
-    * refuse while the payload-derived tombstone exists (the straggler
-    * guard), else retire atomically. Tombstone name = f(observed
-    * payload), so racers who judged the same corpse contend on ONE
-    * atomic retire. JUDGING ([[holderDead]]) stays with the caller. */
-  private def retireIfUnchanged(
-      fs: org.apache.hadoop.fs.FileSystem,
-      lock: org.apache.hadoop.fs.Path,
-      tablePath: String,
-      observed: String): Boolean = {
-    val tomb = new org.apache.hadoop.fs.Path(tombstoneName(tablePath, observed))
-    readLockPayload(fs, lock).contains(observed) && !fs.exists(tomb) &&
-      retireDeadLock(fs, lock, tomb)
-  }
-
-  /** Tombstone path for a takeover of the lock at `path` whose observed
-    * corpse payload was `payload`. A pure function of the payload, so
-    * every racer that judged the SAME corpse contends on ONE atomic
-    * retire. The name needs cross-PAYLOAD collisions to be negligible
-    * too: two DIFFERENT corpses mapping to the same tomb name would
-    * refuse the second takeover for up to [[LockStaleMs]] while the
-    * first's tomb is fresh (a bounded wedge, but an avoidable one). A
-    * 32-bit hash put that at ~2⁻³², close enough to matter across a
-    * fleet's lifetime of takeovers; this uses the first 64 bits of an
-    * MD5 over the payload BYTES plus the byte length — independent
-    * signals, so a collision needs both a 64-bit digest-prefix match
-    * AND equal lengths (≪ 2⁻⁶⁴ in practice).
-    *
-    * UPGRADE NOTE: the name is part of the takeover protocol — racers
-    * contend by targeting the SAME tomb path, so two binaries with
-    * DIFFERENT name schemes (this one vs the pre-r16 32-bit scheme)
-    * contending on one corpse do not guard each other: each checks only
-    * its own name, and a straggler on the other scheme could rename a
-    * fresh successor lock away. A deployment changing the scheme must
-    * drain writers per table across the upgrade (the standard constraint
-    * for any lock-protocol change); mixed-version fleets on one table
-    * are outside the lock's contract. */
-  private[graft] def tombstoneName(path: String, payload: String): String = {
-    val bytes = payload.getBytes("UTF-8")
-    val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-    val hi = java.nio.ByteBuffer.wrap(md5, 0, 8).getLong
-    path + ".__lock.__tomb-" + java.lang.Long.toHexString(hi) + "-" + bytes.length
-  }
-
-  /** Tombstones from past takeovers are left in place on purpose (see
-    * [[withWriterLock]]) and reaped here — by every CONTENDED
-    * acquisition, BEFORE it judges the held lock — once older than
-    * [[LockStaleMs]], by which point no straggler from that takeover race
-    * can still be in flight. Sweeping pre-judge (rather than
-    * post-acquire) matters: the tombstone name is a pure function of
-    * the victim payload, so a second corpse with an identical payload
-    * needs its predecessor's aged tombstone GONE before its own
-    * takeover can proceed — a post-acquire-only sweep could never run
-    * in that state (nobody can acquire) and wedged the table
-    * permanently. Best-effort: a sweep failure never fails the write
-    * it piggybacks on. Uncontended acquisitions skip the glob — an old
-    * tombstone then lingers as one tiny file until the next contention,
-    * which is harmless. */
-  private def sweepAgedTombstones(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    try {
-      val glob = new org.apache.hadoop.fs.Path(globEscape(path) + ".__lock.__tomb-*")
-      val tombs = fs.globStatus(glob)
-      if (tombs != null) tombs.foreach { t =>
-        // age = the younger of mtime and the winner's re-stamped payload
-        // ts, so a tomb stays protective for a full TTL even where mtimes
-        // misbehave — as long as EITHER signal is fresh it survives
-        val ts = parseKv(readLockPayload(fs, t.getPath).getOrElse(""))
-          .get("ts").flatMap(_.toLongOption).getOrElse(Long.MinValue)
-        if (System.currentTimeMillis() -
-            math.max(t.getModificationTime, ts) > LockStaleMs)
-          fs.delete(t.getPath, false)
-      }
-    } catch {
-      // NonFatal, not just IOException — the glob/delete can race a
-      // contending writer reaping the same aged tomb, and connectors
-      // wrap that vanished-file shape in RuntimeExceptions (the r17
-      // soak finding); "a sweep failure never fails the write it piggybacks
-      // on" must hold for every class the store throws
-      case scala.util.control.NonFatal(_) => ()
-    }
 
   /** The upsert-rewrite REBALANCE decision, shared with its spec:
     * rebalance once the committed table's on-disk bytes exceed 2× the
@@ -521,10 +339,10 @@ object ParquetWarehouse {
     * are fully independent. The contract is now GUARDED, not just
     * documented: every writer entry point takes the advisory
     * [[withWriterLock]] on the path, so a second concurrent writer fails
-    * loudly instead of corrupting. A lock left by a crashed holder on
-    * this host is broken on the next call; any other lock is refused
-    * until its holder releases it or an operator removes it by hand (see
-    * the lock's doc).
+    * loudly instead of corrupting. On a local filesystem a crashed
+    * holder's lock is released by the kernel; on other stores a held lock
+    * is refused until its holder releases it or an operator removes it by
+    * hand (see the lock's doc).
     *
     * The schema is strict: `updates` must carry exactly the table's
     * columns (matched by name, in any order), or the merge throws an

@@ -634,47 +634,36 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     assert(got === Set(("s1", 2.0), ("s2", 3.0)), "old-spelling rows survived as duplicates")
   }
 
-  test("warehouse writers hold an advisory single-writer lock: held fails loudly, stale is still refused, always released") {
+  test("warehouse writers hold an advisory single-writer lock: a live holder refuses both writers, success and failure release it") {
     val dir = freshDir("graft_lock")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val lock = new org.apache.hadoop.fs.Path(dir + ".__lock")
     ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(!fs.exists(lock), "lock must be released after a successful write")
-    // a FRESH lock means a live concurrent writer: every writer entry
-    // point must fail loudly instead of corrupting its staging dirs
-    val out = fs.create(lock, false)
-    out.write("pid=test\n".getBytes("UTF-8")); out.close()
-    val e1 = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    // a live concurrent writer: every writer entry point must fail loudly
+    // instead of corrupting its staging dirs
+    graft.sources.WriterLockSpec.whileHeld(fs, dir) {
+      val e1 = intercept[IllegalArgumentException] {
+        ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+      }
+      assert(e1.getMessage.contains("lock"))
+      val e2 = intercept[IllegalArgumentException] {
+        ParquetWarehouse.upsertPartitioned(
+          Seq(("2023-09-01", "c2", "b")).toDF("date", "conv_id", "v"),
+          dir, Seq("date", "conv_id"), "date")
+      }
+      assert(e2.getMessage.contains("lock"))
     }
-    assert(e1.getMessage.contains("lock"))
-    val e2 = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsertPartitioned(
-        Seq(("2023-09-01", "c2", "b")).toDF("date", "conv_id", "v"),
-        dir, Seq("date", "conv_id"), "date")
-    }
-    assert(e2.getMessage.contains("lock"))
     assert(spark.read.parquet(dir).count() === 1, "locked-out writers must not have written")
-    // a lock backdated past LockStaleMs whose holder cannot be proven
-    // dead (no host in its payload) is STILL refused: age breaks nothing
-    fs.setTimes(lock, System.currentTimeMillis() - ParquetWarehouse.LockStaleMs - 60000, -1)
-    val e3 = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    }
-    assert(e3.getMessage.contains("lock"))
-    assert(fs.exists(lock), "a stale lock of an unproven holder must survive the refusal")
-    // the manual unlock: delete the lock file, and the next writer proceeds
-    fs.delete(lock, false)
+    // released when the holder returns: the next writer proceeds
     ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(!fs.exists(lock), "lock must be released after the write")
     assert(spark.read.parquet(dir).count() === 2)
     // the failure path releases too — a held-forever lock after a failed
-    // write would wedge the table until removed by hand
+    // write would wedge the table
     val poison = Seq(("c3", "not-a-date")).toDF("conv_id", "v")
       .withColumn("v", to_date(col("v")).cast("string"))
     intercept[Exception] { ParquetWarehouse.upsert(poison, dir, Seq("conv_id")) }
-    assert(!fs.exists(lock), "lock must be released after a FAILED write")
+    ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    assert(spark.read.parquet(dir).count() === 3, "the lock must be free after a FAILED write")
   }
 
   test("a dead same-host holder's lock breaks immediately — a crash mid-write heals on the next call") {
@@ -682,31 +671,24 @@ class ParquetWarehousePartitionedSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    // fabricate the lock of a crashed holder: OUR host, a pid that has
-    // provably exited — the next writer must break it without waiting
-    // out the age horizon (the lock is FRESH, only liveness says dead)
+    // the lock file a crashed holder leaves: OUR host, a pid that has
+    // provably exited. The kernel dropped that holder's lock when it
+    // died, so the next writer proceeds at once
     val dead = new ProcessBuilder("true").start()
     dead.waitFor()
     assert(java.lang.ProcessHandle.of(dead.pid()).isEmpty, "fixture pid must be dead")
-    val lock = new org.apache.hadoop.fs.Path(dir + ".__lock")
-    val out = fs.create(lock, false)
-    out.write(ParquetWarehouse.lockPayload(
+    val lock = java.nio.file.Paths.get(dir + ".__lock")
+    java.nio.file.Files.write(lock, ParquetWarehouse.lockPayload(
       ParquetWarehouse.lockHost, dead.pid(), "crashed-token").getBytes("UTF-8"))
-    out.close()
     ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(!fs.exists(lock), "broken lock must be replaced and then released")
     assert(spark.read.parquet(dir).count() === 2)
-    // and the inverse: a LIVE same-host pid (ours) is never broken while
-    // fresh, however the payload reads otherwise plausible
-    val out2 = fs.create(lock, false)
-    out2.write(ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, ProcessHandle.current().pid(), "live-token").getBytes("UTF-8"))
-    out2.close()
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    // and the inverse: a LIVE same-host holder is never broken
+    graft.sources.WriterLockSpec.whileHeld(fs, dir) {
+      val e = intercept[IllegalArgumentException] {
+        ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+      }
+      assert(e.getMessage.contains("lock"))
     }
-    assert(e.getMessage.contains("lock"))
-    assert(fs.exists(lock), "a live holder's lock must survive the failed acquisition")
-    fs.delete(lock, false)
+    assert(spark.read.parquet(dir).count() === 2, "a refused writer must not have written")
   }
 }

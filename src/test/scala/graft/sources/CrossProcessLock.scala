@@ -7,12 +7,11 @@ import org.apache.hadoop.fs.Path
 
 /** Cross-PROCESS lock contention soak (r17 verdict #1).
   *
-  * Every lock soak before r18 (LockSoak) raced THREADS inside one JVM:
-  * one shared Hadoop `FileSystem` cache instance, one set of JVM memory
-  * barriers — an in-process race can pass on accidental JVM-level
-  * synchronization that separate processes do not share. The fleet
-  * reality the advisory lock exists for is separate writer PROCESSES on
-  * separate hosts (reference behavior: the loader's rerun-safe upsert,
+  * LockSoak races THREADS inside one JVM, and threads of one JVM are
+  * kept apart by the lock's in-JVM guard before the kernel is asked;
+  * only separate processes contend on the kernel's file lock itself.
+  * The fleet reality the advisory lock exists for is separate writer
+  * PROCESSES (reference behavior: the loader's rerun-safe upsert,
   * src/etl/load.py:126-143, under concurrent runs). This harness forks
   * N child JVMs — each with its own SparkSession — that contend REAL
   * `ParquetWarehouse` upserts on ONE table path, and proves the
@@ -128,6 +127,34 @@ object CrossProcessLockChild {
   }
 }
 
+/** A one-shot child process for the lock specs.
+  *   - `try <table>`: exits 0 when it acquires the table's writer lock,
+  *     3 when it is refused;
+  *   - `hold <table> <signal>`: acquires the lock, creates the `signal`
+  *     file, and sleeps inside the lock until it is killed (at most 5
+  *     minutes, so an orphan of a crashed parent does not linger). */
+object CrossProcessLockProbe {
+  def main(args: Array[String]): Unit = {
+    val table = args(1)
+    val fs = new Path(table).getFileSystem(new org.apache.hadoop.conf.Configuration())
+    args(0) match {
+      case "try" =>
+        val acquired =
+          try { ParquetWarehouse.withWriterLock(fs, table)(()); true }
+          catch {
+            case e: IllegalArgumentException
+                if Option(e.getMessage).exists(_.contains("another writer holds")) => false
+          }
+        System.exit(if (acquired) 0 else 3)
+      case "hold" =>
+        ParquetWarehouse.withWriterLock(fs, table) {
+          Files.createFile(Paths.get(args(2)))
+          Thread.sleep(5L * 60 * 1000)
+        }
+    }
+  }
+}
+
 /** Parent-side harness: forks the children, waits, verifies the on-disk
   * evidence. Shared by the scaled-down spec and the full soak main. */
 object CrossProcessLockHarness {
@@ -151,7 +178,7 @@ object CrossProcessLockHarness {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  private def fork(mainArgs: Seq[String], out: File): Process = {
+  private def fork(mainClass: String, mainArgs: Seq[String], out: File): Process = {
     val java = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     require(cp.contains("scala-library") || cp.split(File.pathSeparator).length > 3,
@@ -159,11 +186,41 @@ object CrossProcessLockHarness {
         "run under sbt (Test/fork := true) so children can resolve graft classes")
     val cmd = Seq(java) ++ jdk17AddOpens ++ Seq(
       "-Xmx2g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.sources.CrossProcessLockChild") ++ mainArgs
+      "-cp", cp, mainClass) ++ mainArgs
     new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
       .redirectOutput(out)
       .start()
+  }
+
+  /** Whether a fresh child process acquires `table`'s writer lock. */
+  def childAcquires(table: String): Boolean = {
+    val out = Files.createTempFile("graft_xproc_probe", ".out").toFile
+    val p = fork("graft.sources.CrossProcessLockProbe", Seq("try", table), out)
+    require(p.waitFor(2, java.util.concurrent.TimeUnit.MINUTES), s"probe child hung — see $out")
+    p.exitValue() match {
+      case 0 => true
+      case 3 => false
+      case c => sys.error(s"probe child exited $c — see $out")
+    }
+  }
+
+  /** Forks a child that enters `table`'s writer lock and holds it until
+    * killed; returns once the child holds the lock. */
+  def childHolding(table: String): Process = {
+    val dir = Files.createTempDirectory("graft_xproc_hold")
+    val signal = dir.resolve("holding")
+    val out = dir.resolve("child.out").toFile
+    val p = fork("graft.sources.CrossProcessLockProbe", Seq("hold", table, signal.toString), out)
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    while (!Files.exists(signal)) {
+      if (!p.isAlive || System.nanoTime() > deadline) {
+        p.destroyForcibly()
+        sys.error(s"holder child never acquired the lock — see $out")
+      }
+      Thread.sleep(20)
+    }
+    p
   }
 
   def run(children: Int, iters: Int): Summary = {
@@ -175,7 +232,8 @@ object CrossProcessLockHarness {
     Files.createDirectories(Paths.get(ledgerDir))
 
     val writers = (1 to children).map { c =>
-      fork(Seq(table, ledgerDir, c.toString, iters.toString),
+      fork("graft.sources.CrossProcessLockChild",
+        Seq(table, ledgerDir, c.toString, iters.toString),
         new File(s"$base/child-$c.out"))
     }
     writers.zipWithIndex.foreach { case (p, idx) =>

@@ -3,12 +3,12 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 
-/** Fault-injected filesystem misbehavior against the warehouse's two
-  * crash-safety mechanisms (r16, closing the r15 verdict's directive 2):
+/** Fault-injected filesystem misbehavior against the warehouse's writer
+  * lock and its crash-safe swap:
   *
-  *   - the TAKEOVER: a retire whose rename/link refuses must leave the
-  *     race refused loudly with the corpse intact — never a second
-  *     acquirer, never a half-retired state a later writer can't heal;
+  *   - the lock PAYLOAD read: a store that returns short reads, stalls on
+  *     zero-length reads or serves an oversized file must leave the owned
+  *     release and the refusal message judging the payload correctly;
   *   - the SWAP: a failure at any point of rename(dest→old) →
   *     rename(tmp→dest) must leave the table LIVE when the exception
   *     surfaces (in-process catch restore), and the states a process
@@ -17,7 +17,7 @@ import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
   *     silently rebuilt from one batch.
   *
   * Injection is a FilterFileSystem over the real local FS. Note the
-  * production code routes a FilterFileSystem down its Hadoop-API branch
+  * production code routes a FilterFileSystem down its marker branch
   * (isLocalFs is false for wrappers — documented in ParquetWarehouse),
   * which is exactly the branch remote stores take, so these cases
   * exercise the connector-shaped code paths. */
@@ -35,13 +35,6 @@ class LockFaultInjectionSpec extends SparkSpec {
     val out = fs.create(lock, false)
     out.write(payload.getBytes("UTF-8")); out.close()
     lock
-  }
-
-  private def deadPid(): Long = {
-    val p = new ProcessBuilder("true").start()
-    p.waitFor()
-    assert(java.lang.ProcessHandle.of(p.pid()).isEmpty, "fixture pid must be dead")
-    p.pid()
   }
 
   private def rows(dir: String): Set[(String, String)] =
@@ -133,74 +126,6 @@ class LockFaultInjectionSpec extends SparkSpec {
     assert(ParquetWarehouse.readLockPayload(eofAsZero, lock) === Some(payload),
       "a complete (newline-terminated) payload followed by an EOF-as-0 stall is READABLE")
     fs.delete(lock, false)
-  }
-
-  test("contended takeover whose tombstone pre-sweep THROWS a RuntimeException still acquires (best-effort sweep)") {
-    // sweepAgedTombstones' contract: a sweep failure never fails the
-    // write it piggybacks on — including the connector-wrapped
-    // RuntimeException shape (glob racing another writer reaping the same
-    // aged tomb). Before the r17 third review pass, only IOException was
-    // tolerated and the RTE failed the whole upsert.
-    val dir = freshDir("graft_inj_tombsweep")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val fs = fsFor(dir)
-    plantLock(fs, dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-dead-sweep"))
-    val globThrows = new FilterFileSystem(fs) {
-      override def globStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
-        if (p.toString.contains(".__tomb-"))
-          throw new RuntimeException("injected: glob blew up mid-sweep")
-        else super.globStatus(p)
-    }
-    ParquetWarehouse.withWriterLock(globThrows, dir) { /* acquired */ }
-    assert(!fs.exists(new Path(dir + ".__lock")),
-      "takeover + owned release must complete despite the throwing pre-sweep")
-  }
-
-  test("takeover whose retire rename refuses is refused loudly; the corpse stays; a clean retry heals") {
-    val dir = freshDir("graft_inj_retire")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val fs = fsFor(dir)
-    val lock = plantLock(fs, dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-dead"))
-    // a store whose rename refuses mid-takeover (returns false — the
-    // Hadoop contract for "didn't happen", e.g. a transient remote error)
-    val renameRefuses = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (dst.getName.contains(".__tomb-")) false else super.rename(src, dst)
-    }
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.withWriterLock(renameRefuses, dir) { fail("must not acquire") }
-    }
-    assert(e.getMessage.contains("lock"), "a failed retire must read as HELD, loudly")
-    assert(fs.exists(lock), "the corpse must be left intact for the next attempt")
-    assert(fs.globStatus(new Path(dir + ".__lock.__tomb-*")).isEmpty,
-      "a refused rename must not leave a tombstone (nothing was retired)")
-    // next writer on a healthy FS takes over normally — nothing was wedged
-    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(rows(dir) === Set(("c1", "a"), ("c2", "b")))
-    assert(!fs.exists(lock), "the retrying writer must have released cleanly")
-  }
-
-  test("takeover whose retire THROWS is refused loudly and heals on retry") {
-    val dir = freshDir("graft_inj_retire_throw")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val fs = fsFor(dir)
-    val lock = plantLock(fs, dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-dead2"))
-    val renameThrows = new FilterFileSystem(fs) {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (dst.getName.contains(".__tomb-"))
-          throw new java.io.IOException("injected: rename blew up mid-takeover")
-        else super.rename(src, dst)
-    }
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.withWriterLock(renameThrows, dir) { fail("must not acquire") }
-    }
-    assert(e.getMessage.contains("lock"))
-    assert(fs.exists(lock))
-    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(rows(dir) === Set(("c1", "a"), ("c2", "b")))
   }
 
   test("swap failure AT the first rename (dest→old refused) surfaces with the table untouched") {

@@ -2,10 +2,10 @@ package graft.sources
 
 import org.scalatest.Args
 
-/** Soak runner for the lock suites: the takeover specs (the 8-racer
-  * dead-lock race among them) are timing-sensitive concurrency tests
-  * guarding the engine's only mutual-exclusion primitive, so one green
-  * run is weak evidence. This executes WriterLockSpec +
+/** Soak runner for the lock suites: the writer-lock specs (the 8-thread
+  * race, the in-JVM guard and the SIGKILLed holder among them) are
+  * timing-sensitive concurrency tests guarding the engine's only
+  * mutual-exclusion primitive, so one green run is weak evidence. This executes WriterLockSpec +
   * LockFaultInjectionSpec N times in ONE JVM (a forked
   * `testOnly` loop would spend ~25 s per iteration on JVM+session start)
   * and fails loudly on the first red test, printing per-iteration

@@ -1,33 +1,33 @@
 package graft.sources
 
-import java.util.concurrent.{CountDownLatch, CyclicBarrier}
+import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 
 import graft.SparkSpec
 
-/** The writer lock's takeover machinery.
+/** The writer lock.
   *
-  * The headline property is the one a delete-then-create spelling could
-  * not give: N writers racing the SAME fabricated dead lock admit EXACTLY
-  * ONE acquirer (takeover is an atomic rename to a payload-derived
-  * tombstone; creation stays behind the create-no-overwrite gate). The
-  * rest pins what keeps a LIVE holder safe: only a provably dead holder
-  * (this host, pid gone) is ever broken — no lock is broken by age — and
-  * the tombstone lifecycle that turns a straggler's late rename into a
-  * loud no-op. */
+  * On a local filesystem it is the kernel's advisory lock on
+  * `<table>.__lock`: N threads racing one table hold it one at a time, a
+  * holder killed with SIGKILL releases it with nothing left to break, and
+  * the in-JVM guard keeps a refused second thread from dropping the
+  * holder's process-wide fcntl lock. On every other store (exercised
+  * through a FilterFileSystem, which takes the marker branch) a held
+  * marker is refused whatever its host, pid, age or payload. */
 class WriterLockSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString + "/t"
 
-  private def fsFor(dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def fsFor(dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def plantLock(dir: String, payload: String): org.apache.hadoop.fs.Path = {
+  private def plantLock(dir: String, payload: String): Path = {
     val fs = fsFor(dir)
-    val lock = new org.apache.hadoop.fs.Path(dir + ".__lock")
+    val lock = new Path(dir + ".__lock")
     val out = fs.create(lock, false)
     out.write(payload.getBytes("UTF-8")); out.close()
     lock
@@ -40,178 +40,136 @@ class WriterLockSpec extends SparkSpec {
     p.pid()
   }
 
-  private def tombs(dir: String): Array[org.apache.hadoop.fs.FileStatus] = {
-    val fs = fsFor(dir)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".__lock.__tomb-*")))
-      .getOrElse(Array.empty)
-  }
-
-  test("N writers racing one fabricated dead lock admit exactly one acquirer") {
+  test("N threads racing one local table hold its lock one at a time") {
     val dir = freshDir("graft_lock_race")
     val fs = fsFor(dir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir).getParent)
-    plantLock(dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "crashed-token"))
+    fs.mkdirs(new Path(dir).getParent)
     val n = 8
     val barrier = new CyclicBarrier(n)
-    val acquired = new AtomicInteger(0)
-    val refused = new AtomicInteger(0)
-    // the winner holds until every loser has been REFUSED, so no racer
-    // can arrive after a release and acquire legitimately (that would be
-    // sequential writers, not the race under test); if the takeover ever
-    // admitted two winners, n-1 refusals never arrive and the await
-    // times out — and the count assertion below fails, as it should
-    val losersDone = new CountDownLatch(n - 1)
+    val acquisitions = new AtomicInteger(0)
+    val firstRoundWinners = new AtomicInteger(0)
+    val inside = new AtomicInteger(0)
+    val maxInside = new AtomicInteger(0)
+    // the first holder keeps the lock until every other racer has been
+    // REFUSED once, so the first round is a real race for one lock; then
+    // everyone retries until it has held the lock once
+    val firstRefusals = new CountDownLatch(n - 1)
     val unexpected = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to n).map { i =>
       new Thread(() => {
         barrier.await()
-        try ParquetWarehouse.withWriterLock(fs, dir) {
-          acquired.incrementAndGet()
-          losersDone.await(20, java.util.concurrent.TimeUnit.SECONDS)
-        } catch {
-          case e: IllegalArgumentException if e.getMessage.contains("lock") =>
-            refused.incrementAndGet()
-            losersDone.countDown()
-          case t: Throwable =>
-            unexpected.add(t)
-            losersDone.countDown()
+        var first = true
+        var done = false
+        while (!done) {
+          try {
+            ParquetWarehouse.withWriterLock(fs, dir) {
+              maxInside.accumulateAndGet(inside.incrementAndGet(), (a, b) => math.max(a, b))
+              if (first) {
+                firstRoundWinners.incrementAndGet()
+                firstRefusals.await(20, TimeUnit.SECONDS)
+              }
+              Thread.sleep(5)
+              inside.decrementAndGet()
+            }
+            acquisitions.incrementAndGet()
+            done = true
+          } catch {
+            case e: IllegalArgumentException if e.getMessage.contains("another writer holds") =>
+              if (first) firstRefusals.countDown()
+              Thread.sleep(2)
+            case t: Throwable =>
+              unexpected.add(t)
+              if (first) firstRefusals.countDown()
+              done = true
+          }
+          first = false
         }
       }, s"lock-racer-$i")
     }
     threads.foreach(_.start())
-    threads.foreach(_.join(30000))
-    assert(unexpected.isEmpty, s"unexpected failures: ${unexpected}")
-    assert(acquired.get() === 1, "exactly one racer may take over a dead lock")
-    assert(refused.get() === n - 1, "every other racer must be refused loudly")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__lock")),
-      "the winner must have released on completion")
-    assert(tombs(dir).length === 1,
-      "the takeover leaves exactly one tombstone (kept until aged, so a " +
-        "straggler's late rename cannot silently land)")
+    threads.foreach(_.join(60000))
+    assert(unexpected.isEmpty, s"unexpected failures: $unexpected")
+    assert(firstRoundWinners.get() === 1, "exactly one racer may win the first round")
+    assert(maxInside.get() === 1, "two racers held the lock at once")
+    assert(acquisitions.get() === n, "every racer holds the lock once it is free")
+    assert(fs.exists(new Path(dir + ".__lock")), "the lock file outlives its holders")
   }
 
-  test("a FRESH tombstone blocks takeover of a same-payload corpse; an aged one is pre-swept") {
-    // the tombstone name is a pure function of the victim payload, so a
-    // SECOND dead lock with an identical payload maps to the same tomb.
-    // While that tomb is fresh the takeover must refuse (the tomb is the
-    // straggler guard for a race window measured in seconds — a corpse
-    // re-using it within the hour is indistinguishable from a straggler),
-    // and once aged the PRE-break sweep must reap it so the corpse is
-    // breakable again — without the pre-sweep this wedged permanently:
-    // takeover refused while the tomb exists, and the post-acquire sweep
-    // could never run because nobody could acquire.
-    val dir = freshDir("graft_lock_corpse")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+  test("a thread refused by the in-JVM guard leaves the holder's kernel lock in place") {
+    val dir = freshDir("graft_lock_guard")
     val fs = fsFor(dir)
-    // week-old corpses: rename keeps the corpse's old mtime, so the
-    // tomb's freshness must come from the winner's re-stamp
-    val weekAgo = System.currentTimeMillis() - 7L * 24 * 60 * 60 * 1000
-    val payload = ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-corpse", weekAgo)
-    fs.setTimes(plantLock(dir, payload), weekAgo, -1)
-    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(tombs(dir).length === 1, "first takeover tombstones the corpse")
-    // identical payload → identical tomb name
-    fs.setTimes(plantLock(dir, payload), weekAgo, -1)
-    val e = intercept[IllegalArgumentException] {
-      ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    }
-    assert(e.getMessage.contains("lock"), "fresh same-name tomb must block the takeover")
-    // age BOTH tomb signals (mtime and the winner's re-stamped payload
-    // ts — the sweeper honours the younger) to simulate a genuinely
-    // hour-old takeover
-    val tomb = tombs(dir).head.getPath
-    val old2 = System.currentTimeMillis() - ParquetWarehouse.LockStaleMs - 60000
-    val out = fs.create(tomb, true)
-    out.write(s"retired ts=$old2\n".getBytes("UTF-8")); out.close()
-    fs.setTimes(tomb, old2, -1)
-    ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(spark.read.parquet(dir).count() === 3,
-      "aged tomb must be pre-swept so the same-payload corpse is breakable")
-  }
-
-  test("an old dead-pid corpse's tombstone is born fresh, not pre-aged") {
-    // rename/link preserve the source mtime, so without the winner's
-    // re-stamp the tombstone of a lock left by a crash a week ago would
-    // be past the TTL AT BIRTH and reaped by the very next sweep —
-    // voiding the straggler guard for exactly those takeovers
-    val dir = freshDir("graft_lock_aged_tomb")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val fs = fsFor(dir)
-    val old = System.currentTimeMillis() - 7L * 24 * 60 * 60 * 1000
-    val lock = plantLock(dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-aged", old))
-    fs.setTimes(lock, old, -1)
-    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val t = tombs(dir)
-    assert(t.length === 1, "the takeover must leave its tombstone in place")
-    assert(System.currentTimeMillis() - t.head.getModificationTime < 60000,
-      s"tombstone must be born FRESH (got mtime age ${
-        System.currentTimeMillis() - t.head.getModificationTime} ms)")
-  }
-
-  test("contended acquisitions sweep aged tombstones; fresh ones and uncontended paths are untouched") {
-    val dir = freshDir("graft_lock_sweep")
-    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    val fs = fsFor(dir)
-    def mkTomb(name: String, age: Long): org.apache.hadoop.fs.Path = {
-      val p = new org.apache.hadoop.fs.Path(dir + ".__lock.__tomb-" + name)
-      val out = fs.create(p, false); out.write("x".getBytes("UTF-8")); out.close()
-      fs.setTimes(p, System.currentTimeMillis() - age, -1)
-      p
-    }
-    val aged = mkTomb("aged", ParquetWarehouse.LockStaleMs + 60000)
-    val fresh = mkTomb("fresh", 1000)
-    // UNCONTENDED write: no sweep runs (the glob is skipped on the happy
-    // path; an old tombstone lingering as one tiny file is harmless)
-    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(fs.exists(aged) && fs.exists(fresh),
-      "uncontended acquisition must not pay the tombstone glob")
-    // CONTENDED write (a dead lock to break): the pre-judge sweep reaps
-    // the aged tombstone and leaves the fresh one (the straggler guard)
-    plantLock(dir, ParquetWarehouse.lockPayload(
-      ParquetWarehouse.lockHost, deadPid(), "tok-sweep"))
-    ParquetWarehouse.upsert(Seq(("c3", "c")).toDF("conv_id", "v"), dir, Seq("conv_id"))
-    assert(!fs.exists(aged), "a tombstone older than the horizon is reaped pre-judge")
-    assert(fs.exists(fresh),
-      "a fresh tombstone must survive — it is the guard against a straggler's late rename")
-  }
-
-  test("a lock from another host or with an unreadable payload is refused at any age, by both writers, untouched") {
-    val dir = freshDir("graft_lock_refused")
-    ParquetWarehouse.upsert(
-      Seq(("2023-09-01", "c1", "a")).toDF("date", "conv_id", "v"), dir, Seq("date", "conv_id"))
-    val fs = fsFor(dir)
-    val lockPath = new org.apache.hadoop.fs.Path(dir + ".__lock")
-    val old = System.currentTimeMillis() - ParquetWarehouse.LockStaleMs - 60000
-    val unreadable = "x" * (64 * 1024 + 1) // over the payload cap
-    for (payload <- Seq(ParquetWarehouse.lockPayload("elsewhere", 1L, "tok-far", old), unreadable)) {
-      fs.setTimes(plantLock(dir, payload), old, -1)
-      def bytes() = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(lockPath.toUri.getPath))
-      val before = bytes()
-      val writes: Seq[() => Unit] = Seq(
-        () => ParquetWarehouse.upsert(
-          Seq(("2023-09-02", "c2", "b")).toDF("date", "conv_id", "v"), dir, Seq("date", "conv_id")),
-        () => ParquetWarehouse.upsertPartitioned(
-          Seq(("2023-09-02", "c2", "b")).toDF("date", "conv_id", "v"),
-          dir, Seq("date", "conv_id"), "date"))
-      for (write <- writes) {
-        val e = intercept[IllegalArgumentException](write())
-        assert(e.getMessage.contains(dir + ".__lock"), e.getMessage)
-        if (payload != unreadable)
-          assert(e.getMessage.contains("host=elsewhere"), e.getMessage)
-        assert(java.util.Arrays.equals(bytes(), before), "a refused lock stays byte-identical")
-        assert(spark.read.parquet(dir).count() === 1, "a refused writer must not have written")
+    fs.mkdirs(new Path(dir).getParent)
+    WriterLockSpec.whileHeld(fs, dir) {
+      val e = intercept[IllegalArgumentException] {
+        ParquetWarehouse.withWriterLock(fs, dir) { fail("a second thread must not acquire") }
       }
-      fs.delete(lockPath, false)
+      assert(e.getMessage.contains(s"another writer holds $dir.__lock"), e.getMessage)
+      assert(e.getMessage.contains(s"pid=${ProcessHandle.current().pid()}"), e.getMessage)
+      // closing a second channel on the file would have dropped the
+      // holder's process-wide fcntl lock: another process must still be
+      // refused after the in-JVM refusal
+      assert(!CrossProcessLockHarness.childAcquires(dir),
+        "the in-JVM refusal dropped the holder's kernel lock")
     }
+    assert(CrossProcessLockHarness.childAcquires(dir), "the lock is free once its holder returns")
+  }
+
+  test("a writer process SIGKILLed inside the lock releases it: the next upsert lands at once") {
+    val dir = freshDir("graft_lock_crash")
+    ParquetWarehouse.upsert(Seq(("c1", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    val child = CrossProcessLockHarness.childHolding(dir)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+      }
+      assert(e.getMessage.contains(s"pid=${child.pid()}"), e.getMessage)
+    } finally {
+      child.destroyForcibly()
+      assert(child.waitFor(60, TimeUnit.SECONDS), "killed child did not exit")
+    }
+    ParquetWarehouse.upsert(Seq(("c2", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    assert(spark.read.parquet(dir).as[(String, String)].collect().toSet ===
+      Set(("c1", "a"), ("c2", "b")))
+  }
+
+  test("a marker lock on a non-local store is refused at any age and payload, untouched; a planted local lock file holds nothing") {
+    val dir = freshDir("graft_lock_refused")
+    ParquetWarehouse.upsert(Seq(("c0", "a")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    val fs = fsFor(dir)
+    val store = new FilterFileSystem(fs) {}
+    val lockPath = new Path(dir + ".__lock")
+    def bytes() = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(lockPath.toUri.getPath))
+    val old = System.currentTimeMillis() - 7L * 24 * 60 * 60 * 1000
+    val unreadable = "x" * (64 * 1024 + 1) // over the payload cap
+    val payloads = Seq(
+      ParquetWarehouse.lockPayload("elsewhere", 1L, "tok-far", old),
+      ParquetWarehouse.lockPayload(ParquetWarehouse.lockHost, deadPid(), "tok-dead", old),
+      unreadable)
+    for (payload <- payloads) {
+      fs.delete(lockPath, false)
+      fs.setTimes(plantLock(dir, payload), old, -1)
+      val before = bytes()
+      val e = intercept[IllegalArgumentException] {
+        ParquetWarehouse.withWriterLock(store, dir) { fail("must not acquire") }
+      }
+      assert(e.getMessage.contains(dir + ".__lock"), e.getMessage)
+      if (payload != unreadable)
+        assert(e.getMessage.contains(payload.split(" ").take(2).mkString(" ")), e.getMessage)
+      assert(java.util.Arrays.equals(bytes(), before), "a refused lock stays byte-identical")
+    }
+    // the same files on the local FS hold nothing: only the kernel lock does
+    for ((payload, i) <- payloads.zipWithIndex) {
+      fs.delete(lockPath, false)
+      plantLock(dir, payload)
+      ParquetWarehouse.upsert(Seq((s"c${i + 1}", "b")).toDF("conv_id", "v"), dir, Seq("conv_id"))
+    }
+    assert(spark.read.parquet(dir).count() === payloads.size + 1)
   }
 
   test("no heartbeat thread runs while a writer body does") {
     val dir = freshDir("graft_lock_nohb")
     val fs = fsFor(dir)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir).getParent)
+    fs.mkdirs(new Path(dir).getParent)
     def heartbeats(): Seq[Thread] = {
       val all = new Array[Thread](Thread.activeCount() + 16)
       Thread.enumerate(all)
@@ -233,5 +191,21 @@ class WriterLockSpec extends SparkSpec {
         Seq(("c1", 1)).toDF("conv_id", "__Rn"), dir, Seq("conv_id"))
     }
     assert(e2.getMessage.contains("reserved"))
+  }
+}
+
+object WriterLockSpec {
+  /** Runs `f` while another thread of this JVM holds the writer lock on
+    * `dir`, and returns once that holder has released it. */
+  def whileHeld[T](fs: FileSystem, dir: String)(f: => T): T = {
+    val entered = new CountDownLatch(1)
+    val leave = new CountDownLatch(1)
+    val holder = new Thread(() =>
+      ParquetWarehouse.withWriterLock(fs, dir) { entered.countDown(); leave.await() },
+      "lock-holder")
+    holder.start()
+    require(entered.await(30, TimeUnit.SECONDS), "the holder thread never acquired the lock")
+    try f
+    finally { leave.countDown(); holder.join(30000) }
   }
 }

@@ -22,6 +22,7 @@
 #
 # Usage: tools/verify_all.sh            (from anywhere; cd's to the repo)
 #   env overrides: SF_SMALL, SF_BENCH, OUT, PLANS
+#   opt-in stages: SLOPE_MULT=<mult>, LOCK_SOAK=<iters> (see below)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -93,6 +94,19 @@ slope_probe() {
 }
 if [[ -n "${SLOPE_MULT:-}" ]]; then
   run "scaling-slope probe (mult=$SLOPE_MULT)" slope_probe
+fi
+
+# Opt-in lock soaks: LOCK_SOAK=20 tools/verify_all.sh
+# One stage, one sbt batch: graft.sources.LockSoak runs the writer-lock
+# suites (WriterLockSpec + LockFaultInjectionSpec) <iters> times in one
+# JVM, then graft.sources.CrossProcessLockSoak contends 4 writer JVMs x 8
+# upserts on one table. Timing-sensitive concurrency evidence that one
+# green `sbt test` cannot give, and a few minutes too slow for the
+# per-commit gate.
+if [[ -n "${LOCK_SOAK:-}" ]]; then
+  run "lock soaks (LockSoak $LOCK_SOAK + CrossProcessLockSoak)" sbt -batch \
+    "Test/runMain graft.sources.LockSoak $LOCK_SOAK" \
+    "Test/runMain graft.sources.CrossProcessLockSoak"
 fi
 
 if (( ${#FAILED[@]} > 0 )); then
