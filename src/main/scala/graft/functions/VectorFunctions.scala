@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float|double>` embedding columns, built entirely
-  * from codegen'd higher-order functions (`zip_with`/`aggregate`) — no UDFs,
-  * so the whole similarity pipeline stays inside whole-stage codegen and
-  * scales linearly with executor count.
+/** Vector math over `array<float|double>` embedding columns, built from
+  * codegen'd expressions — no UDFs, so the whole similarity pipeline stays
+  * inside whole-stage codegen and scales linearly with executor count.
   *
   * Elements are cast to double BEFORE multiplication: float×float would
   * accumulate float error that differs from the (double) oracle, while
@@ -27,32 +26,4 @@ object VectorFunctions {
       org.apache.spark.sql.GraftPlanBridge.expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; `roundTo` decimals absorb summation-order noise at
-    * engine boundaries (measured cross-engine delta ~1e-17 on 64-dim unit
-    * vectors — 9 decimals is conservative). Pass roundTo = -1 for the raw
-    * double. */
-  def cosine(a: Column, b: Column, roundTo: Int = 9): Column = {
-    val c = dot(a, b) / (norm(a) * norm(b))
-    if (roundTo < 0) c else round(c, roundTo)
-  }
-
-  /** Sign of a deterministic pseudo-random hyperplane projection, used by
-    * sign-random-projection LSH (Charikar 2002). The "hyperplane" h's i-th
-    * component is a zero-mean int64 derived from xxhash64(seed, i), so the
-    * same (seed, dim) always yields the same plane on every executor with
-    * zero driver-side state or broadcast. */
-  def srpBit(vec: Column, seed: Int): Column = {
-    val proj = aggregate(
-      zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) =>
-        x.cast("double") * xxhash64(lit(seed), i).cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-    // a null projection (empty vector — sequence(0,-1) zips a null pad —
-    // or a null element) must yield a NULL bit, not bit 0: the bucket sum
-    // then nulls and the LSH equi-join drops the row, instead of every
-    // degenerate vector colliding in one all-zero-signature bucket and
-    // fanning out spurious candidate pairs
-    when(proj >= 0, 1).when(proj < 0, 0)
-  }
 }

@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   *     shuffle on doc_id (the count/sum pair is combinable);
   *   - a final left join restores shingle-less docs (< n words) with zero
   *     counts so the output covers every train doc exactly once.
-  * Set `broadcastEval = false` when the eval set is genuinely large (e.g.
-  * decontaminating against another corpus slice) — the probe becomes a
-  * plain shuffle equi-join on the shingle; same output.
   *
   * Output: (doc_id, n_shingles, n_hits, contaminated) — `n_hits` counts
   * the train doc's distinct shingles that appear anywhere in the eval
@@ -36,16 +33,14 @@ object Decontamination {
       eval: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      n: Int = 3,
-      broadcastEval: Boolean = true): DataFrame = {
+      n: Int = 3): DataFrame = {
     val evalSh = eval
       .select(explode(TextOps.shingles(eval.sparkSession, col(textCol), n)).as("shingle"))
       .distinct()
       .withColumn("hit", lit(1L))
-    val probeSide = if (broadcastEval) broadcast(evalSh) else evalSh
     val perDoc = train
       .select(col(idCol).as("doc_id"), explode(TextOps.shingles(train.sparkSession, col(textCol), n)).as("shingle"))
-      .join(probeSide, Seq("shingle"), "left")
+      .join(broadcast(evalSh), Seq("shingle"), "left")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("n_shingles"),

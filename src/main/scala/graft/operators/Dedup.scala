@@ -174,54 +174,38 @@ object Dedup {
     * frame (exchange reuse ⇒ the shingle construction runs once, vs four
     * Generate subtrees in the naive two-sided self-join). Cost is
     * Σ_shingle |posting|² — the inverted-index bound — with no broadcast
-    * of the exploded shingle table. */
-  /** Null-id note: documents with a NULL `idCol` are EXCLUDED from pair
+    * of the exploded shingle table; per-row MEMORY is bounded by the tile
+    * width (see [[explodedPairs]]), not by the hottest posting's square.
+    *
+    * Corpus stats (doc count, id range) size the plan: pass them as
+    * `corpusHint` (staged once per corpus, the production convention) and
+    * building the frame runs no job; without one, [[measureCorpus]] runs
+    * one narrow agg scan at construction.
+    *
+    * Null-id note: documents with a NULL `idCol` are EXCLUDED from pair
     * generation (`collect_list` skips nulls when building postings), so
     * they never appear as either side of an output pair — exact near-dup
     * of an unidentified document has no well-defined (a, b) spelling.
-    * Callers needing them covered assign surrogate ids first.
-    *
-    * `prefixFilter` selects the plan: `Some(true)` forces the AllPairs
-    * prefix-filtered variant, `Some(false)` the inverted-index all-pairs
-    * variant, `None` (default) measures the corpus and decides. Measured
-    * on the 5k-doc / max-25-posting benchmark corpus the prefix machinery
-    * (doc-frequency join + two windows over the shingle rows) costs MORE
-    * than it saves (27 s vs 11 s); on heavy-tailed posting lists
-    * (boilerplate-laden web text) candidate volume — Σ|posting|² — is the
-    * dominant term and prefix filtering wins. All variants produce
-    * identical output. */
+    * Callers needing them covered assign surrogate ids first. */
   def ngramJaccard(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       n: Int = 3,
       minJaccard: Double = 0.5,
-      prefixFilter: Option[Boolean] = None,
-      corpusHint: Option[CorpusHint] = None): DataFrame = {
-    // fully-auto path: derive the corpus stats ONCE and share them with
-    // both planning decisions — prefixWorthIt needs docCount for its
-    // scale extrapolation and the all-pairs variant needs the id range
-    // for packability, so deriving them separately would cost two full
-    // planning scans where one suffices
-    val hint = corpusHint.orElse(
-      if (prefixFilter.isEmpty) Some(measureCorpus(docs, idCol)) else None)
-    val usePrefix = prefixFilter.getOrElse(
-      prefixWorthIt(docs, idCol, textCol, n, corpusSize = hint.map(_.docCount)))
-    if (usePrefix) ngramJaccardPrefix(docs, idCol, textCol, n, minJaccard)
-    else ngramJaccardAllPairs(docs, idCol, textCol, n, minJaccard, hint)
-  }
+      corpusHint: Option[CorpusHint] = None): DataFrame =
+    ngramJaccardBlocked(docs, idCol, textCol, n, minJaccard, corpusHint, PairBlockSize)
 
   /** Caller-supplied corpus statistics: doc count plus the id range. When
-    * provided, the all-pairs plan is chosen from these numbers and NO
+    * provided, `ngramJaccard` plans from these numbers and NO
     * construction-time stats scan runs — DataFrame construction stays fully
-    * lazy (the auto path's scan is a deliberate, documented planning
-    * action, like `prefixWorthIt`'s sample). The caller owns correctness:
-    * an understated `maxId` ≥ 2³¹ would corrupt the packed pairs. */
+    * lazy. The caller owns correctness: an understated `maxId` ≥ 2³¹ would
+    * corrupt the packed pairs. */
   final case class CorpusHint(docCount: Long, minId: Long, maxId: Long)
 
   /** The one way corpus stats are derived — the staged-stats convention
-    * (compute once per corpus, pass everywhere) and the auto path's
-    * planning scan MUST agree on the packability contract (the null-id
+    * (compute once per corpus, pass everywhere) and `ngramJaccard`'s
+    * unhinted scan MUST agree on the packability contract (the null-id
     * sentinel in particular: an understated maxId ≥ 2³¹ would corrupt
     * the packed pairs), so both call this. One narrow agg scan. */
   def measureCorpus(docs: DataFrame, idCol: String = "doc_id"): CorpusHint = {
@@ -245,90 +229,17 @@ object Dedup {
     }
   }
 
-  /** Plan selection from the MEASURED posting-length distribution, not a
-    * caller guess — and SCALE-AWARE (r13): the sampled stats are
-    * extrapolated to the full corpus before comparing costs, because the
-    * two plans scale differently. With r = corpus docs / sampled docs:
-    * a shingle repeated within the sample (df ≥ 2 — boilerplate, shared
-    * templates) appears ∝ r more often corpus-wide, so its all-pairs
-    * candidate mass df² grows r²; shingles unique in the sample stay
-    * ~unique. Prefix-filter overhead (doc-frequency join + two windows)
-    * grows with the shingle rows, i.e. linearly in r. Dividing both
-    * sides by one factor of r: prefix ⇔ Σ_{df≥2}df²·r + m1 > 64·m,
-    * where m = sampled shingle rows and m1 = sampled singleton count.
-    * At r = 1 this is exactly the pre-r13 rule (Σdf² > 64·m); on a
-    * boilerplate-skewed corpus it FLIPS to prefix as the corpus grows —
-    * the sample-size-invariant old rule could not, and all-pairs
-    * candidate volume at 100× is r² ≈ 10⁴-fold, the difference between
-    * finishing and not. Runs as a small driver-side planning action over
-    * ≤ `sampleDocs` documents (plus one count scan when `corpusSize` is
-    * not supplied). */
-  private[operators] def prefixWorthIt(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      n: Int = 3,
-      sampleDocs: Int = 2048,
-      corpusSize: Option[Long] = None): Boolean = {
-    val nDocs = corpusSize.getOrElse(docs.count())
-    if (nDocs <= 0) return false
-    // sample DOCS (not shingle rows): the extrapolation ratio needs a doc
-    // basis. Each sampled doc's text is capped (~8 KB ≈ 1.3k words) so
-    // book-length documents cannot turn the planning scan into a corpus-
-    // sized explode; the distribution of a doc's leading shingles stands
-    // in for the whole doc, a deliberate planning approximation.
-    // persisted before its two actions: an un-ordered limit is NOT
-    // stable across executions on a multi-partition input, so the
-    // shingle aggregation and the nSampled count below could otherwise
-    // observe DIFFERENT row subsets — nSampled would still be exact, but
-    // r's numerator-denominator pairing would mix two samples, skewing
-    // the ratio near the decision threshold. Bounded at sampleDocs rows
-    // × 8 KB text, so pinning it is a few MB at most.
-    val sampled = docs
-      .select(substring(col(textCol), 1, 8192).as(textCol))
-      .limit(sampleDocs)
-      .persist()
-    try {
-    val row = sampled
-      .select(explode(TextOps.shingles(docs.sparkSession, col(textCol), n)).as("shingle"))
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .agg(
-        coalesce(sum(col("df")), lit(0L)).as("m"),
-        coalesce(sum(when(col("df") === 1, lit(1L))), lit(0L)).as("m1"),
-        coalesce(sum(when(col("df") >= 2, col("df") * col("df"))), lit(0L)).as("s2rep"))
-      .first()
-    val (m, m1, s2rep) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    if (m == 0L) return false
-    // r must divide by the docs ACTUALLY sampled: when the df holds fewer
-    // rows than sampleDocs but corpusSize says more (a caller-staged
-    // count, a pre-filtered frame), min(sampleDocs, corpusSize) would
-    // understate r — exactly halving the extrapolated candidate mass in
-    // the spec's 1000-rows/corpusSize=100k shape. Counting the ≤2048-row
-    // sample is a trivially bounded second planning action (served from
-    // the persisted sample, so it is the SAME rows the stats came from).
-    val nSampled = sampled.count()
-    if (nSampled <= 0L) return false
-    val r = math.max(1.0, nDocs.toDouble / nSampled.toDouble)
-    s2rep * r + m1 > 64.0 * m
-    } finally sampled.unpersist()
-  }
-
-  /** Brute inverted-index variant: every co-occurring pair is counted.
-    * Plan shape: one shuffle builds sorted posting lists per shingle;
-    * candidate pairs are generated from each posting with array
-    * combinatorics, and the per-doc set sizes fall out of the same posting
-    * frame (exchange reuse ⇒ the shingle construction runs once, vs four
-    * Generate subtrees in a naive two-sided self-join). Cost is
-    * Σ_shingle |posting|²; per-row MEMORY is bounded by `pairBlock` (see
-    * [[explodedPairs]]), not by the hottest posting's square. */
-  private[operators] def ngramJaccardAllPairs(
+  /** `ngramJaccard` with the candidate tile width as a parameter — the
+    * specs drive it far below [[PairBlockSize]] to exercise the tiles on
+    * a small corpus. */
+  private[operators] def ngramJaccardBlocked(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       n: Int,
       minJaccard: Double,
-      corpusHint: Option[CorpusHint] = None,
-      pairBlock: Int = PairBlockSize): DataFrame = {
+      corpusHint: Option[CorpusHint],
+      pairBlock: Int): DataFrame = {
     val sh = docs.select(
       col(idCol).as("doc_id"),
       explode(TextOps.shingles(docs.sparkSession, col(textCol), n)).as("shingle"))
@@ -384,57 +295,10 @@ object Dedup {
       .select(col("a"), col("b"), col("n_common"), col("jaccard"))
   }
 
-  /** AllPairs prefix filtering (Bayardo et al., WWW'07): order shingles
-    * globally by (document frequency, shingle) and index only each doc's
-    * first |d| − ⌈t·|d|⌉ + 1 rarest shingles. Any pair with Jaccard ≥ t
-    * must share a prefix shingle, so the candidate join runs over the
-    * rare-shingle postings only; candidates are then verified exactly on
-    * the full shingle sets. Output is IDENTICAL to the all-pairs variant
-    * for the given threshold — the DuckDB oracle for q18 stays brute
-    * force. */
-  private[operators] def ngramJaccardPrefix(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      minJaccard: Double,
-      pairBlock: Int = PairBlockSize): DataFrame = {
-    val shingleSets = docs.select(
-      col(idCol).as("doc_id"), TextOps.shingles(docs.sparkSession, col(textCol), n).as("sh"))
-    val sh = shingleSets.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val docFreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
-    val prefixes = sh
-      .join(docFreq, Seq("shingle"))
-      .withColumn("rk", row_number().over(byRarity))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      // epsilon inside the ceil: when t·sz is mathematically integral the
-      // IEEE product can land a hair ABOVE it (0.55·100 = 55.000…01), and
-      // an unguarded ceil would shorten the prefix by one — silently
-      // missing qualifying pairs and breaking the ≡-all-pairs contract
-      .filter(col("rk") <= col("sz") - ceil(lit(minJaccard) * col("sz") - lit(1e-9)) + 1)
-      .select(col("doc_id"), col("shingle"))
-    val cands = explodedPairs(
-      prefixes.groupBy(col("shingle"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
-        .filter(size(col("docs")) > 1),
-      packed = false, blockSize = pairBlock)
-      .distinct()
-    cands
-      .join(shingleSets.select(col("doc_id").as("a"), col("sh").as("sh_a")), Seq("a"))
-      .join(shingleSets.select(col("doc_id").as("b"), col("sh").as("sh_b")), Seq("b"))
-      .withColumn("n_common", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("a"), col("b"), col("n_common"), col("jaccard"))
-  }
-
   /** Tile width for blocked candidate generation: per-row pair buffers are
     * capped at B² packed longs regardless of posting length, so a
     * boilerplate-heavy posting can never allocate its |posting|²/2 pairs
-    * in one buffer — the measured OOM of the forced all-pairs plan at the
+    * in one buffer — the measured OOM of the untiled plan at the
     * 100× bench decade (df ≈ 12.5k ⇒ ~0.6 GB per evaluation × concurrent
     * tasks). B = 256 (512 KB of packed longs per tile, ~1 MB with the
     * UnsafeArrayData copy) rather than something roomier like 1024: at
@@ -681,7 +545,7 @@ object Dedup {
 
   /** EXACT embedding-cosine near-dup pairs above `minCosine` — every
     * qualifying pair is returned (no LSH recall loss; the approximate
-    * bucketed path is `Similarity.srpBuckets`/`lshAnnTopK`).
+    * bucketed path is `Similarity.srpBucketsFixed`/`lshAnnTopK`).
     *
     * Exact all-pairs in high-dimensional dense space is inherently O(n²)
     * comparisons, but the PLAN must not be a broadcast nested loop (the

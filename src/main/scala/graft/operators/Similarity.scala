@@ -12,9 +12,10 @@ import graft.functions.VectorFunctions
   *     windowed top-k. Correct at any scale where |queries|·|corpus| pairs
   *     are affordable (broadcast the query side: the join is then a
   *     shuffle-free broadcast nested loop over corpus partitions).
-  *   - `srpBuckets` / `lshAnnTopK`: sign-random-projection LSH — hash each
-  *     vector to a `bits`-bit code from deterministic pseudo-random
-  *     hyperplanes, probe only the corpus bucket(s) matching the query's
+  *   - `srpBucketsFixed` / `lshAnnTopK`: sign-random-projection LSH — hash
+  *     each vector of a known dimension to a `bits`-bit code from
+  *     md5-derived ±1 hyperplanes inlined as literals (the chain the q32
+  *     oracle replays), probe only the corpus bucket matching the query's
   *     code. At 100 TB the corpus is bucketed once (write-time partition),
   *     each query touches |corpus|/2^bits vectors.
   */
@@ -46,17 +47,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
 
-  /** Attach the SRP-LSH bucket code (bits-bit int) to each vector. */
-  def srpBuckets(
-      vectors: DataFrame,
-      vecCol: String = "embedding",
-      bits: Int = 8): DataFrame = {
-    val code = (0 until bits)
-      .map(b => VectorFunctions.srpBit(col(vecCol), b).cast("long") * (1L << b))
-      .reduce(_ + _)
-    vectors.withColumn("bucket", code)
-  }
-
   /** Deterministic Rademacher (±1) hyperplane for SRP: component i of
     * plane `seed` is the parity of md5("seed:i") — computed once at PLAN
     * time and inlined as literals, so (a) the projection is a pure codegen
@@ -72,20 +62,20 @@ object Similarity {
     }
   }
 
-  /** Known-dimension SRP buckets: the projection is an unrolled
-    * left-associated multiply-add chain over literal ±1 weights — stays in
-    * whole-stage codegen, no lambdas, and is reproducible bit-for-bit by
-    * any engine that evaluates the same chain. */
+  /** Attach the SRP-LSH bucket code (a `bits`-bit long) to each vector of
+    * dimension `dim`: the projection is an unrolled left-associated
+    * multiply-add chain over literal ±1 weights — stays in whole-stage
+    * codegen, no lambdas, and is reproducible bit-for-bit by any engine
+    * that evaluates the same chain. */
   def srpBucketsFixed(
       vectors: DataFrame,
       vecCol: String = "embedding",
       bits: Int = 8,
       dim: Int = 64): DataFrame = {
-    // CONTRACT: every vector carries at least `dim` components — this is
-    // the KNOWN-dimension variant, and a shorter vector fails LOUDLY
-    // under ANSI mode (element_at past the end) rather than silently
-    // mis-bucketing; validate or filter upstream (the dimension-agnostic
-    // srpBuckets handles ragged/degenerate vectors with NULL buckets).
+    // CONTRACT: every vector carries at least `dim` components — a
+    // shorter (or empty) vector fails LOUDLY under ANSI mode (element_at
+    // past the end) rather than silently mis-bucketing; validate or
+    // filter ragged input upstream.
     // Null elements contribute bit 0 — part of the literal-chain
     // semantics the q32 oracle replays verbatim, and load-bearing for
     // speed: every guarded variant tried (CASE-wrapped sum, try_element_at,
@@ -311,8 +301,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("qcosine"), col("rank"))
   }
 
-  /** ANN top-k: candidates share the query's LSH bucket; exact cosine +
-    * top-k only within the bucket. Recall improves with fewer bits (bigger
+  /** ANN top-k: candidates share the query's LSH bucket
+    * ([[srpBucketsFixed]] over `dim` components); exact cosine + top-k
+    * only within the bucket. Recall improves with fewer bits (bigger
     * buckets) — callers trade bits vs probe cost. */
   def lshAnnTopK(
       queries: DataFrame,
@@ -321,15 +312,11 @@ object Similarity {
       vecCol: String = "embedding",
       bits: Int = 8,
       k: Int = 10,
-      fixedDim: Option[Int] = None): DataFrame = {
-    def bucketed(df: DataFrame) = fixedDim match {
-      case Some(d) => srpBucketsFixed(df, vecCol, bits, d)
-      case None    => srpBuckets(df, vecCol, bits)
-    }
-    val q = bucketed(queries)
+      dim: Int): DataFrame = {
+    val q = srpBucketsFixed(queries, vecCol, bits, dim)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"), col("bucket"),
         VectorFunctions.norm(col(vecCol)).as("qn"))
-    val c = bucketed(corpus)
+    val c = srpBucketsFixed(corpus, vecCol, bits, dim)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("bucket"),
         VectorFunctions.norm(col(vecCol)).as("cn"))
     val rank = Window.partitionBy(col("query_id"))

@@ -42,16 +42,26 @@ class DecontaminationSpec extends SparkSpec {
     assert(rows(Some(1L)) === ((3L, 0L, 0L)))
   }
 
-  test("broadcast and shuffle probe paths produce identical results") {
+  test("decontaminate on the sf0.001 corpus equals a driver-side shingle-set reference") {
     val docs = Tables.documents(spark, TinySf)
     val train = docs.filter(col("doc_id") % 10 =!= 0)
     val eval = docs.filter(col("doc_id") % 10 === 0)
-    val a = Decontamination.decontaminate(train, eval, broadcastEval = true)
+    val got = Decontamination.decontaminate(train, eval)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val b = Decontamination.decontaminate(train, eval, broadcastEval = false)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(a === b)
-    assert(a.exists(_._4 == 1L), "fixture should contain contaminated docs")
+    // distinct word 3-grams: split on a single space, empty tokens kept
+    def shingles(text: String): Set[String] = {
+      val w = Option(text).fold(Array.empty[String])(_.split(" ", -1))
+      if (w.length < 3) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
+    }
+    val evalSh = eval.select("text").as[String].collect().flatMap(shingles).toSet
+    val expected = train.select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
+      .map { case (id, text) =>
+        val sh = shingles(text)
+        val hits = sh.count(evalSh).toLong
+        (id, sh.size.toLong, hits, if (hits > 0) 1L else 0L)
+      }.toSeq
+    assert(got === expected)
+    assert(got.exists(_._4 == 1L), "fixture should contain contaminated docs")
   }
 }
 

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.JobProbe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -80,59 +81,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs === Set((1L, 2L)))
   }
 
-  test("prefix-filtered Jaccard equals the all-pairs variant at several thresholds") {
-    val docs = Tables.documents(spark, TinySf).cache()
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val pref = Dedup.ngramJaccardPrefix(docs, "doc_id", "text", 3, t)
-        .select("a", "b", "n_common", "jaccard")
-        .as[(Long, Long, Long, Double)].collect().toSet
-      val brute = Dedup.ngramJaccardAllPairs(docs, "doc_id", "text", 3, t)
-        .select("a", "b", "n_common", "jaccard")
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(pref === brute, s"threshold $t")
-    }
-    docs.unpersist()
-  }
-
-  test("prefix auto-selection: light postings pick all-pairs, boilerplate picks prefix") {
-    // testdata corpus: 31-word vocabulary, short posting lists → candidate
-    // volume is cheap, the prefix machinery isn't worth its extra passes
-    val light = Tables.documents(spark, TinySf)
-    assert(!Dedup.prefixWorthIt(light))
-    // boilerplate corpus: 300 docs all sharing the same shingles → one
-    // posting of length 300, Σdf² = 90000 ≫ 64·m — prefix filtering pays
-    val heavy = (1L to 300L)
-      .map(i => (i, "identical boilerplate header repeated across every single document here"))
-      .toDF("doc_id", "text")
-    assert(Dedup.prefixWorthIt(heavy))
-    // the auto path returns the same pairs either way (plan-only decision)
-    val auto = Dedup.ngramJaccard(heavy, minJaccard = 0.9)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    val forced = Dedup.ngramJaccard(heavy, minJaccard = 0.9, prefixFilter = Some(false))
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(auto === forced)
-    assert(auto.size === 300 * 299 / 2)
-  }
-
-  test("prefixWorthIt is scale-aware: the same distribution flips to prefix as the corpus grows") {
-    // 20% of docs share one boilerplate template; the rest are unique.
-    // At sample ≈ corpus the repeated-shingle candidate mass doesn't
-    // justify the prefix machinery's extra passes — but all-pairs
-    // candidate volume grows r² with corpus size while prefix overhead
-    // grows r, so the SAME sampled distribution at 100× the size must
-    // flip. The pre-r13 rule was sample-size-invariant and could not.
-    val docs = (1L to 1000L).map { i =>
-      val text =
-        if (i % 5 == 0) "shared boilerplate template header goes here exactly"
-        else s"unique body ${i}a ${i}b ${i}c ${i}d ${i}e ${i}f ${i}g"
-      (i, text)
-    }.toDF("doc_id", "text")
-    assert(!Dedup.prefixWorthIt(docs, corpusSize = Some(1000L)),
-      "at true size the boilerplate mass is below the prefix-overhead threshold")
-    assert(Dedup.prefixWorthIt(docs, corpusSize = Some(100000L)),
-      "the same distribution extrapolated to 100x must choose prefix")
-  }
-
   test("ngramJaccard: case-mismatched idCol resolves like the analyzer, not a crash") {
     // col("DOC_ID") resolves field "doc_id" (spark.sql.caseSensitive=false)
     // everywhere else in the operator, so the packability type test's
@@ -142,13 +90,41 @@ class DedupSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy cat"),
       (3L, "completely different text with no overlap at all")
     ).toDF("doc_id", "text")
-    val mixed = Dedup.ngramJaccard(docs, idCol = "DOC_ID", minJaccard = 0.5,
-        prefixFilter = Some(false))
+    val mixed = Dedup.ngramJaccard(docs, idCol = "DOC_ID", minJaccard = 0.5)
       .select("a", "b").as[(Long, Long)].collect().toSet
-    val exact = Dedup.ngramJaccard(docs, minJaccard = 0.5, prefixFilter = Some(false))
+    val exact = Dedup.ngramJaccard(docs, minJaccard = 0.5)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(mixed === exact)
     assert(exact === Set((1L, 2L)))
+  }
+
+  test("ngramJaccard builds with no job given a corpus hint, and one stats scan without") {
+    // doc 2's 1-grams are exactly the first 55 of doc 1's 100, so the pair
+    // sits exactly at the threshold: Jaccard 55/100 = 0.55
+    val docs = Seq(
+      (1L, (0 until 100).map(i => s"t$i").mkString(" ")),
+      (2L, (0 until 55).map(i => s"t$i").mkString(" "))
+    ).toDF("doc_id", "text")
+    val hint = Dedup.measureCorpus(docs)
+    val (hinted, hintedJobs) = JobProbe(spark.sparkContext) {
+      Dedup.ngramJaccard(docs, n = 1, minJaccard = 0.55, corpusHint = Some(hint))
+    }
+    assert(hintedJobs.jobs === 0, s"building with a hint ran ${hintedJobs.jobs} jobs")
+    // without one, building runs measureCorpus's single agg query and
+    // nothing else (AQE runs the agg's shuffle map stage as a job of its own)
+    val (unhinted, queries) = ExecutedQueries.during(spark) {
+      Dedup.ngramJaccard(docs, n = 1, minJaccard = 0.55)
+    }
+    assert(queries === Seq("head"), s"building without a hint ran $queries")
+    val (_, statsJobs) = JobProbe(spark.sparkContext)(Dedup.measureCorpus(docs))
+    val (_, unhintedJobs) = JobProbe(spark.sparkContext) {
+      Dedup.ngramJaccard(docs, n = 1, minJaccard = 0.55)
+    }
+    assert(unhintedJobs.jobs === statsJobs.jobs,
+      s"building without a hint ran ${unhintedJobs.jobs} jobs, measureCorpus ${statsJobs.jobs}")
+    def pairs(df: DataFrame) = df.select("a", "b").as[(Long, Long)].collect().toSet
+    assert(pairs(hinted) === Set((1L, 2L)))
+    assert(pairs(unhinted) === Set((1L, 2L)))
   }
 
   private def labels(cc: DataFrame): Seq[(Long, Long)] =
@@ -266,25 +242,25 @@ class DedupSpec extends SparkSpec {
     // past pairBlock = 7, so the tile path generates ~all candidates on
     // both the packed (long-id) and struct (string-id) branches — the
     // memory-bounded plan the 100× bench decade needs (single-shot pair
-    // buffers are Θ(|posting|²) and OOM'd the forced all-pairs run there)
+    // buffers are Θ(|posting|²) and OOM'd the untiled run there)
     val heavy = (1L to 300L)
       .map(i => (i, "identical boilerplate header repeated across every single document here"))
       .toDF("doc_id", "text")
     def key(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Double)] =
       df.select("a", "b", "n_common", "jaccard").as[(Long, Long, Long, Double)].collect().toSet
-    val single = key(Dedup.ngramJaccardAllPairs(heavy, "doc_id", "text", 3, 0.5))
+    val single = key(Dedup.ngramJaccardBlocked(heavy, "doc_id", "text", 3, 0.5, None, 1000))
     assert(single.size === 300L * 299 / 2, "fixture: every pair is a full dup")
-    assert(key(Dedup.ngramJaccardAllPairs(heavy, "doc_id", "text", 3, 0.5,
-      pairBlock = 7)) === single, "packed tile path")
+    assert(key(Dedup.ngramJaccardBlocked(heavy, "doc_id", "text", 3, 0.5, None, 7))
+      === single, "packed tile path")
+    // the public entry (default tile width, unhinted) at a 0.9 threshold
+    assert(key(Dedup.ngramJaccard(heavy, minJaccard = 0.9)) === single, "ngramJaccard")
     // string ids force the struct branch through the same tiles
     val heavyStr = heavy.withColumn("doc_id", format_string("d%03d", col("doc_id")))
     def keyS(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long, Double)] =
       df.select("a", "b", "n_common", "jaccard").as[(String, String, Long, Double)].collect().toSet
-    assert(keyS(Dedup.ngramJaccardAllPairs(heavyStr, "doc_id", "text", 3, 0.5, pairBlock = 7))
-      === keyS(Dedup.ngramJaccardAllPairs(heavyStr, "doc_id", "text", 3, 0.5)), "struct tile path")
-    // prefix variant: its candidate postings tile through the same helper
-    assert(key(Dedup.ngramJaccardPrefix(heavy, "doc_id", "text", 3, 0.5, pairBlock = 7))
-      === single, "prefix tile path")
+    assert(keyS(Dedup.ngramJaccardBlocked(heavyStr, "doc_id", "text", 3, 0.5, None, 7))
+      === keyS(Dedup.ngramJaccardBlocked(heavyStr, "doc_id", "text", 3, 0.5, None, 1000)),
+      "struct tile path")
   }
 }
 
@@ -320,7 +296,7 @@ class SimilaritySpec extends SparkSpec {
     assert(buckets.values.toSet.size > 1)
     // every ANN neighbor shares its query's bucket by construction
     val ann = Similarity.lshAnnTopK(
-      emb.filter(col("vec_id") < 5), emb, bits = 4, k = 3, fixedDim = Some(64))
+      emb.filter(col("vec_id") < 5), emb, bits = 4, k = 3, dim = 64)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(ann.nonEmpty)
     ann.foreach { case (q, n) => assert(buckets(q) === buckets(n)) }
@@ -329,36 +305,21 @@ class SimilaritySpec extends SparkSpec {
 
   test("SRP-LSH: bucket codes are deterministic and ANN results ⊆ exact results domain") {
     val emb = Tables.embeddings(spark, TinySf).cache()
-    val b1 = Similarity.srpBuckets(emb).select("vec_id", "bucket").as[(Long, Long)].collect().toMap
-    val b2 = Similarity.srpBuckets(emb).select("vec_id", "bucket").as[(Long, Long)].collect().toMap
-    assert(b1 === b2)
+    def buckets() = Similarity.srpBucketsFixed(emb, bits = 4, dim = 64)
+      .select("vec_id", "bucket").as[(Long, Long)].collect().toMap
+    val b1 = buckets()
+    assert(b1 === buckets())
     assert(b1.values.toSet.size > 1, "vectors should spread across buckets")
-    val ann = Similarity.lshAnnTopK(emb.filter(col("vec_id") < 5), emb, bits = 4, k = 3)
-    // every ANN neighbor shares the query's bucket by construction
-    assert(ann.count() > 0)
+    val queries = emb.filter(col("vec_id") < 5)
+    val ann = Similarity.lshAnnTopK(queries, emb, bits = 4, k = 3, dim = 64)
+      .select("query_id", "neighbor_id", "cosine").as[(Long, Long, Double)].collect()
+    assert(ann.nonEmpty)
+    // every ANN row is an exact (query, neighbor, cosine) row: the bucket
+    // only narrows the candidates, it never changes a score
+    val exact = Similarity.bruteForceTopK(queries, emb, k = Int.MaxValue)
+      .select("query_id", "neighbor_id", "cosine").as[(Long, Long, Double)].collect().toSet
+    assert(ann.toSet.subsetOf(exact))
     emb.unpersist()
-  }
-
-  test("SRP-LSH: empty embeddings get a NULL bucket and fall out of ANN, not one shared bucket") {
-    // an empty vector's projection is null for every plane; bit 0 for all
-    // bits would put EVERY degenerate vector in the same bucket and fan
-    // out spurious candidate pairs — a null bucket instead drops them at
-    // the equi-join, which is the brute-force twin's behavior too (0/0
-    // cosine never crosses a threshold)
-    val mixed = Seq(
-      (900L, Seq.empty[Float]), (901L, Seq.empty[Float]),
-      (1L, Seq.fill(8)(0.5f)), (2L, Seq.fill(8)(0.4f))
-    ).toDF("vec_id", "embedding")
-    val buckets = Similarity.srpBuckets(mixed, bits = 4)
-      .select("vec_id", "bucket").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(buckets(900L) === None)
-    assert(buckets(901L) === None)
-    assert(buckets(1L).isDefined && buckets(2L).isDefined)
-    val ann = Similarity.lshAnnTopK(mixed, mixed, bits = 4, k = 3)
-    val ids = ann.select("query_id").as[Long].collect().toSet ++
-      ann.select("neighbor_id").as[Long].collect().toSet
-    assert(!ids.contains(900L) && !ids.contains(901L))
   }
 
   test("IVF ANN: deterministic quantizer, ≤k ranked neighbors, nprobe=nlist ⊇ nprobe=1") {
@@ -464,7 +425,7 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(queries, emb, k = 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val lsh = Similarity.lshAnnTopK(queries, emb, bits = 4, k = 10, fixedDim = Some(64))
+    val lsh = Similarity.lshAnnTopK(queries, emb, bits = 4, k = 10, dim = 64)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val hits = lsh.count { case (q, n) => exact(q).contains(n) }
     val recall = hits.toDouble / exact.values.map(_.size).sum
@@ -512,28 +473,6 @@ class ChunkerPropertySpec extends SparkSpec {
 class DedupSimilarityEdgeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("prefix bound survives FP round-up when t*sz is integral (0.55 x 100)") {
-    // 0.55·100 = 55.000…01 in IEEE double: an unguarded ceil gives 56 and
-    // shortens the prefix by one, silently missing qualifying pairs
-    val sz = 100
-    // doc 1: shingle-atoms a0..a99; doc 2: exactly doc 1's atoms a0..a54
-    // → jaccard 55/100 = 0.55, exactly at the threshold
-    def text(n: Int) = (0 until n).map(i => s"w$i").mkString(" ") + " w_end w_end2"
-    // build via explicit shingle-bearing texts: use 1-gram shingles by
-    // constructing with n=1 tokens through ngramJaccardPrefix directly
-    val docs = Seq(
-      (1L, (0 until 100).map(i => s"t$i").mkString(" ")),
-      (2L, (0 until 55).map(i => s"t$i").mkString(" "))
-    ).toDF("doc_id", "text")
-    val viaPrefix = Dedup.ngramJaccardPrefix(docs, "doc_id", "text", 1, 0.55)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    val viaAllPairs = Dedup.ngramJaccardAllPairs(docs, "doc_id", "text", 1, 0.55)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(viaAllPairs === Set((1L, 2L)))
-    assert(viaPrefix === viaAllPairs)
-    val _ = text(1)
-  }
-
   test("measureCorpus and ngramJaccard tolerate STRING ids under ANSI mode") {
     // a cast of 'doc-a1' to long THROWS under ANSI — the packability scan
     // must skip the min/max for non-long schemas instead of dying
@@ -543,24 +482,27 @@ class DedupSimilarityEdgeSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val hint = Dedup.measureCorpus(docs)
     assert(hint.docCount === 2L)
-    val pairs = Dedup.ngramJaccard(docs, minJaccard = 0.5, prefixFilter = Some(false))
+    val pairs = Dedup.ngramJaccard(docs, minJaccard = 0.5)
       .select("a", "b").as[(String, String)].collect().toSet
     assert(pairs === Set(("doc-a1", "doc-b2")))
   }
 
   test("fixed-dim SRP: a short vector fails LOUDLY (known-dim contract), not silent mis-bucketing") {
-    // the fixed-dimension variant's contract: every vector has >= dim
-    // components; ANSI surfaces a violation as an error instead of a
-    // silently wrong bucket (the dimension-agnostic srpBuckets is the
-    // ragged-input path, where degenerate vectors get NULL buckets)
+    // the SRP bucketing's contract: every vector has >= dim components;
+    // ANSI surfaces a violation as an error instead of a silently wrong
+    // bucket — an empty vector included, which must not land in a shared
+    // all-zero bucket and fan out spurious candidate pairs
     val mixed = Seq(
       (900L, Seq.fill(3)(0.5f)),         // shorter than dim
+      (901L, Seq.empty[Float]),          // empty
       (1L, Seq.fill(8)(0.5f))
     ).toDF("vec_id", "embedding")
-    val e = intercept[Exception] {
-      Similarity.srpBucketsFixed(mixed, bits = 4, dim = 8).collect()
+    for (bad <- Seq(900L, 901L)) {
+      val e = intercept[Exception] {
+        Similarity.srpBucketsFixed(mixed.filter(col("vec_id") === bad), bits = 4, dim = 8).collect()
+      }
+      assert(e.getMessage.contains("INVALID_ARRAY_INDEX"), s"vec $bad")
     }
-    assert(e.getMessage.contains("INVALID_ARRAY_INDEX"))
     // valid fixed-dim input buckets normally
     val ok = Similarity.srpBucketsFixed(mixed.filter(col("vec_id") === 1L), bits = 4, dim = 8)
     assert(ok.select("bucket").collect().forall(!_.isNullAt(0)))

@@ -271,16 +271,43 @@ class PercentileRankSpec extends SparkSpec {
 
   test("matches Spark's percent_rank under the same total order; singleton pins 0") {
     val rng = new Random(31)
-    val df = ((1 to 300).map(i => (i.toLong, s"g${rng.nextInt(5)}", rng.nextInt(40).toDouble))
-      :+ ((999L, "solo", 7.0))).toDF("id", "g", "v")
+    val random = (1 to 300).map(i =>
+      (i.toLong, Option(s"g${rng.nextInt(5)}"), Option(rng.nextInt(40).toDouble)))
+    // hostile rows: NULL values (sort first), a NULL group key (its own
+    // group), NaN (sorts after every double, ties by id) and ±∞, a
+    // constant group (every row ties on v), and a singleton
+    val hostile: Seq[(Long, Option[String], Option[Double])] = Seq(
+      (1001L, Some("nulls"), None), (1002L, Some("nulls"), Some(5.0)), (1003L, Some("nulls"), None),
+      (1011L, None, Some(2.0)), (1012L, None, Some(1.0)),
+      (1021L, Some("nan"), Some(Double.NaN)), (1022L, Some("nan"), Some(1.0)),
+      (1023L, Some("nan"), Some(Double.NaN)), (1024L, Some("nan"), Some(-1.0)),
+      (1031L, Some("inf"), Some(Double.PositiveInfinity)), (1032L, Some("inf"), Some(0.0)),
+      (1033L, Some("inf"), Some(Double.NegativeInfinity)), (1034L, Some("inf"), None),
+      (1035L, Some("inf"), Some(Double.NaN)),
+      (1041L, Some("allnan"), Some(Double.NaN)), (1042L, Some("allnan"), Some(Double.NaN))) ++
+      (1051L to 1060L).map(i => (i, Some("const"), Some(42.0))) :+
+      ((999L, Some("solo"), Some(7.0)))
+    val df = (random ++ hostile).toDF("id", "g", "v")
     val got = Quantiles.percentileRank(df, "g", "v", "id")
       .select($"id", $"rank", $"n_rows", $"pct_rank")
       .as[(Long, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"g").orderBy($"v", $"id")
-    val expect = df.withColumn("pr", percent_rank().over(w))
-      .select($"id", $"pr").as[(Long, Double)].collect().toMap
-    got.foreach { case (id, (_, _, _, pr)) => assert(pr === expect(id), s"id $id") }
+    val expect = df
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("n", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy($"g")))
+      .withColumn("pr", percent_rank().over(w))
+      .select($"id", $"rn", $"n", $"pr").as[(Long, Long, Long, Double)].collect()
+      .map(r => r._1 -> r).toMap
+    assert(got.size.toLong === df.count())
+    got.foreach { case (id, (_, rank, n, pr)) =>
+      assert((id, rank, n, pr) === expect(id), s"id $id")
+    }
     assert(got(999L) === ((999L, 1L, 1L, 0.0)))
+    // the tails: NULL first, NaN last, a constant group ranks by id
+    assert(got(1001L)._2 === 1L && got(1003L)._2 === 2L)
+    assert(got(1021L)._4 === 2.0 / 3 && got(1023L)._4 === 1.0)
+    assert(got(1034L)._2 === 1L && got(1033L)._2 === 2L && got(1035L)._4 === 1.0)
+    assert((1051L to 1060L).map(got(_)._2) === (1L to 10L))
   }
 }
 

@@ -82,13 +82,15 @@ run "sbt test" sbt -batch test
 # sf1.0 run is re-done by hand.
 slope_probe() {
   local SLOPE_DIR=${SLOPE_DIR:-/tmp/graft_slope}
+  # one bench thread per core, as the tier-1 test run sets it
+  local SLOPE_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
   rm -rf "$SLOPE_DIR"
   mkdir -p "$SLOPE_DIR"
   sbt -batch \
     "runMain graft.ScaleTestData $SF_BENCH $SLOPE_DIR/scaled $SLOPE_MULT" \
-    "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SF_BENCH\", \"SPARK_GRAFT_CPUS\" -> \"32\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/small.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/small_runs.json\")" \
+    "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SF_BENCH\", \"SPARK_GRAFT_CPUS\" -> \"$SLOPE_CPUS\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/small.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/small_runs.json\")" \
     "runMain graft.Bench" \
-    "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SLOPE_DIR/scaled\", \"SPARK_GRAFT_CPUS\" -> \"32\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/big.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/big_runs.json\")" \
+    "set run / envVars := Map(\"SPARK_GRAFT_SF_DIR\" -> \"$SLOPE_DIR/scaled\", \"SPARK_GRAFT_CPUS\" -> \"$SLOPE_CPUS\", \"SPARK_GRAFT_ITERS\" -> \"3\", \"SPARK_GRAFT_ORDER\" -> \"roundrobin\", \"SPARK_GRAFT_NOOP\" -> \"0\", \"SPARK_GRAFT_MEDIANS_FILE\" -> \"$SLOPE_DIR/big.json\", \"SPARK_GRAFT_RUNS_FILE\" -> \"$SLOPE_DIR/big_runs.json\")" \
     "runMain graft.Bench" &&
   python3 tools/scaling_slope.py "$SLOPE_DIR/small.json" "$SLOPE_DIR/big.json" --gate "$SLOPE_MULT"
 }
