@@ -25,10 +25,13 @@ object JsonArrayIO {
   def readJsonArray(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("multiLine", "true").schema(schema).json(path)
 
-  /** Pretty JSON array with field order taken from the schema — byte-style
-    * parity with python's `json.dump(..., indent=4)` for string/int
-    * fields. Returns the row count, which the collected rows give for
-    * free; `check` sees it before the file is created, so a gate on it
+  /** Pretty JSON array with field order taken from the schema, laid out
+    * like python's `json.dump(..., indent=4)`: one member or element per
+    * line, 4 spaces per nesting level at every depth (the response
+    * envelope's `value` array of records included), `": "` after keys and
+    * `[]`/`{}` for empty containers. Scalars are written as `to_json`
+    * renders them. Returns the row count, which the collected rows give
+    * for free; `check` sees it before the file is created, so a gate on it
     * leaves no artifact behind. */
   def writePrettyJsonArray(df: DataFrame, path: String, check: Long => Unit = _ => ()): Long = {
     val spark = df.sparkSession
@@ -39,40 +42,64 @@ object JsonArrayIO {
         java.util.Collections.singletonMap("ignoreNullFields", "false")).as("j"))
       .collect().map(_.getString(0)) // compact per-row JSON, schema field order
     check(rows.length.toLong)
-    val indented = rows.map { r =>
-      // re-indent each record: {"a": 1} -> 4-space pretty block
-      val obj = r.stripPrefix("{").stripSuffix("}")
-      "    {\n" + splitTopLevel(obj).map("        " + _.trim.replaceFirst(":", ": "))
-        .mkString(",\n") + "\n    }"
+    val pretty = new Indenter
+    pretty.feed("[")
+    rows.iterator.zipWithIndex.foreach { case (r, i) =>
+      if (i > 0) pretty.feed(",")
+      pretty.feed(r)
     }
+    pretty.feed("]")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = new BufferedWriter(new OutputStreamWriter(
       fs.create(new Path(path), true), StandardCharsets.UTF_8))
-    try {
-      out.write("[\n")
-      out.write(indented.mkString(",\n"))
-      out.write("\n]")
-    } finally out.close()
+    try out.append(pretty.text)
+    finally out.close()
     rows.length.toLong
   }
 
-  /** Split a JSON object body on top-level commas (values here are scalars
-    * or quoted strings — the journey/response records contain no nested
-    * objects). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inStr = false
-    var esc = false
-    s.foreach { c =>
-      if (esc) { cur += c; esc = false }
-      else if (c == '\\' && inStr) { cur += c; esc = true }
-      else if (c == '"') { cur += c; inStr = !inStr }
-      else if (c == ',' && !inStr) { parts += cur.toString; cur.clear() }
-      else cur += c
+  /** Re-indents compact JSON text (no whitespace outside strings, as
+    * `to_json` writes it) in one pass, tracking string/escape state and
+    * nesting depth. The newline after an opening bracket waits for the
+    * next character, so an empty container stays `[]`/`{}`. */
+  private final class Indenter {
+    val text = new java.lang.StringBuilder
+    private var depth = 0
+    private var inString = false
+    private var escaped = false
+    private var opened = false
+
+    private def newline(): Unit = {
+      text.append('\n')
+      var i = 0
+      while (i < depth) { text.append("    "); i += 1 }
     }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.toSeq
+
+    def feed(compact: String): Unit = {
+      var i = 0
+      while (i < compact.length) {
+        val c = compact.charAt(i)
+        if (inString) {
+          text.append(c)
+          if (escaped) escaped = false
+          else if (c == '\\') escaped = true
+          else if (c == '"') inString = false
+        } else {
+          if (opened && c != ']' && c != '}') { opened = false; newline() }
+          c match {
+            case '[' | '{' => text.append(c); depth += 1; opened = true
+            case ']' | '}' =>
+              depth -= 1
+              if (opened) opened = false else newline()
+              text.append(c)
+            case ',' => text.append(c); newline()
+            case ':' => text.append(": ")
+            case '"' => text.append(c); inString = true
+            case _ => text.append(c)
+          }
+        }
+        i += 1
+      }
+    }
   }
 
   /** S7: header CSV as exactly one file at `path`. Returns the row count,

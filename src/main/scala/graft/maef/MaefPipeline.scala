@@ -27,11 +27,45 @@ object MaefPipeline {
 
   /** S3/S4: copy tables to the warehouse dir and verify row counts —
     * the reference's source→target copy + COUNT(*) check
-    * (src/database/db_utils.py:67-102), each source read once. */
-  def copyAndVerify(tables: Map[String, DataFrame], targetDir: String): Map[String, Long] =
-    tables.map { case (name, df) =>
-      name -> ParquetWarehouse.writeVerified(df, s"$targetDir/$name")
+    * (src/database/db_utils.py:67-102), each source read once.
+    *
+    * The copies are independent write jobs, each too small to fill the
+    * cluster, so each runs on its own thread of a pool made for this call.
+    * The threads are created by the caller, so they inherit its Spark
+    * local properties (job group, scheduler pool). The call returns, or
+    * throws, only once every copy has stopped and every pool thread has
+    * exited: a failure is the first failing table's, in the map's order,
+    * with the others' added as suppressed. */
+  def copyAndVerify(tables: Map[String, DataFrame], targetDir: String): Map[String, Long] = {
+    val workers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, tables.size),
+      (r: Runnable) => {
+        val t = new Thread(r, s"copy-and-verify-${workers.size}")
+        t.setDaemon(true)
+        workers.add(t)
+        t
+      })
+    try {
+      val copies = tables.toSeq.map { case (name, df) =>
+        name -> pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = ParquetWarehouse.writeVerified(df, s"$targetDir/$name")
+        })
+      }
+      val outcomes = copies.map { case (name, copy) =>
+        name -> (try Right(copy.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
+      }
+      outcomes.collect { case (_, Left(e)) => e } match {
+        case first +: others =>
+          others.foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.collect { case (name, Right(n)) => name -> n }.toMap
+      }
+    } finally {
+      pool.shutdown()
+      workers.forEach(_.join())
     }
+  }
 
   /** §7.2: native IHC attribution over journey entries (the drop-in
     * replacement for the external API; same output schema as

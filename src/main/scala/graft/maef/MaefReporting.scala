@@ -116,12 +116,16 @@ object MaefReporting {
     else unknownFiltered
   }
 
-  /** Export projection (reporting.py:150-167): CPO/ROAS + ORDER BY. */
+  /** Export projection (reporting.py:150-167): CPO/ROAS + ORDER BY. The
+    * report has at most one row per channel and day, so it is sorted in
+    * one partition: a global `orderBy` would run a range-sampling job
+    * first, for output the single-file sink writes as one file anyway. */
   def `export`(report: DataFrame): DataFrame =
     report
       .withColumn("cpo",
         when(col("ihc") > 0, col("cost") / col("ihc")).otherwise(lit(0.0)))
       .withColumn("roas",
         when(col("cost") > 0, col("ihc_revenue") / col("cost")).otherwise(lit(0.0)))
-      .orderBy(col("channel_name"), col("date"))
+      .repartition(1)
+      .sortWithinPartitions(col("channel_name"), col("date"))
 }

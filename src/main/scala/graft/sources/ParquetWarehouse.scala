@@ -598,7 +598,7 @@ object ParquetWarehouse {
       val createTmp = new org.apache.hadoop.fs.Path(
         path + ".__ptmp-" + java.util.UUID.randomUUID().toString.take(8))
       try {
-        writeOneFilePerPartition(lastWins(updates, keys), partitionCol, affected.length, createTmp)
+        writeLastWinsPartitions(updates, keys, partitionCol, affected.length, createTmp)
         Option(destPath.getParent).foreach(fs.mkdirs)
         require(fs.rename(createTmp, destPath),
           s"could not publish created table at $path")
@@ -645,12 +645,10 @@ object ParquetWarehouse {
           keys.filterNot(k => k == partitionCol || t.columns.contains(k)).mkString(", "))
       t.withColumn(partitionCol, col(partitionCol).cast(pcType))
     }
-    val merged =
+    val input =
       if (affectedDirs.nonEmpty)
-        lastWins(
-          readPartitions(affectedDirs.toSeq).withColumn("__src", lit(0))
-            .unionByName(updates.withColumn("__src", lit(1))),
-          keys)
+        readPartitions(affectedDirs.toSeq).withColumn("__src", lit(0))
+          .unionByName(updates.withColumn("__src", lit(1)))
       else {
         // every touched partition is new: hold the batch to one existing
         // partition's schema with the merge's own strict union (analysed,
@@ -658,7 +656,7 @@ object ParquetWarehouse {
         fs.listStatus(destPath)
           .find(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
           .foreach(p => readPartitions(Seq(p.getPath)).unionByName(updates))
-        lastWins(updates, keys)
+        updates
       }
     // the staged write re-renders each partition value through Spark's
     // own dir-name formatting; handing the swap the dir names DISCOVERY
@@ -666,7 +664,7 @@ object ParquetWarehouse {
     // differs from the writer's rendering — fractional-second
     // timestamps, trailing-zero decimals) fail LOUDLY before anything is
     // swapped, instead of silently leaving the old dir live as duplicates
-    stageAndSwapPartitions(fs, destPath, path, partitionCol, merged,
+    stageAndSwapPartitions(fs, destPath, path, keys, partitionCol, input,
       expectedDirNames = affected.map(v => partitionCol + "=" + esc(v)).toSet)
   }
 
@@ -707,24 +705,27 @@ object ParquetWarehouse {
     body(clone)
   }
 
-  /** Write `df` hive-partitioned by `partitionCol` into `dest` with ONE
-    * file per partition: hash-shuffled on the partition column, so each
-    * partition value lands in one task (without it every task holding
-    * rows of a partition opens its own file there: tasks × partitions
-    * small files per batch). The task count is explicit,
-    * min(`partitions`, defaultParallelism): AQE coalesces a shuffle
-    * without one into a single task, which then writes every partition
-    * serially (0.85-1.4 s for ~60 partitions of 725 rows, 4 cores). */
-  private def writeOneFilePerPartition(
-      df: DataFrame, partitionCol: String, partitions: Int,
+  /** Write [[lastWins]] of `input` hive-partitioned by `partitionCol`
+    * into `dest` with ONE file per partition, in one shuffle: `input` is
+    * hash-clustered on `partitionCol`, which satisfies the window (its
+    * keys include `partitionCol`, so it adds no exchange of its own) and
+    * puts each partition value in one write task (spread over tasks, a
+    * value would get a file per task: tasks × partitions small files per
+    * batch). The task count is explicit, min(`partitions`,
+    * defaultParallelism): AQE coalesces a shuffle without one into a
+    * single task, which then writes every partition serially (0.85-1.4 s
+    * for ~60 partitions of 725 rows, 4 cores). */
+  private def writeLastWinsPartitions(
+      input: DataFrame, keys: Seq[String], partitionCol: String, partitions: Int,
       dest: org.apache.hadoop.fs.Path): Unit = {
-    val tasks = math.max(1, math.min(partitions, df.sparkSession.sparkContext.defaultParallelism))
-    df.repartition(tasks, col(partitionCol))
+    val tasks = math.max(1, math.min(partitions, input.sparkSession.sparkContext.defaultParallelism))
+    lastWins(input.repartition(tasks, col(partitionCol)), keys)
       .write.partitionBy(partitionCol).mode(SaveMode.Overwrite).parquet(dest.toString)
   }
 
   /** The commit machinery of [[upsertPartitioned]]'s merge branch:
-    * write `staged` (one file per partition, [[writeOneFilePerPartition]]) into a fresh
+    * write the last-wins merge of `input` (one file per partition,
+    * [[writeLastWinsPartitions]]) into a fresh
     * `.__ptmp-*` sibling, then swap each produced partition dir into the
     * live table with its predecessor staged in a `.__pold-*` backup; on
     * ANY failure, restore backups for still-missing partitions and
@@ -743,14 +744,15 @@ object ParquetWarehouse {
       fs: org.apache.hadoop.fs.FileSystem,
       destPath: org.apache.hadoop.fs.Path,
       path: String,
+      keys: Seq[String],
       partitionCol: String,
-      staged: DataFrame,
+      input: DataFrame,
       expectedDirNames: Set[String]): Unit = {
     val batchId = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(path + ".__ptmp-" + batchId)
     val pold = new org.apache.hadoop.fs.Path(path + ".__pold-" + batchId)
     try {
-      writeOneFilePerPartition(staged, partitionCol, expectedDirNames.size, tmp)
+      writeLastWinsPartitions(input, keys, partitionCol, expectedDirNames.size, tmp)
       val newParts = fs.listStatus(tmp).filter(s =>
         s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
       val rogue = newParts.map(_.getPath.getName).toSet -- expectedDirNames

@@ -25,7 +25,7 @@ class MaefMainSpec extends SparkSpec {
     assert(art.transformedRows > 0L && art.reportRows > 0L)
     // one write job per table
     assert(staging.jobs === 3, s"staging ran ${staging.jobs} jobs")
-    assert(run.jobs === 21, s"MaefMain.run ran ${run.jobs} jobs")
+    assert(run.jobs === 20, s"MaefMain.run ran ${run.jobs} jobs")
   }
 
   test("run reads a .db warehouse itself: the staged run's artifacts from one copy") {
@@ -39,10 +39,10 @@ class MaefMainSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/channel_report.csv"))
     assert(csv(out) === csv(viaStaging))
     // the .db is read once, by step 1's copy: no staging directory, and a
-    // CLI pass runs run's 21 jobs instead of staging's 3 on top of them
+    // CLI pass runs run's 20 jobs instead of staging's 3 on top of them
     assert(new java.io.File(out).list().filterNot(_.startsWith(".")).sorted.toSeq ===
       Seq("api_response.json", "channel_report.csv", "target_data.json", "warehouse"))
-    assert(direct.jobs === 21, s"MaefMain.run on the .db ran ${direct.jobs} jobs")
+    assert(direct.jobs === 20, s"MaefMain.run on the .db ran ${direct.jobs} jobs")
   }
 
   test("Loader.load leaves nothing cached and keeps its gate message") {

@@ -1,10 +1,19 @@
 package graft.maef
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.functions.RollingHash
 import graft.operators.{Multimodal, TextOps}
+
+/** The latch the copy tasks of "copyAndVerify runs its copies at the same
+  * time" meet on: an object, so the tasks share it instead of each
+  * deserializing a copy. */
+object CopyOverlap {
+  val started = new java.util.concurrent.atomic.AtomicReference[java.util.concurrent.CountDownLatch]
+}
 
 class MaefPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -63,6 +72,89 @@ class MaefPipelineSpec extends SparkSpec {
     assert(counts === Map("conversions" -> 2L, "session_sources" -> 4L, "session_costs" -> 3L))
   }
 
+  /** A one-row, one-partition table whose write task runs `act`. */
+  private def copyFrame(act: () => Unit) = {
+    val run = udf { (id: Long) => act(); id }.asNondeterministic()
+    spark.range(0, 1, 1, 1).toDF("id").select(run(col("id")).as("id"))
+  }
+
+  test("copyAndVerify runs its copies at the same time") {
+    // each copy's one task waits for all three to have started: copies run
+    // one after another would time out on the first
+    CopyOverlap.started.set(new java.util.concurrent.CountDownLatch(3))
+    val meet = () => {
+      val started = CopyOverlap.started.get
+      started.countDown()
+      if (!started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException("copies did not overlap")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_overlap").toString
+    val counts = MaefPipeline.copyAndVerify(
+      Map("a" -> copyFrame(meet), "b" -> copyFrame(meet), "c" -> copyFrame(meet)), dir)
+    assert(counts === Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
+  }
+
+  test("a failed copy surfaces once every copy has stopped, in table order") {
+    def fail(after: Long, msg: String) = () => { Thread.sleep(after); throw new IllegalStateException(msg) }
+    def mentions(t: Throwable, msg: String) = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).exists(e => Option(e.getMessage).exists(_.contains(msg)))
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.getName.startsWith("copy-and-verify") && t.isAlive)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_fail").toString
+    // `b` fails after `c`, and `a` succeeds after both have failed
+    val e = intercept[Throwable] {
+      MaefPipeline.copyAndVerify(Map(
+        "a" -> copyFrame(() => Thread.sleep(1500)),
+        "b" -> copyFrame(fail(500, "copy b failed")),
+        "c" -> copyFrame(fail(0, "copy c failed"))), dir)
+    }
+    assert(mentions(e, "copy b failed"), e)
+    // Spark adds a suppressed stack trace of its own to a job failure
+    assert(e.getSuppressed.count(mentions(_, "copy c failed")) === 1, e.getSuppressed.toSeq)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(poolThreads.isEmpty, poolThreads)
+    assert(new java.io.File(s"$dir/a/_SUCCESS").exists)
+  }
+
+  test("pretty JSON array sink lays records out like json.dump(indent=4)") {
+    val record = StructType(Seq(
+      StructField("conversion_id", StringType), StructField("session_id", StringType),
+      StructField("ihc", DoubleType)))
+    val envelope = StructType(Seq(
+      StructField("statusCode", IntegerType), StructField("value", ArrayType(record)),
+      StructField("data", StringType)))
+    val rows = Seq(
+      Row(200, Seq(Row("c1", "s1", 0.5), Row("c,\"2:{[", null, 1.0)), null),
+      Row(200, Seq.empty[Row], null))
+    val frame = spark.createDataFrame(java.util.Arrays.asList(rows: _*), envelope)
+    val path = java.nio.file.Files.createTempDirectory("graft_json_layout").toString + "/r.json"
+    assert(JsonArrayIO.writePrettyJsonArray(frame, path) === 2L)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) ===
+      """[
+        |    {
+        |        "statusCode": 200,
+        |        "value": [
+        |            {
+        |                "conversion_id": "c1",
+        |                "session_id": "s1",
+        |                "ihc": 0.5
+        |            },
+        |            {
+        |                "conversion_id": "c,\"2:{[",
+        |                "session_id": null,
+        |                "ihc": 1.0
+        |            }
+        |        ],
+        |        "data": null
+        |    },
+        |    {
+        |        "statusCode": 200,
+        |        "value": [],
+        |        "data": null
+        |    }
+        |]""".stripMargin)
+  }
+
   test("pretty JSON array sink round-trips through the array source (S5/S6)") {
     val (conv, sess, _) = fixtures()
     val entries = MaefJourneys.transform(conv, sess)
@@ -113,6 +205,31 @@ class MaefPipelineSpec extends SparkSpec {
     val b = MaefMain.run(spark, wh, out2, Some(w))
     assert(b.transformedRows === 1)
     assert(b.attributionRows === 1)
+    // the report keeps the reference's ORDER BY channel_name, date
+    // (reporting.py:150-167), over several channels and dates: each of
+    // 12 users converts on one of four days after a session on each of
+    // two channels that day
+    val channels = Seq("Social", "Direct", "Email")
+    val users = 1 to 12
+    def day(u: Int) = s"2023-08-0${2 + u % 4}"
+    val wide = java.nio.file.Files.createTempDirectory("graft_wh_order").toString
+    users.map(u => (s"c$u", s"u$u", day(u), "23:00:00", 10.0 * u))
+      .toDF("conv_id", "user_id", "conv_date", "conv_time", "revenue")
+      .write.parquet(s"$wide/conversions")
+    val sessions = users.flatMap(u => Seq(
+      (s"s${u}a", s"u$u", day(u), "09:00:00", channels(u % 3), 1, 0, 0),
+      (s"s${u}b", s"u$u", day(u), "10:00:00", channels((u + 1) % 3), 0, 1, 1)))
+    sessions.toDF("session_id", "user_id", "event_date", "event_time",
+        "channel_name", "holder_engagement", "closer_engagement", "impression_interaction")
+      .write.parquet(s"$wide/session_sources")
+    sessions.map(r => (r._1, 1.5)).toDF("session_id", "cost").write.parquet(s"$wide/session_costs")
+    val out3 = java.nio.file.Files.createTempDirectory("graft_out_order").toString
+    MaefMain.run(spark, wide, out3)
+    val keys = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$out3/channel_report.csv"))
+      .toArray(Array.empty[String]).toSeq.tail
+      .map { line => val f = line.split(","); (f(0), f(1)) }
+    assert(keys.map(_._1).distinct.size === 3 && keys.map(_._2).distinct.size === 4, keys)
+    assert(keys === keys.sorted, keys)
   }
 
   test("MaefMain.run releases the frames it persists") {

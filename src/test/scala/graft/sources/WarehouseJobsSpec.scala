@@ -60,13 +60,16 @@ class WarehouseJobsSpec extends SparkSpec {
         ParquetWarehouse.upsertPartitioned(
           rows.toDF("date", "channel", "spend").repartition(8), dir, Seq("date", "channel"), "date")
       }._2
-    for ((branch, rows) <- Seq("create" -> first, "merge" -> second)) {
+    val jobs = for ((branch, rows) <- Seq("create" -> first, "merge" -> second)) yield {
       val rec = upsert(rows)
       for (d <- dates)
         assert(partFiles(s"$dir/date=$d").length === 1, s"$branch: date=$d")
       assert(rec.jobTasks.forall(_ < 40), s"$branch: a listing job ran: ${rec.jobTasks}")
       assert(rec.stageTasks.last === writeTasks, s"$branch: stage tasks ${rec.stageTasks}")
+      branch -> rec.jobs
     }
+    // the merge input is shuffled once, for the window and the write alike
+    assert(jobs.toMap === Map("create" -> 5, "merge" -> 7))
     val expected = (first.map(r => (r._1, r._2) -> r) ++ second.map(r => (r._1, r._2) -> r))
       .toMap.values.toSet
     val got = spark.read.parquet(dir).select(col("date").cast("string"), col("channel"), col("spend"))
